@@ -7,10 +7,15 @@ import org.apache.spark.sql.types._
 /** Table catalog over the harness fixture directory.
   *
   * Analog of the reference's table-dict loader
-  * (`code_base/transform_to_bq.py:77-83`): lazy Parquet scans, schema from
-  * footers, data does not move until an action fires. Column pruning and
-  * predicate pushdown reach the scan because nothing here forces
-  * materialization.
+  * (`code_base/transform_to_bq.py:77-83`): lazy Parquet scans, data does
+  * not move until an action fires. Column pruning and predicate pushdown
+  * reach the scan because nothing here forces materialization.
+  *
+  * Read schemas: declared for the seven star tables ([[starSchemas]], the
+  * reference's `TABLE_SCHEMAS` discipline), so a star read runs no
+  * footer-inference job; `events` is footer-sniffed
+  * ([[eventsSchemaFor]]); the corpus tables (`documents`, `embeddings`)
+  * are inferred from footers.
   *
   * Scale note: at 100 TB each `load` is a partitioned multi-file scan; the
   * single-`.parquet`-file fixture layout is just the harness shape. Nothing
@@ -26,10 +31,71 @@ object Tables {
 
   val all: Seq[String] = star ++ northStar
 
+  /** Declared star-table schemas (FIXTURES.md §1), field order = file
+    * column order. The one definition both jobs use: job 1 enforces it at
+    * ingest ([[graft.jobs.IngestJob.tableSchemas]]), job 2 and every star
+    * query read the lake through it in [[load]]. Declared nullability is
+    * intent, not enforcement: file reads come back nullable.
+    */
+  val starSchemas: Map[String, StructType] = Map(
+    "region" -> StructType(Seq(
+      StructField("r_regionkey", IntegerType, nullable = false),
+      StructField("r_name", StringType))),
+    "nation" -> StructType(Seq(
+      StructField("n_nationkey", IntegerType, nullable = false),
+      StructField("n_name", StringType),
+      StructField("n_regionkey", IntegerType))),
+    "customer" -> StructType(Seq(
+      StructField("c_custkey", LongType, nullable = false),
+      StructField("c_name", StringType),
+      StructField("c_nationkey", IntegerType),
+      StructField("c_acctbal", DoubleType),
+      StructField("c_mktsegment", StringType))),
+    "supplier" -> StructType(Seq(
+      StructField("s_suppkey", LongType, nullable = false),
+      StructField("s_name", StringType),
+      StructField("s_nationkey", IntegerType),
+      StructField("s_acctbal", DoubleType))),
+    "part" -> StructType(Seq(
+      StructField("p_partkey", LongType, nullable = false),
+      StructField("p_name", StringType),
+      StructField("p_brand", StringType),
+      StructField("p_type", StringType),
+      StructField("p_size", IntegerType),
+      StructField("p_retailprice", DoubleType))),
+    "orders" -> StructType(Seq(
+      StructField("o_orderkey", LongType, nullable = false),
+      StructField("o_custkey", LongType),
+      StructField("o_orderstatus", StringType),
+      StructField("o_totalprice", DoubleType),
+      StructField("o_orderdate", TimestampNTZType),
+      StructField("o_orderpriority", StringType))),
+    "lineitem" -> StructType(Seq(
+      StructField("l_orderkey", LongType, nullable = false),
+      StructField("l_partkey", LongType),
+      StructField("l_suppkey", LongType),
+      StructField("l_linenumber", IntegerType),
+      StructField("l_quantity", DoubleType),
+      StructField("l_extendedprice", DoubleType),
+      StructField("l_discount", DoubleType),
+      StructField("l_tax", DoubleType),
+      StructField("l_returnflag", StringType),
+      StructField("l_linestatus", StringType),
+      StructField("l_shipdate", TimestampNTZType))),
+  )
+
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
+  /** Lazy scan of one table: star tables through their declared schema
+    * (no inference job; a footer that drifts from it is caught by
+    * `TablesSchemaSpec`, not here — a declared read null-fills a missing
+    * column), any other table with its schema inferred from the footer.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(path(sfDir, name))
+    starSchemas.get(name) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path(sfDir, name))
+      case None         => spark.read.parquet(path(sfDir, name))
+    }
 
   /** Load + spread across the cluster for CPU-heavy narrow pipelines —
     * CONDITIONALLY.

@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.sources.{JdbcSource, ParquetSink, Sink}
 
 /** Job 1 rebuild — source → explicit-schema DataFrames → Parquet lake
@@ -21,53 +22,10 @@ import graft.sources.{JdbcSource, ParquetSink, Sink}
   */
 object IngestJob {
 
-  /** Declared fixture-table schemas (FIXTURES.md §1). */
-  val tableSchemas: Map[String, StructType] = Map(
-    "region" -> StructType(Seq(
-      StructField("r_regionkey", IntegerType, nullable = false),
-      StructField("r_name", StringType))),
-    "nation" -> StructType(Seq(
-      StructField("n_nationkey", IntegerType, nullable = false),
-      StructField("n_name", StringType),
-      StructField("n_regionkey", IntegerType))),
-    "customer" -> StructType(Seq(
-      StructField("c_custkey", LongType, nullable = false),
-      StructField("c_name", StringType),
-      StructField("c_nationkey", IntegerType),
-      StructField("c_acctbal", DoubleType),
-      StructField("c_mktsegment", StringType))),
-    "supplier" -> StructType(Seq(
-      StructField("s_suppkey", LongType, nullable = false),
-      StructField("s_name", StringType),
-      StructField("s_nationkey", IntegerType),
-      StructField("s_acctbal", DoubleType))),
-    "part" -> StructType(Seq(
-      StructField("p_partkey", LongType, nullable = false),
-      StructField("p_name", StringType),
-      StructField("p_brand", StringType),
-      StructField("p_type", StringType),
-      StructField("p_size", IntegerType),
-      StructField("p_retailprice", DoubleType))),
-    "orders" -> StructType(Seq(
-      StructField("o_orderkey", LongType, nullable = false),
-      StructField("o_custkey", LongType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType),
-      StructField("o_orderdate", TimestampNTZType),
-      StructField("o_orderpriority", StringType))),
-    "lineitem" -> StructType(Seq(
-      StructField("l_orderkey", LongType, nullable = false),
-      StructField("l_partkey", LongType),
-      StructField("l_suppkey", LongType),
-      StructField("l_linenumber", IntegerType),
-      StructField("l_quantity", DoubleType),
-      StructField("l_extendedprice", DoubleType),
-      StructField("l_discount", DoubleType),
-      StructField("l_tax", DoubleType),
-      StructField("l_returnflag", StringType),
-      StructField("l_linestatus", StringType),
-      StructField("l_shipdate", TimestampNTZType))),
-  )
+  /** Declared fixture-table schemas (FIXTURES.md §1) — the one star
+    * definition, [[graft.Tables.starSchemas]], which job 2 reads through.
+    */
+  val tableSchemas: Map[String, StructType] = Tables.starSchemas
 
   /** One table's source — explicit schema applied at the reader. */
   trait TableProvider {
@@ -77,7 +35,7 @@ object IngestJob {
   /** Harness source: fixture parquet with the declared schema enforced. */
   final case class ParquetProvider(sfDir: String) extends TableProvider {
     def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
-      spark.read.schema(schema).parquet(s"$sfDir/$table.parquet")
+      spark.read.schema(schema).parquet(Tables.path(sfDir, table))
   }
 
   /** Production source: partitioned JDBC (reference option surface). */
@@ -96,7 +54,10 @@ object IngestJob {
       sinkFor(table).write(provider.read(spark, table, schema))
     }
 
-  /** Harness entry: fixtures → parquet lake under `outDir`. */
+  /** Harness entry: fixtures → parquet lake under `outDir`, one
+    * `Tables.path(outDir, table)` per table — the layout
+    * [[TransformJob.runToParquet]] reads, so `outDir` is job 2's `sfDir`.
+    */
   def runFromParquet(spark: SparkSession, sfDir: String, outDir: String): Unit =
-    run(spark, ParquetProvider(sfDir), name => ParquetSink(s"$outDir/$name"))
+    run(spark, ParquetProvider(sfDir), name => ParquetSink(Tables.path(outDir, name)))
 }

@@ -16,6 +16,14 @@ import graft.sources.{ParquetSink, Sink}
   * documentation of intent, not enforcement — same stance as the
   * reference (SURVEY.md §1).
   *
+  * Writes are unsorted, as in the reference: each output is
+  * [[StarSchema.marts]], which carries no ORDER BY, so a write is its
+  * query's stages plus the file commit — no range-sampling job, no range
+  * exchange. The lake is read through [[graft.Tables.load]]'s declared
+  * star schemas, so no read runs a footer-inference job. Row order in the
+  * written files is unspecified; the registered queries
+  * ([[StarSchema.queries]]) add the verification order.
+  *
   * The sink is pluggable: ParquetSink for the harness, BigQuerySink (same
   * trait) in a warehouse deployment.
   */
@@ -66,14 +74,12 @@ object TransformJob {
       StructField("n_lines", LongType))),
   )
 
-  /** Build all six outputs (lazy) — the six reference star outputs are
-    * exactly the queries with a declared output schema; StarSchema also
-    * registers engine-side extras (e.g. the incremental-maintenance
-    * gate) that are NOT part of the reference mart contract.
+  /** Build all six outputs (lazy, unsorted) — [[StarSchema.marts]], the
+    * reference mart contract; the engine-side extras StarSchema also
+    * registers (e.g. the incremental-maintenance gate) are not part of it.
     */
   def outputs(spark: SparkSession, sfDir: String): Map[String, DataFrame] =
-    StarSchema.queries.view.filterKeys(outputSchemas.contains)
-      .map { case (name, fn) => name -> fn(spark, sfDir) }.toMap
+    StarSchema.marts.map { case (name, fn) => name -> fn(spark, sfDir) }
 
   /** Run the job: each output written through its declared schema, with
     * an `observe`d row count riding the SAME pass — the write audit a

@@ -17,7 +17,10 @@ trait Sink {
 
   /** Reference convention: reorder/subset columns to a declared output
     * schema before writing (`final_df = df.select([col(f.name) ...])`).
-    * Catalyst prunes the upstream scan through this projection.
+    * Catalyst prunes the upstream scan through this projection. Keeps no
+    * row order of its own: the files hold `df`'s rows in the order its
+    * tasks produce them, so an unsorted frame (the star mart outputs)
+    * lands unsorted; a reader that needs an order sorts on read.
     */
   def writeWithSchema(df: DataFrame, schema: StructType): Unit = {
     import org.apache.spark.sql.functions.col
