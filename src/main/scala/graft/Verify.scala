@@ -2,10 +2,28 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name ...]
+  *
+  * With no names every registered query is dumped (the driver contract).
+  * Named queries restrict the dump, and oracle_sql.json, to those
+  * entries, so `tools/check_oracle.py` can gate one query without the
+  * full-registry run. Unknown names fail before any query runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name ...]")
+    val (sfDir, outDir, names) = (args(0), args(1), args.drop(2).toSeq)
+    val registry = SparkEntry.queries
+    val unknown = names.filterNot(registry.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"unknown queries: ${unknown.mkString(", ")} — " +
+          s"valid names:\n  ${registry.keys.toSeq.sorted.mkString("\n  ")}")
+      sys.exit(2)
+    }
+    val selected =
+      if (names.isEmpty) registry.toSeq else names.map(n => n -> registry(n))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -17,7 +35,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -37,6 +55,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => names.isEmpty || names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

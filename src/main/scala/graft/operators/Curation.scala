@@ -1195,10 +1195,10 @@ object Curation {
         (col("top_token_n").isNotNull &&
           col("quality_score") >= GateKeepMin).alias("gate_keep"))
     docOutputs(spark, sfDir)
-      .select(col("doc_id"), col("source"),
+      .select(Seq(col("doc_id"), col("source"),
         (col("source") === BenchmarkSource).alias("is_bench"),
-        col("changed").alias("html_changed"),
-        col("n_email"), col("n_cc"), col("n_phone"), col("n_ipv4"))
+        col("changed").alias("html_changed")) ++
+        PiiRules.map { case (name, _, _) => col(s"n_$name") }: _*)
       // inner join: both one-pass frames carry every document by
       // construction (docSignals' joins are LEFT; docOutputs is a map)
       .join(gateProj, Seq("doc_id"))

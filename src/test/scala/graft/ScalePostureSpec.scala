@@ -658,31 +658,24 @@ class ScalePostureSpec extends SparkSpec {
   }
 
   test("bucketed streaming state: a fold rewrites ONLY the buckets the batch touches") {
-    import graft.operators.StarSchema
-    val detail = Tables.lineitem(spark, sf)
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"),
-        col("l_discount"), col("o_orderdate"))
+    import graft.operators.WindowAnalytics
+    val orders = Tables.orders(spark, sf)
     val cut = "1996-07-01"
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut))
-    // the batch: post-cutover rows restricted to product keys landing in
-    // ONE bucket (the same key-derived bucket expression the state table
-    // partitions by), so every other bucket must come through untouched
+    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
+      orders.filter(col("o_orderdate") < cut))
+    // the batch: post-cutover orders restricted to customer keys landing
+    // in ONE bucket (the same key-derived bucket expression the state
+    // table partitions by), so every other bucket must come through
+    // untouched
     val buckets = streaming.EventStream.StateBuckets
-    val bucketOf = pmod(hash(col("l_partkey")), lit(buckets))
+    val bucketOf = pmod(hash(col("o_custkey")), lit(buckets))
     val TargetBucket = 3
-    val batchRows = detail.filter(col("o_orderdate") >= cut)
+    val batchRows = orders.filter(col("o_orderdate") >= cut)
       .filter(bucketOf === TargetBucket)
     assert(batchRows.count() > 0, "fixture has no rows in the target bucket")
     val stateDir = java.nio.file.Files.createTempDirectory("graft-bktposture").toString
-    // run 1 over an EMPTY source dir: seeds the partitioned state table,
-    // folds nothing — the clean point to snapshot the bucket files
-    val emptyDir = java.nio.file.Files.createTempDirectory("graft-bktempty")
-    val q0 = streaming.EventStream.totalsMaintenanceStreamBucketed(
-      spark.readStream.schema(detail.schema).parquet(emptyDir.toString),
-      state0, stateDir)
-    try q0.processAllAvailable() finally q0.stop()
+    val schema = streaming.EventStream.scd2BucketedSchema(history0.schema)
+    streaming.EventStream.seedBucketedState(history0, "customer_key", stateDir)
     def md5(p: java.nio.file.Path): String = {
       val d = java.security.MessageDigest.getInstance("MD5")
       new java.math.BigInteger(1, d.digest(java.nio.file.Files.readAllBytes(p)))
@@ -701,14 +694,8 @@ class ScalePostureSpec extends SparkSpec {
     val before = snapshot()
     assert(before.keys.exists(!_.startsWith(s"bucket=$TargetBucket/")),
       "seeded state has no untouched-bucket files to compare")
-    // run 2: one staged file = one micro-batch touching exactly one bucket
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-bktcdc2")
-    batchRows.coalesce(1).write.mode("overwrite")
-      .parquet(cdcDir.resolve("b1").toString)
-    val q1 = streaming.EventStream.totalsMaintenanceStreamBucketed(
-      spark.readStream.schema(detail.schema).parquet(s"$cdcDir/*"),
-      state0, stateDir)
-    try q1.processAllAvailable() finally q1.stop()
+    // one micro-batch touching exactly one bucket
+    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema, batchRows, 0L)
     val after = snapshot()
     // THE claim: every untouched bucket's files are byte-identical — same
     // names, same sizes, same checksums — i.e. the fold never rewrote them
@@ -731,7 +718,7 @@ class ScalePostureSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
         val pruned = streaming.EventStream.bucketedStateTouchedRead(
-          spark, stateDir, Seq(TargetBucket))
+          spark, stateDir, Seq(TargetBucket), schema)
         // collect() executes pruned's OWN QueryExecution — count() would
         // plan a separate query and leave these scan metrics at zero
         assert(pruned.collect().nonEmpty)
@@ -746,15 +733,14 @@ class ScalePostureSpec extends SparkSpec {
           s"state scan read $readFiles of $totalFiles files — pruning missing")
       } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
-    // and the maintained state equals the from-scratch rebuild over
+    // and the maintained dimension equals the from-scratch build over
     // history + the one-bucket batch
-    val got = StarSchema.finalizeTotals(
-        streaming.EventStream.bucketedStateRead(spark, stateDir).drop("bucket"))
-      .orderBy("product_key").collect().toSeq
-    val want = StarSchema.finalizeTotals(StarSchema.totalsPartialsOfDetail(
-        detail.filter(col("o_orderdate") < cut).unionAll(batchRows)))
-      .orderBy("product_key").collect().toSeq
-    assert(got == want && want.nonEmpty)
+    val got = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
+      .drop("bucket", "last_batch")
+    val want = WindowAnalytics.priorityIntervalHistoryOf(
+      orders.filter(col("o_orderdate") < cut).unionAll(batchRows))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty &&
+      !want.isEmpty)
   }
 
   test("ivfpq re-rank: candidates broadcast by hint, corpus vectors never shuffle") {
@@ -845,8 +831,9 @@ class ScalePostureSpec extends SparkSpec {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
+      val schema = state0.schema.add("last_batch", "long").add("bucket", "int")
       val probe = streaming.EventStream.bucketedStateTouchedRead(
-          spark, stateDir, Seq(0, 1, 2))
+          spark, stateDir, Seq(0, 1, 2), schema)
         .groupBy(col("bucket")).agg(max(col("last_batch")).alias("wm"))
       assert(probe.collect().nonEmpty)
       val scans = probe.queryExecution.executedPlan.collect {
@@ -899,13 +886,14 @@ class ScalePostureSpec extends SparkSpec {
   test("term-stats fold rewrites only the buckets the batch's terms hash into (string key)") {
     import graft.operators.TextAnalysis
     // the totals/SCD2 partial-rewrite pins run on LONG keys; this
-    // re-proves the byte-identity claim for the STRING-keyed term fold:
-    // a batch whose vocabulary is ONE term must leave every bucket that
-    // term does not hash into byte-identical on disk
+    // re-proves the claim for the STRING-keyed versioned term fold: a
+    // batch whose vocabulary is ONE term writes a generation holding ONLY
+    // that term's bucket, and every other bucket keeps serving the seed's
+    // byte-identical files
     val docs = Tables.documents(spark, sf)
     val state0 = TextAnalysis.termStatsOf(TextAnalysis.termFreqsOf(docs))
     val stateDir = java.nio.file.Files.createTempDirectory("graft-termprune").toString
-    streaming.EventStream.seedBucketedState(state0, "term", stateDir)
+    streaming.EventStream.seedVersionedState(state0, "term", stateDir)
     def md5(p: java.nio.file.Path): String =
       java.util.HexFormat.of.formatHex(
         java.security.MessageDigest.getInstance("MD5")
@@ -923,23 +911,29 @@ class ScalePostureSpec extends SparkSpec {
     val before = snapshot()
     val targetBucket = spark.range(1)
       .select(pmod(hash(lit("window")), lit(8))).head.getInt(0)
-    assert(before.keys.exists(!_.startsWith(s"bucket=$targetBucket/")),
+    assert(before.keys.exists(!_.startsWith(s"seed/bucket=$targetBucket/")),
       "seeded state has no untouched-bucket files to compare")
     val batch = spark.range(1).select(
       lit(999999L).alias("doc_id"), lit("window window window").alias("text"))
-    streaming.EventStream.termStatsFoldBatchBucketed(spark, stateDir, batch, 0L)
+    streaming.EventStream.termStatsFoldBatchVersioned(spark, stateDir, batch, 0L)
     val after = snapshot()
-    assert(
-      before.view.filterKeys(!_.startsWith(s"bucket=$targetBucket/")).toMap ==
-        after.view.filterKeys(!_.startsWith(s"bucket=$targetBucket/")).toMap,
-      "buckets outside the batch vocabulary were rewritten")
-    assert(
-      before.view.filterKeys(_.startsWith(s"bucket=$targetBucket/")).toMap !=
-        after.view.filterKeys(_.startsWith(s"bucket=$targetBucket/")).toMap,
-      "the term's bucket was not rewritten — the fold did nothing")
+    // copy-on-write: no seed file was rewritten...
+    assert(before.forall { case (rel, sig) => after.get(rel).contains(sig) },
+      "the fold rewrote seed files")
+    // ...and the batch's generation holds ONLY the term's bucket, so
+    // every other bucket resolves to its unchanged seed files
+    val genBuckets = after.keys.filter(_.startsWith("g0/"))
+      .map(_.split("/")(1)).toSet
+    assert(genBuckets == Set(s"bucket=$targetBucket"),
+      s"generation 0 holds buckets $genBuckets")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val live = streaming.EventStream.termStatsVersionedRead(spark, stateDir)
+    val untouched = pmod(hash(col("term")), lit(8)) =!= targetBucket
+    assert(rows(live.filter(untouched)) == rows(state0.filter(untouched)),
+      "buckets outside the batch vocabulary changed")
     // and the fold landed the delta exactly
-    val got = streaming.EventStream.termStatsRead(spark, stateDir)
-      .filter(col("term") === "window").head()
+    val got = live.filter(col("term") === "window").head()
     val base = state0.filter(col("term") === "window").head()
     assert(got.getLong(1) == base.getLong(1) + 1L, "df delta wrong")
     assert(got.getLong(2) == base.getLong(2) + 3L, "tf_sum delta wrong")

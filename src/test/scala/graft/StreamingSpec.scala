@@ -195,45 +195,6 @@ class StreamingSpec extends SparkSpec {
     assert(want.exceptAll(streamed).count() == 0)
   }
 
-  test("foreachBatch SCD2 apply-changes maintains the dimension to the from-scratch build") {
-    import graft.operators.WindowAnalytics
-    val orders = Tables.orders(spark, sf)
-    // history = pre-1996 state; CDC arrives as two date-ranged files
-    // driven one-per-trigger, so batch 2 folds into a state batch 1
-    // already advanced — the cross-generation path, and the append-only
-    // contract check runs against the ADVANCED state
-    val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
-      orders.filter(col("o_orderdate") < cut1))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-scd2cdc")
-    def stage(pred: org.apache.spark.sql.Column, name: String, ageSec: Long): Unit = {
-      val d = cdcDir.resolve(name)
-      orders.filter(pred).coalesce(1).write.parquet(d.toString)
-      // deterministic trigger order: the file source orders by mod time
-      java.nio.file.Files.walk(d).forEach(p =>
-        p.toFile.setLastModified(System.currentTimeMillis() - ageSec * 1000))
-    }
-    stage(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2, "b1", 60)
-    stage(col("o_orderdate") >= cut2, "b2", 30)
-    val stream = spark.readStream
-      .schema(orders.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$cdcDir/*")
-    assert(stream.isStreaming)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-scd2state").toString
-    val query = streaming.EventStream.scd2ApplyChangesStream(stream, history0, stateDir)
-    try query.processAllAvailable() finally query.stop()
-    val latest = streaming.EventStream.scd2StateLatest(spark, stateDir)
-    // two CDC files → generations v0, v1, v2
-    assert(latest.inputFiles.exists(_.contains("/v2/")), "expected two folds")
-    val want = WindowAnalytics.priorityIntervalHistoryOf(orders)
-    val cols = Seq("customer_key", "island", "priority", "valid_from",
-      "valid_to", "valid_until", "n_orders").map(col)
-    assert(latest.select(cols: _*).exceptAll(want.select(cols: _*)).count() == 0)
-    assert(want.select(cols: _*).exceptAll(latest.select(cols: _*)).count() == 0)
-    assert(latest.count() == want.count() && want.count() > 0)
-  }
-
   test("foreachBatch MinHash ingest-dedup tolerates a shingle-free micro-batch") {
     import spark.implicits._
     // a batch whose every document is too short to shingle (3-grams need
@@ -358,175 +319,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.count() == want.count())
     assert(streamed.exceptAll(want).count() == 0)
     assert(want.exceptAll(streamed).count() == 0)
-  }
-
-  test("foreachBatch SCD2 apply-changes fails loudly on an out-of-order CDC batch") {
-    import graft.operators.WindowAnalytics
-    val orders = Tables.orders(spark, sf)
-    val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
-      orders.filter(col("o_orderdate") < cut1))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-scd2ooo")
-    def stage(pred: org.apache.spark.sql.Column, name: String, ageSec: Long): Unit =
-      stageFile(orders.filter(pred), cdcDir, name, ageSec)
-    // REVERSED mod times: the late range arrives first, so the second
-    // batch's rows predate state the first batch already folded — the
-    // append-only contract must kill the query, not corrupt the dimension
-    stage(col("o_orderdate") >= cut2, "late", 60)
-    stage(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2, "early", 30)
-    val stream = spark.readStream
-      .schema(orders.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$cdcDir/*")
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-scd2ooos").toString
-    val query = streaming.EventStream.scd2ApplyChangesStream(stream, history0, stateDir)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try query.processAllAvailable() finally query.stop()
-    }
-    def chain(t: Throwable): Seq[Throwable] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
-    assert(chain(e).exists(c =>
-        Option(c.getMessage).exists(_.contains("append-only CDC contract violated"))),
-      s"wrong failure: $e")
-    // the violating batch must NOT have advanced the state: only v0 (the
-    // seed) and v1 (the first, valid fold) exist
-    val gens = new java.io.File(stateDir).list().filter(_.matches("v\\d+")).sorted
-    assert(gens.sameElements(Array("v0", "v1")), s"generations: ${gens.mkString(",")}")
-  }
-
-  test("foreachBatch totals maintenance equals the one-shot aggregate bit-exactly") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
-    val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut1))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-totalscdc")
-    def stage(pred: org.apache.spark.sql.Column, name: String, ageSec: Long): Unit =
-      stageFile(detail.filter(pred), cdcDir, name, ageSec)
-    stage(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2, "b1", 60)
-    stage(col("o_orderdate") >= cut2, "b2", 30)
-    val stream = spark.readStream
-      .schema(detail.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$cdcDir/*")
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-totalsstate").toString
-    val query = streaming.EventStream.totalsMaintenanceStream(stream, state0, stateDir)
-    try query.processAllAvailable() finally query.stop()
-    val latest = streaming.EventStream.scd2StateLatest(spark, stateDir)
-    assert(latest.inputFiles.exists(_.contains("/v2/")), "expected two folds")
-    // bit-exact against the registered rebuild gate, including the
-    // divided doubles — the whole point of keeping integer partials
-    val got = StarSchema.finalizeTotals(latest)
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(got == want && want.nonEmpty)
-  }
-
-  test("state generation retention keeps the newest k and never breaks the latest reader") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
-    val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut1))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-retaincdc")
-    def stage(pred: org.apache.spark.sql.Column, name: String, ageSec: Long): Unit =
-      stageFile(detail.filter(pred), cdcDir, name, ageSec)
-    stage(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2, "b1", 60)
-    stage(col("o_orderdate") >= cut2, "b2", 30)
-    def newStream() = spark.readStream.schema(detail.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-retainstate").toString
-    // retain=1: after each advance only the newest generation survives
-    val query = streaming.EventStream.totalsMaintenanceStream(
-      newStream(), state0, stateDir, retain = Some(1))
-    try query.processAllAvailable() finally query.stop()
-    val gens = new java.io.File(stateDir).list().filter(_.matches("v\\d+")).sorted
-    assert(gens.sameElements(Array("v2")), s"generations: ${gens.mkString(",")}")
-    // the reader of `latest` is unaffected by the vacuumed history
-    def finalized() = StarSchema.finalizeTotals(
-        streaming.EventStream.scd2StateLatest(spark, stateDir))
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(finalized() == want && want.nonEmpty)
-    // redelivery AFTER retention: the batch markers live outside the
-    // generation dirs, so vacuuming v0/v1 must not erase the evidence —
-    // a full replay of both batches is still a no-op, never a re-fold
-    val q2 = streaming.EventStream.totalsMaintenanceStream(
-      newStream(), state0, stateDir, retain = Some(1))
-    try q2.processAllAvailable() finally q2.stop()
-    val gens2 = new java.io.File(stateDir).list().filter(_.matches("v\\d+")).sorted
-    assert(gens2.sameElements(Array("v2")),
-      s"replay after retention advanced state: ${gens2.mkString(",")}")
-    assert(finalized() == want)
-  }
-
-  test("a re-delivered micro-batch is a no-op and a restarted stream resumes from disk") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
-    val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut1))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-redelivercdc")
-    def stage(pred: org.apache.spark.sql.Column, name: String, ageSec: Long): Unit =
-      stageFile(detail.filter(pred), cdcDir, name, ageSec)
-    stage(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2, "b1", 60)
-    stage(col("o_orderdate") >= cut2, "b2", 30)
-    def newStream() = spark.readStream.schema(detail.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-redeliverstate").toString
-    val q1 = streaming.EventStream.totalsMaintenanceStream(newStream(), state0, stateDir)
-    try q1.processAllAvailable() finally q1.stop()
-    val gensAfterFirst = new java.io.File(stateDir).list().filter(_.matches("v\\d+")).sorted
-    assert(gensAfterFirst.sameElements(Array("v0", "v1", "v2")))
-    // a SECOND stream over the same files replays batchIds 0 and 1 (fresh
-    // checkpoint, same mod-time order) — the worst-case redelivery: every
-    // batch arrives again. The batch markers must make both folds no-ops:
-    // no new generations, and the state still equals the one-shot rebuild
-    // (a double-fold would double-count every post-cutover line).
-    // initialState is ignored on resume — on-disk state is authoritative.
-    val q2 = streaming.EventStream.totalsMaintenanceStream(newStream(), state0, stateDir)
-    try q2.processAllAvailable() finally q2.stop()
-    val gensAfterSecond = new java.io.File(stateDir).list().filter(_.matches("v\\d+")).sorted
-    assert(gensAfterSecond.sameElements(Array("v0", "v1", "v2")),
-      s"redelivery advanced state: ${gensAfterSecond.mkString(",")}")
-    val got = StarSchema.finalizeTotals(
-        streaming.EventStream.scd2StateLatest(spark, stateDir))
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(got == want && want.nonEmpty)
-  }
-
-  test("bucketed totals maintenance equals the one-shot aggregate and survives redelivery") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
-    val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut1))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-bktcdc")
-    def stage(pred: org.apache.spark.sql.Column, name: String, ageSec: Long): Unit =
-      stageFile(detail.filter(pred), cdcDir, name, ageSec)
-    stage(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2, "b1", 60)
-    stage(col("o_orderdate") >= cut2, "b2", 30)
-    def newStream() = spark.readStream.schema(detail.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-bktstate").toString
-    val q1 = streaming.EventStream.totalsMaintenanceStreamBucketed(
-      newStream(), state0, stateDir)
-    try q1.processAllAvailable() finally q1.stop()
-    // bit-exact against the registered rebuild gate through the bucketed
-    // state — incremental ≡ rebuild with partial-partition rewrites
-    def finalized() = StarSchema.finalizeTotals(
-        streaming.EventStream.bucketedStateRead(spark, stateDir).drop("bucket"))
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(finalized() == want && want.nonEmpty)
-    // worst-case redelivery: a fresh stream replays both batchIds over
-    // the same files — the markers must no-op both folds (a double-fold
-    // would double-count every post-cutover line)
-    val q2 = streaming.EventStream.totalsMaintenanceStreamBucketed(
-      newStream(), state0, stateDir)
-    try q2.processAllAvailable() finally q2.stop()
-    assert(finalized() == want)
   }
 
   test("bucketed SCD2 maintenance: parity across runs, untouched buckets never rewritten") {
@@ -660,23 +452,36 @@ class StreamingSpec extends SparkSpec {
     out.toMap
   }
 
+  /** The bucketed SCD2 dimension under `stateDir`, reader-shaped (the
+    * `last_batch` watermark and `bucket` partition column dropped).
+    */
+  private def scd2Stored(stateDir: String,
+      historySchema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    EventStream.bucketedStateRead(spark, stateDir,
+      EventStream.scd2BucketedSchema(historySchema)).drop("bucket", "last_batch")
+
+  /** Row-multiset equality of two interval histories (same columns). */
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
   test("marker vacuum below the checkpoint horizon keeps restarts exactly-once") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
+    import graft.operators.WindowAnalytics
+    val orders = Tables.orders(spark, sf)
     val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut1))
+    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
+      orders.filter(col("o_orderdate") < cut1))
     val cdcDir = java.nio.file.Files.createTempDirectory("graft-mvac")
-    stageFile(detail.filter(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2),
+    stageFile(orders.filter(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2),
       cdcDir, "b1", 60)
-    stageFile(detail.filter(col("o_orderdate") >= cut2), cdcDir, "b2", 30)
+    stageFile(orders.filter(col("o_orderdate") >= cut2), cdcDir, "b2", 30)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-mvacstate").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-mvacckpt").toString
     def run(): Unit = {
-      val stream = spark.readStream.schema(detail.schema)
+      val stream = spark.readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-      val query = streaming.EventStream.totalsMaintenanceStreamBucketed(
-        stream, state0, stateDir, checkpointDir = Some(ckpt))
+      val query = streaming.EventStream.scd2MaintenanceStreamBucketed(
+        stream, history0, stateDir, checkpointDir = Some(ckpt))
       try query.processAllAvailable() finally query.stop()
     }
     run() // batches 0 and 1, both checkpointed and marked
@@ -694,11 +499,9 @@ class StreamingSpec extends SparkSpec {
     run()
     assert(bucketSnapshot(stateDir) == before,
       "restart after marker vacuum re-folded checkpointed batches")
-    val got = StarSchema.finalizeTotals(
-        streaming.EventStream.bucketedStateRead(spark, stateDir).drop("bucket"))
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(got == want && want.nonEmpty)
+    val want = WindowAnalytics.priorityIntervalHistoryOf(orders)
+    assert(sameRows(scd2Stored(stateDir, history0.schema), want) &&
+      !want.isEmpty)
   }
 
   test("manifest-backed tf-index reads: manifest-served frames equal" +
@@ -828,6 +631,10 @@ class StreamingSpec extends SparkSpec {
     streaming.EventStream.writeVersionedManifest(spark, stateDir)
     assert(got(1L) == want(col("o_orderdate") < cut2),
       "an uncommitted generation leaked into the as-of read")
+    assert(StarSchema.finalizeTotals(
+        streaming.EventStream.totalsVersionedRead(spark, stateDir))
+      .orderBy("product_key").collect().toSeq == want(col("o_orderdate") < cut2),
+      "an uncommitted generation was served by the live read")
     streaming.EventStream.totalsFoldBatchVersioned(spark, stateDir, b1, 1L)
     assert(got(1L) == want(lit(true)), "replay did not rebuild the torn generation")
     // RETENTION: expire below horizon 1 — asOf(1) and live unaffected,
@@ -1124,43 +931,6 @@ class StreamingSpec extends SparkSpec {
       StarSchema.finalizeTotals(state0).orderBy("product_key").collect().toSeq)
   }
 
-  test("bucketed totals: a replay after crashing before the marker is a bit-exact no-op") {
-    import graft.operators.StarSchema
-    // the r14-verdict top ask: the dynamic overwrite's job commit and the
-    // marker write are two steps — this spec dies BETWEEN them
-    // (commitMarker = false) and replays the batch; the per-bucket
-    // last_batch watermark must make the replay touch NOTHING
-    val detail = detailFrame
-    val cut = "1996-07-01"
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut))
-    val batch = detail.filter(col("o_orderdate") >= cut)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-wmtotals").toString
-    streaming.EventStream.seedBucketedState(state0, "product_key", stateDir)
-    // the fold commits its overwrite, then "crashes" before the marker
-    streaming.EventStream.totalsFoldBatchBucketed(
-      spark, stateDir, batch, 0L, commitMarker = false)
-    val markers0 = Option(new java.io.File(s"$stateDir/_batches").list())
-      .getOrElse(Array.empty[String]).filter(!_.startsWith("."))
-    assert(markers0.isEmpty, s"crash simulation left markers: ${markers0.mkString(",")}")
-    val afterCrash = bucketSnapshot(stateDir)
-    // the replay re-enters the fold (no marker to skip on) — the
-    // watermark excludes every already-applied bucket from the read,
-    // the fold, and the rewrite: every state file stays byte-identical
-    streaming.EventStream.totalsFoldBatchBucketed(spark, stateDir, batch, 0L)
-    assert(bucketSnapshot(stateDir) == afterCrash,
-      "replay rewrote state a crashed-but-committed fold already applied")
-    val markers1 = new java.io.File(s"$stateDir/_batches").list()
-      .filter(!_.startsWith("."))
-    assert(markers1.sameElements(Array("0")), "replay did not commit the marker")
-    // and the state matches the one-shot aggregate bit-exactly
-    val got = StarSchema.finalizeTotals(
-        streaming.EventStream.bucketedStateRead(spark, stateDir).drop("bucket"))
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(got == want && want.nonEmpty)
-  }
-
   test("forgetKeys: erasure rewrites only hit buckets, clears emptied ones," +
       " preserves survivor watermarks, and re-runs as a byte-exact no-op") {
     import spark.implicits._
@@ -1168,8 +938,8 @@ class StreamingSpec extends SparkSpec {
     val state0 = StarSchema.totalsPartialsOfDetail(detailFrame)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-forget").toString
     streaming.EventStream.seedBucketedState(state0, "product_key", stateDir)
-    val schema = streaming.EventStream.bucketedStateRead(spark, stateDir).schema
-    val st0 = streaming.EventStream.bucketedStateRead(spark, stateDir)
+    val schema = state0.schema.add("last_batch", "long").add("bucket", "int")
+    val st0 = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
       .collect().map(r => (r.getAs[Long]("product_key"),
         r.getAs[Long]("last_batch"), r.getAs[Int]("bucket")))
     val byBucket = st0.groupBy(_._3).map { case (b, rs) => b -> rs.map(_._1).toSeq }
@@ -1183,7 +953,7 @@ class StreamingSpec extends SparkSpec {
     streaming.EventStream.forgetKeys(spark, stateDir, schema, "product_key",
       keys.toDF("product_key"))
     // forgotten keys gone, every other row intact with its OWN watermark
-    val after = streaming.EventStream.bucketedStateRead(spark, stateDir)
+    val after = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
       .collect().map(r => (r.getAs[Long]("product_key"),
         r.getAs[Long]("last_batch"), r.getAs[Int]("bucket")))
     assert(after.toSet == st0.filterNot(r => keys.contains(r._1)).toSet,
@@ -1211,16 +981,16 @@ class StreamingSpec extends SparkSpec {
       byBucket(wipeB).toDF("product_key"))
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$stateDir/state/bucket=$wipeB")))
-    assert(streaming.EventStream.bucketedStateRead(spark, stateDir)
+    assert(streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
       .filter(col("bucket") === wipeB).count() == 0)
     // a delete list arriving with a NARROWER key type must still erase:
     // hash(int k) != hash(long k), so without the cast-to-state-type the
     // wrong buckets would be probed and the key silently survive
-    val intVictim = streaming.EventStream.bucketedStateRead(spark, stateDir)
+    val intVictim = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
       .select(col("product_key")).head().getLong(0)
     streaming.EventStream.forgetKeys(spark, stateDir, schema, "product_key",
       Seq(intVictim.toInt).toDF("product_key"))
-    assert(streaming.EventStream.bucketedStateRead(spark, stateDir)
+    assert(streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
       .filter(col("product_key") === intVictim).count() == 0,
       "an IntegerType delete list against a LongType table must still erase")
   }
@@ -1284,65 +1054,60 @@ class StreamingSpec extends SparkSpec {
   test("forgetKeys composes with the maintenance stream: erased keys fold" +
       " from ZERO on later data, survivors keep full history") {
     import spark.implicits._
-    import graft.operators.StarSchema
+    import graft.operators.WindowAnalytics
     // erasure semantics under continued ingestion: forgetting a key wipes
     // its HISTORY, not its future — a later micro-batch that mentions it
-    // folds from an absent state row (the full-outer merge's null side),
-    // never from the erased aggregates
-    val detail = detailFrame
+    // folds from an absent chain (a new key to the apply-changes fold),
+    // never from the erased intervals
+    val orders = Tables.orders(spark, sf)
     val c1 = "1996-01-01"
     val c2 = "1997-01-01"
-    val d01 = detail.filter(col("o_orderdate") < c2)
-    val d2 = detail.filter(col("o_orderdate") >= c2)
+    val o01 = orders.filter(col("o_orderdate") < c2)
+    val o2 = orders.filter(col("o_orderdate") >= c2)
+    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
+      orders.filter(col("o_orderdate") < c1))
+    val schema = streaming.EventStream.scd2BucketedSchema(history0.schema)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-forgetstream").toString
-    streaming.EventStream.seedBucketedState(
-      StarSchema.totalsPartialsOfDetail(detail.filter(col("o_orderdate") < c1)),
-      "product_key", stateDir)
-    streaming.EventStream.totalsFoldBatchBucketed(spark, stateDir,
-      detail.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2), 0L)
-    val schema = streaming.EventStream.bucketedStateRead(spark, stateDir).schema
-    // victims: keys with history AND future rows — the interesting case
-    val victims = d01.select(col("l_partkey")).distinct()
-      .join(d2.select(col("l_partkey")).distinct(), Seq("l_partkey"), "left_semi")
-      .limit(3).collect().map(_.getLong(0)).toSeq
+    streaming.EventStream.seedBucketedState(history0, "customer_key", stateDir)
+    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema,
+      orders.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2), 0L)
+    // victims: keys with history AND future orders — the interesting case
+    val victims = o01.select(col("o_custkey")).distinct()
+      .join(o2.select(col("o_custkey")).distinct(), Seq("o_custkey"), "left_semi")
+      .orderBy("o_custkey").limit(3).collect().map(_.getLong(0)).toSeq
     assert(victims.nonEmpty)
-    streaming.EventStream.forgetKeys(spark, stateDir, schema, "product_key",
-      victims.toDF("product_key"))
-    streaming.EventStream.totalsFoldBatchBucketed(spark, stateDir, d2, 1L)
-    val state = streaming.EventStream.bucketedStateRead(spark, stateDir)
-      .drop("bucket", "last_batch")
-    // victims carry ONLY their post-erasure contributions...
-    val gotVictims = state.filter(col("product_key").isin(victims: _*))
-      .collect().map(_.toSeq).toSet
-    val wantVictims = StarSchema.totalsPartialsOfDetail(
-        d2.filter(col("l_partkey").isin(victims: _*)))
-      .collect().map(_.toSeq).toSet
-    assert(gotVictims == wantVictims,
+    streaming.EventStream.forgetKeys(spark, stateDir, schema, "customer_key",
+      victims.toDF("customer_key"))
+    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema, o2, 1L)
+    val state = scd2Stored(stateDir, history0.schema)
+    // victims carry ONLY their post-erasure chains...
+    assert(sameRows(state.filter(col("customer_key").isin(victims: _*)),
+        WindowAnalytics.priorityIntervalHistoryOf(
+          o2.filter(col("o_custkey").isin(victims: _*)))),
       "erased keys must re-accumulate from zero, not from erased history")
-    // ...while every survivor's totals equal the full-history fold
-    val gotRest = state.filter(!col("product_key").isin(victims: _*))
-      .collect().map(_.toSeq).toSet
-    val wantRest = StarSchema.totalsPartialsOfDetail(
-        detail.filter(!col("l_partkey").isin(victims: _*)))
-      .collect().map(_.toSeq).toSet
-    assert(gotRest == wantRest)
+    // ...while every survivor's chain equals the full-history build
+    assert(sameRows(state.filter(!col("customer_key").isin(victims: _*)),
+      WindowAnalytics.priorityIntervalHistoryOf(
+        orders.filter(!col("o_custkey").isin(victims: _*)))))
   }
 
-  test("bucketed totals: a TORN overwrite commit heals on replay — old buckets re-fold, new ones skip") {
-    import graft.operators.StarSchema
+  test("bucketed SCD2: a TORN overwrite commit heals on replay — old buckets re-fold, new ones skip") {
+    import graft.operators.WindowAnalytics
     // stronger than the clean crash case: a dynamic-partition overwrite's
     // job commit is not atomic ACROSS partitions, so a crash mid-commit
     // can leave SOME touched buckets on new data and some on old. The
     // per-bucket watermark must heal exactly that: stale buckets (old
     // watermark) re-fold, committed buckets (new watermark) are excluded
-    // byte-for-byte.
-    val detail = detailFrame
+    // byte-for-byte — and the re-fold must not trip the append-only
+    // contract on buckets the torn commit already advanced.
+    val orders = Tables.orders(spark, sf)
     val cut = "1996-07-01"
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut))
-    val batch = detail.filter(col("o_orderdate") >= cut)
+    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
+      orders.filter(col("o_orderdate") < cut))
+    val batch = orders.filter(col("o_orderdate") >= cut)
+    val schema = streaming.EventStream.scd2BucketedSchema(history0.schema)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-torn").toString
-    streaming.EventStream.seedBucketedState(state0, "product_key", stateDir)
+    streaming.EventStream.seedBucketedState(history0, "customer_key", stateDir)
     // the batch touches every bucket at this fixture scale — pick one to tear
     val TornBucket = 3
     val bucketDir = java.nio.file.Paths.get(s"$stateDir/state/bucket=$TornBucket")
@@ -1351,8 +1116,8 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.list(bucketDir).forEach(p =>
       java.nio.file.Files.copy(p, backup.resolve(p.getFileName.toString)))
     // fold commits, marker never lands (the crash window)...
-    streaming.EventStream.totalsFoldBatchBucketed(
-      spark, stateDir, batch, 0L, commitMarker = false)
+    streaming.EventStream.scd2FoldBatchBucketed(
+      spark, stateDir, schema, batch, 0L, commitMarker = false)
     // ...and the torn bucket's partition reverts to its PRE-FOLD files
     // (the part of the job commit that never happened)
     java.nio.file.Files.list(bucketDir).forEach(p => java.nio.file.Files.delete(p))
@@ -1361,7 +1126,7 @@ class StreamingSpec extends SparkSpec {
     val afterTear = bucketSnapshot(stateDir)
     // the replay: the torn bucket's watermark is still -1 → re-folds;
     // every committed bucket's watermark is 0 → excluded untouched
-    streaming.EventStream.totalsFoldBatchBucketed(spark, stateDir, batch, 0L)
+    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema, batch, 0L)
     val healed = bucketSnapshot(stateDir)
     val committedBefore = afterTear.view.filterKeys(!_.startsWith(s"bucket=$TornBucket/")).toMap
     val committedAfter = healed.view.filterKeys(!_.startsWith(s"bucket=$TornBucket/")).toMap
@@ -1370,12 +1135,9 @@ class StreamingSpec extends SparkSpec {
     assert(afterTear.view.filterKeys(_.startsWith(s"bucket=$TornBucket/")).toMap !=
       healed.view.filterKeys(_.startsWith(s"bucket=$TornBucket/")).toMap,
       "the torn bucket was not re-folded")
-    // and the healed state equals the one-shot aggregate bit-exactly
-    val got = StarSchema.finalizeTotals(
-        streaming.EventStream.bucketedStateRead(spark, stateDir).drop("bucket"))
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(got == want && want.nonEmpty)
+    // and the healed dimension equals the from-scratch build
+    val want = WindowAnalytics.priorityIntervalHistoryOf(orders)
+    assert(sameRows(scd2Stored(stateDir, history0.schema), want) && !want.isEmpty)
   }
 
   test("bucketed SCD2: a replay after crashing before the marker is a bit-exact no-op") {
@@ -1600,89 +1362,38 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet == pairsBefore)
   }
 
-  test("a torn v0 seed (no commit evidence) is re-seeded, not served") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
-    val cut = "1996-07-01"
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-tornseed")
-    stageFile(detail.filter(col("o_orderdate") >= cut), cdcDir, "b1", 60)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-tornseedstate").toString
-    // the crash state: v0 dir exists with partial files, NO _SUCCESS —
-    // a bare-existence reader would serve/fold this truncated baseline
-    val v0 = java.nio.file.Paths.get(s"$stateDir/v0")
-    java.nio.file.Files.createDirectories(v0)
-    java.nio.file.Files.write(v0.resolve("part-junk"), Array[Byte](1, 2, 3))
-    val stream = spark.readStream.schema(detail.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-    val q1 = streaming.EventStream.totalsMaintenanceStream(stream, state0, stateDir)
-    try q1.processAllAvailable() finally q1.stop()
-    val got = StarSchema.finalizeTotals(
-        streaming.EventStream.scd2StateLatest(spark, stateDir))
-      .orderBy("product_key").collect().toSeq
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(got == want && want.nonEmpty,
-      "stream served a torn v0 seed instead of re-seeding")
-  }
-
-  test("generation retention never deletes the newest APPLIED generation beside an orphan") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
-    val cut = "1996-07-01"
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-orphret")
-    stageFile(detail.filter(col("o_orderdate") >= cut), cdcDir, "b1", 60)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-orphretstate").toString
-    val stream = spark.readStream.schema(detail.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-    val q1 = streaming.EventStream.totalsMaintenanceStream(stream, state0, stateDir)
-    try q1.processAllAvailable() finally q1.stop()
-    // applied: v0 (seed), v1 (batch 0). Plant a marker-less orphan v2 —
-    // a fold that crashed before its marker
-    spark.read.parquet(s"$stateDir/v1").write.parquet(s"$stateDir/v2")
-    // keep=1 must keep the newest APPLIED generation (v1), not count
-    // the orphan toward the keep slot and delete v1 under it
-    val dropped = streaming.EventStream.retainStateGenerations(spark, stateDir, 1)
-    assert(dropped == Seq(0), s"dropped: $dropped")
-    val latest = streaming.EventStream.scd2StateLatest(spark, stateDir)
-    assert(latest.inputFiles.exists(_.contains("/v1/")),
-      "latest applied generation was deleted or not served")
-    assert(latest.count() > 0)
-  }
-
-  test("streaming term-stats maintenance equals the batch rebuild (term-keyed bucketed fold)") {
-    import graft.operators.TextAnalysis
-    val docs = Tables.documents(spark, sf)
-    val isBatch = col("doc_id") % 10 === 9
-    val state0 = TextAnalysis.termStatsOf(TextAnalysis.termFreqsOf(docs.filter(!isBatch)))
-    val stageDir = java.nio.file.Files.createTempDirectory("graft-termstats")
-    stageFile(docs.filter(isBatch && col("doc_id") % 20 === 9), stageDir, "b1", 60)
-    stageFile(docs.filter(isBatch && col("doc_id") % 20 =!= 9), stageDir, "b2", 30)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-termstate").toString
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$stageDir/*")
-    val q1 = streaming.EventStream.termStatsMaintenanceStreamBucketed(
-      stream, state0, stateDir)
-    try q1.processAllAvailable() finally q1.stop()
-    def stats(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val got = stats(streaming.EventStream.termStatsRead(spark, stateDir))
-    val want = stats(TextAnalysis.termStatsOf(TextAnalysis.termFreqsOf(docs)))
-    assert(got == want && want.nonEmpty,
-      "maintained term statistics diverged from the full-corpus rebuild")
-    // the registered batch gate lands on the same table (its oracle
-    // certifies the same mergeTermStats operator the fold just ran)
-    assert(stats(q("text_df_incremental")) == want)
-    // a replayed fold with the marker withheld (crash between overwrite
-    // job commit and marker write) is a no-op — watermark idempotence
-    // holds for the term-keyed fold too
-    val replay = docs.filter(isBatch && col("doc_id") % 20 =!= 9)
-    streaming.EventStream.termStatsFoldBatchBucketed(
-      spark, stateDir, replay, 1L, commitMarker = false)
-    assert(stats(streaming.EventStream.termStatsRead(spark, stateDir)) == want,
-      "replayed term-stats fold double-counted")
+  test("a torn seed (no _SUCCESS) is re-seeded, not served, on the versioned" +
+      " and in-place bucketed layouts") {
+    import graft.operators.WindowAnalytics
+    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
+      Tables.orders(spark, sf).filter(col("o_orderdate") < "1996-07-01"))
+    // (layout, seed, served rows, seed dir under the state dir)
+    val layouts: Seq[(String, String => Unit,
+        String => org.apache.spark.sql.DataFrame, String)] = Seq(
+      ("versioned",
+        dir => EventStream.seedVersionedState(history0, "customer_key", dir),
+        dir => EventStream.scd2VersionedReadAsOf(spark, dir, history0.schema, -1L),
+        "state/seed"),
+      ("bucketed",
+        dir => EventStream.seedBucketedState(history0, "customer_key", dir),
+        dir => scd2Stored(dir, history0.schema),
+        "state"))
+    layouts.foreach { case (layout, seed, served, seedSub) =>
+      val fresh = java.nio.file.Files.createTempDirectory("graft-freshseed").toString
+      seed(fresh)
+      // the crash state: a seed dir with a partial bucket file and NO
+      // _SUCCESS — a bare-existence check would serve or fold onto it
+      val torn = java.nio.file.Files.createTempDirectory("graft-tornseed").toString
+      val part = java.nio.file.Paths.get(s"$torn/$seedSub/bucket=0")
+      java.nio.file.Files.createDirectories(part)
+      java.nio.file.Files.write(part.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
+      seed(torn)
+      assert(java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$torn/$seedSub/_SUCCESS")),
+        s"$layout: the torn seed was not re-seeded")
+      assert(sameRows(served(torn), served(fresh)) && !served(fresh).isEmpty,
+        s"$layout: the re-seeded state differs from a fresh seed")
+    }
   }
 
   test("versioned term-stats STREAM equals the batch rebuild; restart over" +
@@ -3028,60 +2739,29 @@ class StreamingSpec extends SparkSpec {
       "a forgotten vector was served as a neighbor after later ingestion")
   }
 
-  test("a crashed marker-less fold is never served and replay overwrites it") {
-    import graft.operators.StarSchema
-    val detail = detailFrame
-    val cut = "1996-07-01"
-    val state0 = StarSchema.totalsPartialsOfDetail(
-      detail.filter(col("o_orderdate") < cut))
-    val (cut1, cut2) = (cut, "1998-07-01")
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-crashcdc")
-    detail.filter(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2)
-      .coalesce(1).write.parquet(cdcDir.resolve("b1").toString)
-    java.nio.file.Files.walk(cdcDir.resolve("b1")).forEach(p =>
-      p.toFile.setLastModified(System.currentTimeMillis() - 60000))
-    def newStream() = spark.readStream.schema(detail.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-crashstate").toString
-    val q1 = streaming.EventStream.totalsMaintenanceStream(newStream(), state0, stateDir)
-    try q1.processAllAvailable() finally q1.stop()
-    def finalized() = StarSchema.finalizeTotals(
-        streaming.EventStream.scd2StateLatest(spark, stateDir))
-      .orderBy("product_key").collect().toSeq
-    val wantMid = StarSchema.finalizeTotals(StarSchema.totalsPartialsOfDetail(
-        detail.filter(col("o_orderdate") < cut2)))
-      .orderBy("product_key").collect().toSeq
-    assert(finalized() == wantMid && wantMid.nonEmpty)
-    // simulate the crash window for batch 2: its parquet commit landed
-    // as v2 but the JVM died before the batch marker — the orphan holds
-    // a state a raw dir-max reader would serve; the latest-APPLIED
-    // reader must keep serving v1
-    val b2rows = detail.filter(col("o_orderdate") >= cut2)
-    StarSchema.mergeTotalsPartials(spark.read.parquet(s"$stateDir/v1"),
-        StarSchema.totalsPartialsOfDetail(b2rows))
-      .write.mode("overwrite").parquet(s"$stateDir/v2")
-    assert(finalized() == wantMid, "a marker-less orphan generation was served")
-    // the restarted stream replays batch 0 (marked — no-op) and
-    // re-delivers batch 1: the fold reads v1 (the last APPLIED
-    // generation, not the orphan) and overwrites v2 — exactly-once, no
-    // double count of the b2 rows
-    b2rows.coalesce(1).write.parquet(cdcDir.resolve("b2").toString)
-    val q2 = streaming.EventStream.totalsMaintenanceStream(newStream(), state0, stateDir)
-    try q2.processAllAvailable() finally q2.stop()
-    val want = q("fact_product_totals_incremental").collect().toSeq
-    assert(finalized() == want && want.nonEmpty)
-  }
-
-  test("scd2StateLatest names the stateDir in its failure instead of an opaque NPE") {
-    val missing = intercept[IllegalArgumentException] {
-      streaming.EventStream.scd2StateLatest(spark, "/tmp/graft-no-such-state-dir")
+  test("a versioned read of a missing or unseeded state dir fails naming" +
+      " the dir; a zero-row seed reads as empty") {
+    import graft.operators.TextAnalysis
+    val base = java.nio.file.Files.createTempDirectory("graft-unseeded")
+    val missing = base.resolve("no-such-state").toString
+    val empty = java.nio.file.Files.createTempDirectory(base, "empty").toString
+    for (dir <- Seq(missing, empty);
+         read <- Seq[String => org.apache.spark.sql.DataFrame](
+           EventStream.totalsVersionedRead(spark, _),
+           EventStream.termStatsVersionedRead(spark, _))) {
+      val e = intercept[IllegalArgumentException](read(dir))
+      assert(e.getMessage.contains(dir) &&
+        e.getMessage.contains("no committed versioned state"), e.getMessage)
     }
-    assert(missing.getMessage.contains("/tmp/graft-no-such-state-dir"))
-    val empty = java.nio.file.Files.createTempDirectory("graft-emptystate").toString
-    val e2 = intercept[IllegalArgumentException] {
-      streaming.EventStream.scd2StateLatest(spark, empty)
-    }
-    assert(e2.getMessage.contains("no state generations"))
+    // a state seeded with ZERO rows (the dfForgetStored bootstrap) has a
+    // committed seed and must read as empty, not fail
+    val seededEmpty = java.nio.file.Files.createTempDirectory(base, "seeded").toString
+    EventStream.seedVersionedState(
+      TextAnalysis.termStatsOf(TextAnalysis.termFreqsOf(
+        Tables.documents(spark, sf).filter(lit(false)))),
+      "term", seededEmpty)
+    assert(EventStream.termStatsVersionedRead(spark, seededEmpty).count() == 0)
+    assert(EventStream.termStatsVersionedReadAsOf(spark, seededEmpty, -1L).count() == 0)
   }
 
   test("stateful mapGroupsWithState latest-per-user equals the batch query") {
