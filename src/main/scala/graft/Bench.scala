@@ -8,7 +8,7 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      // Parity with Verify/TimeQ/tests: zorder_pruned_scan clusters on
+      // Parity with Verify/tests: zorder_pruned_scan clusters on
       // to_date(o_orderdate)/datediff, which are session-timezone
       // dependent — on a non-UTC host an unpinned bench would cluster
       // and scan a slightly different band than the one the verify gate

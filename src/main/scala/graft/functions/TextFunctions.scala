@@ -31,9 +31,6 @@ object TextFunctions {
   def md5Hash60Sql(expr: String): String =
     s"CAST('0x' || substr(md5($expr), 18, 15) AS BIGINT)"
 
-  /** Production-path 64-bit hash (not oracle-reproducible). */
-  def fastHash(cols: Column*): Column = xxhash64(cols: _*)
-
   /** Rolling polynomial fingerprint over a token array:
     * fold(acc = 0; acc = (acc * 31 + md5Hash60(token)) % 1000003).
     * Order-sensitive by construction (a permuted document fingerprints

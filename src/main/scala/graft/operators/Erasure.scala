@@ -85,9 +85,9 @@ object Erasure {
       .filter(Similarity.annForgottenRule(col("vec_id"))).select(col("vec_id"))
     val mediaVictims = docVictims.select(col("doc_id").alias("media_id"))
 
-    // row state: the documents table as a bucketed state table
-    val rowsSchema = EventStream.scd2BucketedSchema(docs.schema)
-    EventStream.seedBucketedState(docs, "doc_id", d("rows"))
+    // row state: the documents table as a versioned state table
+    val rowsSchema = EventStream.scd2VersionedSchema(docs.schema)
+    EventStream.seedVersionedState(docs, "doc_id", d("rows"))
     // text tier: tf + positions under one index dir (per-table markers)
     EventStream.tfIndexSeed(spark, d("text"), docs)
     EventStream.posIndexSeed(spark, d("text"), docs)
@@ -124,7 +124,7 @@ object Erasure {
     def unlessSkipped(tier: String)(body: => Unit): Unit =
       if (!skipForgets.contains(tier)) body
     unlessSkipped("rows")(EventStream.forgetKeys(spark, d("rows"), rowsSchema,
-      "doc_id", docVictims))
+      "doc_id", docVictims, batchId = 0L))
     unlessSkipped("tf_index")(
       EventStream.forgetDocsFromTfIndex(spark, d("text"), docVictims))
     unlessSkipped("pos_index")(
@@ -133,9 +133,9 @@ object Erasure {
       EventStream.forgetDocsFromChunkIndex(spark, d("chunks"), docVictims))
     unlessSkipped("winnow_index")(
       EventStream.forgetDocsFromWinnowIndex(spark, d("winnow"), docVictims))
-    // erasure on the copy-on-write tier: negated fold + history horizon
-    // + emptied-bucket sweep (idempotent end-to-end — see
-    // [[graft.streaming.EventStream.termStatsForgetVersioned]])
+    // erasure on the term-stats tier: negated forget generation +
+    // history horizon + emptied-bucket sweep (idempotent end-to-end —
+    // see [[graft.streaming.EventStream.termStatsForgetVersioned]])
     unlessSkipped("term_stats_versioned")(
       EventStream.termStatsForgetVersioned(spark, d("termver"),
         docs.filter(docForgotten(col("doc_id"))), batchId = 0L))
@@ -148,8 +148,9 @@ object Erasure {
     unlessSkipped("phash")(EventStream.forgetMediaFromPhashIndex(spark,
       d("phash"), d("phashPairs"), mediaVictims))
     // aggregate-space erasure on the model tier: the cohort's nine-sum
-    // delta folds in NEGATED (marker-gated + watermark-idempotent — a
-    // certificate re-run provably cannot subtract twice)
+    // delta folds in NEGATED (the forget generation's commit is its
+    // replay evidence — a certificate re-run provably cannot subtract
+    // twice)
     unlessSkipped("ols_sums")(EventStream.forgetFromOlsSums(spark, d("ols"),
       Stats.olsAgg(lq.filter(Stats.olsForgottenRule(col("l_orderkey")))
         .groupBy(col("return_flag"))), batchId = 0L))
@@ -200,7 +201,7 @@ object Erasure {
       base: String): DataFrame = {
     import graft.streaming.EventStream
     val d = dirsOf(base)
-    val rowsSchema = EventStream.scd2BucketedSchema(
+    val rowsSchema = EventStream.scd2VersionedSchema(
       Tables.documents(spark, sfDir).schema)
     def row(tier: String, df: DataFrame, residue: Column): DataFrame =
       df.agg(count(when(residue, lit(1))).alias("n_residue"),
@@ -208,8 +209,7 @@ object Erasure {
         .select(lit(tier).alias("tier"), col("n_residue"), col("n_remaining"))
     val doc = docForgotten(col("doc_id"))
     Seq(
-      row("rows",
-        EventStream.bucketedStateRead(spark, d("rows"), rowsSchema), doc),
+      row("rows", EventStream.versionedRead(spark, d("rows"), rowsSchema), doc),
       row("tf_index", EventStream.tfIndexRead(spark, d("text")), doc),
       row("pos_index", EventStream.posIndexRead(spark, d("text")), doc),
       row("chunk_index", EventStream.chunkIndexRead(spark, d("chunks")), doc),
@@ -272,7 +272,7 @@ object Erasure {
 
   def erasureCertificate(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"erasure.certificate:$sfDir") {
-      val base = Layout.tmpPath("graft-cert", sfDir)
+      val base = Layout.tmpPath("graft-certlog", sfDir)
       // r22 audit note (r21-verdict #6): the probes already run as ONE
       // union/one action — the steady ~1.3 s is 22 AQE shuffle-stage
       // jobs, 17 of which are the per-store partial→final aggregate

@@ -780,8 +780,8 @@ object TextAnalysis {
     * batch tokenizes only its own documents and merges through the same
     * [[mergeTermStats]] the incremental gate certifies), and this gate
     * reads the table AS OF batch 0 — the df statistics BM25 served the
-    * moment the first dump committed, the question the
-    * dynamic-overwrite layout destroyed at fold time. Oracle = the
+    * moment the first dump committed, the question an in-place
+    * rewrite destroys at fold time. Oracle = the
     * from-scratch statistics over EXACTLY the batch-0 prefix, so a
     * generation served beyond the as-of bound, a missed bucket, or a
     * horizon misread all surface as row diffs. StreamingSpec pins the
@@ -813,8 +813,8 @@ object TextAnalysis {
     * right-to-be-forgotten story for the layout that RETAINS history by
     * design: the generation log that makes `text_df_asof` answerable is
     * exactly what a deletion request must also reach, so erasure here
-    * is the negated-delta fold PLUS a history horizon PLUS the
-    * emptied-bucket sweep
+    * is the negated-delta forget generation PLUS a history horizon
+    * PLUS the emptied-bucket sweep
     * ([[graft.streaming.EventStream.termStatsForgetVersioned]]): the
     * corrected generation discharges serving (df ≤ 0 rows vanish — a
     * zero-count tombstone still discloses the term), the horizon
@@ -835,16 +835,16 @@ object TextAnalysis {
   def dfForgetStored(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"text.dfForgetStored:$sfDir") {
       import graft.streaming.EventStream
-      val stateDir = Layout.tmpPath("graft-termverforget", sfDir)
+      val stateDir = Layout.tmpPath("graft-termforgetlog", sfDir)
       val docs = Tables.documents(spark, sfDir)
       val mid = docs.agg((min(col("doc_id")) + max(col("doc_id"))) / 2)
         .head().getDouble(0)
-      // the horizon marker is the forget's commit evidence: once it
-      // reads >= the forget batch, the two history folds ALREADY ran
-      // and their generations were legitimately expired — a second JVM
-      // must not replay them (the replay's as-of read would fail the
-      // loud horizon check, which is the protocol doing its job; the
-      // dim_customer_forget_keys seed-guard discipline, horizon-keyed)
+      // once the horizon reads >= the forget batch, the two history
+      // folds ALREADY ran and their generations were legitimately
+      // expired — a second JVM must not replay them (the replay's as-of
+      // read would fail the loud horizon check, which is the protocol
+      // doing its job; the dim_customer_forget_keys seed-guard
+      // discipline, horizon-keyed)
       if (EventStream.versionedExpiredThrough(spark, stateDir) < 2L) {
         EventStream.seedVersionedState(
           termStatsOf(termFreqsOf(docs.filter(lit(false)))), "term", stateDir)
@@ -853,8 +853,8 @@ object TextAnalysis {
         EventStream.termStatsFoldBatchVersioned(spark, stateDir,
           docs.filter(col("doc_id") > mid), 1L)
       }
-      // idempotent either way: fold skips on its generation commit,
-      // expiry is monotone, the sweep probes empty
+      // idempotent either way: the forget skips on its own generation
+      // commit, expiry is monotone, the sweep finds nothing left
       EventStream.termStatsForgetVersioned(spark, stateDir,
         docs.filter(col("doc_id") % 10 === 7), 2L)
       EventStream.termStatsVersionedRead(spark, stateDir).orderBy("term")

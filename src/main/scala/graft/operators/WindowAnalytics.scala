@@ -408,8 +408,8 @@ object WindowAnalytics {
   def customerPriorityIntervals(spark: SparkSession, sfDir: String): DataFrame =
     priorityIntervalHistory(spark, sfDir).orderBy("customer_key", "island")
 
-  /** TIME TRAVEL ON THE VERSIONED DIMENSION (the second adopter of the
-    * copy-on-write bucket-generation layout, after `fact_totals_asof`):
+  /** TIME TRAVEL ON THE VERSIONED DIMENSION (the SCD2 face of the
+    * copy-on-write bucket-generation layout, beside `fact_totals_asof`):
     * the SCD2 interval history lives as a VERSIONED bucketed table —
     * history (orders before the cutover) seeds the baseline, tonight's
     * CDC batch folds through the same
@@ -418,8 +418,8 @@ object WindowAnalytics {
     * this gate serves the dimension AS OF batch −1: every interval
     * chain exactly as it stood BEFORE the batch, including the
     * `valid_until`/`is_current` frontier the apply-changes fold
-    * REWRITES when a key's chain extends (the state the in-place
-    * layout destroys — and the reason SCD2 is the harder time-travel
+    * REWRITES when a key's chain extends (the state an in-place
+    * merge destroys — and the reason SCD2 is the harder time-travel
     * case than additive totals: the batch doesn't just add rows, it
     * mutates the open versions of every affected key). Oracle = the
     * from-scratch SCD2 dimension over EXACTLY the history window
@@ -429,8 +429,8 @@ object WindowAnalytics {
     *
     * 100 TB shape: the as-of read is a listing filter over bucket
     * generations — zero data copy; the batch paid one generation write
-    * of its touched buckets, which is the same write volume the
-    * in-place fold already paid.
+    * of its touched buckets, the same write volume a partial in-place
+    * rewrite would pay.
     */
   def dimCustomerScd2Asof(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"windowanalytics.scd2Asof:$sfDir") {
@@ -451,36 +451,36 @@ object WindowAnalytics {
 
   /** RIGHT-TO-BE-FORGOTTEN over the versioned dimension — the registered
     * face of [[graft.streaming.EventStream.forgetKeys]]: the SCD2
-    * dimension is seeded as a bucketed state table (the streaming
+    * dimension is seeded as a versioned state table (the streaming
     * maintenance layout), every version of the customers in the erasure
     * list (`customer_key % 97 == 3` — the fixture's stand-in for a GDPR
-    * request queue) is deleted with a partial rewrite of only the buckets
-    * those keys hash into, and the SERVED table is what this query
-    * returns. The oracle is the from-scratch dimension SQL with the
+    * request queue) is deleted by a forget generation holding only the
+    * buckets those keys hash into, and the SERVED table is what this
+    * query returns. The oracle is the from-scratch dimension SQL with the
     * erasure predicate — so the gate proves delete-propagation ≡
     * filter-rebuild, the erasure twin of the incremental gates'
-    * maintain ≡ rebuild theorem. Byte-identity of untouched buckets and
-    * emptied-bucket clearing are spec'd in StreamingSpec.
+    * maintain ≡ rebuild theorem. Byte-identity of untouched buckets,
+    * emptied-bucket clearing and the expired pre-erasure history are
+    * spec'd in StreamingSpec.
     *
     * Memoized durably (the [[scd2SnapshotPrunedScan]] discipline): seed +
     * erase run once per JVM; the returned lineage is only the state-table
-    * scan. Idempotent end-to-end — a second JVM re-runs the erasure
-    * against an already-erased table as a provable no-op.
+    * scan. Idempotent end-to-end — a second JVM finds the seed and the
+    * forget generation committed and re-runs nothing.
     */
   def dimCustomerForgetKeys(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"windowanalytics.scd2Forget:$sfDir") {
       import graft.streaming.EventStream
-      val stateDir = Layout.tmpPath("graft-scd2forget", sfDir)
+      val stateDir = Layout.tmpPath("graft-scd2forgetlog", sfDir)
       val dim = dimCustomerScd2(spark, sfDir)
-      val schema = EventStream.scd2BucketedSchema(dim.schema)
-      EventStream.seedBucketedState(dim, "customer_key", stateDir)
+      val schema = EventStream.scd2VersionedSchema(dim.schema)
+      EventStream.seedVersionedState(dim, "customer_key", stateDir)
       // no distinct here: forgetKeys distincts its list itself, and
       // filter-before-anything avoids aggregating every dimension key
       EventStream.forgetKeys(spark, stateDir, schema, "customer_key",
         dim.select(col("customer_key"))
-          .filter(pmod(col("customer_key"), lit(97L)) === 3L))
-      EventStream.bucketedStateRead(spark, stateDir, schema)
-        .drop("bucket", "last_batch")
+          .filter(pmod(col("customer_key"), lit(97L)) === 3L), batchId = 0L)
+      EventStream.versionedRead(spark, stateDir, schema)
         .orderBy("customer_sk")
     }
 
@@ -499,43 +499,42 @@ object WindowAnalytics {
   private val retractKeepSql =
     s"NOT (o_custkey % 7 = 2 AND o_orderdate >= TIMESTAMP '$RetractCutoff')"
 
-  /** CDC CORRECTION / RETRACTION through the bucketed SCD2 state — the
+  /** CDC CORRECTION / RETRACTION through the versioned SCD2 state — the
     * SIXTH incremental "≡ rebuild" gate (after MinHash index, SCD2
     * append, totals, term stats, ANN index): [[scd2ApplyChanges]]
     * rejects out-of-order batches by contract, and this is the path a
     * real feed then takes — a retraction batch voids orders
     * retroactively ([[retractedRule]]), the feed re-sends each affected
     * key's full corrected order stream, and
-    * [[graft.streaming.EventStream.scd2CorrectKeysBucketed]] replaces
-    * exactly those keys' interval chains with a partial rewrite of only
-    * the buckets they hash into. The oracle is the from-scratch
+    * [[graft.streaming.EventStream.scd2CorrectKeysVersioned]] replaces
+    * exactly those keys' interval chains in a forget generation holding
+    * only the buckets they hash into. The oracle is the from-scratch
     * dimension SQL over the corrected order stream — correction ≡
     * rebuild as a driver-gate fact. Untouched-bucket byte-identity and
     * idempotent replay are spec'd in StreamingSpec.
     *
     * Memoized durably (the [[dimCustomerForgetKeys]] discipline): seed +
     * correct run once per JVM behind the state table's commit evidence;
-    * a second JVM replays the correction as a marker-gated no-op.
+    * a second JVM finds the correction's generation committed and
+    * replays it as a no-op.
     */
   def dimCustomerScd2Corrected(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"windowanalytics.scd2Correct:$sfDir") {
       import graft.streaming.EventStream
-      val stateDir = Layout.tmpPath("graft-scd2correct", sfDir)
+      val stateDir = Layout.tmpPath("graft-scd2correctlog", sfDir)
       val orders = Tables.orders(spark, sfDir)
       val hist = priorityIntervalHistory(spark, sfDir)
-      val schema = EventStream.scd2BucketedSchema(hist.schema)
-      EventStream.seedBucketedState(hist, "customer_key", stateDir)
+      val schema = EventStream.scd2VersionedSchema(hist.schema)
+      EventStream.seedVersionedState(hist, "customer_key", stateDir)
       val retracted = retractedRule(col("o_custkey"), col("o_orderdate"))
       val affected = orders.filter(retracted)
         .select(col("o_custkey").alias("customer_key")).distinct()
       val corrected = orders
         .join(affected, col("o_custkey") === col("customer_key"), "left_semi")
         .filter(!retracted)
-      EventStream.scd2CorrectKeysBucketed(spark, stateDir, schema,
+      EventStream.scd2CorrectKeysVersioned(spark, stateDir, schema,
         affected, corrected, batchId = 0L)
-      scd2Dimension(spark, sfDir,
-        EventStream.bucketedStateRead(spark, stateDir, schema)
-          .drop("bucket", "last_batch"))
+      scd2Dimension(spark, sfDir, EventStream.versionedRead(spark, stateDir, schema))
         .orderBy("customer_sk")
     }
 

@@ -188,7 +188,7 @@ object EventStream {
   /** Shingle-table read schema for the parquet-backed ingest-dedup index
     * — explicit schemas everywhere a state dir could legitimately be
     * empty or freshly seeded (the same discipline as
-    * [[bucketedStateRead]]).
+    * [[versionedStateRead]]).
     */
   private val ingestShinglesSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -283,7 +283,7 @@ object EventStream {
 
   /** Commit evidence for a table's history seed — the guard the
     * registered erasure gates use to make their seed-then-erase builds
-    * idempotent across JVMs (the [[seedBucketedState]] discipline for
+    * idempotent across JVMs (the [[seedVersionedState]] discipline for
     * tree-layout tables): a second run finds the committed seed, skips
     * re-seeding the erased table with pre-erasure rows, and re-runs the
     * erasure as a no-op.
@@ -891,10 +891,6 @@ object EventStream {
   def compactIngestPairs(spark: SparkSession, pairsOutDir: String,
       indexDir: String): Unit =
     compactBatchDirs(spark, pairsOutDir, ingestPairsSchema, indexDir)
-
-  def compactPhashPairs(spark: SparkSession, pairsOutDir: String,
-      indexDir: String): Unit =
-    compactBatchDirs(spark, pairsOutDir, phashPairsSchema, indexDir)
 
   /** RIGHT-TO-BE-FORGOTTEN over the MinHash ingest-dedup index — the
     * text tier's stored shingle/band tables hold per-document DERIVED
@@ -1653,8 +1649,8 @@ object EventStream {
   private def markerNames(spark: SparkSession, stateDir: String): Seq[String] =
     StateFs.list(spark, s"$stateDir/_batches")
 
-  /** Plain batchId markers for the single-table streams (in-place
-    * bucketed state, append-only index tables). A batch below the
+  /** Plain batchId markers for the published-tree tables (the
+    * append-only index and output tables). A batch below the
     * VACUUM HORIZON counts as applied without its marker file:
     * [[vacuumPlainMarkers]] records the horizon before
     * deleting the evidence, so a vacuumed batch still no-ops on a
@@ -1712,10 +1708,10 @@ object EventStream {
     * batchIds can never be re-delivered, so their idempotence evidence
     * is dead weight. Without a durable checkpoint there is NO safe
     * horizon: the markers are then the only replay guard
-    * ([[maintenanceWriter]]'s contract). The bucketed folds' in-band
-    * `last_batch` watermark is unaffected either way — even a vacuumed
-    * batch replays as a no-op there. The horizon itself is RECORDED
-    * (a name-encoded `_batches/_horizon_<v>` marker, created before any
+    * ([[maintenanceWriter]]'s contract). Versioned state tables keep no
+    * plain markers: their generation commits are the replay evidence
+    * ([[versionedFold]]). The horizon itself is RECORDED (a
+    * name-encoded `_batches/_horizon_<v>` marker, created before any
     * deletion — see [[vacuumedHorizon]]) and
     * [[plainMarkerApplied]] honors it, so index compaction still folds
     * a vacuumed batch's subdirs as applied history instead of
@@ -1747,207 +1743,98 @@ object EventStream {
     drop
   }
 
-  /** Bucket count of every bucketed state table, in place or
-    * versioned — small because the fixtures are small; production sizes this to
-    * executor-heap-sized bucket partitions (e.g. 4096 over a 100 TB
-    * state table), exactly like [[graft.operators.Layout]]'s tables.
+  /** Bucket count of every versioned state table — small because the
+    * fixtures are small; production sizes this to executor-heap-sized
+    * bucket partitions (e.g. 4096 over a 100 TB state table), exactly
+    * like [[graft.operators.Layout]]'s tables.
     */
   private[graft] val StateBuckets = 8
 
-  /** The bucket-derived PARTITION column the streaming state table is
-    * laid out by: `pmod(hash(product_key), StateBuckets)`. Hash (not
-    * plain mod) so sequential key ranges spread; the column is a real
-    * partition directory (`bucket=k/`), so a filter on it PRUNES at the
-    * file listing — the mechanism that lets a micro-batch read and
-    * rewrite only the buckets it touches.
-    */
-  private def withStateBucket(df: DataFrame): DataFrame =
-    df.withColumn("bucket", stateBucketOf(col("product_key")))
-
-  private def bucketedStatePath(stateDir: String): String = s"$stateDir/state"
-
-  /** The key → partition-bucket derivation shared by every bucketed
-    * state table here (see [[withStateBucket]]).
+  /** The key → partition-bucket derivation every versioned state table
+    * is laid out by: `pmod(hash(key), StateBuckets)`. Hash (not plain
+    * mod) so sequential key ranges spread, and `hash()` takes any key
+    * type (term-stats keys on a string). The bucket is a real partition
+    * directory (`bucket=k/`), so a filter on it PRUNES at the file
+    * listing — the mechanism that lets a micro-batch read and write only
+    * the buckets it touches.
     */
   private def stateBucketOf(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(hash(key), lit(StateBuckets))
 
-  /** The full bucketed state table under its caller's `schema` —
-    * explicit everywhere, so an empty-seeded table (day-one bootstrap
-    * writes zero partition dirs) reads as an empty frame instead of
-    * failing schema inference. `last_batch` is the per-bucket
-    * idempotence watermark: every row a fold rewrites carries the
-    * batchId that produced it, so a bucket's max(last_batch) says which
-    * batches it already reflects — see [[foldBucketedState]].
+  /** The sorted buckets `df`'s `keyCol` values hash into — a driver-side
+    * collect bounded by [[StateBuckets]], never data-sized.
     */
-  def bucketedStateRead(spark: SparkSession, stateDir: String,
-      schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(bucketedStatePath(stateDir))
+  private def bucketsOf(df: DataFrame, keyCol: String): Seq[Int] =
+    df.select(stateBucketOf(col(keyCol))).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
 
-  /** The partition-pruned read of ONLY the given buckets — the per-batch
-    * state scan [[foldBucketedState]] runs. Exposed for
-    * ScalePostureSpec, which pins that `inputFiles` lists exclusively
-    * `bucket=k` dirs for k ∈ `touched` (the pruning IS the scale claim:
-    * at 100 TB a batch touching 3 of 4096 buckets reads 3 buckets).
-    */
-  private[graft] def bucketedStateTouchedRead(spark: SparkSession,
-      stateDir: String, touched: Seq[Int], schema: StructType): DataFrame =
-    bucketedStateRead(spark, stateDir, schema)
-      .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-
-  /** Write state rows bucketed by `keyCol` with dynamic-partition
-    * overwrite — replaces ONLY the bucket partitions present in `df`
-    * (the fold's partial rewrite; the SEED uses a plain overwrite
-    * instead — see [[seedBucketedState]] for why the two commits must
-    * differ). Shared by the bucketed folds and [[forgetKeys]].
-    */
-  private def writeBucketed(df: DataFrame, keyCol: String, statePath: String): Unit =
-    df.withColumn("bucket", stateBucketOf(col(keyCol)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(statePath)
-
-  /** Seed the bucketed state table unless COMMIT evidence exists —
-    * `_SUCCESS`, not bare dir existence: a crash mid-seed leaves a
-    * partial dir a bare-existence check would accept forever; the
-    * re-seed overwrite is idempotent. The seed MUST be a PLAIN overwrite
-    * (not [[writeBucketed]]'s dynamic form): only the standard commit
-    * writes the root `_SUCCESS` this guard reads — a dynamic-partition
-    * commit moves partition dirs without one, so a dynamic seed would
-    * re-seed on every restart, silently erasing every fold since
-    * (caught by the restart specs when the round's cleanup tried to
-    * unify the two writes).
-    */
-  private[graft] def seedBucketedState(initial: DataFrame, keyCol: String,
-      stateDir: String): Unit = {
-    val statePath = bucketedStatePath(stateDir)
-    if (!StateFs.exists(initial.sparkSession, s"$statePath/_SUCCESS")) {
-      initial.withColumn("last_batch", lit(-1L))
-        .withColumn("bucket", stateBucketOf(col(keyCol)))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(statePath)
-    }
-  }
-
-  /** Read-fold-rewrite one micro-batch against the bucketed state: read
-    * ONLY `touched` — MATERIALIZED before the overwrite (Spark rightly
-    * refuses a write whose plan still reads the target path, and a
-    * merge's read-before-write is the semantic anyway; localCheckpoint
-    * truncates the lineage to blocks sized to the touched buckets,
-    * released after the commit) — apply `fold` to the un-bucketed
-    * current rows, and dynamic-overwrite only the touched partitions.
+  /** VERSIONED (copy-on-write) BUCKETED STATE — the one layout of every
+    * keyed maintained table: totals, term-stats, the SCD2 interval
+    * history (its append stream, as-of fold and corrections), the
+    * [[forgetKeys]] row state and the OLS sums. A table is a log of
+    * bucket GENERATIONS, and no file is ever rewritten in place:
     *
-    * IDEMPOTENT BY CONSTRUCTION, not by marker (the r14-verdict top
-    * ask): every rewritten row carries `last_batch = batchId`, and the
-    * fold first reads each touched bucket's stored watermark
-    * (max(last_batch) — a per-bucket collect bounded by
-    * [[StateBuckets]]) and restricts BOTH sides to the buckets whose
-    * watermark is `< batchId`. A replay after a crash between the
-    * dynamic overwrite's job commit and the marker write therefore
-    * re-folds nothing — already-applied buckets are excluded from the
-    * read, the fold, AND the rewrite (their files stay byte-identical,
-    * spec'd) — and even a torn dynamic overwrite (some partitions
-    * committed, some not — the non-atomic multi-partition commit case)
-    * heals: new-data buckets skip, old-data buckets re-fold. The
-    * per-bucket grain is sound because a fold always applies the FULL
-    * batch slice of a bucket or none of it. `fold(cur, todo)` receives
-    * the un-bucketed current rows of the still-unapplied buckets plus
-    * their bucket ids, and must restrict the batch side to `todo`.
-    */
-  private def foldBucketedState(spark: SparkSession, stateDir: String,
-      schema: StructType, touched: Seq[Int], keyCol: String, batchId: Long)(
-      fold: (DataFrame, Seq[Int]) => DataFrame): Unit = {
-    // watermark probe FIRST, on a plain column-pruned read — a fully
-    // applied replay (the crash window) learns it has nothing to do
-    // without materializing any bucket's rows
-    val watermarks = bucketedStateTouchedRead(spark, stateDir, touched, schema)
-      .groupBy(col("bucket"))
-      .agg(max(col("last_batch")).alias("wm"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val todo = touched.filter(b => watermarks.getOrElse(b, -1L) < batchId)
-    if (todo.nonEmpty) {
-      val current = bucketedStateTouchedRead(spark, stateDir, todo, schema)
-        .localCheckpoint(true)
-      try {
-        writeBucketed(
-          fold(current.drop("bucket", "last_batch"), todo)
-            .withColumn("last_batch", lit(batchId)),
-          keyCol, bucketedStatePath(stateDir))
-      } finally {
-        org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(current)
-      }
-    }
-  }
-
-  /** VERSIONED (copy-on-write) BUCKETED STATE — time travel for the
-    * partial-rewrite tier (r18 verdict #2): the dynamic-overwrite
-    * layout ([[foldBucketedState]]) rewrites bucket partitions IN PLACE,
-    * so history is destroyed at fold time — "what did the state look
-    * like before tonight's batch" is unanswerable on exactly the tables a
-    * lakehouse MERGE would version. This layout
-    * answers it with BUCKET GENERATIONS: a fold never overwrites — it
-    * writes the new version of its touched buckets into a fresh
-    * generation directory
+    *   `state/seed/bucket=k/…`        (the seeded baseline, generation −1)
+    *   `state/g{batchId}/bucket=k/…`  (a fold: only the buckets it touched)
+    *   `state/f{batchId}/bucket=k/…`  (a forget: only the buckets it rewrote)
     *
-    *   `state/seed/bucket=k/…`   (the seeded baseline)
-    *   `state/g{batchId}/bucket=k/…`  (only the buckets batch touched)
+    * A read resolves, PER BUCKET, the newest committed generation — the
+    * live read the newest overall, an as-of read the newest with
+    * `batchId <= asOf`. Untouched buckets are never copied (their
+    * generation keeps serving, byte-identical across any number of
+    * commits — spec'd), so time travel costs one generation per TOUCHED
+    * bucket per batch: the write volume a partial rewrite pays anyway.
+    * "What did the state look like before tonight's batch" — the
+    * question an in-place MERGE destroys — becomes a listing filter.
     *
-    * and a read resolves, PER BUCKET, the newest committed generation —
-    * the live read takes the newest overall, an as-of read the newest
-    * with `batchId <= asOf`. Untouched buckets are never copied (their
-    * generation keeps serving — byte-identical across any number of
-    * folds, spec'd), so the storage cost of time travel is one
-    * generation per TOUCHED bucket per batch, the same write volume the
-    * in-place layout already paid — versioning is free except for
-    * retention.
-    *
-    * Exactly-once SIMPLIFIES here: the generation dir doubles as the
-    * batch's idempotence marker (its root `_SUCCESS` is the commit — a
-    * replayed batch skips on it; a crashed fold leaves an uncommitted
-    * dir every reader ignores and the replay overwrites wholesale), so
-    * the in-place layout's two-layer marker+watermark dance collapses
-    * to one job commit. This is precisely a table format's
-    * snapshot-per-commit contract spelled at the bucket grain.
+    * Every change goes through one of two bodies. [[versionedFold]]
+    * reads the touched buckets as of the previous batch, merges, and
+    * writes `g{batchId}`; the generation's root `_SUCCESS` is both the
+    * batch's commit and its idempotence evidence (a replay skips on it; a
+    * crashed fold leaves an uncommitted dir every reader ignores and the
+    * replay overwrites wholesale). [[versionedForget]] writes the same
+    * way into `f{batchId}`, then expires history below itself and sweeps
+    * emptied buckets — the rule for every generation that can REMOVE
+    * keys, because a removal is only complete once no older version can
+    * serve it. This is a table format's snapshot-per-commit contract
+    * (Delta Lake, Armbrust et al., VLDB 2020) spelled at the bucket
+    * grain.
     *
     * Resolution cost: one listing per generation (bounded by retention,
-    * [[expireVersionedGenerations]]) — driver-side, metadata-sized,
-    * exactly the file-listing class the manifest tier
-    * ([[writeTreeManifest]]-style) exists to bound at object-store
-    * scale. Totals ([[totalsMaintenanceStreamVersioned]], the
-    * `fact_totals_asof` gate) and term-stats
-    * ([[termStatsMaintenanceStreamVersioned]], `text_df_asof`) are
-    * maintained ONLY on this layout; SCD2 folds on it for as-of
-    * ([[scd2FoldBatchVersioned]]). The in-place bucketed layout
-    * ([[foldBucketedState]]) keeps exactly the users this one has no
-    * form for yet: SCD2's live stream with its CDC corrections and
-    * erasure ([[scd2MaintenanceStreamBucketed]],
-    * [[scd2CorrectKeysBucketed]], [[forgetKeys]] — per-key rewrites and
-    * deletes, which on a generation log would need the
-    * [[termStatsForgetVersioned]] expire-and-sweep discipline per key)
-    * and the OLS sums (the VERSIONING EXEMPTION at `olsSumsStateSchema`).
+    * [[expireVersionedGenerations]]) — driver-side and metadata-sized,
+    * cut to one listing plus one file read by the versioned manifest
+    * ([[writeVersionedManifest]]).
     */
   private def versionedStatePath(stateDir: String): String = s"$stateDir/state"
 
-  private val versionedGenName = "g(\\d+)".r
+  private val versionedGenName = "([gf])(\\d+)".r
 
-  /** Committed generations of a versioned state table, ascending; the
-    * seed is generation −1 (it precedes every batch).
-    */
-  private def versionedCommittedGens(spark: SparkSession,
-      stateDir: String): Seq[Long] = {
-    val base = versionedStatePath(stateDir)
-    val names = StateFs.list(spark, base)
-    val seed =
-      if (StateFs.exists(spark, s"$base/seed/_SUCCESS")) Seq(-1L) else Seq.empty
-    (seed ++ names.collect { case versionedGenName(id) => id.toLong }
-      .filter(id => StateFs.exists(spark, s"$base/g$id/_SUCCESS"))).sorted
+  /** A generation dir's batch id; the seed precedes every batch (−1). */
+  private def genId(gen: String): Long = gen match {
+    case versionedGenName(_, id) => id.toLong
+    case _ => -1L
   }
 
-  private def versionedGenPath(stateDir: String, gen: Long): String =
-    if (gen == -1L) s"${versionedStatePath(stateDir)}/seed"
-    else s"${versionedStatePath(stateDir)}/g$gen"
+  /** Committed generation dirs of a versioned state table (`seed`,
+    * `g{k}`, `f{k}`), ascending by batch id.
+    */
+  private def versionedCommittedGens(spark: SparkSession,
+      stateDir: String): Seq[String] = {
+    val base = versionedStatePath(stateDir)
+    StateFs.list(spark, base)
+      .filter { case "seed" | versionedGenName(_, _) => true; case _ => false }
+      .filter(g => StateFs.exists(spark, s"$base/$g/_SUCCESS"))
+      .sortBy(g => (genId(g), g))
+  }
+
+  private def versionedGenPath(stateDir: String, gen: String): String =
+    s"${versionedStatePath(stateDir)}/$gen"
+
+  /** The bucket partitions one generation dir holds, ascending. */
+  private def genBuckets(spark: SparkSession, stateDir: String,
+      gen: String): Seq[Int] =
+    StateFs.list(spark, versionedGenPath(stateDir, gen))
+      .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }.sorted
 
   private val expiredThroughName = "_expired_through_(-?\\d+)".r
 
@@ -1962,15 +1849,15 @@ object EventStream {
       .collect { case expiredThroughName(v) => v.toLong }
       .reduceOption(_ max _).getOrElse(Long.MinValue)
 
-  /** Later-generations-win-per-bucket serving map over an ascending
+  /** Later-generations-win-per-bucket serving map over a
     * (generation → buckets) inventory — ONE resolution rule for the
     * listing-derived and manifest-derived paths.
     */
-  private def servingOf(gens: Seq[(Long, Seq[Int])],
-      asOf: Option[Long]): Map[Long, Seq[Int]] = {
-    val bucketGen = scala.collection.mutable.Map.empty[Int, Long]
-    gens.filter { case (g, _) => asOf.forall(g <= _) }
-      .sortBy(_._1)
+  private def servingOf(gens: Seq[(String, Seq[Int])],
+      asOf: Option[Long]): Map[String, Seq[Int]] = {
+    val bucketGen = scala.collection.mutable.Map.empty[Int, String]
+    gens.filter { case (g, _) => asOf.forall(genId(g) <= _) }
+      .sortBy { case (g, _) => (genId(g), g) }
       .foreach { case (g, bs) => bs.foreach(b => bucketGen(b) = g) }
     bucketGen.toSeq.groupBy(_._2).map { case (g, bs) => g -> bs.map(_._1).sorted }
   }
@@ -1995,7 +1882,7 @@ object EventStream {
     * emptied keeps its `_expired_through_` marker, so both read as empty.
     */
   private def versionedServingGens(spark: SparkSession, stateDir: String,
-      asOf: Option[Long]): Map[Long, Seq[Int]] = {
+      asOf: Option[Long]): Map[String, Seq[Int]] = {
     val horizon = versionedExpiredThrough(spark, stateDir)
     requireAboveHorizon(asOf, horizon, stateDir)
     val committed = versionedCommittedGens(spark, stateDir)
@@ -2003,10 +1890,7 @@ object EventStream {
       s"no committed versioned state under $stateDir: neither " +
         "state/seed/_SUCCESS nor a committed state/g<batchId> generation " +
         "exists — seed it first (seedVersionedState)")
-    servingOf(committed.map { g =>
-      g -> StateFs.list(spark, versionedGenPath(stateDir, g))
-        .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }
-    }, asOf)
+    servingOf(committed.map(g => g -> genBuckets(spark, stateDir, g)), asOf)
   }
 
   /** MANIFEST FOR THE VERSIONED LAYOUT — the tree-manifest discipline
@@ -2014,18 +1898,20 @@ object EventStream {
     * the retention horizon plus every committed generation with its
     * bucket list (`#end`-terminated, seq-numbered supersede-don't-
     * overwrite), so a read resolves its serving map from ONE listing +
-    * ONE file read instead of one listing PER generation.
+    * ONE file read instead of one listing PER generation. A seed or fold
+    * generation is recorded by its batch id (−1 = the seed), a forget
+    * generation by its dir name (`f{k}`).
     *
     * CACHE semantics with a structural heal: the manifest is written
-    * from the authoritative listings after every seed, fold, and
+    * from the authoritative listings after every seed, fold, forget and
     * expiry. The one crash window — a generation's `_SUCCESS` landed,
     * the manifest write didn't — cannot go stale-forever even though
     * the generation dir doubles as the batch's idempotence marker: the
-    * replayed fold SKIPS on the commit but first checks the manifest
-    * covers its batch and rewrites it when it doesn't (and any LATER
-    * fold rewrites it wholesale). Until healed, manifest readers serve
-    * the consistent PRE-batch snapshot — the generation behaves as
-    * committed-but-unpublished, exactly a snapshot-pointer's
+    * replayed fold or forget SKIPS on the commit but first checks the
+    * manifest covers its generation and rewrites it when it doesn't (and
+    * any LATER commit rewrites it wholesale). Until healed, manifest
+    * readers serve the consistent PRE-batch snapshot — the generation
+    * behaves as committed-but-unpublished, exactly a snapshot-pointer's
     * unpublished tree. Readers fall back to the listings when the
     * manifest is absent, torn, or points at an expired generation (the
     * read throws at file-index construction and retries — never a
@@ -2034,13 +1920,19 @@ object EventStream {
     */
   private val vManifestName = "_vmanifest_(\\d+)".r
 
+  private def manifestToken(gen: String): String =
+    if (gen.startsWith("f")) gen else genId(gen).toString
+
+  private def genOfToken(token: String): String = token match {
+    case versionedGenName("f", _) => token
+    case _ => if (token.toLong == -1L) "seed" else s"g${token.toLong}"
+  }
+
   private[graft] def writeVersionedManifest(spark: SparkSession,
       stateDir: String): Unit = {
     val base = versionedStatePath(stateDir)
     val entries = versionedCommittedGens(spark, stateDir).map { g =>
-      val bs = StateFs.list(spark, versionedGenPath(stateDir, g))
-        .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }.sorted
-      s"$g ${bs.mkString(",")}"
+      s"${manifestToken(g)} ${genBuckets(spark, stateDir, g).mkString(",")}"
     }
     val names = StateFs.list(spark, base)
     val seq = names.collect { case vManifestName(n) => n.toLong }
@@ -2052,8 +1944,8 @@ object EventStream {
       .foreach(m => StateFs.deleteFile(spark, s"$base/$m"))
   }
 
-  /** (horizon, ascending generation inventory) from the newest
-    * well-formed manifest; None → fall back to listings.
+  /** (horizon, generation inventory) from the newest well-formed
+    * manifest; None → fall back to listings.
     *
     * The served horizon is max(manifest-recorded horizon, the
     * `_expired_through_` marker) — the marker is written BEFORE any
@@ -2072,7 +1964,7 @@ object EventStream {
     * in, that window fails loudly at [[requireAboveHorizon]] instead.
     */
   private def versionedManifestOpt(spark: SparkSession,
-      stateDir: String): Option[(Long, Seq[(Long, Seq[Int])])] = {
+      stateDir: String): Option[(Long, Seq[(String, Seq[Int])])] = {
     val base = versionedStatePath(stateDir)
     val names = StateFs.list(spark, base)
     val markerHorizon = names
@@ -2089,7 +1981,7 @@ object EventStream {
             val horizon = lines.head.drop(8).toLong
             val gens = lines.drop(1).dropRight(1).map { e =>
               val parts = e.split(" ", 2)
-              parts(0).toLong -> (if (parts.length < 2 || parts(1).isEmpty) Seq.empty[Int]
+              genOfToken(parts(0)) -> (if (parts.length < 2 || parts(1).isEmpty) Seq.empty[Int]
                 else parts(1).split(",").toSeq.map(_.toInt))
             }
             Some((math.max(horizon, markerHorizon), gens))
@@ -2109,12 +2001,12 @@ object EventStream {
     */
   private def versionedStateRead(spark: SparkSession, stateDir: String,
       schema: StructType, asOf: Option[Long]): DataFrame = {
-    def build(serving: Map[Long, Seq[Int]]): DataFrame =
+    def build(serving: Map[String, Seq[Int]]): DataFrame =
       if (serving.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else
-        serving.toSeq.sortBy(_._1).map { case (g, buckets) =>
+        serving.toSeq.sortBy { case (g, _) => (genId(g), g) }.map { case (g, buckets) =>
           spark.read.schema(schema).parquet(versionedGenPath(stateDir, g))
             .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
         }.reduce(_.unionByName(_))
@@ -2131,23 +2023,22 @@ object EventStream {
     }
   }
 
-  /** Versioned-state read schema for the totals tier — the bucketed
-    * totals partials WITHOUT `last_batch`: the generation commit is the
-    * idempotence evidence, so no in-band watermark is stored.
+  /** Any versioned state table, live and reader-shaped: `schema` is the
+    * stored schema (the table's columns plus `bucket`, e.g.
+    * [[scd2VersionedSchema]]), and the `bucket` column is dropped.
     */
-  private val totalsVersionedSchema = StructType(Seq(
-    StructField("product_key", LongType),
-    StructField("q2", LongType),
-    StructField("r4", LongType),
-    StructField("n", LongType),
-    StructField("bucket", IntegerType)))
+  def versionedRead(spark: SparkSession, stateDir: String,
+      schema: StructType): DataFrame =
+    versionedStateRead(spark, stateDir, schema, None).drop("bucket")
 
-  /** Seed the versioned state's baseline generation (`state/seed`) —
-    * `_SUCCESS`-guarded like every seed.
+  /** Seed the versioned state's baseline generation (`state/seed`)
+    * unless COMMIT evidence exists — `_SUCCESS`, not bare dir existence:
+    * a crash mid-seed leaves a partial dir a bare-existence check would
+    * serve or fold onto forever; the re-seed overwrite is idempotent.
     */
   private[graft] def seedVersionedState(initial: DataFrame, keyCol: String,
       stateDir: String): Unit = {
-    val seedPath = versionedGenPath(stateDir, -1L)
+    val seedPath = versionedGenPath(stateDir, "seed")
     if (!StateFs.exists(initial.sparkSession, s"$seedPath/_SUCCESS")) {
       initial.withColumn("bucket", stateBucketOf(col(keyCol)))
         .repartition(col("bucket"))
@@ -2156,67 +2047,175 @@ object EventStream {
     }
   }
 
-  /** Heal the manifest when a replayed fold skips on its committed
-    * generation — the commit/manifest crash window's structural fix
-    * (see [[writeVersionedManifest]]). A table with no manifest at all
-    * is listing-served and needs no heal.
+  /** Heal the manifest when a replayed fold or forget skips on its
+    * committed generation — the commit/manifest crash window's
+    * structural fix (see [[writeVersionedManifest]]). A table with no
+    * manifest at all is listing-served and needs no heal.
     */
   private def healVersionedManifest(spark: SparkSession, stateDir: String,
-      batchId: Long): Unit =
+      gen: String): Unit =
     versionedManifestOpt(spark, stateDir) match {
-      case Some((_, gens)) if !gens.exists(_._1 == batchId) =>
+      case Some((_, gens)) if !gens.exists(_._1 == gen) =>
         writeVersionedManifest(spark, stateDir)
       case _ => ()
     }
 
-  /** One totals micro-batch against the VERSIONED state: aggregate the
-    * batch to partials, read ONLY the touched buckets' serving
-    * generations (partition-pruned), merge, write the result into the
-    * batch's own fresh generation dir. Copy-on-write kills both
-    * in-place hazards at once: the plan never reads its write target
-    * (no localCheckpoint materialization needed) and a torn commit is
-    * impossible to observe (readers require the generation's
-    * `_SUCCESS`; the replay overwrites the torn dir wholesale).
+  /** Write generation `gen` of a versioned table: read ONLY the
+    * `touched` buckets' serving generations as of the batch before
+    * `gen` (partition-pruned — a replay must not resolve its own
+    * uncommitted or half-replayed generation), `merge` the reader-shaped
+    * rows, and write the result bucketed by `keyCol` into the fresh
+    * generation dir. Copy-on-write: the plan never reads its write
+    * target (no materialization needed), and a torn commit is
+    * unobservable (readers require the generation's `_SUCCESS`; the
+    * replay overwrites the torn dir wholesale). `merge` must only yield
+    * keys of the touched buckets — every key a batch changes hashes into
+    * one, and each key's whole history lives in its bucket, so the
+    * untouched buckets are exactly the keys a full-table merge would
+    * carry unchanged.
     */
-  private[graft] def totalsFoldBatchVersioned(spark: SparkSession,
-      stateDir: String, batch: DataFrame, batchId: Long): Unit = {
+  private def writeGeneration(spark: SparkSession, stateDir: String,
+      schema: StructType, keyCol: String, gen: String, touched: Seq[Int])(
+      merge: DataFrame => DataFrame): Unit = {
+    val current = versionedStateRead(spark, stateDir, schema, Some(genId(gen) - 1))
+      .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+      .drop("bucket")
+    merge(current)
+      .withColumn("bucket", stateBucketOf(col(keyCol)))
+      .repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(versionedGenPath(stateDir, gen))
+    writeVersionedManifest(spark, stateDir)
+  }
+
+  /** THE FOLD of every versioned table: batch `batchId` becomes
+    * generation `g{batchId}`, holding only the `touched` buckets (see
+    * [[writeGeneration]]). Skips on the generation's commit, healing the
+    * manifest; `touched` is only evaluated when the batch still has to
+    * run, and a batch touching no bucket writes nothing.
+    */
+  private def versionedFold(spark: SparkSession, stateDir: String,
+      schema: StructType, keyCol: String, batchId: Long, touched: => Seq[Int])(
+      merge: DataFrame => DataFrame): Unit = {
     require(batchId >= 0, s"versioned fold batchId must be >= 0, got $batchId")
-    val genPath = versionedGenPath(stateDir, batchId)
-    if (StateFs.exists(spark, s"$genPath/_SUCCESS")) {
-      healVersionedManifest(spark, stateDir, batchId)
-    } else {
-      val partials = withStateBucket(
-          graft.operators.StarSchema.totalsPartialsOfDetail(batch))
-        .persist()
-      try {
-        val touched = partials.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          // serving view as of the PREVIOUS batch — a replay must not
-          // resolve its own uncommitted (or half-replayed) generation
-          val current = versionedStateRead(spark, stateDir,
-              totalsVersionedSchema, Some(batchId - 1))
-            .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-          graft.operators.StarSchema.mergeTotalsPartials(
-              current.drop("bucket"),
-              partials.filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-                .drop("bucket"))
-            .withColumn("bucket", stateBucketOf(col("product_key")))
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(genPath)
-          writeVersionedManifest(spark, stateDir)
-        }
-      } finally {
-        partials.unpersist()
-        ()
+    val gen = s"g$batchId"
+    if (StateFs.exists(spark, s"${versionedGenPath(stateDir, gen)}/_SUCCESS"))
+      healVersionedManifest(spark, stateDir, gen)
+    else {
+      val buckets = touched
+      if (buckets.nonEmpty)
+        writeGeneration(spark, stateDir, schema, keyCol, gen, buckets)(merge)
+    }
+  }
+
+  /** THE FORGET of every versioned table — every change that can REMOVE
+    * keys (erasure, retraction), because a generation log RETAINS the
+    * removed rows by design. Three steps:
+    *
+    *  1. write generation `f{batchId}` like a fold: the `touched`
+    *     buckets, merged as of the batch before (a key whose rows all
+    *     go leaves no row; a bucket whose every key goes leaves no
+    *     partition) — this discharges SERVING;
+    *  2. [[expireVersionedGenerations]] at `batchId` — this discharges
+    *     HISTORY: every superseded bucket version at or below the forget
+    *     is deleted, and as-of reads into the pre-forget window fail
+    *     LOUDLY instead of resurrecting the removed rows (time travel
+    *     and the right to be forgotten are in direct tension; the
+    *     horizon is the resolution);
+    *  3. the EMPTIED-BUCKET SWEEP: a touched bucket the forget generation
+    *     does not hold lost every key, and per-bucket newest-generation
+    *     resolution would otherwise fall back to the STALE version expiry
+    *     kept for it. Only generations BELOW the forget are swept — a
+    *     later commit is newer state, never residue.
+    *
+    * Replay evidence is the forget generation's own `_SUCCESS`, which
+    * expiry never removes (a forget's husk stays even when it holds no
+    * bucket): a replay skips step 1 and re-runs the idempotent steps 2
+    * and 3. A forget that has not run must name a batch ABOVE every
+    * committed generation — an id a fold already committed would
+    * otherwise silently forget nothing — and fails loudly when it does
+    * not. `touched` is evaluated on every run (the sweep needs it); a
+    * forget touching no bucket writes nothing and raises no horizon.
+    */
+  private def versionedForget(spark: SparkSession, stateDir: String,
+      schema: StructType, keyCol: String, batchId: Long, touched: => Seq[Int])(
+      merge: DataFrame => DataFrame): Unit = {
+    require(batchId >= 0, s"versioned forget batchId must be >= 0, got $batchId")
+    val gen = s"f$batchId"
+    val done = StateFs.exists(spark, s"${versionedGenPath(stateDir, gen)}/_SUCCESS")
+    if (!done) {
+      val newest = versionedCommittedGens(spark, stateDir).lastOption
+      require(newest.forall(genId(_) < batchId),
+        s"forget batch $batchId on $stateDir is not above the newest committed " +
+          s"generation ${newest.getOrElse("")}: a forget takes a batchId no fold " +
+          "or forget of this table has used")
+    }
+    val buckets = touched
+    if (buckets.nonEmpty) {
+      if (done) healVersionedManifest(spark, stateDir, gen)
+      else writeGeneration(spark, stateDir, schema, keyCol, gen, buckets)(merge)
+      val present = genBuckets(spark, stateDir, gen).toSet
+      expireVersionedGenerations(spark, stateDir, batchId)
+      val emptied = buckets.filterNot(present)
+      val stale = versionedCommittedGens(spark, stateDir)
+        .filter(genId(_) < batchId)
+        .flatMap(g => genBuckets(spark, stateDir, g).filter(emptied.contains)
+          .map(b => s"${versionedGenPath(stateDir, g)}/bucket=$b"))
+      if (stale.nonEmpty) {
+        stale.foreach(StateFs.deleteRecursively(spark, _))
+        dropFoldHusks(spark, stateDir)
+        writeVersionedManifest(spark, stateDir)
       }
     }
   }
 
+  /** The `foreachBatch` stream behind every versioned maintenance
+    * stream: seed (commit-guarded, so a restart resumes against the
+    * existing table), then `fold` each micro-batch at its batchId.
+    */
+  private def versionedMaintenanceStream(stream: DataFrame,
+      initial: DataFrame, keyCol: String, stateDir: String,
+      checkpointDir: Option[String])(fold: (DataFrame, Long) => Unit): StreamingQuery = {
+    seedVersionedState(initial, keyCol, stateDir)
+    maintenanceWriter(stream, checkpointDir)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        fold(batch.toDF(), batchId)
+      }
+      .start()
+  }
+
+  /** Run `body` over `df` persisted — the delta frames the folds read
+    * twice (bucket collect + merge).
+    */
+  private def withPersisted(df: DataFrame)(body: DataFrame => Unit): Unit = {
+    val p = df.persist()
+    try body(p) finally { p.unpersist(); () }
+  }
+
+  /** Versioned-state read schema for the totals tier — the partials plus
+    * the `bucket` partition column.
+    */
+  private val totalsVersionedSchema = StructType(Seq(
+    StructField("product_key", LongType),
+    StructField("q2", LongType),
+    StructField("r4", LongType),
+    StructField("n", LongType),
+    StructField("bucket", IntegerType)))
+
+  /** One totals micro-batch: aggregate the batch to partials and fold
+    * them through [[graft.operators.StarSchema.mergeTotalsPartials]].
+    */
+  private[graft] def totalsFoldBatchVersioned(spark: SparkSession,
+      stateDir: String, batch: DataFrame, batchId: Long): Unit =
+    withPersisted(graft.operators.StarSchema.totalsPartialsOfDetail(batch)) { partials =>
+      versionedFold(spark, stateDir, totalsVersionedSchema, "product_key",
+          batchId, bucketsOf(partials, "product_key"))(
+        graft.operators.StarSchema.mergeTotalsPartials(_, partials))
+    }
+
   /** The versioned totals state, live. */
   def totalsVersionedRead(spark: SparkSession, stateDir: String): DataFrame =
-    versionedStateRead(spark, stateDir, totalsVersionedSchema, None)
-      .drop("bucket")
+    versionedRead(spark, stateDir, totalsVersionedSchema)
 
   /** TIME TRAVEL on the versioned totals state: the table exactly as a
     * live read served it the moment batch `asOfBatch` committed
@@ -2235,58 +2234,34 @@ object EventStream {
     */
   def totalsMaintenanceStreamVersioned(detailStream: DataFrame,
       initialState: DataFrame, stateDir: String,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = detailStream.sparkSession
-    seedVersionedState(initialState, "product_key", stateDir)
-    maintenanceWriter(detailStream, checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        totalsFoldBatchVersioned(spark, stateDir, batch.toDF(), batchId)
-      }
-      .start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    versionedMaintenanceStream(detailStream, initialState, "product_key",
+        stateDir, checkpointDir)(
+      totalsFoldBatchVersioned(detailStream.sparkSession, stateDir, _, _))
 
-  /** The versioned SCD2 state schema: the interval history's own
-    * columns plus the `bucket` partition column (no `last_batch` — the
-    * generation commit is the idempotence evidence).
+  /** The versioned state schema of a keyed table: its own columns plus
+    * the `bucket` partition column. Key-column-generic — the SCD2
+    * interval history and the row-state tables [[forgetKeys]] erases
+    * both use it.
     */
   private[graft] def scd2VersionedSchema(historySchema: StructType): StructType =
     StructType(historySchema.fields :+ StructField("bucket", IntegerType))
 
-  /** [[scd2FoldBatchBucketed]] on the VERSIONED layout — the as-of
-    * form of the SCD2 fold (the `dim_customer_scd2_asof` gate): each CDC micro-batch
-    * reads ONLY the touched buckets' serving generations as of the
-    * previous batch, folds through the same
-    * [[graft.operators.WindowAnalytics.scd2ApplyChanges]], and writes
-    * the result into its own fresh generation. "The dimension as of
+  /** One SCD2 CDC micro-batch: the orders batch folds through
+    * [[graft.operators.WindowAnalytics.scd2ApplyChanges]]
+    * (gaps-and-islands compaction, boundary merge, append-only contract
+    * ENFORCED — a violating batch throws before its generation commits,
+    * so a restart retries it and fails again instead of skipping it) on
+    * ONLY the buckets its customer keys hash into. "The dimension as of
     * batch B" — the question a lakehouse MERGE destroys — becomes a
-    * listing filter.
+    * listing filter (the `dim_customer_scd2_asof` gate).
     */
   private[graft] def scd2FoldBatchVersioned(spark: SparkSession,
       stateDir: String, schema: StructType, batch: DataFrame,
-      batchId: Long): Unit = {
-    require(batchId >= 0, s"versioned fold batchId must be >= 0, got $batchId")
-    val genPath = versionedGenPath(stateDir, batchId)
-    if (StateFs.exists(spark, s"$genPath/_SUCCESS")) {
-      healVersionedManifest(spark, stateDir, batchId)
-    } else {
-      val touched = batch
-        .select(stateBucketOf(col("o_custkey")).alias("bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.nonEmpty) {
-        val current = versionedStateRead(spark, stateDir, schema,
-            Some(batchId - 1))
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-        graft.operators.WindowAnalytics.scd2ApplyChanges(
-            current.drop("bucket"),
-            batch.filter(stateBucketOf(col("o_custkey"))
-              .isin(touched.map(Integer.valueOf): _*)))
-          .withColumn("bucket", stateBucketOf(col("customer_key")))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(genPath)
-        writeVersionedManifest(spark, stateDir)
-      }
-    }
-  }
+      batchId: Long): Unit =
+    versionedFold(spark, stateDir, schema, "customer_key", batchId,
+        bucketsOf(batch, "o_custkey"))(
+      graft.operators.WindowAnalytics.scd2ApplyChanges(_, batch))
 
   /** The versioned SCD2 interval history as of `asOfBatch` (−1 = the
     * seeded baseline), reader-shaped.
@@ -2296,6 +2271,25 @@ object EventStream {
     versionedStateRead(spark, stateDir, scd2VersionedSchema(historySchema),
         Some(asOfBatch))
       .drop("bucket")
+
+  /** STREAMING SCD2 MAINTENANCE — [[scd2FoldBatchVersioned]] per CDC
+    * micro-batch: the dimension lives as a versioned table bucketed by
+    * `customer_key`, each batch reads and writes only the buckets its
+    * affected keys hash into (untouched buckets are never listed, read or
+    * rewritten — spec'd byte-identical), and a restarted stream resumes
+    * against the existing table, redelivered batches skipping on their
+    * generation commits. At 100 TB this is the difference between
+    * rewriting the whole dimension nightly and writing the few buckets
+    * tonight's keys hash to.
+    */
+  def scd2MaintenanceStreamVersioned(ordersStream: DataFrame,
+      initialHistory: DataFrame, stateDir: String,
+      checkpointDir: Option[String] = None): StreamingQuery = {
+    val schema = scd2VersionedSchema(initialHistory.schema)
+    versionedMaintenanceStream(ordersStream, initialHistory, "customer_key",
+        stateDir, checkpointDir)(
+      scd2FoldBatchVersioned(ordersStream.sparkSession, stateDir, schema, _, _))
+  }
 
   /** RETENTION for the versioned layout — the explicit expiry half
     * (the [[expireSnapshots]] discipline at the bucket-generation
@@ -2322,292 +2316,122 @@ object EventStream {
         StateFs.deleteFile(spark, s"$base/_expired_through_$v")
       case _ => ()
     }
-    val gens = versionedCommittedGens(spark, stateDir)
-    val byBucket = scala.collection.mutable.Map.empty[Int, List[Long]]
-    gens.foreach { g =>
-      StateFs.list(spark, versionedGenPath(stateDir, g))
-        .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }
+    val byBucket = scala.collection.mutable.Map.empty[Int, List[String]]
+    versionedCommittedGens(spark, stateDir).foreach { g =>
+      genBuckets(spark, stateDir, g)
         .foreach(b => byBucket(b) = g :: byBucket.getOrElse(b, Nil))
     }
     val dropped = byBucket.toSeq.sortBy(_._1).flatMap { case (b, gensDesc) =>
       // gensDesc is newest-first; keep everything above the horizon and
       // the newest at-or-below it — the serving gen of every retained
       // as-of window
-      val atOrBelow = gensDesc.filter(_ <= horizon)
-      atOrBelow.drop(1).map { g =>
+      gensDesc.filter(genId(_) <= horizon).drop(1).map { g =>
         val dir = s"${versionedGenPath(stateDir, g)}/bucket=$b"
         StateFs.deleteRecursively(spark, dir)
         dir
       }
     }
-    // a generation stripped of its every bucket is pure metadata — drop
-    // the husk so listings stay bounded (its _SUCCESS alone must not
-    // keep resolving it)
-    gens.foreach { g =>
-      val p = versionedGenPath(stateDir, g)
-      if (!StateFs.list(spark, p).exists(_.startsWith("bucket=")))
-        StateFs.deleteRecursively(spark, p)
-    }
+    dropFoldHusks(spark, stateDir)
     // the manifest reflects the post-expiry inventory + horizon (crash
     // before this line: the stale manifest lists expired paths — reads
     // throw, fall back to the listing, and its loud horizon check rules)
-    if (dropped.nonEmpty || StateFs.list(spark, versionedStatePath(stateDir))
+    if (dropped.nonEmpty || StateFs.list(spark, base)
         .exists { case vManifestName(_) => true; case _ => false })
       writeVersionedManifest(spark, stateDir)
     dropped
   }
 
-  /** STREAMING SCD2 MAINTENANCE WITH PARTIAL STATE REWRITE — the
-    * in-place bucketed layout ([[graft.operators.Layout.bucketedIncrementalMerge]]
-    * proves its merge exchange-free): the versioned dimension lives as
-    * ONE parquet table partitioned by `pmod(hash(customer_key),
-    * StateBuckets)`, and each CDC micro-batch
-    *
-    *   1. collects the buckets its AFFECTED KEYS hash into (bounded by
-    *      [[StateBuckets]] — driver-side, never data-sized),
-    *   2. reads ONLY those bucket partitions of the dimension,
-    *   3. folds the batch through the same
-    *      [[graft.operators.WindowAnalytics.scd2ApplyChanges]] as the
-    *      versioned fold ([[scd2FoldBatchVersioned]]; gaps-and-islands
-    *      compaction, boundary merge, append-only contract ENFORCED — a
-    *      violating batch throws before anything is written, leaving
-    *      state and marker untouched), and
-    *   4. dynamic-partition-overwrites only the touched buckets —
-    *      untouched bucket directories are never listed, read, or
-    *      rewritten (ScalePostureSpec pins their files byte-identical
-    *      across a fold).
-    *
-    * Correctness of the restriction: every key the fold can change is
-    * in the batch's affected-key set, and each key's ENTIRE history
-    * lives in its hash bucket — so the untouched buckets are exactly
-    * the keys `scd2ApplyChanges` would have carried through its
-    * anti-join unchanged; skipping their read/rewrite is the
-    * partition-pruned form of that carry. At 100 TB this is the
-    * difference between rewriting the whole dimension nightly and
-    * rewriting the few buckets tonight's keys hash to.
-    *
-    * Idempotence: TWO independent layers. The batch markers under
-    * `stateDir/_batches` are the fast path — a re-delivered batch skips
-    * without touching the state — and the per-bucket `last_batch`
-    * watermark carried IN the state rows makes the fold itself
-    * idempotent ([[foldBucketedState]]): a crash between the dynamic
-    * overwrite's job commit and the marker write replays as a provable
-    * no-op, because every already-applied bucket's watermark excludes it
-    * from the re-fold. A restarted stream resumes against the existing
-    * table ([[seedBucketedState]] skips a committed seed).
+  /** Drop fold generations stripped of every bucket — pure metadata,
+    * kept out of the listings. The seed's and every forget's husk stay:
+    * their `_SUCCESS` is the seed's and the forget's replay evidence.
     */
-  def scd2MaintenanceStreamBucketed(ordersStream: DataFrame,
-      initialHistory: DataFrame, stateDir: String,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = ordersStream.sparkSession
-    val schema = scd2BucketedSchema(initialHistory.schema)
-    seedBucketedState(initialHistory, "customer_key", stateDir)
-    maintenanceWriter(ordersStream, checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        scd2FoldBatchBucketed(spark, stateDir, schema, batch.toDF(), batchId)
-      }
-      .start()
-  }
+  private def dropFoldHusks(spark: SparkSession, stateDir: String): Unit =
+    versionedCommittedGens(spark, stateDir)
+      .filter(g => g.startsWith("g") && genBuckets(spark, stateDir, g).isEmpty)
+      .foreach(g => StateFs.deleteRecursively(spark, versionedGenPath(stateDir, g)))
 
-  /** The bucketed SCD2 state-table read schema: the dimension's own
-    * columns plus the `last_batch` watermark and the `bucket` partition
-    * column.
-    */
-  private[graft] def scd2BucketedSchema(historySchema: StructType): StructType =
-    StructType(historySchema.fields :+
-      StructField("last_batch", LongType) :+
-      StructField("bucket", IntegerType))
-
-  /** RIGHT-TO-BE-FORGOTTEN DELETE PROPAGATION over a bucketed state
-    * table — the privacy-erasure pass every lakehouse deployment must
-    * run (GDPR art. 17 / CCPA): remove EVERY row whose `keyCol` is in
-    * `keys`, rewriting only the bucket partitions those keys hash into.
-    * The partial-rewrite machinery is [[foldBucketedState]]'s read side
-    * reused for a different mutation: touched buckets come from hashing
-    * the (bounded) delete list, the pruned read materializes only those
-    * partitions, an anti-join drops the forgotten keys, and a
-    * dynamic-partition overwrite replaces the touched buckets. Untouched
-    * buckets are never read or rewritten (byte-identical — spec'd), so
-    * at 100 TB the erasure run costs a few buckets, not a dimension
-    * rewrite.
+  /** RIGHT-TO-BE-FORGOTTEN DELETE PROPAGATION over a versioned keyed
+    * table — the privacy-erasure pass every lakehouse deployment must run
+    * (GDPR art. 17 / CCPA): remove EVERY row whose `keyCol` is in `keys`,
+    * as the [[versionedForget]] at `batchId` — so the pre-erasure
+    * versions are expired and as-of reads below the forget fail loudly,
+    * and no file under the state dir keeps a victim row. `schema` is the
+    * stored schema ([[scd2VersionedSchema]] of the table's columns).
     *
-    * Two contracts the fold machinery does NOT have:
-    *  - surviving rows keep their OWN `last_batch` watermark (erasure is
-    *    not a fold; stamping a fresh batch id would make a later replayed
-    *    micro-batch skip folding a bucket it never folded), and
-    *  - a bucket whose every row is forgotten is cleared by an explicit
-    *    FS delete of its partition dir: a dynamic overwrite only
-    *    replaces partitions PRESENT in the written frame, so an emptied
-    *    bucket would otherwise silently keep its old rows — the
-    *    one-sided failure a deletion audit exists to catch.
-    *
-    * Idempotent end-to-end, BYTE-exact (the watermark-probe discipline):
-    * before rewriting anything, a semi-join probe finds the buckets that
-    * actually HOLD a forgotten key — a re-run (or the crash window
-    * between the overwrite and the empty-dir delete, closed by
-    * re-running; erasure jobs run until success by regulation anyway)
-    * probes an already-erased table, hits nothing, and leaves every file
-    * byte-identical. Run on a quiesced stream (same discipline as
-    * compaction).
+    * A semi-join PROBE first finds the buckets that actually HOLD a
+    * forgotten key (in the forget's own as-of view), and only those are
+    * rewritten: untouched buckets are never read or rewritten
+    * (byte-identical — spec'd), so at 100 TB the erasure costs a few
+    * buckets, not a table rewrite, and a re-run finds its committed
+    * generation (or, when nothing was held, probes an erased table and
+    * hits nothing) — a byte-exact no-op. The delete list is cast to the
+    * STATE's key type before anything hashes it: hash(int 3) !=
+    * hash(long 3), so an uncast IntegerType list against a LongType table
+    * would derive the WRONG buckets and silently erase nothing.
     */
   def forgetKeys(spark: SparkSession, stateDir: String, schema: StructType,
-      keyCol: String, keys: DataFrame): Unit = {
-    val statePath = bucketedStatePath(stateDir)
-    // cast the delete list to the STATE's key type before anything hashes
-    // it: hash(int 3) != hash(long 3), so an uncast IntegerType list
-    // against a LongType table would derive the WRONG buckets and return
-    // having erased nothing (the probe join coerces and finds no rows in
-    // the mis-chosen buckets) — a silent non-erasure. Checkpointed once:
-    // the list may carry an expensive lineage and is consumed by four
-    // jobs below.
+      keyCol: String, keys: DataFrame, batchId: Long): Unit = {
+    // checkpointed once: the list may carry an expensive lineage and is
+    // consumed by the bucket collect, the probe and the merge
     val delKeys = keys.select(col(keyCol).cast(schema(keyCol).dataType))
       .distinct().localCheckpoint(true)
     try {
-      val touched = delKeys.select(stateBucketOf(col(keyCol)).alias("bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.nonEmpty) {
-        val current = bucketedStateTouchedRead(spark, stateDir, touched, schema)
-          .localCheckpoint(true)
-        try {
-          // probe FIRST: only buckets that actually hold a forgotten key are
-          // rewritten — an already-erased table is a byte-exact no-op
-          val hit = current.join(delKeys, Seq(keyCol), "left_semi")
-            .select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSet
-          if (hit.nonEmpty) {
-            // checkpointed: consumed twice (kept-bucket collect + write)
-            val remaining = current
-              .filter(col("bucket").isin(hit.toSeq.map(Integer.valueOf): _*))
-              .join(delKeys, Seq(keyCol), "left_anti")
-              .localCheckpoint(true)
-            try {
-              val kept = remaining.select(col("bucket")).distinct()
-                .collect().map(_.getInt(0)).toSet
-              // every hit bucket emptied (e.g. re-running after a crash that
-              // committed the overwrite but not the dir delete): nothing to
-              // write — a zero-row dynamic overwrite replaces no partitions
-              if (kept.nonEmpty) {
-                writeBucketed(remaining.drop("bucket"), keyCol, statePath)
-              }
-              (hit -- kept).toSeq.sorted.foreach { b =>
-                StateFs.deleteRecursively(spark, s"$statePath/bucket=$b")
-              }
-            } finally {
-              org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(remaining)
-            }
-          }
-        } finally {
-          org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(current)
-        }
-      }
+      versionedForget(spark, stateDir, schema, keyCol, batchId, {
+        val hashed = bucketsOf(delKeys, keyCol)
+        if (hashed.isEmpty) Seq.empty[Int]
+        else versionedStateRead(spark, stateDir, schema, Some(batchId))
+          .filter(col("bucket").isin(hashed.map(Integer.valueOf): _*))
+          .join(delKeys, Seq(keyCol), "left_semi")
+          .select(col("bucket")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+      })(_.join(delKeys, Seq(keyCol), "left_anti"))
     } finally {
       org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(delKeys)
     }
   }
 
-  /** One SCD2 micro-batch against the bucketed dimension — the exact
-    * body [[scd2MaintenanceStreamBucketed]] runs per batch, exposed
-    * package-private so the crash specs can replay a batch with the
-    * marker deliberately WITHHELD (`commitMarker = false` simulates
-    * dying between the overwrite's job commit and the marker write).
-    * The append-only contract check runs INSIDE the fold on the
-    * still-unapplied buckets only: a replayed batch's already-advanced
-    * buckets are excluded before `scd2ApplyChanges` ever sees them, so
-    * the replay neither double-folds nor trips the contract on state it
-    * itself advanced.
-    */
-  private[graft] def scd2FoldBatchBucketed(spark: SparkSession,
-      stateDir: String, schema: StructType, batch: DataFrame, batchId: Long,
-      commitMarker: Boolean = true): Unit = {
-    if (!plainMarkerApplied(spark, stateDir, batchId)) {
-      val touched = batch
-        .select(stateBucketOf(col("o_custkey")).alias("bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.nonEmpty) {
-        foldBucketedState(spark, stateDir, schema, touched,
-            "customer_key", batchId) { (cur, todo) =>
-          graft.operators.WindowAnalytics.scd2ApplyChanges(cur,
-            batch.filter(stateBucketOf(col("o_custkey"))
-              .isin(todo.map(Integer.valueOf): _*)))
-        }
-      }
-      if (commitMarker) commitPlainMarker(spark, stateDir, batchId)
-    }
-  }
-
-  /** CDC CORRECTION / RETRACTION fold for the bucketed SCD2 interval
-    * history — the out-of-order path [[scd2FoldBatchBucketed]]'s
-    * append-only contract deliberately rejects: a real feed eventually
-    * sends a correction (an order voided, a mis-keyed backfill), and
-    * "rebuild the dimension" is not an answer at 100 TB. The correction
-    * batch re-sends each affected key's FULL corrected order stream
-    * (the standard CDC snapshot-correction shape; a key whose every
-    * order is retracted appears in `affectedKeys` with no corrected
-    * rows), and the fold REPLACES exactly those keys' interval chains —
-    * the chain is a per-key-independent structure, so a wholesale
-    * per-key rebuild composes with neighbors sharing the bucket:
-    * carried rows are anti-joined out, the replacement chains come from
-    * the same gaps-and-islands compaction the from-scratch build runs,
-    * and only the buckets the affected keys hash into are read or
-    * rewritten ([[foldBucketedState]]'s pruned partial-rewrite, with
-    * its watermark idempotence).
-    *
-    * A bucket whose EVERY key is affected-and-fully-retracted produces
-    * no fold output, and a dynamic overwrite only replaces partitions
-    * present in the written frame — so the post-fold sweep deletes any
-    * touched bucket whose watermark still predates the batch (the
-    * [[forgetKeys]] emptied-bucket discipline; a watermark-skipped
-    * replay bucket reads ≥ batchId and is never swept). Idempotent
-    * end-to-end: marker-gated, and a crash anywhere re-runs the
-    * still-unapplied buckets only.
+  /** CDC CORRECTION / RETRACTION for the versioned SCD2 interval history
+    * — the out-of-order path [[scd2FoldBatchVersioned]]'s append-only
+    * contract deliberately rejects: a real feed eventually sends a
+    * correction (an order voided, a mis-keyed backfill), and "rebuild
+    * the dimension" is not an answer at 100 TB. The correction batch
+    * re-sends each affected key's FULL corrected order stream (the
+    * standard CDC snapshot-correction shape; a key whose every order is
+    * retracted appears in `affectedKeys` with no corrected rows), and
+    * the [[versionedForget]] at `batchId` REPLACES exactly those keys'
+    * interval chains — the chain is a per-key-independent structure, so
+    * a wholesale per-key rebuild composes with neighbors sharing the
+    * bucket: carried rows are anti-joined out, the replacement chains
+    * come from the same gaps-and-islands compaction the from-scratch
+    * build runs, and only the buckets the affected keys hash into are
+    * read or written. A correction can empty a bucket (every key in it
+    * retracted outright), so it is a forget: history below it expires
+    * and the emptied bucket is swept.
     *
     * The registered `dim_customer_scd2_corrected` gate proves
     * correction ≡ rebuild: its oracle is the from-scratch dimension SQL
     * over the corrected order stream.
     */
-  def scd2CorrectKeysBucketed(spark: SparkSession, stateDir: String,
+  def scd2CorrectKeysVersioned(spark: SparkSession, stateDir: String,
       schema: StructType, affectedKeys: DataFrame, correctedOrders: DataFrame,
       batchId: Long): Unit = {
-    if (!plainMarkerApplied(spark, stateDir, batchId)) {
-      val keys = affectedKeys.select(col("customer_key")
-          .cast(schema("customer_key").dataType))
-        .distinct().localCheckpoint(true)
-      try {
-        val touched = keys.select(stateBucketOf(col("customer_key")).alias("bucket"))
-          .distinct().collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          foldBucketedState(spark, stateDir, schema, touched,
-              "customer_key", batchId) { (cur, todo) =>
-            val todoKeys = keys.filter(stateBucketOf(col("customer_key"))
-              .isin(todo.map(Integer.valueOf): _*))
-            cur.join(todoKeys, Seq("customer_key"), "left_anti")
-              .unionByName(
-                graft.operators.WindowAnalytics.priorityIntervalHistoryOf(
-                  correctedOrders.filter(stateBucketOf(col("o_custkey"))
-                    .isin(todo.map(Integer.valueOf): _*))))
-          }
-          // emptied-bucket sweep: a touched bucket whose watermark still
-          // predates this batch got no rows from the fold — every key in
-          // it was retracted outright — and must be cleared explicitly
-          val wmAfter = bucketedStateTouchedRead(spark, stateDir, touched, schema)
-            .groupBy(col("bucket")).agg(max(col("last_batch")).alias("wm"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          touched.filter(b => wmAfter.getOrElse(b, Long.MinValue) < batchId)
-            .foreach { b =>
-              StateFs.deleteRecursively(spark,
-                s"${bucketedStatePath(stateDir)}/bucket=$b")
-            }
-        }
-        commitPlainMarker(spark, stateDir, batchId)
-      } finally {
-        org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(keys)
+    val keys = affectedKeys.select(col("customer_key")
+        .cast(schema("customer_key").dataType))
+      .distinct().localCheckpoint(true)
+    try {
+      versionedForget(spark, stateDir, schema, "customer_key", batchId,
+          bucketsOf(keys, "customer_key")) { cur =>
+        cur.join(keys, Seq("customer_key"), "left_anti")
+          .unionByName(graft.operators.WindowAnalytics
+            .priorityIntervalHistoryOf(correctedOrders))
       }
+    } finally {
+      org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(keys)
     }
   }
 
   /** Versioned-state read schema for the term-stats tier — (term, df,
-    * tf_sum) WITHOUT `last_batch` (the generation commit is the
-    * idempotence evidence), plus the `bucket` partition column.
+    * tf_sum) plus the `bucket` partition column.
     */
   private val termStatsVersionedSchema = StructType(Seq(
     StructField("term", StringType),
@@ -2615,167 +2439,57 @@ object EventStream {
     StructField("tf_sum", LongType),
     StructField("bucket", IntegerType)))
 
-  /** One term-statistics micro-batch on the VERSIONED copy-on-write
-    * layout — the text tier's fold: the (term, df, tf_sum) table
-    * BM25/TF-IDF statistics join on is keyed and bucketed by TERM (a
-    * string key: `stateBucketOf`'s `hash()` takes any type). Term-stats
-    * is the tier scoring SERVES from, so "what did the df table look
-    * like before tonight's crawl folded in" is exactly the question a
-    * ranking regression investigation asks. Each micro-batch tokenizes
-    * only its own documents (the exact
-    * [[graft.operators.TextAnalysis.termFreqsOf]] lineage the batch
-    * queries ride), reads ONLY the touched buckets' serving generations
-    * as of the previous batch, merges through the same
-    * [[graft.operators.TextAnalysis.mergeTermStats]] the batch gates
-    * certify, and writes its own fresh generation holding only those
-    * buckets (copy-on-write: the plan never reads its write target, torn
-    * commits are unobservable, exactly-once is the generation's
-    * `_SUCCESS`). Time travel becomes a listing filter; the registered
-    * `text_df_asof` gate pins as-of ≡ the prefix rebuild against the
-    * DuckDB oracle.
+  /** The (term, df, tf_sum) delta of a document set — tokenized through
+    * the exact [[graft.operators.TextAnalysis.termFreqsOf]] lineage the
+    * batch queries ride.
+    */
+  private def termStatsDelta(docs: DataFrame): DataFrame =
+    graft.operators.TextAnalysis.termStatsOf(
+      graft.operators.TextAnalysis.termFreqsOf(docs))
+
+  /** One term-statistics micro-batch — the text tier's fold: the (term,
+    * df, tf_sum) table BM25/TF-IDF statistics join on is keyed and
+    * bucketed by TERM. Term-stats is the tier scoring SERVES from, so
+    * "what did the df table look like before tonight's crawl folded in"
+    * is exactly the question a ranking regression investigation asks.
+    * Each micro-batch tokenizes only its own documents and merges
+    * through the same [[graft.operators.TextAnalysis.mergeTermStats]]
+    * the batch gates certify; the registered `text_df_asof` gate pins
+    * as-of ≡ the prefix rebuild against the DuckDB oracle.
     */
   private[graft] def termStatsFoldBatchVersioned(spark: SparkSession,
-      stateDir: String, batch: DataFrame, batchId: Long): Unit = {
-    require(batchId >= 0, s"versioned fold batchId must be >= 0, got $batchId")
-    val genPath = versionedGenPath(stateDir, batchId)
-    if (StateFs.exists(spark, s"$genPath/_SUCCESS")) {
-      healVersionedManifest(spark, stateDir, batchId)
-    } else {
-      val delta = graft.operators.TextAnalysis
-        .termStatsOf(graft.operators.TextAnalysis.termFreqsOf(batch))
-        .withColumn("bucket", stateBucketOf(col("term")))
-        .persist()
-      try {
-        val touched = delta.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          val current = versionedStateRead(spark, stateDir,
-              termStatsVersionedSchema, Some(batchId - 1))
-            .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-          graft.operators.TextAnalysis.mergeTermStats(
-              current.drop("bucket"),
-              delta.filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-                .drop("bucket"))
-            .withColumn("bucket", stateBucketOf(col("term")))
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(genPath)
-          writeVersionedManifest(spark, stateDir)
-        }
-      } finally {
-        delta.unpersist()
-        ()
-      }
+      stateDir: String, batch: DataFrame, batchId: Long): Unit =
+    withPersisted(termStatsDelta(batch)) { delta =>
+      versionedFold(spark, stateDir, termStatsVersionedSchema, "term",
+          batchId, bucketsOf(delta, "term"))(
+        graft.operators.TextAnalysis.mergeTermStats(_, delta))
     }
-  }
 
   /** The versioned term-stats table, live (reader-shaped). */
   def termStatsVersionedRead(spark: SparkSession, stateDir: String): DataFrame =
-    versionedStateRead(spark, stateDir, termStatsVersionedSchema, None)
-      .drop("bucket")
+    versionedRead(spark, stateDir, termStatsVersionedSchema)
 
-  /** RIGHT-TO-BE-FORGOTTEN ON THE COPY-ON-WRITE TIER — the erasure
-    * story the versioned layout was missing: a generation log RETAINS
-    * the pre-forget statistics by design, so "forget these documents"
-    * is necessarily TWO disciplines composed plus one sweep:
-    *
-    *  1. a NEGATED delta fold at its own `batchId` (tokenize ONLY the
-    *     forgotten docs, fold the negated term stats through the same
-    *     [[graft.operators.TextAnalysis.mergeTermStats]] — additivity
-    *     works in both directions; the merged result drops `df <= 0`
-    *     rows because a term living only in forgotten documents must
-    *     VANISH, not linger as a zero-count tombstone that still
-    *     discloses it) — this discharges SERVING;
-    *  2. [[expireVersionedGenerations]] at that batch as the horizon —
-    *     this discharges HISTORY: every superseded bucket version at or
-    *     below the forget batch is deleted, and as-of reads into the
-    *     pre-forget window fail LOUDLY instead of resurrecting the
-    *     forgotten rows (time travel and the right to be forgotten are
-    *     in direct tension; the horizon is the resolution);
-    *  3. an EMPTIED-BUCKET SWEEP: a bucket whose every term vanished
-    *     produces no partition in the forget generation, and per-bucket
-    *     newest-generation resolution would silently fall back to the
-    *     STALE version expiry kept as that bucket's serving gen — the
-    *     one-sided failure the [[forgetKeys]] emptied-bucket discipline
-    *     exists for, here applied across every surviving generation.
-    *
-    * Idempotent end-to-end: the fold skips on its generation commit, the
-    * expiry is monotone, and the sweep probes the post-forget serving
-    * view (an already-swept bucket reads empty and deletes nothing).
+  /** RIGHT-TO-BE-FORGOTTEN on the term-stats tier — a NEGATED delta
+    * [[versionedForget]] at `batchId`: tokenize ONLY the forgotten docs
+    * and fold their negated statistics through the same
+    * [[graft.operators.TextAnalysis.mergeTermStats]] (additivity works in
+    * both directions); the merge drops `df <= 0` rows because a term
+    * living only in forgotten documents must VANISH, not linger as a
+    * zero-count tombstone that still discloses it. The forget's expiry
+    * and emptied-bucket sweep then take the pre-forget statistics out of
+    * history as well.
     */
   def termStatsForgetVersioned(spark: SparkSession, stateDir: String,
-      forgottenDocs: DataFrame, batchId: Long): Unit = {
-    require(batchId >= 0, s"versioned forget batchId must be >= 0, got $batchId")
-    val genPath = versionedGenPath(stateDir, batchId)
-    val delta = graft.operators.TextAnalysis
-      .termStatsOf(graft.operators.TextAnalysis.termFreqsOf(forgottenDocs))
-      .withColumn("bucket", stateBucketOf(col("term")))
-      .persist()
-    try {
-      val touched = delta.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      // an empty forget list touches nothing — and must not raise the
-      // retention horizon as a side effect
-      if (touched.nonEmpty) {
-        // commit evidence is the generation's _SUCCESS OR the horizon
-        // already at/above this batch: an all-emptied forget generation
-        // is legitimately husk-dropped by the expiry below (no bucket
-        // dirs), so on a replay the horizon — written before any
-        // deletion — is what proves the fold already ran; without it
-        // the replay would re-fold against expired history and trip the
-        // loud horizon check
-        val done = versionedExpiredThrough(spark, stateDir) >= batchId ||
-          StateFs.exists(spark, s"$genPath/_SUCCESS")
-        if (!done) {
-          val current = versionedStateRead(spark, stateDir,
-              termStatsVersionedSchema, Some(batchId - 1))
-            .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-          graft.operators.TextAnalysis.mergeTermStats(
-              current.drop("bucket"),
-              delta.filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-                .select(col("term"), (-col("df")).alias("df"),
-                  (-col("tf_sum")).alias("tf_sum")))
-            .filter(col("df") > 0) // vanish, never tombstone
-            .withColumn("bucket", stateBucketOf(col("term")))
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(genPath)
-          writeVersionedManifest(spark, stateDir)
-        }
-        // capture the forget generation's OWN partition inventory BEFORE
-        // expiry (an all-emptied generation is a husk expiry drops): a
-        // touched bucket ABSENT here is empty post-forget by definition
-        // — the serving view cannot be probed for this, because the
-        // stale pre-forget fallback is exactly the bug being swept
-        val present = StateFs.list(spark, genPath)
-          .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }
-          .toSet
-        // history below the forget batch must not survive OR serve
-        expireVersionedGenerations(spark, stateDir, batchId)
-        // emptied-bucket sweep: stale surviving versions of buckets the
-        // forget emptied must go — per-bucket newest-generation
-        // resolution would otherwise silently serve them
-        val emptied = touched.filterNot(present)
-        if (emptied.nonEmpty) {
-          versionedCommittedGens(spark, stateDir).foreach { g =>
-            emptied.foreach { b =>
-              StateFs.deleteRecursively(spark,
-                s"${versionedGenPath(stateDir, g)}/bucket=$b")
-            }
-          }
-          // drop generation husks stripped of every bucket, then
-          // republish the manifest over the swept inventory
-          versionedCommittedGens(spark, stateDir).foreach { g =>
-            val p = versionedGenPath(stateDir, g)
-            if (!StateFs.list(spark, p).exists(_.startsWith("bucket=")))
-              StateFs.deleteRecursively(spark, p)
-          }
-          writeVersionedManifest(spark, stateDir)
-        }
+      forgottenDocs: DataFrame, batchId: Long): Unit =
+    withPersisted(termStatsDelta(forgottenDocs)) { delta =>
+      versionedForget(spark, stateDir, termStatsVersionedSchema, "term",
+          batchId, bucketsOf(delta, "term")) { cur =>
+        graft.operators.TextAnalysis.mergeTermStats(cur,
+            delta.select(col("term"), (-col("df")).alias("df"),
+              (-col("tf_sum")).alias("tf_sum")))
+          .filter(col("df") > 0) // vanish, never tombstone
       }
-    } finally {
-      delta.unpersist()
-      ()
     }
-  }
 
   /** TIME TRAVEL on the versioned term-stats state: the df/tf_sum table
     * exactly as a live read served it the moment batch `asOfBatch`
@@ -2794,47 +2508,22 @@ object EventStream {
     */
   def termStatsMaintenanceStreamVersioned(docsStream: DataFrame,
       initialStats: DataFrame, stateDir: String,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = docsStream.sparkSession
-    seedVersionedState(initialStats, "term", stateDir)
-    maintenanceWriter(docsStream, checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        termStatsFoldBatchVersioned(spark, stateDir, batch.toDF(), batchId)
-      }
-      .start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    versionedMaintenanceStream(docsStream, initialStats, "term", stateDir,
+        checkpointDir)(
+      termStatsFoldBatchVersioned(docsStream.sparkSession, stateDir, _, _))
 
-  /** Bucketed OLS sufficient-statistics state layout — the maintained
-    * (return_flag → nine exact-integer normal-equation sums) table of
-    * the TRAINED-MODEL tier (r18 verdict #1: the one incremental ≡
-    * rebuild gate still living in session state, now durable like
-    * every other). DECIMAL(38,0) sums — the
-    * [[graft.operators.Stats]] exactness envelope, on disk.
-    *
-    * VERSIONING EXEMPTION (r19 verdict #4, documented at the stream as
-    * asked): this tier deliberately keeps the dynamic-overwrite layout
-    * while totals and term-stats are maintained only on copy-on-write
-    * generations.
-    * The table is O(|return_flag|) rows (3 on the fixture; bounded by
-    * flag cardinality in production) and EVERY nightly delta touches
-    * essentially every flag bucket, so a generation per batch would be
-    * a full-table snapshot per night — the copy-on-write layout buys no
-    * partial-rewrite saving here, only the time-travel listing. And the
-    * time-travel question on this tier ("what did the model serve
-    * before tonight's fold") is already answerable in O(batch): the
-    * sums are exactly additive, so the pre-batch state is the stored
-    * state minus the batch's delta (the same negated-fold algebra the
-    * erasure tier runs, certified by `lineitem_ols_forget` /
-    * erasure-certificate tier `ols_sums`). If flag cardinality ever
-    * grows to where per-bucket rewrites matter, the versioned layout's
-    * fold/read/retention contract is key-column-generic and already
-    * carries three tables.
+  /** Versioned state schema of the OLS sufficient statistics — the
+    * maintained (return_flag → nine exact-integer normal-equation sums)
+    * table of the TRAINED-MODEL tier, DECIMAL(38,0) sums (the
+    * [[graft.operators.Stats]] exactness envelope, on disk). O(|flags|)
+    * rows, so a nightly generation is a few rows; its as-of view is
+    * "what the model served before tonight's fold".
     */
   private val olsSumsStateSchema = StructType(
     StructField("return_flag", StringType) +:
       graft.operators.Stats.OlsSumCols.map(c =>
         StructField(c, DecimalType(38, 0))) :+
-      StructField("last_batch", LongType) :+
       StructField("bucket", IntegerType))
 
   /** The maintained OLS sums table, reader-shaped — what the
@@ -2842,68 +2531,47 @@ object EventStream {
     * reads to retrain in O(|flags|).
     */
   def olsSumsRead(spark: SparkSession, stateDir: String): DataFrame =
-    bucketedStateRead(spark, stateDir, olsSumsStateSchema)
-      .drop("bucket", "last_batch")
+    versionedRead(spark, stateDir, olsSumsStateSchema)
 
   /** Seed the stored OLS sums from a (return_flag → nine sums) frame —
-    * commit-guarded like every bucketed seed ([[seedBucketedState]]).
+    * commit-guarded like every seed ([[seedVersionedState]]).
     */
   def olsSumsSeed(spark: SparkSession, stateDir: String,
       initialSums: DataFrame): Unit =
-    seedBucketedState(initialSums, "return_flag", stateDir)
+    seedVersionedState(initialSums, "return_flag", stateDir)
 
   /** Fold one nine-sum DELTA into the stored OLS state — the nightly
-    * model-maintenance fold: marker-gated, watermark-idempotent
-    * ([[foldBucketedState]] — the commit/marker crash window replays as
-    * a per-bucket no-op), partial-rewrite (a delta touching one flag's
-    * bucket rewrites that bucket only). The merge is
+    * model-maintenance fold ([[versionedFold]]). The merge is
     * [[graft.operators.Stats.mergeOlsSums]] — keyed full-outer decimal
     * addition, additive over disjoint row sets, so fold-then-solve ≡
     * rebuild exactly (integer sums, no reassociation caveat).
     */
   def olsSumsFoldBatch(spark: SparkSession, stateDir: String,
-      deltaSums: DataFrame, batchId: Long,
-      commitMarker: Boolean = true): Unit = {
-    if (!plainMarkerApplied(spark, stateDir, batchId)) {
-      val delta = deltaSums
-        .withColumn("bucket", stateBucketOf(col("return_flag")))
-        .persist()
-      try {
-        val touched = delta.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          foldBucketedState(spark, stateDir, olsSumsStateSchema, touched,
-              "return_flag", batchId) { (cur, todo) =>
-            graft.operators.Stats.mergeOlsSums(cur,
-              delta.filter(col("bucket").isin(todo.map(Integer.valueOf): _*))
-                .drop("bucket"))
-          }
-        }
-        if (commitMarker) commitPlainMarker(spark, stateDir, batchId)
-      } finally {
-        delta.unpersist()
-        ()
-      }
+      deltaSums: DataFrame, batchId: Long): Unit =
+    withPersisted(deltaSums) { delta =>
+      versionedFold(spark, stateDir, olsSumsStateSchema, "return_flag",
+          batchId, bucketsOf(delta, "return_flag"))(
+        graft.operators.Stats.mergeOlsSums(_, delta))
     }
-  }
 
   /** ERASURE IN AGGREGATE SPACE ON THE STORED MODEL TIER — the durable
     * form of `lineitem_ols_forget`: the forgotten cohort's nine-sum
-    * delta folds in NEGATED through the exact same
-    * [[olsSumsFoldBatch]] machinery (additivity works in both
-    * directions over disjoint row sets), so the STORED model provably
-    * forgets without a history rescan. Runs as a marker-gated fold at
-    * its own `batchId` — a negated fold is NOT naturally idempotent
-    * (subtracting twice would over-forget), so the idempotence contract
-    * is the fold's, not a probe's: the batch marker plus the per-bucket
-    * `last_batch` watermark make a certificate re-run (second JVM,
-    * crash recovery) a provable no-op, the same guarantee every
-    * maintenance fold carries.
+    * delta folds in NEGATED through the same merge as
+    * [[olsSumsFoldBatch]] (additivity works in both directions over
+    * disjoint row sets), as the [[versionedForget]] at `batchId`, so the
+    * STORED model provably forgets without a history rescan and its
+    * pre-forget sums leave history. A negated fold is NOT naturally
+    * idempotent (subtracting twice would over-forget); the forget
+    * generation's commit makes a re-run (second JVM, crash recovery) a
+    * provable no-op.
     */
   def forgetFromOlsSums(spark: SparkSession, stateDir: String,
       forgottenSums: DataFrame, batchId: Long): Unit =
-    olsSumsFoldBatch(spark, stateDir,
-      graft.operators.Stats.negateOlsSums(forgottenSums), batchId)
+    withPersisted(graft.operators.Stats.negateOlsSums(forgottenSums)) { delta =>
+      versionedForget(spark, stateDir, olsSumsStateSchema, "return_flag",
+          batchId, bucketsOf(delta, "return_flag"))(
+        graft.operators.Stats.mergeOlsSums(_, delta))
+    }
 
   private val tfIndexSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -3162,10 +2830,6 @@ object EventStream {
   def chunkIndexReadAsOf(spark: SparkSession, indexDir: String,
       asOfBatch: Long): DataFrame =
     batchDirsReadAsOf(spark, s"$indexDir/chunks", chunkIndexSchema, asOfBatch)
-
-  def chunkOutReadAsOf(spark: SparkSession, outDir: String,
-      asOfBatch: Long): DataFrame =
-    batchDirsReadAsOf(spark, outDir, chunkOutSchema, asOfBatch)
 
   /** Incremental read of the chunk index ([[batchDirsChanges]]): the
     * occurrence rows batches `fromExclusive+1 .. toInclusive` appended.

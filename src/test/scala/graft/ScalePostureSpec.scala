@@ -657,92 +657,6 @@ class ScalePostureSpec extends SparkSpec {
     assert(got == want && want.nonEmpty)
   }
 
-  test("bucketed streaming state: a fold rewrites ONLY the buckets the batch touches") {
-    import graft.operators.WindowAnalytics
-    val orders = Tables.orders(spark, sf)
-    val cut = "1996-07-01"
-    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
-      orders.filter(col("o_orderdate") < cut))
-    // the batch: post-cutover orders restricted to customer keys landing
-    // in ONE bucket (the same key-derived bucket expression the state
-    // table partitions by), so every other bucket must come through
-    // untouched
-    val buckets = streaming.EventStream.StateBuckets
-    val bucketOf = pmod(hash(col("o_custkey")), lit(buckets))
-    val TargetBucket = 3
-    val batchRows = orders.filter(col("o_orderdate") >= cut)
-      .filter(bucketOf === TargetBucket)
-    assert(batchRows.count() > 0, "fixture has no rows in the target bucket")
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-bktposture").toString
-    val schema = streaming.EventStream.scd2BucketedSchema(history0.schema)
-    streaming.EventStream.seedBucketedState(history0, "customer_key", stateDir)
-    def md5(p: java.nio.file.Path): String = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-      new java.math.BigInteger(1, d.digest(java.nio.file.Files.readAllBytes(p)))
-        .toString(16)
-    }
-    def snapshot(): Map[String, (Long, String)] = {
-      val base = java.nio.file.Paths.get(s"$stateDir/state")
-      val out = scala.collection.mutable.Map.empty[String, (Long, String)]
-      java.nio.file.Files.walk(base).forEach { p =>
-        val rel = base.relativize(p).toString
-        if (rel.contains("bucket=") && p.toFile.isFile && !rel.endsWith("_SUCCESS"))
-          out(rel) = (java.nio.file.Files.size(p), md5(p))
-      }
-      out.toMap
-    }
-    val before = snapshot()
-    assert(before.keys.exists(!_.startsWith(s"bucket=$TargetBucket/")),
-      "seeded state has no untouched-bucket files to compare")
-    // one micro-batch touching exactly one bucket
-    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema, batchRows, 0L)
-    val after = snapshot()
-    // THE claim: every untouched bucket's files are byte-identical — same
-    // names, same sizes, same checksums — i.e. the fold never rewrote them
-    val beforeUntouched = before.view.filterKeys(!_.startsWith(s"bucket=$TargetBucket/")).toMap
-    val afterUntouched = after.view.filterKeys(!_.startsWith(s"bucket=$TargetBucket/")).toMap
-    assert(beforeUntouched == afterUntouched,
-      s"untouched buckets were rewritten:\nbefore=$beforeUntouched\nafter=$afterUntouched")
-    // the touched bucket DID advance
-    assert(before.view.filterKeys(_.startsWith(s"bucket=$TargetBucket/")).toMap !=
-      after.view.filterKeys(_.startsWith(s"bucket=$TargetBucket/")).toMap,
-      "target bucket files unchanged — the fold did nothing")
-    // the per-batch state scan partition-prunes to the touched bucket:
-    // the bucket predicate must land in PartitionFilters (catalog-level
-    // pruning) and the executed scan must read ONLY that bucket's files
-    // (Dataset.inputFiles ignores partition filters — the metric is the
-    // proof)
-    locally {
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val pruned = streaming.EventStream.bucketedStateTouchedRead(
-          spark, stateDir, Seq(TargetBucket), schema)
-        // collect() executes pruned's OWN QueryExecution — count() would
-        // plan a separate query and leave these scan metrics at zero
-        assert(pruned.collect().nonEmpty)
-        val scans = pruned.queryExecution.executedPlan.collect {
-          case s: FileSourceScanExec => s }
-        assert(scans.nonEmpty, "expected a FileSourceScanExec over the state")
-        val pf = scans.map(_.metadata("PartitionFilters")).mkString
-        assert(pf.contains("bucket"), s"bucket predicate not a partition filter: $pf")
-        val readFiles = scans.map(_.metrics("numFiles").value).sum
-        val totalFiles = after.keys.count(_.endsWith(".parquet"))
-        assert(readFiles > 0 && readFiles * 2 < totalFiles,
-          s"state scan read $readFiles of $totalFiles files — pruning missing")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-    // and the maintained dimension equals the from-scratch build over
-    // history + the one-bucket batch
-    val got = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .drop("bucket", "last_batch")
-    val want = WindowAnalytics.priorityIntervalHistoryOf(
-      orders.filter(col("o_orderdate") < cut).unionAll(batchRows))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty &&
-      !want.isEmpty)
-  }
-
   test("ivfpq re-rank: candidates broadcast by hint, corpus vectors never shuffle") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     // warm the memoized ADC-ranked candidate frame first so the plan
@@ -815,37 +729,6 @@ class ScalePostureSpec extends SparkSpec {
       s"AMS sketch lost map-side partial aggregation:\n${plan.take(600)}")
   }
 
-  test("bucketed-state watermark probe is column-pruned to the watermark") {
-    import graft.operators.StarSchema
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    // the no-op-replay claim: a fully-applied replay learns it has
-    // nothing to do by reading per-bucket max(last_batch) — that read
-    // must not haul the state's data columns off disk
-    val detail = Tables.lineitem(spark, sf)
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"),
-        col("l_discount"), col("o_orderdate"))
-    val state0 = StarSchema.totalsPartialsOfDetail(detail)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-wmprune").toString
-    streaming.EventStream.seedBucketedState(state0, "product_key", stateDir)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val schema = state0.schema.add("last_batch", "long").add("bucket", "int")
-      val probe = streaming.EventStream.bucketedStateTouchedRead(
-          spark, stateDir, Seq(0, 1, 2), schema)
-        .groupBy(col("bucket")).agg(max(col("last_batch")).alias("wm"))
-      assert(probe.collect().nonEmpty)
-      val scans = probe.queryExecution.executedPlan.collect {
-        case s: FileSourceScanExec => s }
-      assert(scans.nonEmpty)
-      val readSchema = scans.map(_.metadata("ReadSchema")).mkString
-      assert(readSchema.contains("last_batch"), s"ReadSchema: $readSchema")
-      assert(!readSchema.contains("q2") && !readSchema.contains("r4"),
-        s"watermark probe reads data columns: $readSchema")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
   test("bm25: query terms broadcast-probe the tf index, independent of the threshold") {
     // the claim: the query-term probe does not depend on the auto
     // broadcast threshold — the tiny query set carries an explicit hint
@@ -883,22 +766,20 @@ class ScalePostureSpec extends SparkSpec {
     assert(nodes < 20, s"pagerank plan grew with rounds: $nodes nodes")
   }
 
-  test("term-stats fold rewrites only the buckets the batch's terms hash into (string key)") {
-    import graft.operators.TextAnalysis
-    // the totals/SCD2 partial-rewrite pins run on LONG keys; this
-    // re-proves the claim for the STRING-keyed versioned term fold: a
-    // batch whose vocabulary is ONE term writes a generation holding ONLY
-    // that term's bucket, and every other bucket keeps serving the seed's
-    // byte-identical files
-    val docs = Tables.documents(spark, sf)
-    val state0 = TextAnalysis.termStatsOf(TextAnalysis.termFreqsOf(docs))
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-termprune").toString
-    streaming.EventStream.seedVersionedState(state0, "term", stateDir)
+  // a batch whose keys all hash into ONE bucket writes a generation
+  // holding ONLY that bucket, rewrites no seed file, and every other
+  // bucket keeps serving the seed's rows; `want` is the from-scratch
+  // state over seed + batch
+  private def assertFoldRewritesOnlyTarget(input: String, keyCol: String,
+      target: Int, seed: String => Unit, fold: String => Unit,
+      read: String => org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    val buckets = streaming.EventStream.StateBuckets
     def md5(p: java.nio.file.Path): String =
       java.util.HexFormat.of.formatHex(
         java.security.MessageDigest.getInstance("MD5")
           .digest(java.nio.file.Files.readAllBytes(p)))
-    def snapshot(): Map[String, (Long, String)] = {
+    def snapshot(stateDir: String): Map[String, (Long, String)] = {
       val base = java.nio.file.Paths.get(s"$stateDir/state")
       val out = scala.collection.mutable.Map.empty[String, (Long, String)]
       java.nio.file.Files.walk(base).forEach { p =>
@@ -908,35 +789,76 @@ class ScalePostureSpec extends SparkSpec {
       }
       out.toMap
     }
-    val before = snapshot()
-    val targetBucket = spark.range(1)
-      .select(pmod(hash(lit("window")), lit(8))).head.getInt(0)
-    assert(before.keys.exists(!_.startsWith(s"seed/bucket=$targetBucket/")),
-      "seeded state has no untouched-bucket files to compare")
-    val batch = spark.range(1).select(
-      lit(999999L).alias("doc_id"), lit("window window window").alias("text"))
-    streaming.EventStream.termStatsFoldBatchVersioned(spark, stateDir, batch, 0L)
-    val after = snapshot()
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-foldprune").toString
+    seed(stateDir)
+    val before = snapshot(stateDir)
+    assert(before.keys.exists(!_.startsWith(s"seed/bucket=$target/")),
+      s"$input: seeded state has no untouched-bucket files to compare")
+    fold(stateDir)
+    val after = snapshot(stateDir)
     // copy-on-write: no seed file was rewritten...
     assert(before.forall { case (rel, sig) => after.get(rel).contains(sig) },
-      "the fold rewrote seed files")
-    // ...and the batch's generation holds ONLY the term's bucket, so
+      s"$input: the fold rewrote seed files")
+    // ...and the batch's generation holds ONLY the target bucket, so
     // every other bucket resolves to its unchanged seed files
     val genBuckets = after.keys.filter(_.startsWith("g0/"))
       .map(_.split("/")(1)).toSet
-    assert(genBuckets == Set(s"bucket=$targetBucket"),
-      s"generation 0 holds buckets $genBuckets")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val live = streaming.EventStream.termStatsVersionedRead(spark, stateDir)
-    val untouched = pmod(hash(col("term")), lit(8)) =!= targetBucket
-    assert(rows(live.filter(untouched)) == rows(state0.filter(untouched)),
-      "buckets outside the batch vocabulary changed")
-    // and the fold landed the delta exactly
-    val got = live.filter(col("term") === "window").head()
-    val base = state0.filter(col("term") === "window").head()
-    assert(got.getLong(1) == base.getLong(1) + 1L, "df delta wrong")
-    assert(got.getLong(2) == base.getLong(2) + 3L, "tf_sum delta wrong")
+    assert(genBuckets == Set(s"bucket=$target"),
+      s"$input: generation 0 holds buckets $genBuckets")
+    val live = read(stateDir)
+    val untouched = pmod(hash(col(keyCol)), lit(buckets)) =!= target
+    val seedRows = spark.read.schema(live.schema)
+      .parquet(s"$stateDir/state/seed").drop("bucket")
+    assert(rows(live.filter(untouched)) == rows(seedRows.filter(untouched)),
+      s"$input: buckets outside the batch changed")
+    // and the fold landed the batch exactly
+    assert(rows(live) == rows(want.select(live.columns.map(col): _*)),
+      s"$input: the folded state differs from the rebuild")
+  }
+
+  test("bucketed streaming state: a fold rewrites ONLY the buckets the batch touches") {
+    import graft.operators.WindowAnalytics
+    // LONG key: the SCD2 fold over post-cutover orders of customer keys
+    // landing in ONE bucket
+    val orders = Tables.orders(spark, sf)
+    val cut = "1996-07-01"
+    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
+      orders.filter(col("o_orderdate") < cut))
+    val scd2Schema = streaming.EventStream.scd2VersionedSchema(history0.schema)
+    val custBucket = 3
+    val custBatch = orders.filter(col("o_orderdate") >= cut)
+      .filter(pmod(hash(col("o_custkey")),
+        lit(streaming.EventStream.StateBuckets)) === custBucket)
+    assert(!custBatch.isEmpty, "fixture has no rows in the target bucket")
+    assertFoldRewritesOnlyTarget("long key", "customer_key", custBucket,
+      dir => streaming.EventStream.seedVersionedState(history0, "customer_key", dir),
+      dir => streaming.EventStream.scd2FoldBatchVersioned(spark, dir,
+        scd2Schema, custBatch, 0L),
+      dir => streaming.EventStream.versionedRead(spark, dir, scd2Schema),
+      WindowAnalytics.priorityIntervalHistoryOf(
+        orders.filter(col("o_orderdate") < cut).unionAll(custBatch)))
+  }
+
+  test("term-stats fold rewrites only the buckets the batch's terms hash into (string key)") {
+    import graft.operators.TextAnalysis
+    // STRING key: a one-term batch ("window" three times, one new doc)
+    val docs = Tables.documents(spark, sf)
+    val terms0 = TextAnalysis.termStatsOf(TextAnalysis.termFreqsOf(docs))
+    val termBatch = spark.range(1).select(
+      lit(999999L).alias("doc_id"), lit("window window window").alias("text"))
+    val termBucket = spark.range(1).select(pmod(hash(lit("window")),
+      lit(streaming.EventStream.StateBuckets))).head.getInt(0)
+    val window = terms0.filter(col("term") === "window").head()
+    assertFoldRewritesOnlyTarget("string key", "term", termBucket,
+      dir => streaming.EventStream.seedVersionedState(terms0, "term", dir),
+      dir => streaming.EventStream.termStatsFoldBatchVersioned(spark, dir,
+        termBatch, 0L),
+      dir => streaming.EventStream.termStatsVersionedRead(spark, dir),
+      terms0.filter(col("term") =!= "window").unionByName(spark.range(1).select(
+        lit("window").alias("term"), lit(window.getLong(1) + 1L).alias("df"),
+        lit(window.getLong(2) + 3L).alias("tf_sum"))))
   }
 
   test("as-of and incremental reads scan ONLY the window's batch subdirs") {

@@ -486,37 +486,35 @@ class StatsSpec extends SparkSpec {
   }
 
   test("stored OLS sums: betas served from disk equal the session model;" +
-      " the fold and the negated forget fold are watermark-idempotent") {
+      " replaying the fold and re-running the negated forget are byte-exact no-ops") {
     import operators.Stats
     import graft.streaming.EventStream
     // the registered gate ≡ the session full-corpus model, exactly
     assert(q("lineitem_ols_stored").collect().toSeq ==
       q("lineitem_ols_multi").collect().toSeq,
       "stored-table serving diverged from the session model")
-    // fresh state table: seed history, crash the batch fold between its
-    // overwrite commit and the marker, replay — the per-bucket watermark
-    // must make the replay a byte-exact no-op (the totals discipline on
-    // the model tier)
+    // fresh state table: seed history, fold the batch, replay it — the
+    // replay skips on the batch's committed generation, byte-exact (the
+    // totals discipline on the model tier)
     val q0 = Stats.olsQuantized(spark, sf)
     val isBatch = col("l_orderkey") % 10 === 9
     def agg(df: org.apache.spark.sql.DataFrame) =
       Stats.olsAgg(df.groupBy(col("return_flag")))
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-olswm").toString
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-olsreplay").toString
     EventStream.olsSumsSeed(spark, stateDir, agg(q0.filter(!isBatch)))
-    EventStream.olsSumsFoldBatch(spark, stateDir, agg(q0.filter(isBatch)), 0L,
-      commitMarker = false)
-    val afterCrash = bucketSnapshot(stateDir)
     EventStream.olsSumsFoldBatch(spark, stateDir, agg(q0.filter(isBatch)), 0L)
-    assert(bucketSnapshot(stateDir) == afterCrash,
-      "replay rewrote state a crashed-but-committed fold already applied")
+    val afterFold = bucketSnapshot(stateDir)
+    EventStream.olsSumsFoldBatch(spark, stateDir, agg(q0.filter(isBatch)), 0L)
+    assert(bucketSnapshot(stateDir) == afterFold,
+      "replay rewrote state a committed fold already applied")
     // stored sums == the full-corpus aggregation, exactly (fold ≡ rebuild)
     def sumsOf(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
       df.collect().map(_.toSeq.map(String.valueOf)).toSet
     assert(sumsOf(EventStream.olsSumsRead(spark, stateDir)) == sumsOf(agg(q0)),
       "stored sums diverged from the from-scratch aggregation")
-    // the negated forget fold: applies once, then a re-run (second JVM /
-    // crash recovery) provably cannot subtract twice — marker plus
-    // watermark, the same two layers as every maintenance fold
+    // the negated forget: applies once, then a re-run (second JVM /
+    // crash recovery) provably cannot subtract twice — it skips on the
+    // forget generation's own commit
     val cohort = agg(q0.filter(Stats.olsForgottenRule(col("l_orderkey"))))
     EventStream.forgetFromOlsSums(spark, stateDir, cohort, 1L)
     val afterForget = bucketSnapshot(stateDir)

@@ -329,8 +329,9 @@ class StreamingSpec extends SparkSpec {
     val bucketOf = pmod(hash(col("o_custkey")), lit(buckets))
     val TargetBucket = 3
     // input universe: all orders before cut2, plus post-cut2 orders of
-    // keys hashing to ONE bucket — so run 2's fold must leave every
-    // other bucket byte-identical while parity holds over the universe
+    // keys hashing to ONE bucket — so run 2's fold must write that bucket
+    // only and leave every file run 1 wrote byte-identical while parity
+    // holds over the universe
     val b1 = orders.filter(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2)
     val b2 = orders.filter(col("o_orderdate") >= cut2 && bucketOf === TargetBucket)
     assert(b2.count() > 0, "fixture has no post-cutover rows in the target bucket")
@@ -341,42 +342,27 @@ class StreamingSpec extends SparkSpec {
     def run(): Unit = {
       val stream = spark.readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-      val query = streaming.EventStream.scd2MaintenanceStreamBucketed(
+      val query = streaming.EventStream.scd2MaintenanceStreamVersioned(
         stream, history0, stateDir)
       try query.processAllAvailable() finally query.stop()
     }
-    def snapshot(): Map[String, Long] = {
-      val base = java.nio.file.Paths.get(s"$stateDir/state")
-      val out = scala.collection.mutable.Map.empty[String, Long]
-      java.nio.file.Files.walk(base).forEach { p =>
-        val rel = base.relativize(p).toString
-        if (rel.contains("bucket=") && p.toFile.isFile && !rel.endsWith("_SUCCESS"))
-          out(rel) = java.nio.file.Files.size(p)
-      }
-      out.toMap
-    }
     b1.coalesce(1).write.parquet(cdcDir.resolve("b1").toString)
     run()
-    val between = snapshot()
+    val between = bucketSnapshot(stateDir)
     b2.coalesce(1).write.parquet(cdcDir.resolve("b2").toString)
     // deterministic order for the resumed stream: b1 older than b2
     java.nio.file.Files.walk(cdcDir.resolve("b1")).forEach(p =>
       p.toFile.setLastModified(System.currentTimeMillis() - 60000))
-    run() // resume: b1 replays as batch 0 (marker no-op), b2 folds as batch 1
-    val after = snapshot()
-    val untouchedBefore = between.view.filterKeys(!_.startsWith(s"bucket=$TargetBucket/")).toMap
-    val untouchedAfter = after.view.filterKeys(!_.startsWith(s"bucket=$TargetBucket/")).toMap
-    assert(untouchedBefore == untouchedAfter,
-      s"untouched dimension buckets rewritten:\n$untouchedBefore\nvs\n$untouchedAfter")
-    assert(between.view.filterKeys(_.startsWith(s"bucket=$TargetBucket/")).toMap !=
-      after.view.filterKeys(_.startsWith(s"bucket=$TargetBucket/")).toMap,
-      "target bucket unchanged — the fold did nothing")
+    run() // resume: b1 replays as batch 0 (generation no-op), b2 folds as batch 1
+    val after = bucketSnapshot(stateDir)
+    between.foreach { case (rel, sig) =>
+      assert(after.get(rel).contains(sig), s"run 2 rewrote $rel") }
+    val added = after.keySet -- between.keySet
+    assert(added.nonEmpty && added.forall(_.startsWith(s"g1/bucket=$TargetBucket/")),
+      s"run 2 wrote outside the target bucket's generation: $added")
     // parity: the maintained dimension equals the from-scratch interval
     // build over the whole input universe
-    val latest = streaming.EventStream.bucketedStateRead(spark, stateDir,
-      org.apache.spark.sql.types.StructType(history0.schema.fields :+
-        org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.IntegerType))).drop("bucket")
+    val latest = scd2Stored(stateDir, history0.schema)
     val want = WindowAnalytics.priorityIntervalHistoryOf(
       orders.filter(col("o_orderdate") < cut2)
         .unionAll(b2))
@@ -403,18 +389,8 @@ class StreamingSpec extends SparkSpec {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-scd2bktooos").toString
     val stream = spark.readStream.schema(orders.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-    val query = streaming.EventStream.scd2MaintenanceStreamBucketed(
+    val query = streaming.EventStream.scd2MaintenanceStreamVersioned(
       stream, history0, stateDir)
-    def snapshot(): Map[String, Long] = {
-      val base = java.nio.file.Paths.get(s"$stateDir/state")
-      val out = scala.collection.mutable.Map.empty[String, Long]
-      java.nio.file.Files.walk(base).forEach { p =>
-        val rel = base.relativize(p).toString
-        if (rel.contains("bucket=") && p.toFile.isFile)
-          out(rel) = java.nio.file.Files.size(p)
-      }
-      out.toMap
-    }
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       try query.processAllAvailable() finally query.stop()
     }
@@ -423,14 +399,13 @@ class StreamingSpec extends SparkSpec {
     assert(chain(e).exists(c =>
         Option(c.getMessage).exists(_.contains("append-only CDC contract violated"))),
       s"wrong failure: $e")
-    // batch 0 (the late file) folded and was marked; the violating batch
-    // 1 must have left NO marker, so a restart retries it (and fails
-    // again) instead of silently skipping a half-applied batch
-    // markers are written through the Hadoop FileSystem API; the local
-    // ChecksumFileSystem adds hidden `.N.crc` sidecars a raw listing sees
-    val markers = new java.io.File(s"$stateDir/_batches").list()
-      .filter(!_.startsWith(".")).sorted
-    assert(markers.sameElements(Array("0")), s"markers: ${markers.mkString(",")}")
+    // batch 0 (the late file) committed its generation; the violating
+    // batch 1 must have committed NOTHING, so a restart retries it (and
+    // fails again) instead of silently skipping a half-applied batch
+    val committed = new java.io.File(s"$stateDir/state").list()
+      .filter(g => new java.io.File(s"$stateDir/state/$g/_SUCCESS").exists).sorted
+    assert(committed.sameElements(Array("g0", "seed")),
+      s"committed generations: ${committed.mkString(",")}")
   }
 
   /** md5 snapshot of every data file under the bucketed state table —
@@ -452,13 +427,13 @@ class StreamingSpec extends SparkSpec {
     out.toMap
   }
 
-  /** The bucketed SCD2 dimension under `stateDir`, reader-shaped (the
-    * `last_batch` watermark and `bucket` partition column dropped).
+  /** The versioned SCD2 dimension under `stateDir`, reader-shaped (the
+    * `bucket` partition column dropped).
     */
   private def scd2Stored(stateDir: String,
       historySchema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    EventStream.bucketedStateRead(spark, stateDir,
-      EventStream.scd2BucketedSchema(historySchema)).drop("bucket", "last_batch")
+    EventStream.versionedRead(spark, stateDir,
+      EventStream.scd2VersionedSchema(historySchema))
 
   /** Row-multiset equality of two interval histories (same columns). */
   private def sameRows(a: org.apache.spark.sql.DataFrame,
@@ -466,42 +441,49 @@ class StreamingSpec extends SparkSpec {
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   test("marker vacuum below the checkpoint horizon keeps restarts exactly-once") {
-    import graft.operators.WindowAnalytics
-    val orders = Tables.orders(spark, sf)
-    val (cut1, cut2) = ("1996-07-01", "1998-07-01")
-    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
-      orders.filter(col("o_orderdate") < cut1))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-mvac")
-    stageFile(orders.filter(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2),
-      cdcDir, "b1", 60)
-    stageFile(orders.filter(col("o_orderdate") >= cut2), cdcDir, "b2", 30)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-mvacstate").toString
+    import graft.operators.TextAnalysis
+    val docs = Tables.documents(spark, sf)
+    val isBatch = col("doc_id") % 10 === 9
+    val stageDir = java.nio.file.Files.createTempDirectory("graft-mvac")
+    stageFile(docs.filter(isBatch && col("doc_id") % 20 === 9), stageDir, "b1", 60)
+    stageFile(docs.filter(isBatch && col("doc_id") % 20 =!= 9), stageDir, "b2", 30)
+    val indexDir = java.nio.file.Files.createTempDirectory("graft-mvacindex").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-mvacckpt").toString
     def run(): Unit = {
-      val stream = spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$cdcDir/*")
-      val query = streaming.EventStream.scd2MaintenanceStreamBucketed(
-        stream, history0, stateDir, checkpointDir = Some(ckpt))
+      val stream = spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$stageDir/*")
+      val query = streaming.EventStream.tfIndexMaintenanceStream(
+        stream, docs.filter(!isBatch), indexDir, checkpointDir = Some(ckpt))
       try query.processAllAvailable() finally query.stop()
     }
     run() // batches 0 and 1, both checkpointed and marked
     // numeric marker files only — the vacuum also leaves its `_horizon`
     // record in `_batches`
-    def markers() = new java.io.File(s"$stateDir/_batches").list()
+    def markers() = new java.io.File(s"$indexDir/_batches").list()
       .filter(_.matches("\\d+")).sorted.toSeq
     assert(markers() == Seq("0", "1"))
     // both batches are committed to the durable checkpoint → horizon 2
-    assert(streaming.EventStream.vacuumPlainMarkers(spark, stateDir, 2L) == Seq(0L, 1L))
+    assert(streaming.EventStream.vacuumPlainMarkers(spark, indexDir, 2L) == Seq(0L, 1L))
     assert(markers().isEmpty)
-    val before = bucketSnapshot(stateDir)
+    def indexSnapshot(): Map[String, Long] = {
+      val base = java.nio.file.Paths.get(s"$indexDir/tf")
+      val out = scala.collection.mutable.Map.empty[String, Long]
+      java.nio.file.Files.walk(base).forEach { p =>
+        if (p.toFile.isFile && p.toString.endsWith(".parquet"))
+          out(base.relativize(p).toString) = java.nio.file.Files.size(p)
+      }
+      out.toMap
+    }
+    val before = indexSnapshot()
     // a restarted stream over the same checkpoint re-delivers NOTHING —
-    // the vacuumed evidence was dead weight, state stays byte-identical
+    // the vacuumed evidence was dead weight, the index stays unchanged
     run()
-    assert(bucketSnapshot(stateDir) == before,
+    assert(indexSnapshot() == before,
       "restart after marker vacuum re-folded checkpointed batches")
-    val want = WindowAnalytics.priorityIntervalHistoryOf(orders)
-    assert(sameRows(scd2Stored(stateDir, history0.schema), want) &&
-      !want.isEmpty)
+    val cols = Seq("doc_id", "term", "tf").map(col)
+    val want = TextAnalysis.termFreqsOf(docs).select(cols: _*)
+    assert(sameRows(streaming.EventStream.tfIndexRead(spark, indexDir)
+      .select(cols: _*), want) && !want.isEmpty)
   }
 
   test("manifest-backed tf-index reads: manifest-served frames equal" +
@@ -932,17 +914,19 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("forgetKeys: erasure rewrites only hit buckets, clears emptied ones," +
-      " preserves survivor watermarks, and re-runs as a byte-exact no-op") {
+      " expires pre-forget history, and re-runs as a byte-exact no-op") {
     import spark.implicits._
     import graft.operators.StarSchema
     val state0 = StarSchema.totalsPartialsOfDetail(detailFrame)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-forget").toString
-    streaming.EventStream.seedBucketedState(state0, "product_key", stateDir)
-    val schema = state0.schema.add("last_batch", "long").add("bucket", "int")
-    val st0 = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .collect().map(r => (r.getAs[Long]("product_key"),
-        r.getAs[Long]("last_batch"), r.getAs[Int]("bucket")))
-    val byBucket = st0.groupBy(_._3).map { case (b, rs) => b -> rs.map(_._1).toSeq }
+    streaming.EventStream.seedVersionedState(state0, "product_key", stateDir)
+    val schema = streaming.EventStream.scd2VersionedSchema(state0.schema)
+    val bucketOf = pmod(hash(col("product_key")),
+      lit(streaming.EventStream.StateBuckets))
+    def stored() = streaming.EventStream.versionedRead(spark, stateDir, schema)
+    val st0 = stored().collect().map(_.toSeq)
+    val byBucket = stored().select(col("product_key"), bucketOf.alias("b"))
+      .collect().groupBy(_.getInt(1)).map { case (b, rs) => b -> rs.map(_.getLong(0)).toSeq }
     assert(byBucket.size >= 3, "fixture must spread keys over several buckets")
     // forget EVERY key of one bucket (it must be cleared) plus ONE key of
     // another (partial rewrite); the rest must stay byte-identical
@@ -951,48 +935,129 @@ class StreamingSpec extends SparkSpec {
     val keys = byBucket(emptyB) ++ byBucket(partialB).take(1)
     val before = bucketSnapshot(stateDir)
     streaming.EventStream.forgetKeys(spark, stateDir, schema, "product_key",
-      keys.toDF("product_key"))
-    // forgotten keys gone, every other row intact with its OWN watermark
-    val after = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .collect().map(r => (r.getAs[Long]("product_key"),
-        r.getAs[Long]("last_batch"), r.getAs[Int]("bucket")))
-    assert(after.toSet == st0.filterNot(r => keys.contains(r._1)).toSet,
-      "erasure must drop exactly the forgotten keys and preserve last_batch")
-    // the emptied bucket's partition dir is GONE (a dynamic overwrite
-    // alone would have silently kept it)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$stateDir/state/bucket=$emptyB")))
-    // untouched buckets: files byte-identical
+      keys.toDF("product_key"), 0L)
+    // forgotten keys gone, every other row intact
+    assert(stored().collect().map(_.toSeq).toSet ==
+      st0.filterNot(r => keys.contains(r.head)).toSet,
+      "erasure must drop exactly the forgotten keys")
+    def bucketDirs(b: Int): Seq[String] =
+      new java.io.File(s"$stateDir/state").list().toSeq
+        .filter(g => new java.io.File(s"$stateDir/state/$g/bucket=$b").exists)
+    // the emptied bucket is GONE from every generation, and the forget
+    // generation holds the partially-erased bucket only
+    assert(bucketDirs(emptyB).isEmpty, s"emptied bucket survives in ${bucketDirs(emptyB)}")
     val snap1 = bucketSnapshot(stateDir)
+    assert(snap1.keys.filter(_.startsWith("f0/")).map(_.split("/")(1)).toSet ==
+      Set(s"bucket=$partialB"))
+    // untouched buckets: seed files byte-identical
     val touched = Set(emptyB, partialB)
-    val untouchedBefore = before.filter { case (rel, _) =>
-      !touched.exists(b => rel.startsWith(s"bucket=$b/")) }
-    untouchedBefore.foreach { case (rel, sig) =>
-      assert(snap1.get(rel).contains(sig), s"untouched file rewritten: $rel") }
-    // re-running the same erasure probes, hits nothing, rewrites nothing
+    before.filter { case (rel, _) =>
+        !touched.exists(b => rel.startsWith(s"seed/bucket=$b/")) }
+      .foreach { case (rel, sig) =>
+        assert(snap1.get(rel).contains(sig), s"untouched file rewritten: $rel") }
+    // history below the forget is expired: time travel into it fails
+    // LOUDLY, and no file left under the state dir holds a victim key
+    val err = intercept[IllegalArgumentException](
+      streaming.EventStream.totalsVersionedReadAsOf(spark, stateDir, -1L).collect())
+    assert(err.getMessage.contains("retention horizon"))
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$stateDir/state")
+      .filter(col("product_key").isin(keys: _*)).isEmpty,
+      "a victim key survives in a file under the state dir")
+    // re-running the same erasure skips on its generation commit
     streaming.EventStream.forgetKeys(spark, stateDir, schema, "product_key",
-      keys.toDF("product_key"))
+      keys.toDF("product_key"), 0L)
     assert(bucketSnapshot(stateDir) == snap1,
       "a re-run erasure must be a byte-exact no-op")
-    // the kept-empty path (every hit bucket fully emptied — the shape a
-    // crash-window re-run sees): no write happens, the dir is cleared
+    // the all-emptied path (every hit bucket fully emptied): the forget
+    // generation holds no bucket, and the stale version is swept
     val wipeB = (byBucket.keySet - emptyB - partialB).min
     streaming.EventStream.forgetKeys(spark, stateDir, schema, "product_key",
-      byBucket(wipeB).toDF("product_key"))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$stateDir/state/bucket=$wipeB")))
-    assert(streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .filter(col("bucket") === wipeB).count() == 0)
+      byBucket(wipeB).toDF("product_key"), 1L)
+    assert(bucketDirs(wipeB).isEmpty, s"emptied bucket survives in ${bucketDirs(wipeB)}")
+    assert(stored().filter(bucketOf === wipeB).isEmpty)
     // a delete list arriving with a NARROWER key type must still erase:
     // hash(int k) != hash(long k), so without the cast-to-state-type the
     // wrong buckets would be probed and the key silently survive
-    val intVictim = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .select(col("product_key")).head().getLong(0)
+    val intVictim = stored().select(col("product_key")).head().getLong(0)
     streaming.EventStream.forgetKeys(spark, stateDir, schema, "product_key",
-      Seq(intVictim.toInt).toDF("product_key"))
-    assert(streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .filter(col("product_key") === intVictim).count() == 0,
+      Seq(intVictim.toInt).toDF("product_key"), 2L)
+    assert(stored().filter(col("product_key") === intVictim).isEmpty,
       "an IntegerType delete list against a LongType table must still erase")
+  }
+
+  test("a forget at a batchId not above every committed generation fails" +
+      " loudly instead of forgetting nothing (term-stats, forgetKeys, OLS)") {
+    import spark.implicits._
+    import graft.operators.{Stats, TextAnalysis, WindowAnalytics}
+    val docs = Tables.documents(spark, sf)
+    val forgottenDoc = col("doc_id") % 10 === 7
+    def termStats(df: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.termStatsOf(TextAnalysis.termFreqsOf(df))
+    val orders = Tables.orders(spark, sf)
+    val cut = col("o_orderdate") < "1996-07-01"
+    val history0 = WindowAnalytics.priorityIntervalHistoryOf(orders.filter(cut))
+    val scd2Schema = EventStream.scd2VersionedSchema(history0.schema)
+    val victims = orders.select(col("o_custkey")).distinct()
+      .orderBy("o_custkey").limit(3).collect().map(_.getLong(0)).toSeq
+    val lq = Stats.olsQuantized(spark, sf)
+    val olsBatch = col("l_orderkey") % 10 === 9
+    val olsForgotten = Stats.olsForgottenRule(col("l_orderkey"))
+    def ols(df: org.apache.spark.sql.DataFrame) =
+      Stats.olsAgg(df.groupBy(col("return_flag")))
+    // (tier, seed + fold batch 0, forget at a batchId, live read, the
+    // survivor rebuild the forget must serve)
+    val tiers: Seq[(String, String => Unit, (String, Long) => Unit,
+        String => org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = Seq(
+      ("term-stats",
+        dir => {
+          EventStream.seedVersionedState(
+            termStats(docs.filter(col("doc_id") % 2 === 0)), "term", dir)
+          EventStream.termStatsFoldBatchVersioned(spark, dir,
+            docs.filter(col("doc_id") % 2 === 1), 0L)
+        },
+        (dir, k) => EventStream.termStatsForgetVersioned(spark, dir,
+          docs.filter(forgottenDoc), k),
+        dir => EventStream.termStatsVersionedRead(spark, dir),
+        termStats(docs.filter(!forgottenDoc))),
+      ("forgetKeys",
+        dir => {
+          EventStream.seedVersionedState(history0, "customer_key", dir)
+          EventStream.scd2FoldBatchVersioned(spark, dir, scd2Schema,
+            orders.filter(!cut), 0L)
+        },
+        (dir, k) => EventStream.forgetKeys(spark, dir, scd2Schema,
+          "customer_key", victims.toDF("customer_key"), k),
+        dir => EventStream.versionedRead(spark, dir, scd2Schema),
+        WindowAnalytics.priorityIntervalHistoryOf(
+          orders.filter(!col("o_custkey").isin(victims: _*)))),
+      ("OLS",
+        dir => {
+          EventStream.olsSumsSeed(spark, dir, ols(lq.filter(!olsBatch)))
+          EventStream.olsSumsFoldBatch(spark, dir, ols(lq.filter(olsBatch)), 0L)
+        },
+        (dir, k) => EventStream.forgetFromOlsSums(spark, dir,
+          ols(lq.filter(olsForgotten)), k),
+        dir => EventStream.olsSumsRead(spark, dir),
+        ols(lq.filter(!olsForgotten))))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
+      df.collect().map(_.toSeq.map(String.valueOf)).toSet
+    tiers.foreach { case (tier, build, forget, read, survivors) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-forgetid").toString
+      build(dir)
+      val served = rows(read(dir))
+      // batch 0 names the fold's committed generation: refused, naming
+      // the dir, the batch and the newest generation — state untouched
+      val err = intercept[IllegalArgumentException](forget(dir, 0L))
+      Seq(dir, "forget batch 0", "generation g0").foreach { s =>
+        assert(err.getMessage.contains(s), s"$tier: '$s' missing from: ${err.getMessage}")
+      }
+      assert(rows(read(dir)) == served, s"$tier: the refused forget changed state")
+      // the next batchId forgets, and serves exactly the survivor rebuild
+      forget(dir, 1L)
+      assert(rows(read(dir)) == rows(survivors) && served != rows(survivors),
+        s"$tier: the forget at batch 1 does not serve the survivor rebuild")
+    }
   }
 
   test("SCD2 correction fold replaces only the affected keys' chains:" +
@@ -1002,8 +1067,8 @@ class StreamingSpec extends SparkSpec {
     val orders = Tables.orders(spark, sf)
     val hist = WindowAnalytics.priorityIntervalHistoryOf(orders)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-scd2corr").toString
-    streaming.EventStream.seedBucketedState(hist, "customer_key", stateDir)
-    val schema = streaming.EventStream.scd2BucketedSchema(hist.schema)
+    streaming.EventStream.seedVersionedState(hist, "customer_key", stateDir)
+    val schema = streaming.EventStream.scd2VersionedSchema(hist.schema)
     // keyA: its latest order is retracted (chain rewrites); keyB: every
     // order retracted (chain must disappear entirely)
     val multi = hist.groupBy("customer_key").agg(sum("n_orders").alias("n"))
@@ -1016,10 +1081,9 @@ class StreamingSpec extends SparkSpec {
       col("o_orderdate") < lit(aMax).cast("timestamp"))
     val affected = Seq(keyA, keyB).toDF("customer_key")
     val before = bucketSnapshot(stateDir)
-    streaming.EventStream.scd2CorrectKeysBucketed(spark, stateDir, schema,
+    streaming.EventStream.scd2CorrectKeysVersioned(spark, stateDir, schema,
       affected, corrected, batchId = 0L)
-    def rows() = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .drop("bucket", "last_batch")
+    def rows() = scd2Stored(stateDir, hist.schema)
     // keyB's chain is gone, keyA's equals the from-scratch build over its
     // corrected stream, every other key's chain is untouched
     assert(rows().filter(col("customer_key") === keyB).count() == 0,
@@ -1034,18 +1098,18 @@ class StreamingSpec extends SparkSpec {
       hist.filter(col("customer_key") =!= keyA &&
         col("customer_key") =!= keyB).collect().map(_.toSeq).toSet,
       "unaffected keys' chains changed")
-    // untouched buckets: files byte-identical (the partial-rewrite claim)
+    // untouched buckets: seed files byte-identical (the partial-rewrite claim)
     val touched = Seq(keyA, keyB).toDF("customer_key")
       .select(pmod(hash(col("customer_key")),
         lit(streaming.EventStream.StateBuckets)).alias("b"))
       .collect().map(_.getInt(0)).toSet
     val snap1 = bucketSnapshot(stateDir)
     before.filter { case (rel, _) =>
-      !touched.exists(b => rel.startsWith(s"bucket=$b/")) }
+      !touched.exists(b => rel.startsWith(s"seed/bucket=$b/")) }
       .foreach { case (rel, sig) =>
         assert(snap1.get(rel).contains(sig), s"untouched file rewritten: $rel") }
-    // marker-gated replay: byte-exact no-op
-    streaming.EventStream.scd2CorrectKeysBucketed(spark, stateDir, schema,
+    // replay of the committed correction: byte-exact no-op
+    streaming.EventStream.scd2CorrectKeysVersioned(spark, stateDir, schema,
       affected, corrected, batchId = 0L)
     assert(bucketSnapshot(stateDir) == snap1,
       "a replayed correction batch must be a byte-exact no-op")
@@ -1066,10 +1130,10 @@ class StreamingSpec extends SparkSpec {
     val o2 = orders.filter(col("o_orderdate") >= c2)
     val history0 = WindowAnalytics.priorityIntervalHistoryOf(
       orders.filter(col("o_orderdate") < c1))
-    val schema = streaming.EventStream.scd2BucketedSchema(history0.schema)
+    val schema = streaming.EventStream.scd2VersionedSchema(history0.schema)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-forgetstream").toString
-    streaming.EventStream.seedBucketedState(history0, "customer_key", stateDir)
-    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema,
+    streaming.EventStream.seedVersionedState(history0, "customer_key", stateDir)
+    streaming.EventStream.scd2FoldBatchVersioned(spark, stateDir, schema,
       orders.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2), 0L)
     // victims: keys with history AND future orders — the interesting case
     val victims = o01.select(col("o_custkey")).distinct()
@@ -1077,8 +1141,8 @@ class StreamingSpec extends SparkSpec {
       .orderBy("o_custkey").limit(3).collect().map(_.getLong(0)).toSeq
     assert(victims.nonEmpty)
     streaming.EventStream.forgetKeys(spark, stateDir, schema, "customer_key",
-      victims.toDF("customer_key"))
-    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema, o2, 1L)
+      victims.toDF("customer_key"), 1L)
+    streaming.EventStream.scd2FoldBatchVersioned(spark, stateDir, schema, o2, 2L)
     val state = scd2Stored(stateDir, history0.schema)
     // victims carry ONLY their post-erasure chains...
     assert(sameRows(state.filter(col("customer_key").isin(victims: _*)),
@@ -1089,84 +1153,6 @@ class StreamingSpec extends SparkSpec {
     assert(sameRows(state.filter(!col("customer_key").isin(victims: _*)),
       WindowAnalytics.priorityIntervalHistoryOf(
         orders.filter(!col("o_custkey").isin(victims: _*)))))
-  }
-
-  test("bucketed SCD2: a TORN overwrite commit heals on replay — old buckets re-fold, new ones skip") {
-    import graft.operators.WindowAnalytics
-    // stronger than the clean crash case: a dynamic-partition overwrite's
-    // job commit is not atomic ACROSS partitions, so a crash mid-commit
-    // can leave SOME touched buckets on new data and some on old. The
-    // per-bucket watermark must heal exactly that: stale buckets (old
-    // watermark) re-fold, committed buckets (new watermark) are excluded
-    // byte-for-byte — and the re-fold must not trip the append-only
-    // contract on buckets the torn commit already advanced.
-    val orders = Tables.orders(spark, sf)
-    val cut = "1996-07-01"
-    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
-      orders.filter(col("o_orderdate") < cut))
-    val batch = orders.filter(col("o_orderdate") >= cut)
-    val schema = streaming.EventStream.scd2BucketedSchema(history0.schema)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-torn").toString
-    streaming.EventStream.seedBucketedState(history0, "customer_key", stateDir)
-    // the batch touches every bucket at this fixture scale — pick one to tear
-    val TornBucket = 3
-    val bucketDir = java.nio.file.Paths.get(s"$stateDir/state/bucket=$TornBucket")
-    assert(java.nio.file.Files.exists(bucketDir), "fixture bucket missing")
-    val backup = java.nio.file.Files.createTempDirectory("graft-torn-bak")
-    java.nio.file.Files.list(bucketDir).forEach(p =>
-      java.nio.file.Files.copy(p, backup.resolve(p.getFileName.toString)))
-    // fold commits, marker never lands (the crash window)...
-    streaming.EventStream.scd2FoldBatchBucketed(
-      spark, stateDir, schema, batch, 0L, commitMarker = false)
-    // ...and the torn bucket's partition reverts to its PRE-FOLD files
-    // (the part of the job commit that never happened)
-    java.nio.file.Files.list(bucketDir).forEach(p => java.nio.file.Files.delete(p))
-    java.nio.file.Files.list(backup).forEach(p =>
-      java.nio.file.Files.copy(p, bucketDir.resolve(p.getFileName.toString)))
-    val afterTear = bucketSnapshot(stateDir)
-    // the replay: the torn bucket's watermark is still -1 → re-folds;
-    // every committed bucket's watermark is 0 → excluded untouched
-    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema, batch, 0L)
-    val healed = bucketSnapshot(stateDir)
-    val committedBefore = afterTear.view.filterKeys(!_.startsWith(s"bucket=$TornBucket/")).toMap
-    val committedAfter = healed.view.filterKeys(!_.startsWith(s"bucket=$TornBucket/")).toMap
-    assert(committedBefore == committedAfter,
-      "replay rewrote buckets whose commit had survived the tear")
-    assert(afterTear.view.filterKeys(_.startsWith(s"bucket=$TornBucket/")).toMap !=
-      healed.view.filterKeys(_.startsWith(s"bucket=$TornBucket/")).toMap,
-      "the torn bucket was not re-folded")
-    // and the healed dimension equals the from-scratch build
-    val want = WindowAnalytics.priorityIntervalHistoryOf(orders)
-    assert(sameRows(scd2Stored(stateDir, history0.schema), want) && !want.isEmpty)
-  }
-
-  test("bucketed SCD2: a replay after crashing before the marker is a bit-exact no-op") {
-    import graft.operators.WindowAnalytics
-    val orders = Tables.orders(spark, sf)
-    val cut = "1996-07-01"
-    val history0 = WindowAnalytics.priorityIntervalHistoryOf(
-      orders.filter(col("o_orderdate") < cut))
-    val batch = orders.filter(col("o_orderdate") >= cut)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-wmscd2").toString
-    val schema = streaming.EventStream.scd2BucketedSchema(history0.schema)
-    streaming.EventStream.seedBucketedState(history0, "customer_key", stateDir)
-    streaming.EventStream.scd2FoldBatchBucketed(
-      spark, stateDir, schema, batch, 0L, commitMarker = false)
-    val afterCrash = bucketSnapshot(stateDir)
-    // the replay must ALSO not trip the append-only contract on state
-    // the crashed fold itself advanced: the watermark excludes those
-    // buckets before scd2ApplyChanges ever sees them
-    streaming.EventStream.scd2FoldBatchBucketed(spark, stateDir, schema, batch, 0L)
-    assert(bucketSnapshot(stateDir) == afterCrash,
-      "replay rewrote dimension buckets a crashed-but-committed fold already applied")
-    val latest = streaming.EventStream.bucketedStateRead(spark, stateDir, schema)
-      .drop("bucket", "last_batch")
-    val want = WindowAnalytics.priorityIntervalHistoryOf(orders)
-    val cols = Seq("customer_key", "island", "priority", "valid_from",
-      "valid_to", "valid_until", "n_orders").map(col)
-    assert(latest.select(cols: _*).exceptAll(want.select(cols: _*)).count() == 0)
-    assert(want.select(cols: _*).exceptAll(latest.select(cols: _*)).count() == 0)
-    assert(latest.count() == want.count() && want.count() > 0)
   }
 
   test("readers never see a half-published tree; the one-marker publish flips them atomically") {
@@ -1362,38 +1348,28 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet == pairsBefore)
   }
 
-  test("a torn seed (no _SUCCESS) is re-seeded, not served, on the versioned" +
-      " and in-place bucketed layouts") {
+  test("a torn seed (no _SUCCESS) is re-seeded, not served, on the versioned layout") {
     import graft.operators.WindowAnalytics
     val history0 = WindowAnalytics.priorityIntervalHistoryOf(
       Tables.orders(spark, sf).filter(col("o_orderdate") < "1996-07-01"))
-    // (layout, seed, served rows, seed dir under the state dir)
-    val layouts: Seq[(String, String => Unit,
-        String => org.apache.spark.sql.DataFrame, String)] = Seq(
-      ("versioned",
-        dir => EventStream.seedVersionedState(history0, "customer_key", dir),
-        dir => EventStream.scd2VersionedReadAsOf(spark, dir, history0.schema, -1L),
-        "state/seed"),
-      ("bucketed",
-        dir => EventStream.seedBucketedState(history0, "customer_key", dir),
-        dir => scd2Stored(dir, history0.schema),
-        "state"))
-    layouts.foreach { case (layout, seed, served, seedSub) =>
-      val fresh = java.nio.file.Files.createTempDirectory("graft-freshseed").toString
-      seed(fresh)
-      // the crash state: a seed dir with a partial bucket file and NO
-      // _SUCCESS — a bare-existence check would serve or fold onto it
-      val torn = java.nio.file.Files.createTempDirectory("graft-tornseed").toString
-      val part = java.nio.file.Paths.get(s"$torn/$seedSub/bucket=0")
-      java.nio.file.Files.createDirectories(part)
-      java.nio.file.Files.write(part.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
-      seed(torn)
-      assert(java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$torn/$seedSub/_SUCCESS")),
-        s"$layout: the torn seed was not re-seeded")
-      assert(sameRows(served(torn), served(fresh)) && !served(fresh).isEmpty,
-        s"$layout: the re-seeded state differs from a fresh seed")
-    }
+    def seed(dir: String): Unit =
+      EventStream.seedVersionedState(history0, "customer_key", dir)
+    def served(dir: String) =
+      EventStream.scd2VersionedReadAsOf(spark, dir, history0.schema, -1L)
+    val fresh = java.nio.file.Files.createTempDirectory("graft-freshseed").toString
+    seed(fresh)
+    // the crash state: a seed dir with a partial bucket file and NO
+    // _SUCCESS — a bare-existence check would serve or fold onto it
+    val torn = java.nio.file.Files.createTempDirectory("graft-tornseed").toString
+    val part = java.nio.file.Paths.get(s"$torn/state/seed/bucket=0")
+    java.nio.file.Files.createDirectories(part)
+    java.nio.file.Files.write(part.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
+    seed(torn)
+    assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$torn/state/seed/_SUCCESS")),
+      "the torn seed was not re-seeded")
+    assert(sameRows(served(torn), served(fresh)) && !served(fresh).isEmpty,
+      "the re-seeded state differs from a fresh seed")
   }
 
   test("versioned term-stats STREAM equals the batch rebuild; restart over" +
@@ -1448,7 +1424,7 @@ class StreamingSpec extends SparkSpec {
       df.select("term").collect().map(_.getString(0)).toSet
     val surviving = terms(TextAnalysis.termStatsOf(
       TextAnalysis.termFreqsOf(docs.filter(!forgotten))))
-    val stateDir = operators.Layout.tmpPath("graft-termverforget", sf)
+    val stateDir = operators.Layout.tmpPath("graft-termforgetlog", sf)
     // the served table is exactly the survivor rebuild (the oracle's
     // claim, pinned here against the spark-side rebuild too)
     assert(terms(streaming.EventStream.termStatsVersionedRead(spark, stateDir))
@@ -1459,8 +1435,9 @@ class StreamingSpec extends SparkSpec {
       streaming.EventStream.termStatsVersionedReadAsOf(spark, stateDir, 1L)
         .collect())
     assert(err.getMessage.contains("retention horizon"))
-    // re-running the whole erasure is byte-identical (fold skips on its
-    // generation commit, expiry is monotone, sweep probes empty)
+    // re-running the whole erasure is byte-identical (the forget skips
+    // on its generation commit, expiry is monotone, the sweep finds
+    // nothing left)
     val snap = bucketSnapshot(stateDir)
     streaming.EventStream.termStatsForgetVersioned(spark, stateDir,
       docs.filter(forgotten), 2L)
@@ -1484,9 +1461,10 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set(("alpha", 2L, 3L), ("beta", 1L, 1L), ("gamma", 1L, 1L)),
       s"post-forget stats wrong: $got")
+    // every generation dir holding data: the seed, folds and forgets
     val genDirs = new java.io.File(s"$plantDir/state").listFiles()
-      .filter(f => f.isDirectory &&
-        (f.getName == "seed" || f.getName.startsWith("g")))
+      .filter(f => f.isDirectory && f.getName.matches("seed|[gf]\\d+") &&
+        f.list().exists(_.startsWith("bucket=")))
     assert(genDirs.nonEmpty)
     val onDisk = genDirs.flatMap { d =>
       spark.read.parquet(d.getPath).select("term")
