@@ -1,28 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Parity with Verify/tests: zorder_pruned_scan clusters on
-      // to_date(o_orderdate)/datediff, which are session-timezone
-      // dependent — on a non-UTC host an unpinned bench would cluster
-      // and scan a slightly different band than the one the verify gate
-      // proves lossless.
-      .config("spark.sql.session.timeZone", "UTC")
-      // Static conf, default 100: with ~90 registered queries × several
-      // codegen units each, the generated-class cache thrashes and Janino
-      // recompiles the SAME classes mid-bench — measured as multi-second
-      // single-threaded stalls landing on arbitrary queries (run-to-run
-      // totals swung 77 s ↔ 182 s). Sized to hold every plan in the
-      // registry at both the warm-up and the bench scale factor.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("WARN")
     // Untimed warm-up at the BENCH scale factor itself, then a full Spark
     // cache reset. Round-6 evidence: warming at a sibling SF left loop 1
     // ~1.9× loop 2 (raw totals 81.6 s vs 42.8 s), because loop 1 still

@@ -11,16 +11,7 @@ import org.apache.spark.sql.SparkSession
 object BenchOrder {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // timezone pinned for parity with Bench/Verify — see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build("ERROR")
     // optional args: restrict the timed loop to the named queries (the
     // warm-up below still covers the full registry, so isolation timings
     // run over warm code and cold caches exactly like a full loop).

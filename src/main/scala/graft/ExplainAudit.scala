@@ -1,19 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // GRAFT_EXPLAIN_NOBROADCAST=1 dumps the scale-posture plan: with
     // auto-broadcast off, exchange-reuse claims (ReusedExchange on
     // self-join branches) are visible instead of being masked by a
     // fixture-size broadcast that would never fire at 100 TB.
-    if (sys.env.get("GRAFT_EXPLAIN_NOBROADCAST").contains("1"))
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build("ERROR",
+      (if (sys.env.get("GRAFT_EXPLAIN_NOBROADCAST").contains("1"))
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1") else Nil): _*)
     val sf = "/root/testdata/sf0.001"
     for (name <- args) {
       println(s"########## $name ##########")

@@ -394,18 +394,25 @@ object Curation {
       .join(broadcast(benchHashes), Seq("hs"), "left_semi")
       .select(col("doc_id")).distinct()
 
-  /** The pipeline's OUTPUT MAP over a survivor frame — HTML clean then
-    * PII redact (with the fixture's deterministic augmentation; see
-    * [[htmlAugmented]]/[[piiAugmented]]), md5 to keep the verified
-    * output narrow. ONE spelling shared by the batch
-    * [[curationPipeline]] and the ingestion-time stream, so the two
-    * cannot drift on the map chain.
+  /** The redact half of clean-then-redact over HTML-cleaned text — PII
+    * augmentation (the fixture's deterministic injection, see
+    * [[piiAugmented]]), redaction, md5 to keep the verified output
+    * narrow. ONE Column definition behind the batch output frame's
+    * `text_redacted_md5` and the ingestion-time stream's survivor map.
+    */
+  private def redactedMd5OfClean(clean: Column, docId: Column): Column =
+    md5(piiRedact(piiAugmented(clean, docId)))
+
+  /** The ingestion-time stream's OUTPUT MAP over a survivor frame —
+    * HTML clean (with the fixture's deterministic augmentation,
+    * [[htmlAugmented]]) then [[redactedMd5OfClean]], the chain
+    * [[docOutputs]] computes for the batch [[curationPipeline]], so the
+    * two cannot drift on it.
     */
   private[graft] def redactedSurvivorOutput(df: DataFrame): DataFrame =
     df.select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-      md5(piiRedact(piiAugmented(
-        htmlClean(htmlAugmented(col("text"), col("doc_id"))), col("doc_id"))))
-        .alias("text_redacted_md5"))
+      redactedMd5OfClean(htmlClean(htmlAugmented(col("text"), col("doc_id"))),
+        col("doc_id")).alias("text_redacted_md5"))
 
   /** The four gate signals + integer score as COLUMNS over the fused
     * signal frame — one spelling shared by [[qualityGate]], the flag
@@ -756,7 +763,6 @@ object Curation {
       .withColumn("haug", htmlAugmented(col("text"), col("doc_id")))
       .withColumn("aug", piiAugmented(col("text"), col("doc_id")))
       .withColumn("clean", htmlClean(col("haug")))
-      .withColumn("caug", piiAugmented(col("clean"), col("doc_id")))
       .select(
         Seq(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           size(regexp_extract_all(col("haug"), lit("<[^>]*>"), lit(0)))
@@ -770,7 +776,8 @@ object Curation {
               .alias(s"n_$name") }
           ++ Seq(
             md5(piiRedact(col("aug"))).alias("redacted_md5"),
-            md5(piiRedact(col("caug"))).alias("text_redacted_md5")): _*)
+            redactedMd5OfClean(col("clean"), col("doc_id"))
+              .alias("text_redacted_md5")): _*)
       // three registered consumers project/join from this one pass
       // (html gate, pii gate, pipeline); tracked for release
       .transform(graft.CacheLifecycle.sessionPersist)
@@ -1097,14 +1104,14 @@ object Curation {
     * corpus-statistic stages) — streamed-over-batches ≡ one-shot,
     * per-document, through the hash of the redacted text.
     *
-    * Memoized durably: seed and folds are commit-/marker-gated, so a
+    * Memoized durably: seed and folds are commit-gated, so a
     * second JVM replays both batches as no-ops and re-reads the stored
     * survivors.
     */
   def curationStreamed(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"curation.streamed:$sfDir") {
       import graft.streaming.EventStream
-      val base = Layout.tmpPath("graft-curstream", sfDir)
+      val base = Layout.tmpPath("graft-curlog", sfDir)
       val (outDir, funnelDir, indexDir) =
         (s"$base/out", s"$base/funnel", s"$base/index")
       val docs = Tables.documents(spark, sfDir)

@@ -932,14 +932,14 @@ object Dedup {
     * reads the per-batch output subdirs — near-zero marginal cost,
     * exactly the 100 TB argument (the corpus is never re-chunked).
     *
-    * Memoized durably: seed + folds are `_SUCCESS`/marker-gated, so a
+    * Memoized durably: seed + folds are commit-gated, so a
     * second JVM replays both batches as no-ops and re-reads the stored
     * output.
     */
   def chunkDedupStreamed(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"dedup.chunkStream:$sfDir") {
       import graft.streaming.EventStream
-      val base = Layout.tmpPath("graft-chunkstream", sfDir)
+      val base = Layout.tmpPath("graft-chunklog", sfDir)
       val (outDir, indexDir) = (s"$base/out", s"$base/index")
       val docs = Tables.documents(spark, sfDir)
       val mid = docs.agg((min(col("doc_id")) + max(col("doc_id"))) / 2)
@@ -974,7 +974,7 @@ object Dedup {
   def clustersIncremental(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"dedup.clustersIncr:$sfDir") {
       import graft.streaming.EventStream
-      val base = Layout.tmpPath("graft-clusterstream", sfDir)
+      val base = Layout.tmpPath("graft-clusterlog", sfDir)
       val (pairsDir, indexDir, clusterDir) =
         (s"$base/pairs", s"$base/index", s"$base/cluster")
       val docs = Tables.documents(spark, sfDir)
@@ -1009,9 +1009,9 @@ object Dedup {
   def clustersAsOf(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoized(s"dedup.clustersAsof:$sfDir") {
       import graft.streaming.EventStream
-      // build (or find, marker-gated) the maintained cluster state
+      // build (or find, commit-gated) the maintained cluster state
       clustersIncremental(spark, sfDir)
-      val clusterDir = s"${Layout.tmpPath("graft-clusterstream", sfDir)}/cluster"
+      val clusterDir = s"${Layout.tmpPath("graft-clusterlog", sfDir)}/cluster"
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
       EventStream.clusterStateServeAsOf(spark, clusterDir, asOfBatch = 0L)
         .withColumn("n_members", count(lit(1)).over(w))
@@ -1039,9 +1039,9 @@ object Dedup {
   def chunkIndexAsOf(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoized(s"dedup.chunkAsof:$sfDir") {
       import graft.streaming.EventStream
-      // build (or find, marker-gated) the stored index + its batches
+      // build (or find, commit-gated) the stored index + its batches
       chunkDedupStreamed(spark, sfDir)
-      val indexDir = s"${Layout.tmpPath("graft-chunkstream", sfDir)}/index"
+      val indexDir = s"${Layout.tmpPath("graft-chunklog", sfDir)}/index"
       EventStream.chunkIndexReadAsOf(spark, indexDir, asOfBatch = 0L)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_chunks"),
@@ -1065,7 +1065,7 @@ object Dedup {
     graft.CacheLifecycle.memoized(s"dedup.chunkChanges:$sfDir") {
       import graft.streaming.EventStream
       chunkDedupStreamed(spark, sfDir)
-      val indexDir = s"${Layout.tmpPath("graft-chunkstream", sfDir)}/index"
+      val indexDir = s"${Layout.tmpPath("graft-chunklog", sfDir)}/index"
       EventStream.chunkIndexChanges(spark, indexDir,
         fromExclusive = 0L, toInclusive = 1L)
         .groupBy(col("doc_id"))
@@ -1094,7 +1094,7 @@ object Dedup {
     graft.CacheLifecycle.memoized(s"dedup.chunkNovelty:$sfDir") {
       import graft.streaming.EventStream
       chunkDedupStreamed(spark, sfDir)
-      val indexDir = s"${Layout.tmpPath("graft-chunkstream", sfDir)}/index"
+      val indexDir = s"${Layout.tmpPath("graft-chunklog", sfDir)}/index"
       val changes = EventStream.chunkIndexChanges(spark, indexDir,
         fromExclusive = 0L, toInclusive = 1L)
       val prior = EventStream.chunkIndexReadAsOf(spark, indexDir, 0L)
@@ -1436,14 +1436,14 @@ object Dedup {
     * StreamingSpec) equi-joins the batch's fingerprints against the
     * stored table under the same df cap.
     *
-    * Memoized durably: seed + folds are `_SUCCESS`/marker-gated, so a
+    * Memoized durably: seed + folds are commit-gated, so a
     * second JVM replays both batches as no-ops and re-reads the stored
     * index.
     */
   def winnowingStoredOverlap(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"dedup.winnowStored:$sfDir") {
       import graft.streaming.EventStream
-      val indexDir = s"${Layout.tmpPath("graft-winnowstream", sfDir)}/index"
+      val indexDir = s"${Layout.tmpPath("graft-winnowlog", sfDir)}/index"
       // spread for the same reason as winnowFingerprints: each fold's
       // selection pass is narrow and compute-bound
       val docs = Tables.loadSpread(spark, sfDir, "documents")
@@ -1465,8 +1465,8 @@ object Dedup {
     * forget rule, one doc-forget story across the text grains) is
     * propagated through
     * [[graft.streaming.EventStream.forgetDocsFromWinnowIndex]]
-    * (erasure-as-compaction: anti-join republished through the
-    * snapshot-pointer protocol), and the SERVED overlap pairs are what
+    * (erasure-as-rewrite: an anti-join rewrite that expires the older
+    * generations), and the SERVED overlap pairs are what
     * this query returns. Oracle = the pair derivation over SURVIVING
     * documents only — erasure ≡ filter-rebuild through the serving
     * plan, including the df-cap subtlety that makes this non-trivial:
@@ -1480,7 +1480,7 @@ object Dedup {
   def winnowingForgetDocs(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"dedup.winnowForget:$sfDir") {
       import graft.streaming.EventStream
-      val indexDir = s"${Layout.tmpPath("graft-winnowforget", sfDir)}/index"
+      val indexDir = s"${Layout.tmpPath("graft-winnowforgetlog", sfDir)}/index"
       val docs = Tables.loadSpread(spark, sfDir, "documents")
       EventStream.winnowIndexSeed(spark, indexDir, docs)
       EventStream.forgetDocsFromWinnowIndex(spark, indexDir,

@@ -94,9 +94,11 @@ object Erasure {
     EventStream.chunkIndexSeed(spark, d("chunks"), docs)
     EventStream.winnowIndexSeed(spark, d("winnow"), docs)
     EventStream.minhashIndexSeed(spark, d("mh"), docs)
-    seedPairsTable(spark, d("mhPairs"), Dedup.minhashLsh(spark, sfDir))
+    // one-shot pairs OUTPUT tables seeded as the certificate's stand-ins
+    // for a stream's accumulated pair appends
+    EventStream.seedAppendTables(spark, d("mhPairs") -> Dedup.minhashLsh(spark, sfDir))
     // cluster state folded as TWO batches so lazy-relabel redirect rows
-    // can exist for the erasure to discharge (each fold marker-gated —
+    // can exist for the erasure to discharge (each fold commit-gated —
     // a certificate re-run no-ops); a pair folds at its LATER
     // endpoint's batch, the ingestion rule
     val mid = docs.agg((min(col("doc_id")) + max(col("doc_id"))) / 2)
@@ -108,8 +110,14 @@ object Erasure {
     EventStream.clusterFoldBatch(spark, d("clusters"),
       docs.filter(col("doc_id") > mid).select(col("doc_id")),
       lshPairs.filter(col("doc_b") > mid), 1L)
-    seedAnnIndex(spark, sfDir, d("ann"))
-    seedPhashIndex(spark, sfDir, d("phash"), d("phashPairs"))
+    // codes before cells — the maintenance stream's torn-state order
+    EventStream.seedAppendTables(spark,
+      s"${d("ann")}/codes" -> Similarity.maintainedCodes(spark, sfDir),
+      s"${d("ann")}/cells" -> Similarity.maintainedCells(spark, sfDir))
+    EventStream.seedAppendTables(spark,
+      d("phashPairs") -> Multimodal.phashDupes(spark, sfDir))
+    EventStream.seedAppendTables(spark, s"${d("phash")}/bands" ->
+      Multimodal.phashBandsOf(Multimodal.phashSigs(spark, sfDir)))
     // versioned term-stats tier: the copy-on-write generation state
     // seeded from the full corpus (commit-guarded)
     EventStream.seedVersionedState(
@@ -156,42 +164,6 @@ object Erasure {
         .groupBy(col("return_flag"))), batchId = 0L))
   }
 
-  /** Commit a one-shot pairs OUTPUT table (live-tree seed) unless commit
-    * evidence exists — the certificate's stand-in for a stream's
-    * accumulated pair subdirs.
-    */
-  private def seedPairsTable(spark: SparkSession, dir: String,
-      pairs: DataFrame): Unit = {
-    import graft.streaming.EventStream
-    if (!EventStream.hasCommittedSeed(spark, dir)) {
-      pairs.write.mode("overwrite")
-        .parquet(s"${EventStream.ensureLiveTree(spark, dir)}/seed")
-    }
-  }
-
-  private def seedAnnIndex(spark: SparkSession, sfDir: String,
-      indexDir: String): Unit = {
-    import graft.streaming.EventStream
-    if (!EventStream.hasCommittedSeed(spark, s"$indexDir/cells")) {
-      // codes before cells — the maintenance stream's torn-state order
-      Similarity.maintainedCodes(spark, sfDir).write.mode("overwrite")
-        .parquet(s"${EventStream.ensureLiveTree(spark, s"$indexDir/codes")}/seed")
-      Similarity.maintainedCells(spark, sfDir).write.mode("overwrite")
-        .parquet(s"${EventStream.ensureLiveTree(spark, s"$indexDir/cells")}/seed")
-    }
-  }
-
-  private def seedPhashIndex(spark: SparkSession, sfDir: String,
-      indexDir: String, pairsDir: String): Unit = {
-    import graft.streaming.EventStream
-    seedPairsTable(spark, pairsDir, Multimodal.phashDupes(spark, sfDir))
-    val bandsDir = s"$indexDir/bands"
-    if (!EventStream.hasCommittedSeed(spark, bandsDir)) {
-      Multimodal.phashBandsOf(Multimodal.phashSigs(spark, sfDir))
-        .write.mode("overwrite")
-        .parquet(s"${EventStream.ensureLiveTree(spark, bandsDir)}/seed")
-    }
-  }
 
   /** Probe every stored tier under `base` and report (tier, n_residue,
     * n_remaining) — factored from the build so ErasureSpec can audit a
@@ -272,7 +244,7 @@ object Erasure {
 
   def erasureCertificate(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"erasure.certificate:$sfDir") {
-      val base = Layout.tmpPath("graft-certlog", sfDir)
+      val base = Layout.tmpPath("graft-erasurelog", sfDir)
       // r22 audit note (r21-verdict #6): the probes already run as ONE
       // union/one action — the steady ~1.3 s is 22 AQE shuffle-stage
       // jobs, 17 of which are the per-store partial→final aggregate

@@ -657,8 +657,8 @@ object Multimodal {
     * ([[phashForgottenRule]]) is propagated through
     * [[graft.streaming.EventStream.forgetMediaFromPhashIndex]]
     * (pairs first — the served surface; a pair dies when EITHER endpoint
-    * is forgotten — then bands, each an anti-join republished through
-    * the snapshot-pointer protocol with the superseded tree vacuumed),
+    * is forgotten — then bands, each an anti-join rewrite that expires
+    * the older generations),
     * and the SERVED pair set is what this query returns.
     *
     * The oracle is the exhaustive all-pairs scan over SURVIVING media
@@ -677,19 +677,15 @@ object Multimodal {
   def phashForgetMedia(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"multimodal.phashForget:$sfDir") {
       import graft.streaming.EventStream
-      val base = Layout.tmpPath("graft-phforget", sfDir)
+      val base = Layout.tmpPath("graft-phforgetlog", sfDir)
       val indexDir = s"$base/index"
       val pairsDir = s"$base/pairs"
-      if (!EventStream.hasCommittedSeed(spark, s"$indexDir/bands")) {
-        // pairs first, bands second, guard on the LAST write — a crash
-        // between the two re-seeds both (the two-table seed discipline
-        // of the maintenance streams)
-        val bands = phashBandsOf(phashSigs(spark, sfDir))
-        phashVerifiedPairs(bands, bands).write.mode("overwrite")
-          .parquet(s"${EventStream.ensureLiveTree(spark, pairsDir)}/seed")
-        bands.write.mode("overwrite")
-          .parquet(s"${EventStream.ensureLiveTree(spark, s"$indexDir/bands")}/seed")
-      }
+      // pairs first, bands second, guarded on the LAST write — a crash
+      // between the two re-seeds both (the two-table seed discipline of
+      // the maintenance streams)
+      val bands = phashBandsOf(phashSigs(spark, sfDir))
+      EventStream.seedAppendTables(spark,
+        pairsDir -> phashVerifiedPairs(bands, bands), s"$indexDir/bands" -> bands)
       EventStream.forgetMediaFromPhashIndex(spark, indexDir, pairsDir,
         phashSigs(spark, sfDir).filter(phashForgottenRule(col("media_id")))
           .select(col("media_id")))

@@ -1693,7 +1693,7 @@ object Similarity {
     * maintenance run leaves behind, the erasure list
     * ([[annForgottenRule]]) is propagated through
     * [[graft.streaming.EventStream.forgetVectorsFromAnnIndex]]
-    * (anti-join + snapshot-pointer republish, superseded tree vacuumed),
+    * (an anti-join rewrite that expires the older generations),
     * and the SERVED result — the identical probe → LUT → ADC plan over
     * the erased stored tables — is reported as recall@5 against the
     * brute top-5 over SURVIVING vectors only.
@@ -1716,14 +1716,11 @@ object Similarity {
   def annForgetVectors(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"similarity.annForget:$sfDir") {
       import graft.streaming.EventStream
-      val indexDir = Layout.tmpPath("graft-annforget", sfDir)
-      if (!EventStream.hasCommittedSeed(spark, s"$indexDir/cells")) {
-        // codes before cells — the maintenance stream's torn-state order
-        maintainedCodes(spark, sfDir).write.mode("overwrite")
-          .parquet(s"${EventStream.ensureLiveTree(spark, s"$indexDir/codes")}/seed")
-        maintainedCells(spark, sfDir).write.mode("overwrite")
-          .parquet(s"${EventStream.ensureLiveTree(spark, s"$indexDir/cells")}/seed")
-      }
+      val indexDir = Layout.tmpPath("graft-annforgetlog", sfDir)
+      // codes before cells — the maintenance stream's torn-state order
+      EventStream.seedAppendTables(spark,
+        s"$indexDir/codes" -> maintainedCodes(spark, sfDir),
+        s"$indexDir/cells" -> maintainedCells(spark, sfDir))
       EventStream.forgetVectorsFromAnnIndex(spark, indexDir,
         quantized(spark, sfDir).filter(annForgottenRule(col("vec_id")))
           .select(col("vec_id")))

@@ -998,8 +998,8 @@ object TextAnalysis {
   /** BM25's stored-table precedent carried to the POSITIONS grain: the
     * phrase query served from the maintained on-disk positions index
     * ([[graft.streaming.EventStream.posIndexRead]] — history tokenized
-    * once into the seed, the batch folded as one committed marker-gated
-    * subdir), no session tokenization in the returned lineage. Oracle =
+    * once into the seed, the batch folded as one committed append
+    * generation), no session tokenization in the returned lineage. Oracle =
     * `phrase_top_docs`'s oracle VERBATIM, so the scaladoc claim "at
     * 100 TB this is the stored positional-index layout" is a gate fact,
     * not prose.
@@ -1008,7 +1008,7 @@ object TextAnalysis {
     graft.CacheLifecycle.memoizedDurable(s"textanalysis.phraseStored:$sfDir") {
       import spark.implicits._
       import graft.streaming.EventStream
-      val indexDir = Layout.tmpPath("graft-posstore", sfDir)
+      val indexDir = Layout.tmpPath("graft-poslog", sfDir)
       val docs = Tables.documents(spark, sfDir)
       val isBatch = col("doc_id") % 10 === 9
       EventStream.posIndexSeed(spark, indexDir, docs.filter(!isBatch))
@@ -1031,9 +1031,9 @@ object TextAnalysis {
     graft.CacheLifecycle.memoized(s"textanalysis.phraseStoredAsof:$sfDir") {
       import spark.implicits._
       import graft.streaming.EventStream
-      // build (or find, marker-gated) the stored index + its batch fold
+      // build (or find, commit-gated) the stored index + its batch fold
       phraseStoredTopDocs(spark, sfDir)
-      val indexDir = Layout.tmpPath("graft-posstore", sfDir)
+      val indexDir = Layout.tmpPath("graft-poslog", sfDir)
       phraseTopDocsFromPositions(
         EventStream.posIndexReadAsOf(spark, indexDir, asOfBatch = -1L),
         PhraseQueries.toDF("query_id", "p_text"))
@@ -1318,7 +1318,7 @@ object TextAnalysis {
     * (doc_id, term, tf) index lives ON DISK as the maintained table
     * [[graft.streaming.EventStream.tfIndexMaintenanceStream]] writes
     * (history tokenized once into the seed; the nightly batch folded in
-    * as one committed subdir through the SAME marker-gated
+    * as one committed append generation through the SAME commit-gated
     * `tfIndexFoldBatch` the stream runs), and serving is
     * [[bm25FromTf]] over [[graft.streaming.EventStream.tfIndexRead]] —
     * a READ of the stored table, no session-frame tokenization
@@ -1341,7 +1341,7 @@ object TextAnalysis {
     graft.CacheLifecycle.memoizedDurable(s"textanalysis.bm25Stored:$sfDir") {
       import spark.implicits._
       import graft.streaming.EventStream
-      val indexDir = Layout.tmpPath("graft-tfstore", sfDir)
+      val indexDir = Layout.tmpPath("graft-tflog", sfDir)
       val docs = Tables.documents(spark, sfDir)
       val isBatch = col("doc_id") % 10 === 9
       EventStream.tfIndexSeed(spark, indexDir, docs.filter(!isBatch))
@@ -1377,9 +1377,9 @@ object TextAnalysis {
     graft.CacheLifecycle.memoized(s"textanalysis.bm25StoredAsof:$sfDir") {
       import spark.implicits._
       import graft.streaming.EventStream
-      // build (or find, marker-gated) the stored index + its batch fold
+      // build (or find, commit-gated) the stored index + its batch fold
       bm25StoredTopDocs(spark, sfDir)
-      val indexDir = Layout.tmpPath("graft-tfstore", sfDir)
+      val indexDir = Layout.tmpPath("graft-tflog", sfDir)
       val tf = EventStream.tfIndexReadAsOf(spark, indexDir, asOfBatch = -1L)
       bm25FromTf(tf,
         tf.select(col("doc_id")).distinct().agg(count(lit(1)).alias("n_docs")),

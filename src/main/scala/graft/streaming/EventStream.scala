@@ -206,643 +206,51 @@ object EventStream {
     StructField("n_b", IntegerType),
     StructField("jaccard", DoubleType)))
 
-  /** PUBLISHED-TREE (snapshot pointer) LAYOUT — every per-batch-subdir
-    * table lives inside a numbered TREE (`<dir>/t0`, `<dir>/t1`, …)
-    * whose `_published` marker file is the snapshot pointer: the LIVE
-    * tree is the highest-numbered published one, resolved by listing —
-    * never a directory convention a half-done swap could leave
-    * missing. Publishing is ONE single-object create, atomic on local,
-    * HDFS, AND copy-rename object stores alike (the r15 residue
-    * StateFs documented: `rename` is copy-based on S3-likes, so the
-    * old two-rename swap's crash exposure was bounded but nonzero
-    * there — and between its two renames even an HDFS reader briefly
-    * saw NO live dir and served an empty index). Compaction/erasure
-    * now build the replacement tree beside the live one and commit by
-    * touching its marker: a reader racing the swap resolves either the
-    * old tree or the new one, both complete, and an UNPUBLISHED tree —
-    * a crashed build — is invisible to every reader and overwritten or
-    * vacuumed by the next compaction entry. This is the table-format
-    * snapshot-pointer protocol spelled with create-only control files.
-    *
-    * Within the live tree the layout is unchanged: `seed/` plus
-    * idempotent per-batch WRITE UNITS (`b0/`, `b1/`, …; a re-delivered
-    * batch overwrites its own subdir, never double-appends), and ONLY
-    * COMMITTED subdirs are served — each is written through the
-    * standard file committer whose job commit writes `_SUCCESS`, so a
-    * torn append (files landed, commit didn't) is invisible to the
-    * probe, the compactor, and external serving reads until the replay
-    * overwrites it.
-    */
-  private def treeNumbers(spark: SparkSession, dir: String): Seq[Int] =
-    StateFs.list(spark, dir).filter(_.matches("t\\d+")).map(_.drop(1).toInt).sorted
-
-  private def publishedTrees(spark: SparkSession, dir: String): Seq[Int] =
-    treeNumbers(spark, dir)
-      .filter(n => StateFs.exists(spark, s"$dir/t$n/_published"))
-
-  // the flat pre-tree layout (`<dir>/seed`, `<dir>/b*` directly under
-  // the table dir) is refused INSIDE liveTreeOpt's single listing:
-  // silently resolving it as "no published tree" would serve an EMPTY
-  // table, re-seed history beside still-marker-applied batches, and
-  // permanently lose their rows — the loud-failure discipline every
-  // other unrecognizable state gets
-
-  /** The live (= highest published) tree's path; None for a table that
-    * was never written. Read-side resolver — creates nothing. ONE
-    * directory listing feeds both the legacy-layout guard and the tree
-    * scan (per-probe LIST round-trips are the dominant metadata cost on
-    * an object store — the [[StateFs]] shared-conf reasoning).
-    */
-  private[graft] def liveTreeOpt(spark: SparkSession, dir: String): Option[String] = {
-    val names = StateFs.list(spark, dir)
-    val legacy = names.filter(d => d == "seed" || d.matches("b\\d+"))
-    require(legacy.isEmpty,
-      s"$dir holds pre-snapshot-pointer flat-layout entries " +
-        s"(${legacy.mkString(", ")}) — refusing to resolve them as an " +
-        "empty table. Migrate by moving seed/ and b*/ under a new tree: " +
-        s"mkdir $dir/t0, move the entries into it, create $dir/t0/_published")
-    names.filter(_.matches("t\\d+")).map(_.drop(1).toInt).sorted
-      .filter(n => StateFs.exists(spark, s"$dir/t$n/_published"))
-      .lastOption.map(n => s"$dir/t$n")
-  }
-
-  /** The live tree's path, creating and publishing an empty `t0` when
-    * the table does not exist yet — the write-side resolver every
-    * seed write and batch fold goes through. Resolved PER BATCH, not
-    * per stream: a between-runs compaction advances the live tree and
-    * the next fold must land its subdir there.
-    */
-  private[graft] def ensureLiveTree(spark: SparkSession, dir: String): String =
-    liveTreeOpt(spark, dir).getOrElse {
-      // create-only: two writers racing to seed the same fresh table is
-      // a configuration error, and the loser must fail loudly rather
-      // than both proceeding as if they owned the table
-      StateFs.touchExclusive(spark, s"$dir/t0/_published")
-      s"$dir/t0"
-    }
-
-  /** Commit evidence for a table's history seed — the guard the
-    * registered erasure gates use to make their seed-then-erase builds
-    * idempotent across JVMs (the [[seedVersionedState]] discipline for
-    * tree-layout tables): a second run finds the committed seed, skips
-    * re-seeding the erased table with pre-erasure rows, and re-runs the
-    * erasure as a no-op.
-    */
-  private[graft] def hasCommittedSeed(spark: SparkSession, dir: String): Boolean =
-    liveTreeOpt(spark, dir)
-      .exists(t => StateFs.exists(spark, s"$t/seed/_SUCCESS"))
-
-  /** Committed (job-commit `_SUCCESS` present) subdirs of one tree —
-    * the `_published` marker is a file, never matches. The AUTHORITATIVE
-    * resolution (one listing + one exists per subdir): writers —
-    * compaction's foldable set, the manifest writer itself — always use
-    * THIS; a stale manifest must never decide what compaction keeps.
-    */
-  private def committedSubdirs(spark: SparkSession, treePath: String): Seq[String] =
-    StateFs.list(spark, treePath)
-      .filter(d => StateFs.exists(spark, s"$treePath/$d/_SUCCESS"))
-      .sorted
-
-  /** MANIFEST-BACKED TREE READS (r18 verdict #5): every probe of a
-    * per-batch-subdir table used to pay one `listStatus` plus one
-    * `exists(_SUCCESS)` round-trip PER SUBDIR — at object-store scale
-    * with thousands of batches, exactly the metadata cost
-    * Iceberg/Delta manifests exist to kill. A tree's `_manifest_<seq>`
-    * file enumerates its committed subdirs (name + data-file count),
-    * terminated by `#end`; readers serve the highest well-formed
-    * manifest and fall back to the listing when none exists, the
-    * newest is torn (content-bearing control files can tear — the
-    * `_horizon_<v>` reasoning; hence the terminator and the
-    * seq-numbered supersede-don't-overwrite discipline), or a listed
-    * subdir has vanished mid-replay (the read throws and retries
-    * against the listing — never serves wrong rows).
-    *
-    * Maintenance is per-table OPT-IN: a fold that maintains manifests
-    * writes one after its subdir commit and BEFORE its batch marker —
-    * a crash between subdir and manifest leaves an unmarked batch the
-    * stream replays (rewriting both), so a marker-applied batch is
-    * always manifest-visible; stale-forever is structurally impossible.
-    * Compaction propagates a manifest onto the new tree ONLY when the
-    * superseded tree had one: a table whose folds don't maintain
-    * manifests must never acquire a manifest that those folds would
-    * silently let go stale. EVERY EventStream-maintained tree table
-    * maintains manifests as of r19 — tf, positions, chunk (index +
-    * output), MinHash (shingles/bands/pairs), cluster
-    * (members/redirects), curation (out/funnel + its band index), ANN
-    * (cells/codes), and phash (bands/pairs) — at both seed and fold;
-    * the one-shot pair-table stand-ins the erasure certificate seeds
-    * stay listing-served (no fold ever touches them).
-    */
-  private val manifestName = "_manifest_(\\d+)".r
-
-  private[graft] def writeTreeManifest(spark: SparkSession,
-      treePath: String): Unit = {
-    val names = StateFs.list(spark, treePath)
-    val subs = names
-      .filter(d => d == "seed" || d.matches("b\\d+"))
-      .filter(d => StateFs.exists(spark, s"$treePath/$d/_SUCCESS")).sorted
-    val entries = subs.map { d =>
-      val files = StateFs.list(spark, s"$treePath/$d").count(!_.startsWith("_"))
-      s"$d $files"
-    }
-    val seq = names.collect { case manifestName(n) => n.toLong }
-      .reduceOption(_ max _).getOrElse(0L) + 1
-    StateFs.writeFile(spark, s"$treePath/_manifest_$seq",
-      (entries :+ "#end").mkString("\n"))
-    // superseded manifests pruned AFTER the new one lands — a crash
-    // between the two leaves extras, and the highest well-formed wins
-    names.collect { case m @ manifestName(n) if n.toLong < seq => m }
-      .foreach(m => StateFs.deleteFile(spark, s"$treePath/$m"))
-  }
-
-  private def parseManifest(body: String): Option[Seq[String]] = {
-    val lines = body.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-    if (!lines.lastOption.contains("#end")) None // torn write
-    else {
-      val entries = lines.dropRight(1).map(_.split(" ").head)
-      if (entries.forall(d => d == "seed" || d.matches("b\\d+")))
-        Some(entries)
-      else None // outside interference — fall back, never guess
-    }
-  }
-
-  private def hasManifest(spark: SparkSession, treePath: String): Boolean =
-    StateFs.list(spark, treePath).exists {
-      case manifestName(_) => true
-      case _ => false
-    }
-
-  /** The subdirs a READ serves: the newest well-formed manifest when
-    * one exists (one listing + one file read — no per-subdir exists
-    * round-trips), else the authoritative listing.
-    */
-  private def servedSubdirs(spark: SparkSession, treePath: String): Seq[String] = {
-    val names = StateFs.list(spark, treePath)
-    val fromManifest = names.collect { case manifestName(n) => n.toLong }
-      .sorted.reverseIterator
-      .flatMap(n => StateFs.readFileOpt(spark, s"$treePath/_manifest_$n")
-        .flatMap(parseManifest))
-      .nextOption()
-    fromManifest.getOrElse(
-      names.filter(d => StateFs.exists(spark, s"$treePath/$d/_SUCCESS")).sorted)
-  }
-
-  /** Build the served frame from a manifest-resolved subdir list,
-    * falling back to the authoritative listing when a listed subdir
-    * vanished (a crashed batch mid-replay): the manifest path throws at
-    * file-index construction, never serves wrong rows.
-    *
-    * The fallback itself is guarded: when the manifest CLAIMED subdirs
-    * but the re-listing finds none committed, the tree did not merely
-    * lose a crashed batch — it was vacuumed/expired out from under this
-    * read between snapshot resolution and the parquet read (erasure's
-    * `vacuumSuperseded`, [[expireSnapshots]]). Building an empty frame
-    * there would silently serve zero rows where the pre-manifest code
-    * surfaced a loud read failure; rethrow instead — the caller retries
-    * against the live snapshot pointer, which has moved on.
-    */
-  private def readServed(spark: SparkSession, treePath: String,
-      filter: String => Boolean, schema: StructType): DataFrame = {
-    def build(subs: Seq[String]) =
-      readSubdirs(spark, treePath, subs.filter(filter), schema)
-    val claimed = servedSubdirs(spark, treePath)
-    try build(claimed)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        val live = committedSubdirs(spark, treePath)
-        if (claimed.nonEmpty && live.isEmpty) throw e
-        build(live)
-    }
-  }
-
-  private def readSubdirs(spark: SparkSession, treePath: String,
-      subdirs: Seq[String], schema: StructType): DataFrame =
-    if (subdirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(subdirs.map(d => s"$treePath/$d"): _*)
-
-  private def batchDirsRead(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    liveTreeOpt(spark, dir) match {
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case Some(tree) =>
-        readServed(spark, tree, _ => true, schema)
-    }
-
-  private val seedThroughName = "_seed_through_(\\d+)".r
-
-  /** The COMPACTION HORIZON of one tree: the highest batch id whose
-    * rows were folded into this tree's consolidated `seed/`, recorded
-    * by [[compactBatchDirs]] as a name-encoded `_seed_through_<B>`
-    * marker (the `_horizon_<v>` precedent — the value rides the NAME
-    * because content-bearing control files can tear between create and
-    * write). −1 for a tree whose seed is pure pre-stream history (no
-    * batch was ever compacted into it), which is every tree before its
-    * first compaction. Monotone: compaction carries the prior tree's
-    * horizon forward and maxes it with the batches it folds.
-    */
-  private[graft] def seedThroughOf(spark: SparkSession, treePath: String): Long =
-    StateFs.list(spark, treePath)
-      .collect { case seedThroughName(v) => v.toLong }
-      .reduceOption(_ max _).getOrElse(-1L)
-
-  /** Every published tree under `dir` with its compaction horizon,
-    * ascending — the SNAPSHOT LIST time travel resolves against. The
-    * live tree is the last entry; entries before it are retained grace
-    * snapshots (plain compaction leaves the superseded tree intact;
-    * the next writer's entry vacuum — or an erasure's
-    * `vacuumSuperseded` — expires them). One listing for the legacy
-    * guard and the tree scan, the [[liveTreeOpt]] discipline.
-    */
-  private def publishedSnapshots(spark: SparkSession,
-      dir: String): Seq[(Int, Long)] = {
-    val names = StateFs.list(spark, dir)
-    val legacy = names.filter(d => d == "seed" || d.matches("b\\d+"))
-    require(legacy.isEmpty,
-      s"$dir holds pre-snapshot-pointer flat-layout entries " +
-        s"(${legacy.mkString(", ")}) — refusing to resolve them as an " +
-        "empty table. Migrate by moving seed/ and b*/ under a new tree: " +
-        s"mkdir $dir/t0, move the entries into it, create $dir/t0/_published")
-    names.filter(_.matches("t\\d+")).map(_.drop(1).toInt).sorted
-      .filter(n => StateFs.exists(spark, s"$dir/t$n/_published"))
-      .map(n => (n, seedThroughOf(spark, s"$dir/t$n")))
-  }
-
-  /** TIME-TRAVEL read of one per-batch-subdir table: the state AS OF
-    * batch `asOfBatch` = a tree's `seed/` plus every committed
-    * `b{id}` subdir with `id <= asOfBatch` — exactly what a live read
-    * served the moment batch `asOfBatch` committed, because folds only
-    * ever APPEND batch subdirs within a tree. This is a table format's
-    * snapshot-as-of read spelled on the published-tree layout: the
-    * per-batch write units ARE the snapshot log, so time travel is a
-    * listing filter, not a data copy.
-    *
-    * Snapshot resolution: the HIGHEST published tree whose compaction
-    * horizon is <= `asOfBatch` — the live tree when its horizon
-    * permits, otherwise a retained GRACE snapshot (the superseded tree
-    * plain compaction leaves behind). The highest qualifying tree is
-    * always COMPLETE for the window: batch ids are monotone, so any
-    * marked batch <= asOfBatch folded after that tree was superseded
-    * would have made a higher tree qualify. Once every qualifying
-    * snapshot is expired (the next writer's entry vacuum, or an
-    * erasure's `vacuumSuperseded` — deliberately: erasure must destroy
-    * time travel into pre-erasure state, or the forgotten rows stay
-    * readable), the read FAILS LOUDLY — never a silently-partial view.
-    */
-  private def batchDirsReadAsOf(spark: SparkSession, dir: String,
-      schema: StructType, asOfBatch: Long): DataFrame = {
-    val snaps = publishedSnapshots(spark, dir)
-    if (snaps.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val qualifying = snaps.filter { case (_, through) => through <= asOfBatch }
-      require(qualifying.nonEmpty,
-        s"as-of batch $asOfBatch predates every retained snapshot of $dir " +
-          s"(horizons: ${snaps.map { case (n, h) => s"t$n<=$h" }.mkString(", ")})" +
-          " — the per-batch evidence was compacted into seeds and the grace" +
-          " snapshots expired (entry vacuum, or erasure's vacuumSuperseded —" +
-          " erased history must not be time-travel readable). Rebuild from" +
-          " the raw batch history; refusing to serve a silently-partial view")
-      val tree = s"$dir/t${qualifying.map(_._1).max}"
-      readServed(spark, tree, {
-        case "seed" => true
-        case b => b.matches("b\\d+") && b.drop(1).toLong <= asOfBatch
-      }, schema)
-    }
-  }
-
   /** The verified near-dup pairs an ingest-dedup run has emitted so far
-    * (union of the per-batch output subdirs under `pairsOutDir`).
+    * (every batch's append generation of the `pairsOutDir` table).
     */
   def ingestPairsRead(spark: SparkSession, pairsOutDir: String): DataFrame =
-    batchDirsRead(spark, pairsOutDir, ingestPairsSchema)
+    appendRead(spark, pairsOutDir, ingestPairsSchema)
 
   /** The stored MinHash index tables — the read side of
     * [[minhashIngestDedup]]'s probe, public for the erasure
     * certificate's per-tier residue audit.
     */
   def ingestShinglesRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/shingles", ingestShinglesSchema)
+    appendRead(spark, s"$indexDir/shingles", ingestShinglesSchema)
 
   def ingestBandsRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/bands", ingestBandsSchema)
+    appendRead(spark, s"$indexDir/bands", ingestBandsSchema)
 
-  /** COMPACT one per-batch-subdir table: fold the live tree (seed +
-    * every MARKED `b*` subdir) into one consolidated `seed/` inside a
-    * NEW tree and publish it — the OPTIMIZE half of the append-only
-    * index story. A long-run stream otherwise accumulates one
-    * small-file subdir per micro-batch, and at 100 TB the per-batch
-    * file count — not the data — becomes the probe's listing cost. The
-    * consolidated dir is named `seed/` because that is exactly what it
-    * IS — the new baseline the next batches build on — and because the
-    * streams' seed-presence guard reads the live tree's
-    * `seed/_SUCCESS`: any other name would make a post-compaction
-    * restart re-seed the original history ALONGSIDE the compacted rows,
-    * silently duplicating every history row in the probe (caught by the
-    * restart spec when the first spelling used `compacted/`). Batch
-    * markers are NOT touched: idempotence evidence must outlive
-    * compaction, so a re-delivered pre-compaction batch still no-ops.
-    * Rows are identical before and after (spec'd).
-    *
-    * Run compaction on a QUIESCED stream (between runs, as the specs
-    * do): compacting concurrently with an active fold would race the
-    * fold's writes. Same contract as a table format's OPTIMIZE, which
-    * likewise serializes against writers via its snapshot log.
-    *
-    * Only MARKED batches fold into the new seed: a subdir whose write
-    * committed but whose batch marker never landed (a fold crashed in
-    * the marker window) is a batch the stream WILL replay — folding it
-    * into the seed would hide it from the replay's pre-clean and serve
-    * the batch's rows as history beside the replay's rewrite, doubling
-    * them permanently. Such unmarked subdirs are simply not copied into
-    * the new tree; the replay regenerates them there from the
-    * checkpointed batch. With `requireSeed` (the index tables, whose
-    * streams seed history) a MISSING seed fails loudly too: compacting
-    * a never-seeded index would publish an empty committed seed and the
-    * seed guard would then skip history seeding forever. Output tables
-    * (`requireSeed = false`) legitimately start at `b0` and gain their
-    * first seed here.
-    *
-    * Crash discipline (see the layout note above [[treeNumbers]]): the
-    * consolidated copy is fully written and committed into the next
-    * tree BEFORE the single `_published` create that makes it live, so
-    * a crash anywhere leaves either the old snapshot (unpublished
-    * build — invisible, vacuumed/overwritten on the next entry) or the
-    * new one — never a torn table, and never a window where readers
-    * resolve NO tree. Each entry first vacuums every non-live tree:
-    * crashed builds above the live number and superseded snapshots
-    * below it. The superseded tree this call creates is NOT deleted on
-    * the way out (except under `vacuumSuperseded`) — it is the grace
-    * snapshot an in-flight reader that resolved before the publish can
-    * still finish against, exactly a table format's
-    * expire-snapshots-later discipline. Erasure passes
-    * `vacuumSuperseded = true`: the superseded tree holds the forgotten
-    * rows, and leaving them readable would defeat the deletion.
-    */
-  private val treeClaimName = "_claim_(\\d+)".r
-
-  private def claimNumbers(spark: SparkSession, dir: String): Seq[Int] =
-    StateFs.list(spark, dir).collect { case treeClaimName(n) => n.toInt }.sorted
-
-  /** WRITER CLAIM for the snapshot-pointer protocol — serializes tree
-    * BUILDS, not only the publish: the `_published` create is atomic,
-    * but two concurrent compaction/erasure entries would otherwise race
-    * on the same `t{live+1}/seed` write and each entry's vacuum could
-    * delete the peer's in-flight build. Before building, a writer
-    * reserves the next tree number with ONE create-only claim file
-    * (`_claim_{n}` — the `_horizon_{v}` name-encoded-marker precedent):
-    * exactly one create succeeds, the loser fails loudly HERE, without
-    * having touched the winner's tree or vacuumed anything, and simply
-    * re-runs after the winner finishes (its fold then reads the
-    * winner's published tree — deterministic, so the re-run is
-    * byte-exact modulo the winner's fold). Stale claims — a writer that
-    * published but crashed before releasing — have numbers ≤ the live
-    * tree and are removed on entry; a claim ABOVE the live tree with no
-    * publish is an active or crashed writer and is never auto-expired:
-    * time-based lock breaking would split the brain when a slow writer
-    * is merely paused (GC, preemption), so crash recovery is the
-    * explicit operator decision [[breakTreeClaims]] is for, exactly
-    * HDFS's lease-recovery discipline.
-    */
-  private[graft] def acquireTreeClaim(spark: SparkSession, dir: String): Int = {
-    val pub = publishedTrees(spark, dir)
-    require(pub.nonEmpty,
-      s"tree claim: no published tree under $dir — the table was never written")
-    acquireTreeClaimAt(spark, dir, pub.last)
-  }
-
-  /** The claim body with the pre-claim live listing factored out — the
-    * seam the TOCTOU interleave spec drives with a deliberately STALE
-    * `believedLive` (as if a winner published and released between this
-    * writer's listing and its claim create). Production callers go
-    * through [[acquireTreeClaim]].
-    */
-  private[graft] def acquireTreeClaimAt(spark: SparkSession, dir: String,
-      believedLive: Int): Int = {
-    val live = believedLive
-    claimNumbers(spark, dir).filter(_ <= live)
-      .foreach(n => StateFs.deleteFile(spark, s"$dir/_claim_$n"))
-    val next = live + 1
-    try StateFs.touchExclusive(spark, s"$dir/_claim_$next")
-    catch {
-      case e: IllegalStateException =>
-        throw new IllegalStateException(
-          s"another compaction/erasure writer holds _claim_$next under $dir " +
-            "— tree builds are serialized by a create-only claim. If it is " +
-            "live, wait for it and re-run; if it crashed (verify no job is " +
-            "running against this table), break the claim with " +
-            "EventStream.breakTreeClaims and re-run", e)
-    }
-    // TOCTOU guard: the publishedTrees listing above ran BEFORE the
-    // claim create. If the previous holder published t{next} and
-    // released _claim_{next} inside that window, the create just
-    // "won" a claim on a tree that is ALREADY live — proceeding would
-    // let this writer's entry vacuum delete the freshly-published
-    // t{next} (and, under vacuumSuperseded, t{live} is already gone,
-    // so the rebuild would republish an empty table). Re-validate the
-    // live tree AFTER holding the claim; on any advance, release and
-    // fail loudly — the caller re-runs against the advanced snapshot.
-    val liveNow = publishedTrees(spark, dir).last
-    if (liveNow != live) {
-      releaseTreeClaim(spark, dir, next)
-      throw new IllegalStateException(
-        s"tree claim under $dir raced a concurrent publish: live tree " +
-          s"advanced t$live -> t$liveNow between the listing and the claim " +
-          "create. The claim was released untouched; re-run to fold against " +
-          "the advanced snapshot")
-    }
-    next
-  }
-
-  private[graft] def releaseTreeClaim(spark: SparkSession, dir: String,
-      n: Int): Unit =
-    StateFs.deleteFile(spark, s"$dir/_claim_$n")
-
-  /** ADMINISTRATIVE claim recovery — deletes every outstanding claim
-    * under `dir` (see [[acquireTreeClaim]]). Run ONLY after verifying no
-    * writer is active against the table: breaking a live writer's claim
-    * re-opens the double-build race the claim exists to close. The
-    * crashed writer's unpublished tree (if any) is left for the next
-    * writer's entry vacuum.
-    */
-  def breakTreeClaims(spark: SparkSession, dir: String): Unit =
-    claimNumbers(spark, dir)
-      .foreach(n => StateFs.deleteFile(spark, s"$dir/_claim_$n"))
-
-  /** EXPIRE SNAPSHOTS — the explicit retention half of the table-format
-    * story (a table format's `EXPIRE SNAPSHOTS`), completing the grace
-    * discipline: plain compaction deliberately leaves the superseded
-    * tree readable ([[compactBatchDirs]]'s grace snapshot), and until
-    * now it expired only as a SIDE EFFECT of the next writer's entry
-    * vacuum or an erasure's `vacuumSuperseded`. This is the policy
-    * entry an operator (or a maintenance stream's `expireKeepSnapshots`
-    * hook) runs deliberately: keep the `keepLast` HIGHEST published
-    * trees, expire everything older. The live tree is never expirable
-    * (`keepLast >= 1` is enforced, and the keep-window is anchored at
-    * the highest published tree, so even a publish racing this call
-    * only ever GROWS what is kept).
-    *
-    * Expiry order per tree: the `_published` marker is deleted FIRST —
-    * one atomic file delete that makes the tree invisible to every
-    * resolver ([[publishedSnapshots]]/[[liveTreeOpt]] require the
-    * marker) — then the tree recursively; a crash between the two
-    * leaves an unpublished husk the next writer's entry vacuum removes,
-    * never a published-but-torn tree a reader could resolve into a
-    * partial view. An as-of read whose only qualifying snapshot was
-    * expired fails LOUDLY with [[batchDirsReadAsOf]]'s existing
-    * message; as-of reads the retained window still serves are
-    * unaffected. Unpublished trees (a concurrent writer's in-flight
-    * build, a crashed build) are not touched — they belong to the
-    * claim protocol, not retention.
-    *
-    * Returns the number of snapshots expired.
-    */
-  def expireSnapshots(spark: SparkSession, dir: String,
-      keepLast: Int = 1): Int = {
-    require(keepLast >= 1,
-      s"expireSnapshots: keepLast must be >= 1 (the live tree is never " +
-        s"expirable), got $keepLast")
-    val expire = publishedTrees(spark, dir).dropRight(keepLast)
-    expire.foreach { n =>
-      StateFs.deleteFile(spark, s"$dir/t$n/_published")
-      StateFs.deleteRecursively(spark, s"$dir/t$n")
-    }
-    expire.size
-  }
-
-  private def compactBatchDirs(spark: SparkSession, dir: String,
-      schema: StructType, markersRoot: String,
-      transform: DataFrame => DataFrame = identity,
-      requireSeed: Boolean = false,
-      vacuumSuperseded: Boolean = false): Unit = {
-    // claim FIRST — from here to the release this writer is the only
-    // one allowed to vacuum, build, or publish under `dir`
-    val next = acquireTreeClaim(spark, dir)
-    try {
-      val live = next - 1
-      val livePath = s"$dir/t$live"
-      // entry vacuum — safe under the claim: everything but the live
-      // tree is either a superseded snapshot whose grace window has
-      // ended or a crashed, claim-broken build, both unreferenced by
-      // every reader and by any writer (a live peer would have failed
-      // at the claim, never reaching its own vacuum)
-      treeNumbers(spark, dir).filterNot(_ == live)
-        .foreach(n => StateFs.deleteRecursively(spark, s"$dir/t$n"))
-      require(!StateFs.exists(spark, s"$livePath/seed") ||
-          StateFs.exists(spark, s"$livePath/seed/_SUCCESS"),
-        s"compaction: $livePath/seed exists without commit evidence — " +
-          "a half-written seed must be re-seeded, not compacted")
-      if (requireSeed)
-        require(StateFs.exists(spark, s"$livePath/seed/_SUCCESS"),
-          s"compaction: $livePath has no seed at all — an index table " +
-            "whose history seed never landed must be re-seeded, not compacted " +
-            "into an empty baseline")
-      val foldable = committedSubdirs(spark, livePath).filter {
-        case "seed" => true
-        case b if b.matches("b\\d+") =>
-          plainMarkerApplied(spark, markersRoot, b.drop(1).toLong)
-        case _ => false
-      }
-      val nextPath = s"$dir/t$next"
-      transform(readSubdirs(spark, livePath, foldable, schema))
-        .write.mode("overwrite").parquet(s"$nextPath/seed")
-      // record the new tree's compaction horizon BEFORE publishing —
-      // the highest batch id folded into its seed, maxed with the
-      // prior tree's horizon (monotone across compactions). A
-      // published tree therefore always carries its horizon, so an
-      // as-of read ([[batchDirsReadAsOf]]) can never mistake a
-      // compacted-away batch for a never-arrived one. Name-encoded
-      // (the `_horizon_<v>` truncation-hazard reasoning); omitted
-      // entirely while nothing was ever compacted (horizon −1).
-      val foldedThrough = (foldable.filter(_.matches("b\\d+"))
-        .map(_.drop(1).toLong) :+ seedThroughOf(spark, livePath)).max
-      if (foldedThrough >= 0)
-        StateFs.touchExclusive(spark, s"$nextPath/_seed_through_$foldedThrough")
-      // manifest-maintaining tables get the new tree's manifest BEFORE
-      // it publishes (a published tree is born manifest-complete);
-      // tables without one must not acquire a manifest their folds
-      // would let go stale
-      if (hasManifest(spark, livePath)) writeTreeManifest(spark, nextPath)
-      // THE commit: one create-only marker makes the new tree live —
-      // exclusive, so even a protocol bug that let two writers reach
-      // here could never let both "succeed" silently
-      StateFs.touchExclusive(spark, s"$nextPath/_published")
-      if (vacuumSuperseded) StateFs.deleteRecursively(spark, livePath)
-    } finally {
-      // released on failure too: a CLEANLY failed build is no longer a
-      // writer, and its unpublished tree is vacuumed by the next entry;
-      // only a hard crash leaves the claim for breakTreeClaims
-      releaseTreeClaim(spark, dir, next)
-    }
-  }
-
-  /** AUTO-COMPACTION POLICY — compact one per-batch-subdir table when
-    * its live tree holds MORE THAN `maxBatchSubdirs` committed batch
-    * subdirs; a no-op below the threshold. At 100 TB the compaction
-    * trigger is file-count pressure, not a calendar: every probe of the
-    * table pays one LIST plus a footer read per subdir, so a
-    * long-running maintenance stream that never compacts converts its
-    * own uptime into per-batch metadata cost. Wired into the
-    * maintenance streams' fold path (each `foreachBatch` calls this
-    * AFTER its batch marker lands), which satisfies compaction's
-    * quiesced-writer contract BY CONSTRUCTION — the stream is the
-    * table's only writer and sits between folds. Batch-marker evidence
-    * is untouched (compaction never deletes markers — the horizon
-    * discipline), so redelivered pre-compaction batches still no-op.
-    * Returns whether a compaction ran (the spec's exactly-at-threshold
-    * probe).
-    */
-  private def compactIfCrowded(spark: SparkSession, dir: String,
-      schema: StructType, markersRoot: String, maxBatchSubdirs: Int,
-      requireSeed: Boolean): Boolean = {
-    require(maxBatchSubdirs >= 1,
-      s"auto-compaction threshold must be >= 1, got $maxBatchSubdirs")
-    val crowded = liveTreeOpt(spark, dir).exists { tree =>
-      committedSubdirs(spark, tree).count(_.matches("b\\d+")) > maxBatchSubdirs
-    }
-    if (crowded)
-      compactBatchDirs(spark, dir, schema, markersRoot, requireSeed = requireSeed)
-    crowded
-  }
-
-  /** [[compactIfCrowded]] over the tf index — the policy entry the tf
-    * maintenance stream runs per fold when `autoCompactAfter` is set.
+  /** The auto-compaction policy over the tf index — the entry the tf
+    * maintenance stream runs per fold when `autoCompactAfter` is set
+    * (see [[maintainAppendTables]]). Returns whether a compaction ran.
     */
   def compactTfIndexIfCrowded(spark: SparkSession, indexDir: String,
-      maxBatchSubdirs: Int): Boolean =
-    compactIfCrowded(spark, s"$indexDir/tf", tfIndexSchema, indexDir,
-      maxBatchSubdirs, requireSeed = true)
+      maxAppends: Int): Boolean = {
+    val c = crowded(spark, s"$indexDir/tf", maxAppends)
+    if (c) compactTfIndex(spark, indexDir)
+    c
+  }
 
-  /** [[compactIfCrowded]] over the MinHash ingest-dedup tables (shingle
-    * + band index tables and the pairs output table — the output table
-    * legitimately starts seedless).
+  /** Compact the ingest-dedup index tables (see [[rewriteAppendTable]];
+    * the bands table commits the fold, so it is the batch evidence).
     */
-  def compactIngestIndexIfCrowded(spark: SparkSession, indexDir: String,
-      pairsOutDir: String, maxBatchSubdirs: Int): Boolean = {
-    val a = compactIfCrowded(spark, s"$indexDir/shingles", ingestShinglesSchema,
-      indexDir, maxBatchSubdirs, requireSeed = true)
-    val b = compactIfCrowded(spark, s"$indexDir/bands", ingestBandsSchema,
-      indexDir, maxBatchSubdirs, requireSeed = true)
-    val c = compactIfCrowded(spark, pairsOutDir, ingestPairsSchema,
-      indexDir, maxBatchSubdirs, requireSeed = false)
-    a || b || c
-  }
-
-  /** Compact the ingest-dedup index tables (see [[compactBatchDirs]]). */
   def compactIngestIndex(spark: SparkSession, indexDir: String): Unit = {
-    compactBatchDirs(spark, s"$indexDir/shingles", ingestShinglesSchema, indexDir,
-      requireSeed = true)
-    compactBatchDirs(spark, s"$indexDir/bands", ingestBandsSchema, indexDir,
-      requireSeed = true)
+    val bandsDir = s"$indexDir/bands"
+    rewriteAppendTable(spark, s"$indexDir/shingles", ingestShinglesSchema,
+      bandsDir, requireSeed = true)()
+    rewriteAppendTable(spark, bandsDir, ingestBandsSchema, bandsDir,
+      requireSeed = true)()
   }
 
-  /** Compact the maintained ANN index tables (see [[compactBatchDirs]]). */
+  /** Compact the maintained ANN index tables (see [[rewriteAppendTable]]). */
   def compactAnnIndex(spark: SparkSession, indexDir: String): Unit = {
-    compactBatchDirs(spark, s"$indexDir/cells", annCellsSchema, indexDir,
-      requireSeed = true)
-    compactBatchDirs(spark, s"$indexDir/codes", annCodesSchema, indexDir,
-      requireSeed = true)
+    val cellsDir = s"$indexDir/cells"
+    rewriteAppendTable(spark, cellsDir, annCellsSchema, cellsDir,
+      requireSeed = true)()
+    rewriteAppendTable(spark, s"$indexDir/codes", annCodesSchema, cellsDir,
+      requireSeed = true)()
   }
 
   /** Band-table read schema for the parquet-backed phash ingest-dedup
@@ -861,36 +269,36 @@ object EventStream {
     StructField("hamming", IntegerType)))
 
   /** The verified near-dup pairs a phash ingest-dedup run has emitted so
-    * far (union of the per-batch output subdirs under `pairsOutDir`).
+    * far (every batch's append generation of the `pairsOutDir` table).
     */
   def phashPairsRead(spark: SparkSession, pairsOutDir: String): DataFrame =
-    batchDirsRead(spark, pairsOutDir, phashPairsSchema)
+    appendRead(spark, pairsOutDir, phashPairsSchema)
 
   /** The stored phash band index — the read side of
     * [[phashIngestDedup]]'s probe (and the erasure spec's ghost-probe
     * witness).
     */
   def phashBandsRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/bands", phashBandsSchema)
+    appendRead(spark, s"$indexDir/bands", phashBandsSchema)
 
-  /** Compact the phash ingest-dedup band index (see [[compactBatchDirs]]). */
-  def compactPhashIndex(spark: SparkSession, indexDir: String): Unit =
-    compactBatchDirs(spark, s"$indexDir/bands", phashBandsSchema, indexDir,
-      requireSeed = true)
+  /** Compact the phash ingest-dedup band index (see [[rewriteAppendTable]]). */
+  def compactPhashIndex(spark: SparkSession, indexDir: String): Unit = {
+    val bandsDir = s"$indexDir/bands"
+    rewriteAppendTable(spark, bandsDir, phashBandsSchema, bandsDir,
+      requireSeed = true)()
+  }
 
-  /** Compact the verified-pairs OUTPUT tables — the served side of the
-    * ingest-dedup gates accumulates the same one-subdir-per-batch
-    * layout as the indexes, and every [[ingestPairsRead]] /
-    * [[phashPairsRead]] pays its listing; batch markers live under the
-    * INDEX dir (one marker covers a batch's pairs + index writes), so
-    * the pairs compactor takes both paths. Same marker gating, swap
-    * protocol, and quiesced-stream contract as [[compactBatchDirs]];
-    * the first compaction CREATES the table's seed (pairs tables start
-    * at `b0` — no history seed exists).
+  /** Compact the verified-pairs OUTPUT table — the served side of the
+    * ingest-dedup gates accumulates one append generation per batch like
+    * the indexes, and every [[ingestPairsRead]] scans them. The fold's
+    * commit evidence is the index's bands table, so the compactor takes
+    * both paths; the first compaction gives the table its first rewrite
+    * (pairs tables start at `a0` — no history seed exists).
     */
   def compactIngestPairs(spark: SparkSession, pairsOutDir: String,
       indexDir: String): Unit =
-    compactBatchDirs(spark, pairsOutDir, ingestPairsSchema, indexDir)
+    rewriteAppendTable(spark, pairsOutDir, ingestPairsSchema,
+      s"$indexDir/bands")()
 
   /** RIGHT-TO-BE-FORGOTTEN over the MinHash ingest-dedup index — the
     * text tier's stored shingle/band tables hold per-document DERIVED
@@ -898,25 +306,25 @@ object EventStream {
     * deletion request must reach them exactly as it reaches the tf
     * index. Pairs first (the served surface; a pair dies when EITHER
     * endpoint is forgotten), then bands and shingles — each an
-    * anti-join republished through the snapshot-pointer protocol with
-    * the superseded tree vacuumed (it holds the forgotten rows).
-    * Idempotent; quiesced-stream contract; StreamingSpec pins that a
-    * forgotten document's byte-identical re-ingest under a fresh id
-    * never pairs with the ghost and that the erased index equals the
-    * surviving-docs rebuild.
+    * anti-join rewrite that expires every older generation (they hold
+    * the forgotten rows). Idempotent; quiesced-stream contract;
+    * StreamingSpec pins that a forgotten document's byte-identical
+    * re-ingest under a fresh id never pairs with the ghost and that the
+    * erased index equals the surviving-docs rebuild.
     */
   def forgetDocsFromMinhashIndex(spark: SparkSession, indexDir: String,
       pairsOutDir: String, docIds: DataFrame): Unit =
     withForgetList(docIds, "doc_id") { ids =>
-      erasePairEndpoints(spark, pairsOutDir, ingestPairsSchema, indexDir,
+      val bandsDir = s"$indexDir/bands"
+      erasePairEndpoints(spark, pairsOutDir, ingestPairsSchema, bandsDir,
         ids, "doc_a", "doc_b")
       // bands before shingles — the candidacy-gates-serving order (the
       // ANN cells-first rule): a bands-erased victim can no longer be
       // PROPOSED even while its shingles await their erasure
-      eraseKeysFromTable(spark, s"$indexDir/bands", ingestBandsSchema, indexDir,
+      eraseKeysFromTable(spark, bandsDir, ingestBandsSchema, bandsDir,
         ids, "doc_id")
       eraseKeysFromTable(spark, s"$indexDir/shingles", ingestShinglesSchema,
-        indexDir, ids, "doc_id")
+        bandsDir, ids, "doc_id")
     }
 
   /** INGESTION-TIME PERCEPTUAL-HASH DEDUP via `foreachBatch` — the BINARY
@@ -931,13 +339,13 @@ object EventStream {
     * `bit_count(xor) <= 3` on the carried hashes, writes the verified
     * pairs, and folds its own bands into the index for the next batch.
     *
-    * Same storage/commit contract as the text gate: the index is a
-    * parquet table of per-batch idempotent-overwrite subdirs under batch
-    * markers ([[batchDirsRead]] layout), a crashed attempt's leftovers
-    * are pre-cleaned before probing, a restarted stream resumes against
-    * the stored index, and [[compactPhashIndex]] is the OPTIMIZE half.
-    * Pass `checkpointDir` for cross-restart exactly-once (the
-    * [[maintenanceWriter]] contract).
+    * Same storage/commit contract as the text gate: both tables are
+    * append tables on the generation log ([[appendFoldPending]] — the
+    * bands generation commits the batch), the probe reads the index as
+    * of the previous batch (a crashed attempt's leftovers are never
+    * history), a restarted stream resumes against the stored index, and
+    * [[compactPhashIndex]] is the OPTIMIZE half. Pass `checkpointDir`
+    * for cross-restart exactly-once (the [[maintenanceWriter]] contract).
     *
     * At 100 TB the probe is a (band, v) equi-join of the SMALL batch
     * against the stored index — 4 rows of a few longs per stored asset,
@@ -950,32 +358,21 @@ object EventStream {
     import graft.operators.Multimodal
     val spark = mediaStream.sparkSession
     val bandsDir = s"$indexDir/bands"
-    if (!StateFs.exists(spark, s"${ensureLiveTree(spark, bandsDir)}/seed/_SUCCESS")) {
-      Multimodal.phashBandsOf(Multimodal.phashSigsOf(historyMedia))
-        .write.mode("overwrite").parquet(s"${ensureLiveTree(spark, bandsDir)}/seed")
-      writeTreeManifest(spark, ensureLiveTree(spark, bandsDir))
-    }
+    seedAppendTables(spark,
+      bandsDir -> Multimodal.phashBandsOf(Multimodal.phashSigsOf(historyMedia)))
     maintenanceWriter(mediaStream, checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!plainMarkerApplied(spark, indexDir, batchId)) {
-          // the live trees are resolved PER BATCH — a between-runs
-          // compaction advances them
-          val (pairsTree, bandsTree) =
-            (ensureLiveTree(spark, pairsOutDir), ensureLiveTree(spark, bandsDir))
-          // crashed-attempt pre-clean — same reasoning as the text gate
-          Seq(s"$pairsTree/b$batchId", s"$bandsTree/b$batchId")
-            .foreach(d => StateFs.deleteRecursively(spark, d))
+        if (appendFoldPending(spark, batchId, pairsOutDir, bandsDir)) {
           val batchBands = Multimodal.phashBandsOf(
             Multimodal.phashSigsOf(batch.toDF())).persist()
           try {
-            val stored = batchDirsRead(spark, bandsDir, phashBandsSchema)
+            val stored = appendRead(spark, bandsDir, phashBandsSchema,
+              Some(batchId - 1))
             // the ONE shared candidate/verify spelling (Multimodal):
             // history bands give new↔old, own bands give new↔new
-            Multimodal.phashVerifiedPairs(batchBands, stored.unionAll(batchBands))
-              .write.mode("overwrite").parquet(s"$pairsTree/b$batchId")
-            batchBands.write.mode("overwrite").parquet(s"$bandsTree/b$batchId")
-            Seq(pairsTree, bandsTree).foreach(t => writeTreeManifest(spark, t))
-            commitPlainMarker(spark, indexDir, batchId)
+            writeAppend(spark, pairsOutDir, batchId,
+              Multimodal.phashVerifiedPairs(batchBands, stored.unionAll(batchBands)))
+            writeAppend(spark, bandsDir, batchId, batchBands)
           } finally {
             batchBands.unpersist()
             ()
@@ -983,6 +380,47 @@ object EventStream {
         }
       }
       .start()
+  }
+
+  /** Seed the MinHash ingest index tables from `historyDocs` unless the
+    * LAST-written table (bands) holds a committed base
+    * ([[seedAppendTables]]) — factored out of [[minhashIngestDedup]] for
+    * the curation stream, which maintains the same band index.
+    */
+  def minhashIndexSeed(spark: SparkSession, indexDir: String,
+      historyDocs: DataFrame): Unit = {
+    import graft.operators.Dedup
+    val histSh = Dedup.shingleDocs(historyDocs).persist()
+    try seedAppendTables(spark, s"$indexDir/shingles" -> histSh,
+      s"$indexDir/bands" -> Dedup.bandIndex(histSh))
+    finally {
+      histSh.unpersist()
+      ()
+    }
+  }
+
+  /** Probe the stored band index AS OF the previous batch with one
+    * batch's shingles/bands and exact-Jaccard-verify the candidates — the
+    * ONE probe spelling [[minhashIngestDedup]] and the curation ingest
+    * stream share: stored bands give new↔old candidates, the batch's own
+    * bands give new↔new, canonical (least, greatest) so a pair lands
+    * once. Reading as of `batchId − 1` is what makes a replay safe: a
+    * crashed attempt's committed leftovers of this batch are above the
+    * window and never probed as history.
+    */
+  private def minhashProbeBatch(spark: SparkSession, indexDir: String,
+      batchSh: DataFrame, batchBands: DataFrame, batchId: Long): DataFrame = {
+    import graft.operators.Dedup
+    val prior = Some(batchId - 1)
+    val storedBands = appendRead(spark, s"$indexDir/bands", ingestBandsSchema, prior)
+    val cands = batchBands.alias("a")
+      .join(storedBands.unionAll(batchBands).alias("b"),
+        col("a.band") === col("b.band") && col("a.doc_id") =!= col("b.doc_id"))
+      .select(least(col("a.doc_id"), col("b.doc_id")).alias("doc_a"),
+        greatest(col("a.doc_id"), col("b.doc_id")).alias("doc_b"))
+      .distinct()
+    val storedSh = appendRead(spark, s"$indexDir/shingles", ingestShinglesSchema, prior)
+    Dedup.verifyPairs(storedSh.unionAll(batchSh), cands)
   }
 
   /** INGESTION-TIME MinHash dedup via `foreachBatch` — the streaming form
@@ -997,96 +435,39 @@ object EventStream {
     * the from-scratch batch `dedup_minhash_lsh` pair set.
     *
     * The index is STORAGE-BACKED (`indexDir/bands`, `indexDir/shingles`
-    * as parquet tables): the probe re-reads the table each batch, so the
-    * plan never grows with batch count, and the index SURVIVES the
-    * session — a new stream over the same `indexDir` resumes serving it
-    * (the restart-resume StreamingSpec case). Every write unit is a
-    * per-batch subdir committed under a batch marker, so a re-delivered
-    * batch overwrites its own subdir and is a no-op — never a
+    * as append tables on the generation log): the probe re-reads the
+    * tables each batch, so the plan never grows with batch count, and the
+    * index SURVIVES the session — a new stream over the same `indexDir`
+    * resumes serving it (the restart-resume StreamingSpec case). Every
+    * batch writes one append generation per table and the bands
+    * generation commits it, so a re-delivered batch is a no-op — never a
     * double-append. Pass `checkpointDir` for cross-restart exactly-once:
-    * without it a fresh stream re-reads all files, and the markers skip
-    * the replays ONLY while the batchId↔files mapping is unchanged —
-    * new files arriving before a checkpoint-less restart would be
-    * re-batched into already-marked ids and silently skipped (the
-    * [[maintenanceWriter]] contract).
+    * without it a fresh stream re-reads all files, and the generation
+    * commits skip the replays ONLY while the batchId↔files mapping is
+    * unchanged — new files arriving before a checkpoint-less restart
+    * would be re-batched into already-applied ids and silently skipped
+    * (the [[maintenanceWriter]] contract).
     *
     * At 100 TB the probe is a band-key equi-join of the SMALL batch
     * against the stored index — the corpus is never re-banded, which is
     * what makes ingestion-time dedup affordable at all; the per-batch
-    * subdirs are the append-only commit shape an object store serves
+    * generations are the append-only commit shape an object store serves
     * directly.
     */
-  /** Seed the MinHash ingest index tables from `historyDocs` unless the
-    * LAST-written table carries commit evidence (see
-    * [[annIndexMaintenanceStream]]'s two-table seed note) — factored
-    * out of [[minhashIngestDedup]] for the curation stream, which
-    * maintains the same band index.
-    */
-  def minhashIndexSeed(spark: SparkSession, indexDir: String,
-      historyDocs: DataFrame): Unit = {
-    import graft.operators.Dedup
-    val shDir = s"$indexDir/shingles"
-    val bandsDir = s"$indexDir/bands"
-    if (!StateFs.exists(spark, s"${ensureLiveTree(spark, bandsDir)}/seed/_SUCCESS")) {
-      val histSh = Dedup.shingleDocs(historyDocs).persist()
-      try {
-        histSh.write.mode("overwrite")
-          .parquet(s"${ensureLiveTree(spark, shDir)}/seed")
-        Dedup.bandIndex(histSh).write.mode("overwrite")
-          .parquet(s"${ensureLiveTree(spark, bandsDir)}/seed")
-        Seq(shDir, bandsDir).foreach(d =>
-          writeTreeManifest(spark, ensureLiveTree(spark, d)))
-      } finally {
-        histSh.unpersist()
-        ()
-      }
-    }
-  }
-
-  /** Probe the stored band index with one batch's shingles/bands and
-    * exact-Jaccard-verify the candidates — the ONE probe spelling
-    * [[minhashIngestDedup]] and the curation ingest stream share:
-    * stored bands give new↔old candidates, the batch's own bands give
-    * new↔new, canonical (least, greatest) so a pair lands once.
-    */
-  private def minhashProbeBatch(spark: SparkSession, indexDir: String,
-      batchSh: DataFrame, batchBands: DataFrame): DataFrame = {
-    import graft.operators.Dedup
-    val storedBands = batchDirsRead(spark, s"$indexDir/bands", ingestBandsSchema)
-    val cands = batchBands.alias("a")
-      .join(storedBands.unionAll(batchBands).alias("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).alias("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).alias("doc_b"))
-      .distinct()
-    val storedSh = batchDirsRead(spark, s"$indexDir/shingles", ingestShinglesSchema)
-    Dedup.verifyPairs(storedSh.unionAll(batchSh), cands)
-  }
-
   def minhashIngestDedup(docsStream: DataFrame, historyDocs: DataFrame,
       pairsOutDir: String, indexDir: String,
       checkpointDir: Option[String] = None,
       autoCompactAfter: Option[Int] = None,
       expireKeepSnapshots: Option[Int] = None): StreamingQuery = {
-    import graft.operators.Dedup
     val spark = docsStream.sparkSession
-    val shDir = s"$indexDir/shingles"
-    val bandsDir = s"$indexDir/bands"
     minhashIndexSeed(spark, indexDir, historyDocs)
     maintenanceWriter(docsStream, checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         minhashIngestFoldBatch(spark, pairsOutDir, indexDir,
           batch.toDF(), batchId)
-        // policy AFTER the marker landed — quiesced by construction
-        // (see [[compactTfIndexIfCrowded]]); outside the marker gate so
-        // a replayed no-op batch still relieves file-count pressure
-        autoCompactAfter.foreach(k =>
-          compactIngestIndexIfCrowded(spark, indexDir, pairsOutDir, k))
-        // retention after compaction — the tf stream's hook discipline
-        expireKeepSnapshots.foreach { k =>
-          Seq(s"$indexDir/shingles", s"$indexDir/bands", pairsOutDir)
-            .foreach(d => expireSnapshots(spark, d, keepLast = k))
-        }
+        maintainAppendTables(spark, s"$indexDir/bands", autoCompactAfter,
+          expireKeepSnapshots)(s"$indexDir/shingles" -> ingestShinglesSchema,
+          s"$indexDir/bands" -> ingestBandsSchema, pairsOutDir -> ingestPairsSchema)
       }
       .start()
   }
@@ -1094,37 +475,22 @@ object EventStream {
   /** One MinHash-ingestion micro-batch — the exact `foreachBatch` body
     * of [[minhashIngestDedup]], opened (the [[chunkIngestFoldBatch]]
     * precedent) so the registered incremental-clustering gate runs the
-    * SAME pair-detection fold the stream does.
+    * SAME pair-detection fold the stream does. Pairs, shingles and bands
+    * are written in that order; the bands generation commits the batch.
     */
   def minhashIngestFoldBatch(spark: SparkSession, pairsOutDir: String,
       indexDir: String, batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.Dedup
     val shDir = s"$indexDir/shingles"
     val bandsDir = s"$indexDir/bands"
-    if (!plainMarkerApplied(spark, indexDir, batchId)) {
-      // live trees resolved per batch (a between-runs compaction
-      // advances them)
-      val pairsTree = ensureLiveTree(spark, pairsOutDir)
-      val shTree = ensureLiveTree(spark, shDir)
-      val bandsTree = ensureLiveTree(spark, bandsDir)
-      // a crashed prior attempt may have left partial b$batchId
-      // subdirs; remove them BEFORE probing, or the stored-index
-      // reads would count this batch's own leftovers as history
-      // (duplicate shingle rows would emit duplicate verified pairs)
-      Seq(s"$pairsTree/b$batchId", s"$shTree/b$batchId",
-          s"$bandsTree/b$batchId")
-        .foreach(d => StateFs.deleteRecursively(spark, d))
+    if (appendFoldPending(spark, batchId, pairsOutDir, shDir, bandsDir)) {
       val batchSh = Dedup.shingleDocs(batch).persist()
       val batchBands = Dedup.bandIndex(batchSh).persist()
       try {
-        minhashProbeBatch(spark, indexDir, batchSh, batchBands)
-          .write.mode("overwrite").parquet(s"$pairsTree/b$batchId")
-        batchSh.write.mode("overwrite").parquet(s"$shTree/b$batchId")
-        batchBands.write.mode("overwrite").parquet(s"$bandsTree/b$batchId")
-        // manifests BEFORE the marker — the manifest contract
-        Seq(pairsTree, shTree, bandsTree)
-          .foreach(t => writeTreeManifest(spark, t))
-        commitPlainMarker(spark, indexDir, batchId)
+        writeAppend(spark, pairsOutDir, batchId,
+          minhashProbeBatch(spark, indexDir, batchSh, batchBands, batchId))
+        writeAppend(spark, shDir, batchId, batchSh)
+        writeAppend(spark, bandsDir, batchId, batchBands)
       } finally {
         batchSh.unpersist()
         batchBands.unpersist()
@@ -1133,20 +499,19 @@ object EventStream {
     }
   }
 
-  /** Incremental read of the verified-pairs output
-    * ([[batchDirsChanges]]) — the feed the cluster maintainer consumes.
+  /** Incremental read of the verified-pairs output ([[appendChanges]]) —
+    * the feed the cluster maintainer consumes.
     */
   def ingestPairsChanges(spark: SparkSession, pairsOutDir: String,
       fromExclusive: Long, toInclusive: Long): DataFrame =
-    batchDirsChanges(spark, pairsOutDir, ingestPairsSchema,
+    appendChanges(spark, pairsOutDir, ingestPairsSchema,
       fromExclusive, toInclusive)
 
   // ======================================================================
   // INCREMENTAL CLUSTER MAINTENANCE — near-dup clusters with STABLE
   // min-id labels, maintained per micro-batch as an incremental consumer
   // of the verified-pairs table, WITHOUT re-running connected components
-  // over the corpus. Two append-only tables under the published-tree
-  // protocol:
+  // over the corpus. Two append tables on the generation log:
   //   members:   (doc_id, cluster_id) — one row per ingested doc, written
   //              once at its arrival batch with the label resolved at
   //              that moment;
@@ -1174,10 +539,10 @@ object EventStream {
     StructField("new_id", LongType)))
 
   def clusterMembersRead(spark: SparkSession, clusterDir: String): DataFrame =
-    batchDirsRead(spark, s"$clusterDir/members", clusterMembersSchema)
+    appendRead(spark, s"$clusterDir/members", clusterMembersSchema)
 
   def clusterRedirectsRead(spark: SparkSession, clusterDir: String): DataFrame =
-    batchDirsRead(spark, s"$clusterDir/redirects", clusterRedirectsSchema)
+    appendRead(spark, s"$clusterDir/redirects", clusterRedirectsSchema)
 
   /** The redirect map resolved to its FIXPOINT (old_id → final id) by
     * pointer jumping: each round substitutes targets that are themselves
@@ -1210,69 +575,65 @@ object EventStream {
     m
   }
 
+  /** Members relabeled through a resolved redirect map — the ONE
+    * serving join, shared by live and as-of serving and by compaction.
+    */
+  private def relabeled(members: DataFrame, resolved: DataFrame): DataFrame =
+    members.alias("m")
+      .join(resolved.alias("r"), col("m.cluster_id") === col("r.old_id"), "left")
+      .select(col("m.doc_id"),
+        coalesce(col("r.new_id"), col("m.cluster_id")).alias("cluster_id"))
+
   /** The SERVED cluster assignment: members resolved through the
     * redirect closure — every doc's CURRENT component-minimum label.
     */
-  def clusterStateServe(spark: SparkSession, clusterDir: String): DataFrame = {
-    val r = resolvedRedirects(spark, clusterDir)
-    clusterMembersRead(spark, clusterDir).alias("m")
-      .join(r.alias("r"), col("m.cluster_id") === col("r.old_id"), "left")
-      .select(col("m.doc_id"),
-        coalesce(col("r.new_id"), col("m.cluster_id")).alias("cluster_id"))
-  }
+  def clusterStateServe(spark: SparkSession, clusterDir: String): DataFrame =
+    relabeled(clusterMembersRead(spark, clusterDir),
+      resolvedRedirects(spark, clusterDir))
 
   /** TIME-TRAVELED cluster serving: members AND redirects read as of
-    * the SAME batch ([[batchDirsReadAsOf]] on both tables — the fold
-    * writes them as one unit per batch, so equal horizons ARE the
-    * consistent cross-table snapshot), resolved through the closure the
-    * redirect rows up to that batch form. What the cluster assignment
-    * WAS when batch `asOfBatch` committed — the reproducibility read a
-    * training run pins its dedup decisions to.
+    * the SAME batch (the fold writes them as one unit per batch, so equal
+    * as-of bounds ARE the consistent cross-table snapshot), resolved
+    * through the closure the redirect rows up to that batch form. What
+    * the cluster assignment WAS when batch `asOfBatch` committed — the
+    * reproducibility read a training run pins its dedup decisions to.
     */
   def clusterStateServeAsOf(spark: SparkSession, clusterDir: String,
-      asOfBatch: Long): DataFrame = {
-    val r = resolveClosure(batchDirsReadAsOf(spark, s"$clusterDir/redirects",
-      clusterRedirectsSchema, asOfBatch))
-    batchDirsReadAsOf(spark, s"$clusterDir/members", clusterMembersSchema,
-      asOfBatch).alias("m")
-      .join(r.alias("r"), col("m.cluster_id") === col("r.old_id"), "left")
-      .select(col("m.doc_id"),
-        coalesce(col("r.new_id"), col("m.cluster_id")).alias("cluster_id"))
-  }
+      asOfBatch: Long): DataFrame =
+    relabeled(
+      appendRead(spark, s"$clusterDir/members", clusterMembersSchema, Some(asOfBatch)),
+      resolveClosure(appendRead(spark, s"$clusterDir/redirects",
+        clusterRedirectsSchema, Some(asOfBatch))))
 
   /** One cluster-maintenance micro-batch: `batchDocs` are the batch's
     * doc ids, `batchPairs` the verified near-dup pairs the SAME batch's
     * MinHash probe emitted ([[ingestPairsChanges]] of exactly this
     * batch — the maintainer is an incremental consumer of the pairs
     * table). The fold:
-    *   1. resolve the pair endpoints' CURRENT labels (point lookups
-    *      into members + the redirect closure; a batch doc defaults to
-    *      itself);
+    *   1. resolve the pair endpoints' labels as of the previous batch
+    *      (point lookups into members + the redirect closure; a batch doc
+    *      defaults to itself);
     *   2. run connected components over the REP graph those pairs
     *      induce (edges between current representatives — the merge
     *      proposals, a graph sized by this batch's pair set);
     *   3. append members rows for the batch's docs with their resolved
     *      final label, and ONE redirect row for every existing
     *      representative the merge dethroned.
-    * Idempotence: one marker (keyed under `clusterDir` — the fold is
-    * one unit over both tables, the curation one-marker-N-writes
-    * precedent) gates both appends; a replay pre-cleans its own
-    * subdirs and re-folds from the prior batches' state, which is
-    * deterministic, so the rewrite is byte-stable.
+    * Idempotence: members then redirects, and the redirects generation
+    * commits the batch ([[appendFoldPending]]); a replay re-folds from
+    * the state as of the previous batch, which is deterministic, so the
+    * rewrite is byte-stable.
     */
   def clusterFoldBatch(spark: SparkSession, clusterDir: String,
       batchDocs: DataFrame, batchPairs: DataFrame, batchId: Long): Unit = {
     import graft.operators.Dedup
-    if (!plainMarkerApplied(spark, clusterDir, batchId)) {
-      val mTree = ensureLiveTree(spark, s"$clusterDir/members")
-      val rTree = ensureLiveTree(spark, s"$clusterDir/redirects")
-      Seq(s"$mTree/b$batchId", s"$rTree/b$batchId")
-        .foreach(d => StateFs.deleteRecursively(spark, d))
+    val (membersDir, redirectsDir) = (s"$clusterDir/members", s"$clusterDir/redirects")
+    if (appendFoldPending(spark, batchId, membersDir, redirectsDir)) {
       val ids = batchDocs.select(col("doc_id")).distinct()
         .localCheckpoint(eager = true)
       val pairs = batchPairs.select(col("doc_a"), col("doc_b")).distinct()
         .localCheckpoint(eager = true)
-      val cur = clusterStateServe(spark, clusterDir)
+      val cur = clusterStateServeAsOf(spark, clusterDir, batchId - 1)
       val endpoints = pairs.select(col("doc_a").alias("doc_id"))
         .union(pairs.select(col("doc_b").alias("doc_id"))).distinct()
       // current representative per endpoint: stored label for history
@@ -1311,44 +672,39 @@ object EventStream {
         .join(ids, Seq("doc_id"), "left_anti")
         .filter(col("doc_id") =!= col("label"))
         .select(col("doc_id").alias("old_id"), col("label").alias("new_id"))
-      newMembers.write.mode("overwrite").parquet(s"$mTree/b$batchId")
-      newRedirects.write.mode("overwrite").parquet(s"$rTree/b$batchId")
-      Seq(mTree, rTree).foreach(t => writeTreeManifest(spark, t))
-      commitPlainMarker(spark, clusterDir, batchId)
+      writeAppend(spark, membersDir, batchId, newMembers)
+      writeAppend(spark, redirectsDir, batchId, newRedirects)
     }
   }
 
   /** OFFLINE PATH COMPRESSION: fold the redirect closure into the
-    * members table (tree swap) and empty the redirect table — serving
+    * members table (a rewrite) and empty the redirect table — serving
     * labels are byte-identical before and after (spec'd), redirect
     * chains reset to zero length. Quiesced-writers contract as every
-    * compaction. Crash between the two swaps is safe: re-applying the
+    * compaction. Crash between the two rewrites is safe: re-applying the
     * already-folded redirects to resolved members matches nothing (the
     * fixpoint invariant — final labels never appear as old ids).
     */
   def compactClusterState(spark: SparkSession, clusterDir: String): Unit = {
     val r = resolvedRedirects(spark, clusterDir)
-    compactBatchDirs(spark, s"$clusterDir/members", clusterMembersSchema,
-      clusterDir, transform = m => m.alias("m")
-        .join(r.alias("r"), col("m.cluster_id") === col("r.old_id"), "left")
-        .select(col("m.doc_id"),
-          coalesce(col("r.new_id"), col("m.cluster_id")).alias("cluster_id")))
-    compactBatchDirs(spark, s"$clusterDir/redirects", clusterRedirectsSchema,
-      clusterDir, transform = _.filter(lit(false)))
+    val redirectsDir = s"$clusterDir/redirects"
+    rewriteAppendTable(spark, s"$clusterDir/members", clusterMembersSchema,
+      redirectsDir)(relabeled(_, r))
+    rewriteAppendTable(spark, redirectsDir, clusterRedirectsSchema,
+      redirectsDir)(_.filter(lit(false)))
   }
 
   /** RIGHT-TO-BE-FORGOTTEN through the cluster state. Removing a doc
     * can change its component's minimum (the victim WAS the label) and
     * can SPLIT the component (the victim was the only bridge) — neither
     * is expressible as a redirect, so erasure recomputes exactly the
-    * AFFECTED components from the surviving pair evidence and swaps the
-    * result in (vacuumSuperseded — the superseded tree holds the
+    * AFFECTED components from the surviving pair evidence and rewrites
+    * the result in (an erasing rewrite — the older generations hold the
     * forgotten rows). Self-contained against erasure ordering: the pair
     * feed is filtered to both-endpoints-surviving here, so it is
     * correct whether or not [[forgetDocsFromMinhashIndex]]'s pair-table
     * erasure ran first. Unaffected clusters' rows are carried through
-    * untouched (resolved — the erasure doubles as compaction, the
-    * pointer-protocol erasure discipline).
+    * untouched (resolved — the erasure doubles as compaction).
     */
   def forgetDocsFromClusterState(spark: SparkSession, clusterDir: String,
       pairsOutDir: String, forgetIds: DataFrame): Unit = {
@@ -1383,19 +739,16 @@ object EventStream {
       .select(col("s.doc_id"),
         coalesce(col("label"), col("s.doc_id")).alias("cluster_id"))
       .localCheckpoint(eager = true)
-    compactBatchDirs(spark, s"$clusterDir/members", clusterMembersSchema,
-      clusterDir, transform = m => {
-        val resolved = m.alias("m")
-          .join(resolvedRedirects(spark, clusterDir).alias("r"),
-            col("m.cluster_id") === col("r.old_id"), "left")
-          .select(col("m.doc_id"),
-            coalesce(col("r.new_id"), col("m.cluster_id")).alias("cluster_id"))
-        resolved.join(affected, Seq("cluster_id"), "left_anti")
-          .join(victims, Seq("doc_id"), "left_anti")
-          .unionByName(recomputed)
-      }, vacuumSuperseded = true)
-    compactBatchDirs(spark, s"$clusterDir/redirects", clusterRedirectsSchema,
-      clusterDir, transform = _.filter(lit(false)), vacuumSuperseded = true)
+    val redirectsDir = s"$clusterDir/redirects"
+    rewriteAppendTable(spark, s"$clusterDir/members", clusterMembersSchema,
+        redirectsDir, erase = true) { m =>
+      relabeled(m, resolvedRedirects(spark, clusterDir))
+        .join(affected, Seq("cluster_id"), "left_anti")
+        .join(victims, Seq("doc_id"), "left_anti")
+        .unionByName(recomputed)
+    }
+    rewriteAppendTable(spark, redirectsDir, clusterRedirectsSchema,
+      redirectsDir, erase = true)(_.filter(lit(false)))
   }
 
   /** INGESTION-TIME NEAR-DUP CLUSTERING via `foreachBatch`: each
@@ -1419,22 +772,18 @@ object EventStream {
           batch.toDF(), batchId)
         clusterFoldBatch(spark, clusterDir, batch.toDF().select(col("doc_id")),
           ingestPairsChanges(spark, pairsOutDir, batchId - 1, batchId), batchId)
+        maintainAppendTables(spark, s"$indexDir/bands", autoCompactAfter,
+          expireKeepSnapshots)(s"$indexDir/shingles" -> ingestShinglesSchema,
+          s"$indexDir/bands" -> ingestBandsSchema, pairsOutDir -> ingestPairsSchema)
         // cluster auto-compaction moves BOTH tables as one unit (path
-        // compression is only valid against the closure it folded), so
-        // the file-count probe fires the combined entry — quiesced by
-        // construction inside the fold path, the policy discipline
+        // compression is only valid against the closure it folded)
         autoCompactAfter.foreach { k =>
-          compactIngestIndexIfCrowded(spark, indexDir, pairsOutDir, k)
-          val crowded = liveTreeOpt(spark, s"$clusterDir/members").exists { t =>
-            committedSubdirs(spark, t).count(_.matches("b\\d+")) > k
-          }
-          if (crowded) compactClusterState(spark, clusterDir)
+          if (crowded(spark, s"$clusterDir/members", k))
+            compactClusterState(spark, clusterDir)
         }
-        expireKeepSnapshots.foreach { k =>
-          Seq(s"$indexDir/shingles", s"$indexDir/bands", pairsOutDir,
-            s"$clusterDir/members", s"$clusterDir/redirects")
-            .foreach(d => expireSnapshots(spark, d, keepLast = k))
-        }
+        maintainAppendTables(spark, s"$clusterDir/redirects", None,
+          expireKeepSnapshots)(s"$clusterDir/members" -> clusterMembersSchema,
+          s"$clusterDir/redirects" -> clusterRedirectsSchema)
       }
       .start()
   }
@@ -1459,10 +808,10 @@ object EventStream {
     * funnel deltas (the read side of [[curationIngestStream]]).
     */
   def curationStreamRead(spark: SparkSession, outDir: String): DataFrame =
-    batchDirsRead(spark, outDir, curationOutSchema)
+    appendRead(spark, outDir, curationOutSchema)
 
   def curationFunnelRead(spark: SparkSession, funnelDir: String): DataFrame =
-    batchDirsRead(spark, funnelDir, curationFunnelSchema)
+    appendRead(spark, funnelDir, curationFunnelSchema)
 
   /** One curation-ingestion micro-batch — the exact `foreachBatch` body
     * of [[curationIngestStream]], opened to the registered
@@ -1477,7 +826,7 @@ object EventStream {
     * repetition gate ([[graft.operators.Curation.repetitionKeepOf]]) →
     * the shared HTML-clean + PII-redact output map
     * ([[graft.operators.Curation.redactedSurvivorOutput]]). Emits the
-    * per-batch survivor subdir plus a one-row funnel DELTA, and folds
+    * per-batch survivor generation plus a one-row funnel DELTA, and folds
     * the batch's shingles/bands into the index for the next batch.
     *
     * The corpus-statistic stages of the BATCH pipeline (rare-bigram
@@ -1495,9 +844,10 @@ object EventStream {
     * dup of anything already stored) and reconciles retroactive
     * removals in the nightly batch pass.
     *
-    * Commit shape: survivors first, funnel second, index tables last,
-    * ONE marker for all five writes — a crash anywhere leaves the batch
-    * unmarked and the replay's pre-clean removes every partial subdir.
+    * Commit shape: survivors first, funnel second, index tables last;
+    * the bands generation commits all four writes — a crash anywhere
+    * leaves the batch pending and the replay rewrites every table's
+    * generation.
     *
     * 100 TB shape: every stage is batch-scale (narrow maps + the
     * band-key equi-join probe into the stored index) — the corpus is
@@ -1508,20 +858,14 @@ object EventStream {
       funnelDir: String, indexDir: String, benchHashes: DataFrame,
       batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.{Curation, Dedup}
-    if (!plainMarkerApplied(spark, indexDir, batchId)) {
-      val shDir = s"$indexDir/shingles"
-      val bandsDir = s"$indexDir/bands"
-      val (outTree, funnelTree, shTree, bandsTree) =
-        (ensureLiveTree(spark, outDir), ensureLiveTree(spark, funnelDir),
-          ensureLiveTree(spark, shDir), ensureLiveTree(spark, bandsDir))
-      Seq(s"$outTree/b$batchId", s"$funnelTree/b$batchId",
-          s"$shTree/b$batchId", s"$bandsTree/b$batchId")
-        .foreach(d => StateFs.deleteRecursively(spark, d))
+    val shDir = s"$indexDir/shingles"
+    val bandsDir = s"$indexDir/bands"
+    if (appendFoldPending(spark, batchId, outDir, funnelDir, shDir, bandsDir)) {
       val b = batch.persist()
       val batchSh = Dedup.shingleDocs(b).persist()
       val batchBands = Dedup.bandIndex(batchSh).persist()
       try {
-        val removals = minhashProbeBatch(spark, indexDir, batchSh, batchBands)
+        val removals = minhashProbeBatch(spark, indexDir, batchSh, batchBands, batchId)
           .select(col("doc_b").alias("doc_id")).distinct()
         val contam = Curation.exactContamIdsOf(b, benchHashes)
         val keep = Curation.repetitionKeepOf(b)
@@ -1539,11 +883,11 @@ object EventStream {
             !col("is_bench") && !col("is_dup") && !col("is_contam") && col("q_keep"))
           .persist()
         try {
-          Curation.redactedSurvivorOutput(flagged.filter(col("kept")))
-            .write.mode("overwrite").parquet(s"$outTree/b$batchId")
+          writeAppend(spark, outDir, batchId,
+            Curation.redactedSurvivorOutput(flagged.filter(col("kept"))))
           def n(c: org.apache.spark.sql.Column, a: String) =
             count(when(c, lit(1))).alias(a)
-          flagged.agg(
+          writeAppend(spark, funnelDir, batchId, flagged.agg(
               count(lit(1)).alias("n_docs"),
               n(col("is_bench"), "n_benchmark"),
               n(col("is_dup"), "n_dedup_removed"),
@@ -1552,13 +896,9 @@ object EventStream {
               n(col("kept"), "n_final"))
             .select(lit(batchId).alias("batch_id"), col("n_docs"),
               col("n_benchmark"), col("n_dedup_removed"),
-              col("n_contaminated_exact"), col("n_quality_fail"), col("n_final"))
-            .write.mode("overwrite").parquet(s"$funnelTree/b$batchId")
-          batchSh.write.mode("overwrite").parquet(s"$shTree/b$batchId")
-          batchBands.write.mode("overwrite").parquet(s"$bandsTree/b$batchId")
-          Seq(outTree, funnelTree, shTree, bandsTree)
-            .foreach(t => writeTreeManifest(spark, t))
-          commitPlainMarker(spark, indexDir, batchId)
+              col("n_contaminated_exact"), col("n_quality_fail"), col("n_final")))
+          writeAppend(spark, shDir, batchId, batchSh)
+          writeAppend(spark, bandsDir, batchId, batchBands)
         } finally {
           flagged.unpersist()
           ()
@@ -1599,35 +939,24 @@ object EventStream {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         curationIngestFoldBatch(spark, outDir, funnelDir, indexDir,
           benchHashes, batch.toDF(), batchId)
-        autoCompactAfter.foreach { k =>
-          compactIfCrowded(spark, s"$indexDir/shingles", ingestShinglesSchema,
-            indexDir, k, requireSeed = true)
-          compactIfCrowded(spark, s"$indexDir/bands", ingestBandsSchema,
-            indexDir, k, requireSeed = true)
-          compactIfCrowded(spark, outDir, curationOutSchema, indexDir,
-            k, requireSeed = false)
-          compactIfCrowded(spark, funnelDir, curationFunnelSchema, indexDir,
-            k, requireSeed = false)
-          ()
-        }
-        expireKeepSnapshots.foreach { k =>
-          Seq(s"$indexDir/shingles", s"$indexDir/bands", outDir, funnelDir)
-            .foreach(d => expireSnapshots(spark, d, keepLast = k))
-        }
+        maintainAppendTables(spark, s"$indexDir/bands", autoCompactAfter,
+          expireKeepSnapshots)(s"$indexDir/shingles" -> ingestShinglesSchema,
+          s"$indexDir/bands" -> ingestBandsSchema, outDir -> curationOutSchema,
+          funnelDir -> curationFunnelSchema)
       }
       .start()
   }
 
   /** The common `foreachBatch` writer for every maintenance stream:
-    * AvailableNow trigger, optional DURABLE checkpoint. The batch
-    * markers alone guard REDELIVERY of an unchanged batchId↔files
+    * AvailableNow trigger, optional DURABLE checkpoint. The generation
+    * commits alone guard REDELIVERY of an unchanged batchId↔files
     * mapping (Spark's retry-within-a-run, or a restart over the same
     * file set); they cannot guard a checkpoint-less restart that sees
     * NEW files, because the file source then re-batches everything and
-    * a marked batchId may swallow never-processed files. Pass
+    * an applied batchId may swallow never-processed files. Pass
     * `checkpointDir` for cross-restart exactly-once — the checkpoint
-    * pins the batchId↔files mapping, and the markers close the
-    * commit-vs-checkpoint race per batch.
+    * pins the batchId↔files mapping, and the generation commits close
+    * the commit-vs-checkpoint race per batch.
     */
   private def maintenanceWriter(stream: DataFrame,
       checkpointDir: Option[String]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -1636,111 +965,6 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
     w
-  }
-
-  /** Batch marker files — the idempotence tokens, kept in their OWN
-    * directory (`stateDir/_batches/{batchId}`), never inside the data
-    * they vouch for: compaction and erasure rewrite data but must never
-    * delete the evidence a batch was applied. A marker is written
-    * strictly AFTER its batch's parquet commit. All marker helpers here
-    * go through the Hadoop `FileSystem` API ([[StateFs]]), so the
-    * listings and markers run unchanged on HDFS or an object store.
-    */
-  private def markerNames(spark: SparkSession, stateDir: String): Seq[String] =
-    StateFs.list(spark, s"$stateDir/_batches")
-
-  /** Plain batchId markers for the published-tree tables (the
-    * append-only index and output tables). A batch below the
-    * VACUUM HORIZON counts as applied without its marker file:
-    * [[vacuumPlainMarkers]] records the horizon before
-    * deleting the evidence, so a vacuumed batch still no-ops on a
-    * (contract-impossible, but defended) replay, and compaction still
-    * folds its subdirs instead of mistaking them for crashed writes.
-    */
-  private def plainMarkerApplied(spark: SparkSession, stateDir: String,
-      batchId: Long): Boolean =
-    batchId < vacuumedHorizon(spark, stateDir) ||
-      StateFs.exists(spark, s"$stateDir/_batches/$batchId")
-
-  /** The highest marker-vacuum horizon recorded so far (0 = none):
-    * every batchId strictly below it was once marker-applied. The
-    * horizon value lives in the marker FILE NAME (`_horizon_{v}`,
-    * content empty), never in file content: a content-bearing record
-    * would be written by create-truncate-write, and a crash mid-write
-    * after earlier markers were already vacuumed leaves an empty or
-    * prefix-truncated value — compaction would then drop committed,
-    * applied batches as crashed writes (permanent loss) or every fold
-    * would die parsing it. A name-encoded marker is created in ONE
-    * atomic operation on any store (local, HDFS, S3-likes), so a crash
-    * anywhere leaves at worst the PREVIOUS horizon visible — never a
-    * torn one. Multiple markers (crash between create and the
-    * old-marker cleanup) resolve by max. A `_horizon*` entry whose name
-    * does not parse is evidence of outside interference and fails with
-    * a named error instead of a NumberFormatException deep in a fold.
-    */
-  private def vacuumedHorizon(spark: SparkSession, stateDir: String): Long = {
-    val hs = markerNames(spark, stateDir).filter(_.startsWith("_horizon"))
-    hs.map {
-      case horizonName(v) => v.toLong
-      case "_horizon" => throw new IllegalStateException(
-        s"$stateDir/_batches/_horizon is the pre-r16 CONTENT-bearing horizon " +
-          "record; this build records the value in the marker NAME. Migrate " +
-          "by creating _horizon_<its value> beside it and deleting _horizon")
-      case bad => throw new IllegalStateException(
-        s"unparseable vacuum-horizon marker '$bad' under $stateDir/_batches — " +
-          "expected _horizon_<batchId>; refusing to guess which batches were vacuumed")
-    }.reduceOption(_ max _).getOrElse(0L)
-  }
-
-  private val horizonName = "_horizon_(\\d+)".r
-
-  private def commitPlainMarker(spark: SparkSession, stateDir: String,
-      batchId: Long): Unit =
-    StateFs.touch(spark, s"$stateDir/_batches/$batchId")
-
-  /** VACUUM plain batch markers strictly below `horizonBatchId` — the
-    * retention half of the marker story: a long-running stream otherwise
-    * accumulates one marker file per micro-batch forever, and at one
-    * batch a minute that is the `_batches` listing cost after a year,
-    * not the data. CONTRACT (the caller asserts it, the code cannot):
-    * `horizonBatchId` must be ≤ the last batchId COMMITTED to the
-    * stream's durable checkpoint + 1 — the checkpoint guarantees those
-    * batchIds can never be re-delivered, so their idempotence evidence
-    * is dead weight. Without a durable checkpoint there is NO safe
-    * horizon: the markers are then the only replay guard
-    * ([[maintenanceWriter]]'s contract). Versioned state tables keep no
-    * plain markers: their generation commits are the replay evidence
-    * ([[versionedFold]]). The horizon itself is RECORDED (a
-    * name-encoded `_batches/_horizon_<v>` marker, created before any
-    * deletion — see [[vacuumedHorizon]]) and
-    * [[plainMarkerApplied]] honors it, so index compaction still folds
-    * a vacuumed batch's subdirs as applied history instead of
-    * mistaking them for crashed writes and dropping them — the
-    * vacuum-then-compact composition loses nothing. Returns the
-    * vacuumed batch ids.
-    */
-  def vacuumPlainMarkers(spark: SparkSession, stateDir: String,
-      horizonBatchId: Long): Seq[Long] = {
-    // record the horizon BEFORE deleting the per-batch evidence — a
-    // crash between the two leaves both forms of evidence, never
-    // neither; the horizon is monotone (a lower re-run must not
-    // resurrect vacuumed batches as "unapplied"). The new name-encoded
-    // marker is created first, superseded markers are deleted after —
-    // see [[vacuumedHorizon]] for why the value rides the name.
-    val prior = vacuumedHorizon(spark, stateDir)
-    val horizon = math.max(horizonBatchId, prior)
-    if (horizon > prior)
-      StateFs.touch(spark, s"$stateDir/_batches/_horizon_$horizon")
-    markerNames(spark, stateDir).foreach {
-      case horizonName(v) if v.toLong < horizon =>
-        StateFs.deleteRecursively(spark, s"$stateDir/_batches/_horizon_$v")
-      case _ => ()
-    }
-    val drop = markerNames(spark, stateDir)
-      .filter(_.matches("\\d+")).map(_.toLong)
-      .filter(_ < horizon).sorted
-    drop.foreach(id => StateFs.deleteRecursively(spark, s"$stateDir/_batches/$id"))
-    drop
   }
 
   /** Bucket count of every versioned state table — small because the
@@ -1768,80 +992,140 @@ object EventStream {
     df.select(stateBucketOf(col(keyCol))).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
 
-  /** VERSIONED (copy-on-write) BUCKETED STATE — the one layout of every
-    * keyed maintained table: totals, term-stats, the SCD2 interval
-    * history (its append stream, as-of fold and corrections), the
-    * [[forgetKeys]] row state and the OLS sums. A table is a log of
-    * bucket GENERATIONS, and no file is ever rewritten in place:
+  /** ONE VERSIONED LOG FOR EVERY MAINTAINED TABLE. A table is a log of
+    * copy-on-write GENERATIONS under `<table>/state/`, and no file is
+    * ever rewritten in place. Two table shapes share it:
     *
-    *   `state/seed/bucket=k/…`        (the seeded baseline, generation −1)
-    *   `state/g{batchId}/bucket=k/…`  (a fold: only the buckets it touched)
-    *   `state/f{batchId}/bucket=k/…`  (a forget: only the buckets it rewrote)
+    *   `seed/`                  the seeded baseline (covers batch −1)
+    *   KEYED tables — totals, term-stats, the SCD2 interval history (its
+    *   append stream, as-of fold and corrections), the [[forgetKeys]] row
+    *   state and the OLS sums — bucketed by key (`bucket=k/`):
+    *   `g{batchId}/bucket=k/…`  a fold: only the buckets it touched
+    *   `f{batchId}/bucket=k/…`  a forget: only the buckets it rewrote
+    *   APPEND tables — the tf, positions, chunk, winnowing, MinHash,
+    *   pHash, ANN and cluster indexes and the ingest output tables — as
+    *   whole-table generations:
+    *   `a{batchId}/…`           one batch's rows, appended
+    *   `r{v}_{t}/…`             rewrite number `v` (compaction or
+    *                            erasure) of everything through batch `t`
     *
-    * A read resolves, PER BUCKET, the newest committed generation — the
-    * live read the newest overall, an as-of read the newest with
-    * `batchId <= asOf`. Untouched buckets are never copied (their
-    * generation keeps serving, byte-identical across any number of
-    * commits — spec'd), so time travel costs one generation per TOUCHED
-    * bucket per batch: the write volume a partial rewrite pays anyway.
-    * "What did the state look like before tonight's batch" — the
-    * question an in-place MERGE destroys — becomes a listing filter.
+    * ONE serving rule ([[servingOf]]), per bucket (an append table is
+    * one bucket): the newest REPLACING generation covering at most the
+    * read's batch — keyed generations ordered by batch id, rewrites by
+    * the sequence the log assigns them — plus every APPEND generation
+    * above the batch it covers. The live read takes the newest overall,
+    * an as-of read the newest with `batch <= asOf`. Untouched buckets
+    * are never copied (their generation keeps serving, byte-identical
+    * across any number of commits — spec'd), so time travel costs one
+    * generation per TOUCHED bucket per batch. "What did the state look
+    * like before tonight's batch" — the question an in-place MERGE
+    * destroys — becomes a listing filter.
     *
-    * Every change goes through one of two bodies. [[versionedFold]]
-    * reads the touched buckets as of the previous batch, merges, and
-    * writes `g{batchId}`; the generation's root `_SUCCESS` is both the
-    * batch's commit and its idempotence evidence (a replay skips on it; a
-    * crashed fold leaves an uncommitted dir every reader ignores and the
-    * replay overwrites wholesale). [[versionedForget]] writes the same
-    * way into `f{batchId}`, then expires history below itself and sweeps
-    * emptied buckets — the rule for every generation that can REMOVE
-    * keys, because a removal is only complete once no older version can
-    * serve it. This is a table format's snapshot-per-commit contract
-    * (Delta Lake, Armbrust et al., VLDB 2020) spelled at the bucket
-    * grain.
+    * A generation's root `_SUCCESS` is both its commit and the batch's
+    * replay evidence: a crashed write leaves an uncommitted dir every
+    * reader ignores and the replay overwrites wholesale. Keyed changes go
+    * through [[versionedFold]] and [[versionedForget]], append tables
+    * through [[appendFoldPending]] / [[writeAppend]] and one rewrite body
+    * ([[rewriteAppendTable]]); every fold reads the stored state AS OF
+    * the previous batch, so its own crashed leftovers are never probed
+    * as history. Every change that can REMOVE rows (a forget, an erasing
+    * rewrite) then expires the history below itself
+    * ([[expireVersionedGenerations]]): a removal is only complete once
+    * no older version can serve it. This is a table format's
+    * snapshot-per-commit contract (Delta Lake, Armbrust et al., VLDB
+    * 2020).
     *
-    * Resolution cost: one listing per generation (bounded by retention,
-    * [[expireVersionedGenerations]]) — driver-side and metadata-sized,
-    * cut to one listing plus one file read by the versioned manifest
+    * Resolution cost: one listing plus one `_SUCCESS` probe per
+    * generation (bounded by retention) — driver-side and metadata-sized,
+    * cut to one listing plus one file read by the manifest
     * ([[writeVersionedManifest]]).
     */
   private def versionedStatePath(stateDir: String): String = s"$stateDir/state"
 
-  private val versionedGenName = "([gf])(\\d+)".r
+  /** Batch-keyed generations: keyed folds and forgets, batch appends. */
+  private val versionedGenName = "([gfa])(\\d+)".r
 
-  /** A generation dir's batch id; the seed precedes every batch (−1). */
+  /** Append-table rewrites: log sequence `v`, covering batches through `t`. */
+  private val rewriteGenName = "r(\\d+)_(-?\\d+)".r
+
+  /** The batch a generation covers through; the seed precedes every
+    * batch (−1).
+    */
   private def genId(gen: String): Long = gen match {
     case versionedGenName(_, id) => id.toLong
+    case rewriteGenName(_, through) => through.toLong
     case _ => -1L
   }
 
-  /** Committed generation dirs of a versioned state table (`seed`,
-    * `g{k}`, `f{k}`), ascending by batch id.
+  /** Log order among replacing generations: batch id, or a rewrite's
+    * sequence (the seed precedes both).
+    */
+  private def genOrder(gen: String): (Long, String) = gen match {
+    case rewriteGenName(v, _) => (v.toLong, gen)
+    case _ => (genId(gen), gen)
+  }
+
+  private def isAppendGen(gen: String): Boolean = gen.startsWith("a")
+
+  private def isBaseGen(gen: String): Boolean = gen match {
+    case "seed" | rewriteGenName(_, _) => true
+    case _ => false
+  }
+
+  /** The pseudo-bucket of a whole-table generation. */
+  private val WholeTable = -1
+
+  /** Committed generation dirs of a table, in log order. A table dir
+    * with none is checked for the retired published-tree layout
+    * ([[requireNoTrees]]), so such a dir is refused by name rather than
+    * read as an empty or unseeded table.
     */
   private def versionedCommittedGens(spark: SparkSession,
       stateDir: String): Seq[String] = {
     val base = versionedStatePath(stateDir)
-    StateFs.list(spark, base)
-      .filter { case "seed" | versionedGenName(_, _) => true; case _ => false }
+    val gens = StateFs.list(spark, base)
+      .filter { case "seed" | versionedGenName(_, _) | rewriteGenName(_, _) => true
+                case _ => false }
       .filter(g => StateFs.exists(spark, s"$base/$g/_SUCCESS"))
-      .sortBy(g => (genId(g), g))
+      .sortBy(genOrder)
+    if (gens.isEmpty) requireNoTrees(spark, stateDir)
+    gens
+  }
+
+  /** The one guard against the retired published-tree layout: a table
+    * dir holding its numbered `t{n}` tree dirs fails naming the dir —
+    * never served as an empty table beside state the log cannot see.
+    */
+  private def requireNoTrees(spark: SparkSession, dir: String): Unit = {
+    val trees = StateFs.list(spark, dir).filter(_.matches("t\\d+"))
+    require(trees.isEmpty,
+      s"$dir holds published-tree entries (${trees.mkString(", ")}) of the " +
+        "retired snapshot-pointer layout — refusing to read them as an empty " +
+        "table. Re-seed the table into a fresh dir")
   }
 
   private def versionedGenPath(stateDir: String, gen: String): String =
     s"${versionedStatePath(stateDir)}/$gen"
 
-  /** The bucket partitions one generation dir holds, ascending. */
+  /** The bucket partitions one generation dir holds, ascending; an
+    * append or rewrite generation, and a seed without bucket partitions,
+    * is one [[WholeTable]] bucket.
+    */
   private def genBuckets(spark: SparkSession, stateDir: String,
-      gen: String): Seq[Int] =
-    StateFs.list(spark, versionedGenPath(stateDir, gen))
-      .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }.sorted
+      gen: String): Seq[Int] = gen match {
+    case versionedGenName("a", _) | rewriteGenName(_, _) => Seq(WholeTable)
+    case _ =>
+      val buckets = StateFs.list(spark, versionedGenPath(stateDir, gen))
+        .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }.sorted
+      if (buckets.isEmpty && gen == "seed") Seq(WholeTable) else buckets
+  }
 
   private val expiredThroughName = "_expired_through_(-?\\d+)".r
 
   /** The retention horizon recorded by [[expireVersionedGenerations]]
-    * (name-encoded — the `_horizon_<v>` torn-write reasoning). As-of
-    * reads strictly below it fail loudly: the bucket versions that
-    * window needed were expired. Long.MinValue = nothing expired.
+    * (name-encoded: a content-bearing record could tear). As-of reads
+    * strictly below it fail loudly: the generations that window needed
+    * were expired. Long.MinValue = nothing expired.
     */
   private[graft] def versionedExpiredThrough(spark: SparkSession,
       stateDir: String): Long =
@@ -1849,17 +1133,25 @@ object EventStream {
       .collect { case expiredThroughName(v) => v.toLong }
       .reduceOption(_ max _).getOrElse(Long.MinValue)
 
-  /** Later-generations-win-per-bucket serving map over a
-    * (generation → buckets) inventory — ONE resolution rule for the
-    * listing-derived and manifest-derived paths.
+  /** THE serving rule of the log, over a (generation → buckets)
+    * inventory — ONE resolution for the listing-derived and
+    * manifest-derived paths, keyed and append tables alike. Per bucket:
+    * the newest replacing generation ([[genOrder]]) covering at most
+    * `asOf`, plus every append generation above the batch it covers and
+    * at most `asOf`.
     */
   private def servingOf(gens: Seq[(String, Seq[Int])],
       asOf: Option[Long]): Map[String, Seq[Int]] = {
-    val bucketGen = scala.collection.mutable.Map.empty[Int, String]
-    gens.filter { case (g, _) => asOf.forall(genId(g) <= _) }
-      .sortBy { case (g, _) => (genId(g), g) }
-      .foreach { case (g, bs) => bs.foreach(b => bucketGen(b) = g) }
-    bucketGen.toSeq.groupBy(_._2).map { case (g, bs) => g -> bs.map(_._1).sorted }
+    val bound = asOf.getOrElse(Long.MaxValue)
+    gens.flatMap { case (g, bs) => bs.map(_ -> g) }.groupBy(_._1).toSeq
+      .flatMap { case (b, held) =>
+        val (appends, replacing) = held.map(_._2).partition(isAppendGen)
+        val base = replacing.filter(genId(_) <= bound).sortBy(genOrder).lastOption
+        val from = base.fold(Long.MinValue)(genId)
+        (base.toSeq ++ appends.filter(a => genId(a) > from && genId(a) <= bound))
+          .map(_ -> b)
+      }
+      .groupBy(_._1).map { case (g, bs) => g -> bs.map(_._2).sorted }
   }
 
   private def requireAboveHorizon(asOf: Option[Long], horizon: Long,
@@ -1867,64 +1159,68 @@ object EventStream {
     asOf.foreach { bound =>
       require(bound >= horizon,
         s"as-of batch $bound predates the retention horizon $horizon of " +
-          s"$stateDir — the bucket generations that window needed were " +
-          "expired (expireVersionedGenerations). Rebuild from raw history; " +
-          "refusing to serve a silently-partial view")
+          s"$stateDir — no retained snapshot covers it: the generations that " +
+          "window needed were expired (expireVersionedGenerations). Rebuild " +
+          "from raw history; refusing to serve a silently-partial view")
     }
 
   /** Per-bucket serving map as of `asOf` (None = live), from the
-    * AUTHORITATIVE listings: one list per generation — the metadata
-    * cost the versioned manifest exists to bound. A state dir with no
-    * committed seed, no committed generation and no expiry horizon is
-    * missing or was never seeded, and fails naming `stateDir` — an empty
-    * serving map there would read as a silently empty table. A seed of
-    * zero rows still commits `seed/_SUCCESS`, and a table an erasure
-    * emptied keeps its `_expired_through_` marker, so both read as empty.
+    * AUTHORITATIVE listings — the metadata cost the manifest exists to
+    * bound. A keyed (`seeded`) state dir with no committed generation and
+    * no expiry horizon is missing or was never seeded, and fails naming
+    * `stateDir` — an empty serving map there would read as a silently
+    * empty table. A seed of zero rows still commits `seed/_SUCCESS`, and
+    * a table an erasure emptied keeps its `_expired_through_` marker, so
+    * both read as empty. An append table that was never written (an
+    * output table before its first batch) reads empty.
     */
   private def versionedServingGens(spark: SparkSession, stateDir: String,
-      asOf: Option[Long]): Map[String, Seq[Int]] = {
+      asOf: Option[Long], seeded: Boolean): Map[String, Seq[Int]] = {
     val horizon = versionedExpiredThrough(spark, stateDir)
     requireAboveHorizon(asOf, horizon, stateDir)
     val committed = versionedCommittedGens(spark, stateDir)
-    require(committed.nonEmpty || horizon > Long.MinValue,
+    require(committed.nonEmpty || horizon > Long.MinValue || !seeded,
       s"no committed versioned state under $stateDir: neither " +
         "state/seed/_SUCCESS nor a committed state/g<batchId> generation " +
         "exists — seed it first (seedVersionedState)")
     servingOf(committed.map(g => g -> genBuckets(spark, stateDir, g)), asOf)
   }
 
-  /** MANIFEST FOR THE VERSIONED LAYOUT — the tree-manifest discipline
-    * applied to generation resolution: `state/_vmanifest_<seq>` records
-    * the retention horizon plus every committed generation with its
-    * bucket list (`#end`-terminated, seq-numbered supersede-don't-
-    * overwrite), so a read resolves its serving map from ONE listing +
-    * ONE file read instead of one listing PER generation. A seed or fold
-    * generation is recorded by its batch id (−1 = the seed), a forget
-    * generation by its dir name (`f{k}`).
+  /** MANIFEST OF THE LOG — `state/_vmanifest_<seq>` records the
+    * retention horizon plus every committed generation with its bucket
+    * list (`#end`-terminated, seq-numbered supersede-don't-overwrite), so
+    * a read resolves its serving map from ONE listing + ONE file read
+    * instead of one probe PER generation. A seed or keyed fold is
+    * recorded by its batch id (−1 = the seed), every other generation by
+    * its dir name (`f{k}`, `a{k}`, `r{v}_{t}`); a whole-table generation
+    * lists the one [[WholeTable]] bucket.
     *
     * CACHE semantics with a structural heal: the manifest is written
-    * from the authoritative listings after every seed, fold, forget and
-    * expiry. The one crash window — a generation's `_SUCCESS` landed,
-    * the manifest write didn't — cannot go stale-forever even though
-    * the generation dir doubles as the batch's idempotence marker: the
-    * replayed fold or forget SKIPS on the commit but first checks the
-    * manifest covers its generation and rewrites it when it doesn't (and
-    * any LATER commit rewrites it wholesale). Until healed, manifest
-    * readers serve the consistent PRE-batch snapshot — the generation
-    * behaves as committed-but-unpublished, exactly a snapshot-pointer's
-    * unpublished tree. Readers fall back to the listings when the
-    * manifest is absent, torn, or points at an expired generation (the
-    * read throws at file-index construction and retries — never a
-    * partial view); a too-low recorded horizon converges the same way
-    * (phantom paths → listing path → its own loud horizon check).
+    * from the authoritative listings after every seed, fold, append,
+    * forget, rewrite and expiry. The one crash window — a generation's
+    * `_SUCCESS` landed, the manifest write didn't — cannot go
+    * stale-forever even though the generation dir doubles as the batch's
+    * idempotence marker: the replayed fold or forget SKIPS on the commit
+    * but first checks the manifest covers its generation and rewrites it
+    * when it doesn't (and any LATER commit rewrites it wholesale). Until
+    * healed, manifest readers serve the consistent PRE-batch snapshot.
+    * Readers fall back to the listings when the manifest is absent,
+    * torn, or points at an expired generation (the read throws at
+    * file-index construction and retries — never a partial view, and a
+    * fallback that finds nothing left to serve rethrows rather than
+    * serve an empty table); a too-low recorded horizon converges the
+    * same way (phantom paths → listing path → its own loud horizon
+    * check).
     */
   private val vManifestName = "_vmanifest_(\\d+)".r
 
-  private def manifestToken(gen: String): String =
-    if (gen.startsWith("f")) gen else genId(gen).toString
+  private def manifestToken(gen: String): String = gen match {
+    case "seed" | versionedGenName("g", _) => genId(gen).toString
+    case _ => gen
+  }
 
   private def genOfToken(token: String): String = token match {
-    case versionedGenName("f", _) => token
+    case versionedGenName(_, _) | rewriteGenName(_, _) => token
     case _ => if (token.toLong == -1L) "seed" else s"g${token.toLong}"
   }
 
@@ -1990,36 +1286,43 @@ object EventStream {
       }.nextOption()
   }
 
-  /** Read a versioned state table as of `asOf` (None = live): one
-    * partition-pruned read per serving generation, unioned — each
-    * bucket's rows come from exactly its serving generation. Serving
-    * resolution is manifest-first with listing fallback (see
+  /** Read a table of the log as of `asOf` (None = live). Whole-table
+    * serving generations are ONE multi-path parquet scan (an append
+    * table's seed or rewrite plus its appends — the probe every fold
+    * runs per batch); each bucketed generation is one partition-pruned
+    * read of exactly the buckets it serves, unioned. Serving resolution
+    * is manifest-first with listing fallback (see
     * [[writeVersionedManifest]]; a manifest listing no generation defers
     * to the listings); the loud below-horizon failure propagates from
     * EITHER path, the unseeded-state failure from the listings
     * ([[versionedServingGens]]).
     */
   private def versionedStateRead(spark: SparkSession, stateDir: String,
-      schema: StructType, asOf: Option[Long]): DataFrame = {
-    def build(serving: Map[String, Seq[Int]]): DataFrame =
-      if (serving.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        serving.toSeq.sortBy { case (g, _) => (genId(g), g) }.map { case (g, buckets) =>
+      schema: StructType, asOf: Option[Long], seeded: Boolean = true): DataFrame = {
+    def build(serving: Map[String, Seq[Int]]): DataFrame = {
+      val (whole, bucketed) = serving.toSeq.sortBy(s => genOrder(s._1))
+        .partition(_._2 == Seq(WholeTable))
+      val scans = Seq(whole.map(w => versionedGenPath(stateDir, w._1)))
+        .filter(_.nonEmpty).map(paths => spark.read.schema(schema).parquet(paths: _*)) ++
+        bucketed.map { case (g, buckets) =>
           spark.read.schema(schema).parquet(versionedGenPath(stateDir, g))
             .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-        }.reduce(_.unionByName(_))
+        }
+      scans.reduceOption(_.unionByName(_)).getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+    }
     versionedManifestOpt(spark, stateDir) match {
       case Some((horizon, gens)) if gens.nonEmpty =>
         requireAboveHorizon(asOf, horizon, stateDir)
         try build(servingOf(gens, asOf))
         catch {
-          case _: org.apache.spark.sql.AnalysisException =>
-            build(versionedServingGens(spark, stateDir, asOf))
+          case e: org.apache.spark.sql.AnalysisException =>
+            val listed = versionedServingGens(spark, stateDir, asOf, seeded)
+            if (listed.isEmpty) throw e
+            build(listed)
         }
       case _ =>
-        build(versionedServingGens(spark, stateDir, asOf))
+        build(versionedServingGens(spark, stateDir, asOf, seeded))
     }
   }
 
@@ -2220,8 +1523,7 @@ object EventStream {
   /** TIME TRAVEL on the versioned totals state: the table exactly as a
     * live read served it the moment batch `asOfBatch` committed
     * (−1 = the seeded baseline). A listing filter over bucket
-    * generations — zero data copy, the [[batchDirsReadAsOf]] claim on
-    * the partial-rewrite tier.
+    * generations — zero data copy.
     */
   def totalsVersionedReadAsOf(spark: SparkSession, stateDir: String,
       asOfBatch: Long): DataFrame =
@@ -2291,18 +1593,18 @@ object EventStream {
       scd2FoldBatchVersioned(ordersStream.sparkSession, stateDir, schema, _, _))
   }
 
-  /** RETENTION for the versioned layout — the explicit expiry half
-    * (the [[expireSnapshots]] discipline at the bucket-generation
-    * grain): keep every generation a read at or after `keepAsOfFrom`
-    * can resolve — for each bucket, all generations above the horizon
-    * plus its newest generation at-or-below it — and delete the rest
-    * (the superseded bucket versions only time travel below the horizon
-    * needed). The horizon is recorded FIRST (name-encoded marker, the
-    * `_horizon_<v>` torn-write reasoning, monotone), so an as-of read
+  /** RETENTION for the log — keep every generation a read at or after
+    * `keepAsOfFrom` can resolve: what [[servingOf]] serves at the horizon
+    * plus everything covering a later batch, per bucket — and delete the
+    * rest (a superseded bucket version, an older rewrite and the appends
+    * it folded, which only time travel below the horizon needed). The
+    * horizon is recorded FIRST (a name-encoded `_expired_through_<h>`
+    * marker — the value rides the name because a content-bearing record
+    * can tear between create and write; monotone), so an as-of read
     * below it fails loudly ([[versionedServingGens]]) instead of
     * resolving a silently-partial view; reads at or above the horizon
-    * are untouched by construction. Returns the deleted
-    * (generation, bucket) partition dirs.
+    * are untouched by construction. Returns the deleted bucket partition
+    * and whole-table generation dirs.
     */
   def expireVersionedGenerations(spark: SparkSession, stateDir: String,
       keepAsOfFrom: Long): Seq[String] = {
@@ -2316,21 +1618,18 @@ object EventStream {
         StateFs.deleteFile(spark, s"$base/_expired_through_$v")
       case _ => ()
     }
-    val byBucket = scala.collection.mutable.Map.empty[Int, List[String]]
-    versionedCommittedGens(spark, stateDir).foreach { g =>
-      genBuckets(spark, stateDir, g)
-        .foreach(b => byBucket(b) = g :: byBucket.getOrElse(b, Nil))
-    }
-    val dropped = byBucket.toSeq.sortBy(_._1).flatMap { case (b, gensDesc) =>
-      // gensDesc is newest-first; keep everything above the horizon and
-      // the newest at-or-below it — the serving gen of every retained
-      // as-of window
-      gensDesc.filter(genId(_) <= horizon).drop(1).map { g =>
-        val dir = s"${versionedGenPath(stateDir, g)}/bucket=$b"
+    val inventory = versionedCommittedGens(spark, stateDir)
+      .map(g => g -> genBuckets(spark, stateDir, g))
+    val kept = servingOf(inventory, Some(horizon)).toSeq
+      .flatMap { case (g, bs) => bs.map(g -> _) }.toSet
+    val dropped = inventory.filter { case (g, _) => genId(g) <= horizon }
+      .flatMap { case (g, bs) => bs.filterNot(b => kept((g, b))).map(g -> _) }
+      .map { case (g, b) =>
+        val dir = if (b == WholeTable) versionedGenPath(stateDir, g)
+          else s"${versionedGenPath(stateDir, g)}/bucket=$b"
         StateFs.deleteRecursively(spark, dir)
         dir
       }
-    }
     dropFoldHusks(spark, stateDir)
     // the manifest reflects the post-expiry inventory + horizon (crash
     // before this line: the stale manifest lists expired paths — reads
@@ -2349,6 +1648,203 @@ object EventStream {
     versionedCommittedGens(spark, stateDir)
       .filter(g => g.startsWith("g") && genBuckets(spark, stateDir, g).isEmpty)
       .foreach(g => StateFs.deleteRecursively(spark, versionedGenPath(stateDir, g)))
+
+  /** An APPEND table of the log, live or as of batch `asOf`: its newest
+    * seed or rewrite plus every append above it, ONE parquet scan. A
+    * table that was never written (an output table before its first
+    * batch) reads empty.
+    */
+  private def appendRead(spark: SparkSession, dir: String, schema: StructType,
+      asOf: Option[Long] = None): DataFrame =
+    versionedStateRead(spark, dir, schema, asOf, seeded = false)
+
+  /** INCREMENTAL (change-data) read of an append table: the rows
+    * batches `fromExclusive+1 .. toInclusive` appended — what a
+    * downstream incremental consumer processes to catch up from
+    * snapshot `fromExclusive` to snapshot `toInclusive` without
+    * re-reading the table (a table format's incremental scan). The
+    * change set IS the append generations in the window: a listing
+    * filter, zero data copy. A compaction keeps the appends it folded,
+    * so the window's low edge need only be at or above the retention
+    * horizon — below it the evidence was expired and the read fails
+    * loudly; the consumer must fall back to a full as-of read.
+    */
+  private def appendChanges(spark: SparkSession, dir: String,
+      schema: StructType, fromExclusive: Long, toInclusive: Long): DataFrame = {
+    requireAboveHorizon(Some(fromExclusive), versionedExpiredThrough(spark, dir), dir)
+    val window = versionedCommittedGens(spark, dir).filter(g =>
+      isAppendGen(g) && genId(g) > fromExclusive && genId(g) <= toInclusive)
+    if (window.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(window.map(versionedGenPath(dir, _)): _*)
+  }
+
+  /** The newest batch an append table's log has applied: its newest
+    * append, or the batch its newest rewrite covers (Long.MinValue when
+    * neither exists).
+    */
+  private def appliedThrough(spark: SparkSession, dir: String): Long =
+    versionedCommittedGens(spark, dir)
+      .filter(g => isAppendGen(g) || isBaseGen(g)).map(genId)
+      .reduceOption(_ max _).getOrElse(Long.MinValue)
+
+  /** The replay gate of an append fold over `dirs`, written in that
+    * order: batch `batchId` is applied once the LAST table's append
+    * generation commits (or a rewrite of it covers the batch), so a fold
+    * that crashed after its first j generations replays whole — the
+    * replay overwrites them, and its reads as of `batchId − 1` never saw
+    * them. A replay of an applied batch heals the manifests and skips.
+    */
+  private def appendFoldPending(spark: SparkSession, batchId: Long,
+      dirs: String*): Boolean = {
+    val gens = versionedCommittedGens(spark, dirs.last)
+    val appended = gens.contains(s"a$batchId")
+    if (appended) dirs.foreach(d => healVersionedManifest(spark, d, s"a$batchId"))
+    !appended && !gens.exists(g => isBaseGen(g) && genId(g) >= batchId)
+  }
+
+  /** Write batch `batchId`'s rows as the table's append generation. */
+  private def writeAppend(spark: SparkSession, dir: String, batchId: Long,
+      rows: DataFrame): Unit = {
+    rows.write.mode("overwrite").parquet(versionedGenPath(dir, s"a$batchId"))
+    writeVersionedManifest(spark, dir)
+  }
+
+  /** Seed append tables from history, in order, unless the LAST one
+    * already holds a committed seed or rewrite — the guard that makes a
+    * seed-then-erase build idempotent across JVMs (an erased table is
+    * never re-seeded with pre-erasure rows), and a crash mid-seed
+    * re-seeds every table (overwrite). The ONE seed entry of every
+    * append index, the operator modules' one-shot stand-ins included.
+    */
+  private[graft] def seedAppendTables(spark: SparkSession,
+      tables: (String, DataFrame)*): Unit =
+    if (!versionedCommittedGens(spark, tables.last._1).exists(isBaseGen))
+      tables.foreach { case (dir, rows) =>
+        rows.write.mode("overwrite").parquet(versionedGenPath(dir, "seed"))
+        writeVersionedManifest(spark, dir)
+      }
+
+  /** THE REWRITE of an append table — the one body behind compaction
+    * (OPTIMIZE: a long-run stream otherwise accumulates one small-file
+    * generation per batch, and at 100 TB the per-batch file count — not
+    * the data — becomes the probe's cost) and erasure. It reads the
+    * serving generations (the newest seed or rewrite plus every append
+    * above it), passes them through `transform`, and commits them as
+    * rewrite `r{v}_{t}`: `v` is the next sequence of the table's log,
+    * `t` the newest batch it covers. Readers resolve the rewrite plus the
+    * appends above `t`, so rows are identical before and after a plain
+    * compaction (spec'd). The older generations stay readable as of
+    * their batches — the grace snapshots a table format keeps until
+    * retention expires them — except under `erase`, where the rewrite
+    * expires every generation below itself at once: they hold the
+    * forgotten rows. A compaction with no append above the newest
+    * rewrite has nothing to fold and writes nothing.
+    *
+    * Safety:
+    *  - a batch the stream will replay is never folded: when the table
+    *    holds an append above what `commitDir` (the table its fold
+    *    commits through) has applied, the rewrite fails loudly — let the
+    *    stream replay the batch, then re-run;
+    *  - two rewrite writers never both commit: each first creates the
+    *    sequence it claims, `_rewrite_{v}`, create-only, and a committed
+    *    rewrite keeps it. The loser fails loudly before writing and the
+    *    winner's table is intact. Because `v` is the base's sequence plus
+    *    one, a writer whose base went stale finds `v` taken and fails the
+    *    same way — there is no window between listing and claiming. A
+    *    cleanly failed writer releases its claim; one that crashed hard
+    *    leaves it, and later rewrites fail naming it until an operator
+    *    who has checked no writer is running deletes it (lease recovery
+    *    is an operator decision: a paused writer looks like a dead one);
+    *  - with `requireSeed` (the index tables, whose streams seed
+    *    history) a table without a committed seed fails loudly:
+    *    compacting it would commit an empty baseline and the seed guard
+    *    would then skip history seeding forever. Output tables start at
+    *    `a0`, and one that was never written is left alone.
+    *
+    * Run compaction on a QUIESCED stream (between runs, as the specs
+    * do), the contract a table format's OPTIMIZE has too.
+    */
+  private def rewriteAppendTable(spark: SparkSession, dir: String,
+      schema: StructType, commitDir: String, requireSeed: Boolean = false,
+      erase: Boolean = false)(transform: DataFrame => DataFrame = identity): Unit = {
+    val gens = versionedCommittedGens(spark, dir)
+    val base = gens.filter(isBaseGen).lastOption
+    require(!requireSeed || base.nonEmpty,
+      s"rewrite of $dir: no committed seed — an index table whose history " +
+        "seed never landed must be re-seeded, not compacted into an empty baseline")
+    val serving = appendServing(gens)
+    // a compaction with no append to fold is a no-op, like OPTIMIZE
+    if (erase && gens.nonEmpty || serving.exists(isAppendGen)) {
+      val applied = appliedThrough(spark, commitDir)
+      val pending = serving.filter(g => isAppendGen(g) && genId(g) > applied)
+      require(pending.isEmpty,
+        s"rewrite of $dir: ${pending.sorted.mkString(", ")} belong to batches " +
+          s"$commitDir has not committed — a fold the stream will replay. Let " +
+          "it replay, then re-run")
+      val v = base.fold(0L)(genOrder(_)._1 + 1)
+      val through = serving.map(genId).max
+      val claim = s"${versionedStatePath(dir)}/_rewrite_$v"
+      try StateFs.touchExclusive(spark, claim)
+      catch {
+        case e: IllegalStateException => throw new IllegalStateException(
+          s"rewrite $v of $dir is claimed by another writer ($claim): wait " +
+            "for it and re-run; if no writer is running it crashed — delete " +
+            "the claim and re-run", e)
+      }
+      try transform(spark.read.schema(schema)
+          .parquet(serving.map(versionedGenPath(dir, _)): _*))
+        .write.mode("overwrite").parquet(versionedGenPath(dir, s"r${v}_$through"))
+      catch {
+        case e: Throwable => StateFs.deleteFile(spark, claim); throw e
+      }
+      writeVersionedManifest(spark, dir)
+      if (erase) expireVersionedGenerations(spark, dir, through)
+    }
+  }
+
+  /** Whether more than `maxAppends` append generations serve above the
+    * table's newest seed or rewrite — the auto-compaction trigger.
+    */
+  private def crowded(spark: SparkSession, dir: String, maxAppends: Int): Boolean = {
+    require(maxAppends >= 1,
+      s"auto-compaction threshold must be >= 1, got $maxAppends")
+    appendServing(versionedCommittedGens(spark, dir)).count(isAppendGen) > maxAppends
+  }
+
+  /** The live serving generations of an append table's committed log. */
+  private def appendServing(gens: Seq[String]): Seq[String] =
+    servingOf(gens.map(_ -> Seq(WholeTable)), None).keys.toSeq
+
+  /** The two retention knobs of every append maintenance stream, run
+    * after each fold — the stream is its tables' only writer and sits
+    * between folds, so the rewrite's quiesced contract holds by
+    * construction. `autoCompactAfter = k` rewrites a table once more than
+    * `k` appends serve above its newest rewrite (at 100 TB the trigger is
+    * file-count pressure, not a calendar); `expireKeepSnapshots = k`
+    * keeps the `k` newest seeds and rewrites readable as of their
+    * batches and expires everything older
+    * ([[expireVersionedGenerations]] at the batch the `k`-th newest
+    * covers).
+    */
+  private def maintainAppendTables(spark: SparkSession, commitDir: String,
+      autoCompactAfter: Option[Int], expireKeepSnapshots: Option[Int])(
+      tables: (String, StructType)*): Unit = {
+    autoCompactAfter.foreach { k =>
+      tables.foreach { case (dir, schema) =>
+        if (crowded(spark, dir, k)) rewriteAppendTable(spark, dir, schema, commitDir)()
+      }
+    }
+    expireKeepSnapshots.foreach { k =>
+      require(k >= 1, s"expireKeepSnapshots must be >= 1 (the newest rewrite " +
+        s"always serves), got $k")
+      tables.foreach { case (dir, _) =>
+        val bases = versionedCommittedGens(spark, dir).filter(isBaseGen)
+        if (bases.size > k)
+          expireVersionedGenerations(spark, dir, genId(bases(bases.size - k)))
+      }
+    }
+  }
 
   /** RIGHT-TO-BE-FORGOTTEN DELETE PROPAGATION over a versioned keyed
     * table — the privacy-erasure pass every lakehouse deployment must run
@@ -2579,61 +2075,60 @@ object EventStream {
     StructField("tf", LongType)))
 
   /** The maintained token-cache (tf) index on disk — the read side of
-    * [[tfIndexMaintenanceStream]] (seed + committed per-batch subdirs).
+    * [[tfIndexMaintenanceStream]] (its seed plus every batch's append
+    * generation above the newest rewrite).
     */
   def tfIndexRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/tf", tfIndexSchema)
+    appendRead(spark, s"$indexDir/tf", tfIndexSchema)
 
-  /** Time-travel read of the tf index ([[batchDirsReadAsOf]]). */
+  /** Time-travel read of the tf index ([[appendRead]] as of a batch). */
   def tfIndexReadAsOf(spark: SparkSession, indexDir: String,
       asOfBatch: Long): DataFrame =
-    batchDirsReadAsOf(spark, s"$indexDir/tf", tfIndexSchema, asOfBatch)
+    appendRead(spark, s"$indexDir/tf", tfIndexSchema, Some(asOfBatch))
 
-  /** Incremental read of the tf index ([[batchDirsChanges]]). */
+  /** Incremental read of the tf index ([[appendChanges]]). */
   def tfIndexChanges(spark: SparkSession, indexDir: String,
       fromExclusive: Long, toInclusive: Long): DataFrame =
-    batchDirsChanges(spark, s"$indexDir/tf", tfIndexSchema,
+    appendChanges(spark, s"$indexDir/tf", tfIndexSchema,
       fromExclusive, toInclusive)
 
-  /** Compact the tf index's per-batch subdirs — same marker gating,
-    * publish protocol, and quiesced-stream contract as
-    * [[compactBatchDirs]].
+  /** Compact the tf index's append generations into one rewrite — the
+    * quiesced-stream contract of [[rewriteAppendTable]].
     */
-  def compactTfIndex(spark: SparkSession, indexDir: String): Unit =
-    compactBatchDirs(spark, s"$indexDir/tf", tfIndexSchema, indexDir,
-      requireSeed = true)
+  def compactTfIndex(spark: SparkSession, indexDir: String): Unit = {
+    val tfDir = s"$indexDir/tf"
+    rewriteAppendTable(spark, tfDir, tfIndexSchema, tfDir, requireSeed = true)()
+  }
 
   /** RIGHT-TO-BE-FORGOTTEN over the maintained tf INDEX — the retrieval
     * half of the erasure story beside the dimension-row half
     * ([[forgetKeys]]) and the statistics half
     * ([[graft.operators.TextAnalysis.dfForgetDocs]]): every
     * (doc_id, term, tf) row of the forgotten documents leaves the served
-    * token cache by ERASURE-AS-COMPACTION — the committed tree is read,
-    * anti-joined against the delete list, and published as a new tree
-    * through [[compactBatchDirs]]' snapshot-pointer protocol. The
-    * protocol matters more here than for plain compaction: a per-subdir
-    * `mode(overwrite)` rewrite deletes the target at job START, so a
-    * crash mid-write would destroy the only copy of the NON-forgotten
-    * rows in that subdir — the publish never touches the live tree
-    * until the replacement has committed. Unlike plain compaction the
-    * superseded tree is vacuumed IMMEDIATELY (`vacuumSuperseded`): it
-    * holds the forgotten rows, and a grace snapshot would defeat the
-    * deletion.
+    * token cache by ERASURE-AS-REWRITE — the serving generations are
+    * read, anti-joined against the delete list, and committed as a new
+    * rewrite ([[rewriteAppendTable]]). Copy-on-write matters more here
+    * than for plain compaction: an in-place `mode(overwrite)` rewrite
+    * deletes the target at job START, so a crash mid-write would destroy
+    * the only copy of the NON-forgotten rows — the rewrite never touches
+    * the generations it reads until it has committed. Unlike plain
+    * compaction every older generation is expired IMMEDIATELY: they hold
+    * the forgotten rows, and a grace snapshot would defeat the deletion.
     *
     * The quiesced contract is load-bearing beyond the compaction
-    * reason: an unmarked subdir pending replay is dropped here and
-    * would be REGENERATED WITH the forgotten docs by the checkpointed
-    * batch — quiesce (all markers landed) before erasing, and re-run
-    * the erasure after any replay (erasure jobs run until success by
-    * regulation anyway). Serving parity after erasure — BM25 over the
-    * erased index ≡ the batch query over the surviving documents — is
-    * spec'd in StreamingSpec.
+    * reason: a batch the stream will replay is REGENERATED WITH the
+    * forgotten docs by the checkpointed batch — so an erasure refuses a
+    * table holding a batch its fold has not finished committing, and
+    * must be re-run after any later replay (erasure jobs run until
+    * success by regulation anyway). Serving parity after erasure — BM25
+    * over the erased index ≡ the batch query over the surviving
+    * documents — is spec'd in StreamingSpec.
     */
   def forgetDocsFromTfIndex(spark: SparkSession, indexDir: String,
       docs: DataFrame): Unit =
     withForgetList(docs, "doc_id") { ids =>
-      eraseKeysFromTable(spark, s"$indexDir/tf", tfIndexSchema, indexDir,
-        ids, "doc_id")
+      val tfDir = s"$indexDir/tf"
+      eraseKeysFromTable(spark, tfDir, tfIndexSchema, tfDir, ids, "doc_id")
     }
 
   /** Checkpoint a delete list once (cast to the key type and
@@ -2651,17 +2146,15 @@ object EventStream {
     finally org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(ids)
   }
 
-  /** ONE erasure-as-compaction body for a single-key index table:
-    * anti-join the (single-column) delete list against `joinCol` and
-    * republish through the snapshot-pointer protocol with the
-    * superseded tree vacuumed (it holds the forgotten rows).
+  /** ONE erasure body for a single-key index table: anti-join the
+    * (single-column) delete list against `joinCol` in an erasing
+    * rewrite (every older generation holds the forgotten rows).
     */
   private def eraseKeysFromTable(spark: SparkSession, dir: String,
-      schema: StructType, markersRoot: String, ids: DataFrame,
+      schema: StructType, commitDir: String, ids: DataFrame,
       joinCol: String): Unit =
-    compactBatchDirs(spark, dir, schema, markersRoot,
-      _.join(ids.toDF(joinCol), Seq(joinCol), "left_anti"),
-      requireSeed = true, vacuumSuperseded = true)
+    rewriteAppendTable(spark, dir, schema, commitDir, requireSeed = true,
+      erase = true)(_.join(ids.toDF(joinCol), Seq(joinCol), "left_anti"))
 
   /** Pair-table erasure: a pair dies when EITHER endpoint is forgotten.
     * A pairs OUTPUT table that was never written (the stream seeded its
@@ -2671,30 +2164,27 @@ object EventStream {
     * and regulation-mandated retries would keep failing identically.
     */
   private def erasePairEndpoints(spark: SparkSession, pairsDir: String,
-      schema: StructType, markersRoot: String, ids: DataFrame,
+      schema: StructType, commitDir: String, ids: DataFrame,
       aCol: String, bCol: String): Unit =
-    if (liveTreeOpt(spark, pairsDir).nonEmpty)
-      compactBatchDirs(spark, pairsDir, schema, markersRoot,
-        _.join(ids.toDF(aCol), Seq(aCol), "left_anti")
-          .join(ids.toDF(bCol), Seq(bCol), "left_anti"),
-        vacuumSuperseded = true)
+    rewriteAppendTable(spark, pairsDir, schema, commitDir, erase = true)(
+      _.join(ids.toDF(aCol), Seq(aCol), "left_anti")
+        .join(ids.toDF(bCol), Seq(bCol), "left_anti"))
 
   /** STREAMING BM25 INDEX MAINTENANCE — the retrieval tier's nightly
     * refresh, completing the term-stats gate's story: documents are
     * append-only, so the (doc_id, term, tf) token-cache table the
     * retrieval queries probe ([[graft.operators.TextAnalysis]]'s
     * `termFreqs` shape) maintains by APPEND, not fold — each micro-batch
-    * tokenizes only its own documents and writes one committed subdir
-    * (the [[annIndexMaintenanceStream]] commit shape: seed + idempotent
-    * per-batch overwrite dirs under batch markers; [[compactTfIndex]] is
-    * the OPTIMIZE half). Serving reads the union and runs the identical
-    * BM25 probe plan — StreamingSpec pins served top-k parity with the
-    * batch `bm25_top_docs` after two micro-batches, through compaction,
-    * with `n_docs` supplied as the trivially-additive document counter.
-    * Beside it, [[termStatsMaintenanceStreamVersioned]] maintains the
-    * AGGREGATE (term-keyed df/tf_sum) view of the same lineage by fold —
-    * append for the per-doc grain, fold for the statistic, the two
-    * shapes a 100 TB text index actually runs nightly.
+    * tokenizes only its own documents and commits one append generation
+    * (the [[annIndexMaintenanceStream]] commit shape; [[compactTfIndex]]
+    * is the OPTIMIZE half). Serving reads the seed plus the appends and
+    * runs the identical BM25 probe plan — StreamingSpec pins served top-k
+    * parity with the batch `bm25_top_docs` after two micro-batches,
+    * through compaction, with `n_docs` supplied as the trivially-additive
+    * document counter. Beside it, [[termStatsMaintenanceStreamVersioned]]
+    * maintains the AGGREGATE (term-keyed df/tf_sum) view of the same
+    * lineage by fold — append for the per-doc grain, fold for the
+    * statistic, the two shapes a 100 TB text index actually runs nightly.
     */
   def tfIndexMaintenanceStream(docsStream: DataFrame, historyDocs: DataFrame,
       indexDir: String, checkpointDir: Option[String] = None,
@@ -2705,15 +2195,8 @@ object EventStream {
     maintenanceWriter(docsStream, checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         tfIndexFoldBatch(spark, indexDir, batch.toDF(), batchId)
-        // policy AFTER the marker landed: the fold is complete and the
-        // stream (the only writer) is between folds — quiesced by
-        // construction (see [[compactTfIndexIfCrowded]])
-        autoCompactAfter.foreach(k => compactTfIndexIfCrowded(spark, indexDir, k))
-        // retention AFTER compaction: a compaction this batch triggered
-        // leaves its grace snapshot; the retention policy decides how
-        // many superseded snapshots stay time-travel readable
-        expireKeepSnapshots.foreach(k =>
-          expireSnapshots(spark, s"$indexDir/tf", keepLast = k))
+        maintainAppendTables(spark, s"$indexDir/tf", autoCompactAfter,
+          expireKeepSnapshots)(s"$indexDir/tf" -> tfIndexSchema)
       }
       .start()
   }
@@ -2723,31 +2206,22 @@ object EventStream {
     * registered stored-serving gate (`bm25_stored_top_docs`).
     */
   def tfIndexSeed(spark: SparkSession, indexDir: String,
-      historyDocs: DataFrame): Unit = {
-    val tfDir = s"$indexDir/tf"
-    if (!StateFs.exists(spark, s"${ensureLiveTree(spark, tfDir)}/seed/_SUCCESS")) {
-      graft.operators.TextAnalysis.termFreqsOf(historyDocs)
-        .write.mode("overwrite").parquet(s"${ensureLiveTree(spark, tfDir)}/seed")
-      writeTreeManifest(spark, ensureLiveTree(spark, tfDir))
-    }
-  }
+      historyDocs: DataFrame): Unit =
+    seedAppendTables(spark,
+      s"$indexDir/tf" -> graft.operators.TextAnalysis.termFreqsOf(historyDocs))
 
   /** One tf-index micro-batch — the exact `foreachBatch` body of
-    * [[tfIndexMaintenanceStream]] (marker-gated idempotent-overwrite
-    * subdir), opened to the registered stored-serving gate so both
+    * [[tfIndexMaintenanceStream]] (one append generation, skipped once
+    * committed), opened to the registered stored-serving gate so both
     * consumers run ONE fold spelling.
     */
   def tfIndexFoldBatch(spark: SparkSession, indexDir: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!plainMarkerApplied(spark, indexDir, batchId)) {
-      graft.operators.TextAnalysis.termFreqsOf(batch)
-        .write.mode("overwrite")
-        .parquet(s"${ensureLiveTree(spark, s"$indexDir/tf")}/b$batchId")
-      // manifest BEFORE marker: a marker-applied batch is always
-      // manifest-visible (see the manifest contract above)
-      writeTreeManifest(spark, ensureLiveTree(spark, s"$indexDir/tf"))
-      commitPlainMarker(spark, indexDir, batchId)
-    }
+      batch: DataFrame, batchId: Long): Unit = {
+    val tfDir = s"$indexDir/tf"
+    if (appendFoldPending(spark, batchId, tfDir))
+      writeAppend(spark, tfDir, batchId,
+        graft.operators.TextAnalysis.termFreqsOf(batch))
+  }
 
   private val chunkIndexSchema = StructType(Seq(
     StructField("h", StringType),
@@ -2766,90 +2240,40 @@ object EventStream {
     * survivor output of [[chunkIngestDedup]].
     */
   def chunkIndexRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/chunks", chunkIndexSchema)
+    appendRead(spark, s"$indexDir/chunks", chunkIndexSchema)
 
   def chunkOutRead(spark: SparkSession, outDir: String): DataFrame =
-    batchDirsRead(spark, outDir, chunkOutSchema)
-
-  /** INCREMENTAL (change-data) read of one per-batch-subdir table: the
-    * rows batches `fromExclusive+1 .. toInclusive` appended — what a
-    * downstream incremental consumer processes to catch up from
-    * snapshot `fromExclusive` to snapshot `toInclusive` without
-    * re-reading the table (a table format's incremental scan). Because
-    * these tables are append-only within a tree, the change set IS the
-    * batch subdirs in the window: a listing filter, zero data copy.
-    * `fromExclusive` must be at or above the compaction horizon — below
-    * it the per-batch evidence is folded away and the consumer must
-    * fall back to a full as-of read (the same loud-failure contract as
-    * [[batchDirsReadAsOf]], reusing its horizon check at the window's
-    * low edge).
-    */
-  private def batchDirsChanges(spark: SparkSession, dir: String,
-      schema: StructType, fromExclusive: Long, toInclusive: Long): DataFrame = {
-    val snaps = publishedSnapshots(spark, dir)
-    if (snaps.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      // the window's LOW edge must be covered by some retained snapshot
-      // (the as-of resolution rule); the high side may span NEWER trees
-      // — batches folded after that snapshot was superseded live only
-      // in its successors — so the change set stitches across every
-      // published tree, taking each batch id from the HIGHEST tree that
-      // holds it (a replay regenerates a crashed batch in the newer
-      // tree; the orphan left in the superseded one must not
-      // double-count)
-      require(snaps.exists { case (_, through) => through <= fromExclusive },
-        s"incremental read from batch $fromExclusive predates every " +
-          s"retained snapshot of $dir (horizons: " +
-          s"${snaps.map { case (n, h) => s"t$n<=$h" }.mkString(", ")}) — " +
-          "the change evidence was folded into seeds and the grace " +
-          "snapshots expired. Catch up with a full as-of read instead; " +
-          "refusing to serve a silently-partial change set")
-      val lowTree = snaps.filter(_._2 <= fromExclusive).map(_._1).max
-      val perId = snaps.map(_._1).filter(_ >= lowTree).flatMap { n =>
-        committedSubdirs(spark, s"$dir/t$n").collect {
-          case b if b.matches("b\\d+") &&
-              b.drop(1).toLong > fromExclusive &&
-              b.drop(1).toLong <= toInclusive =>
-            (b.drop(1).toLong, n)
-        }
-      }.groupBy(_._1).map { case (id, trees) => (id, trees.map(_._2).max) }
-      if (perId.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(
-        perId.toSeq.sorted.map { case (id, n) => s"$dir/t$n/b$id" }: _*)
-    }
-  }
+    appendRead(spark, outDir, chunkOutSchema)
 
   /** TIME-TRAVEL reads of the chunk tables — the state as of batch
-    * `asOfBatch` ([[batchDirsReadAsOf]]): what the index/output served
-    * the moment that batch committed, failing loudly past the
-    * compaction horizon. The registered `chunk_index_asof` gate pins
-    * as-of ≡ the prefix rebuild against the DuckDB oracle.
+    * `asOfBatch` ([[appendRead]]): what the index/output served the
+    * moment that batch committed, failing loudly past the retention
+    * horizon. The registered `chunk_index_asof` gate pins as-of ≡ the
+    * prefix rebuild against the DuckDB oracle.
     */
   def chunkIndexReadAsOf(spark: SparkSession, indexDir: String,
       asOfBatch: Long): DataFrame =
-    batchDirsReadAsOf(spark, s"$indexDir/chunks", chunkIndexSchema, asOfBatch)
+    appendRead(spark, s"$indexDir/chunks", chunkIndexSchema, Some(asOfBatch))
 
-  /** Incremental read of the chunk index ([[batchDirsChanges]]): the
+  /** Incremental read of the chunk index ([[appendChanges]]): the
     * occurrence rows batches `fromExclusive+1 .. toInclusive` appended.
     */
   def chunkIndexChanges(spark: SparkSession, indexDir: String,
       fromExclusive: Long, toInclusive: Long): DataFrame =
-    batchDirsChanges(spark, s"$indexDir/chunks", chunkIndexSchema,
+    appendChanges(spark, s"$indexDir/chunks", chunkIndexSchema,
       fromExclusive, toInclusive)
 
-  /** Compact the chunk index (markers live under the chunk table's own
-    * dir — the [[posIndexFoldBatch]] namespacing discipline).
-    */
-  def compactChunkIndex(spark: SparkSession, indexDir: String): Unit =
-    compactBatchDirs(spark, s"$indexDir/chunks", chunkIndexSchema,
-      s"$indexDir/chunks", requireSeed = true)
+  /** Compact the chunk index (the chunk table commits its own fold). */
+  def compactChunkIndex(spark: SparkSession, indexDir: String): Unit = {
+    val chunksDir = s"$indexDir/chunks"
+    rewriteAppendTable(spark, chunksDir, chunkIndexSchema, chunksDir,
+      requireSeed = true)()
+  }
 
   /** RIGHT-TO-BE-FORGOTTEN over the chunk index — chunk hashes plus
     * positions reconstruct span structure (and the hashes are
     * dictionary-attackable for short spans), so the erasure story must
-    * reach this tier; same erasure-as-compaction shape as
+    * reach this tier; same erasure-as-rewrite shape as
     * [[forgetDocsFromPosIndex]]. Per-occurrence grain makes the
     * anti-join EXACTLY the filter-rebuild: a chunk still carried by a
     * surviving doc keeps that doc's rows and keeps matching future
@@ -2860,8 +2284,9 @@ object EventStream {
   def forgetDocsFromChunkIndex(spark: SparkSession, indexDir: String,
       docs: DataFrame): Unit =
     withForgetList(docs, "doc_id") { ids =>
-      eraseKeysFromTable(spark, s"$indexDir/chunks", chunkIndexSchema,
-        s"$indexDir/chunks", ids, "doc_id")
+      val chunksDir = s"$indexDir/chunks"
+      eraseKeysFromTable(spark, chunksDir, chunkIndexSchema, chunksDir,
+        ids, "doc_id")
     }
 
   /** Seed the chunk index from `historyDocs` unless commit evidence
@@ -2870,28 +2295,22 @@ object EventStream {
     * commits an empty table the first batch builds on.
     */
   def chunkIndexSeed(spark: SparkSession, indexDir: String,
-      historyDocs: DataFrame): Unit = {
-    val chunksDir = s"$indexDir/chunks"
-    if (!StateFs.exists(spark, s"${ensureLiveTree(spark, chunksDir)}/seed/_SUCCESS")) {
-      graft.operators.Dedup.chunkHashesOf(historyDocs)
-        .write.mode("overwrite").parquet(s"${ensureLiveTree(spark, chunksDir)}/seed")
-      writeTreeManifest(spark, ensureLiveTree(spark, chunksDir))
-    }
-  }
+      historyDocs: DataFrame): Unit =
+    seedAppendTables(spark,
+      s"$indexDir/chunks" -> graft.operators.Dedup.chunkHashesOf(historyDocs))
 
   /** One chunk-ingestion micro-batch — the exact `foreachBatch` body of
     * [[chunkIngestDedup]], opened to the registered stored-serving gate
     * (`docs_chunk_dedup_streamed`) so both consumers run ONE fold
     * spelling. A batch chunk is REMOVED when its hash already exists in
-    * the STORED index (any prior doc — history or an earlier batch) or
-    * earlier within its own batch (smaller `(doc_id, chunk_id)` — the
-    * batch [[graft.operators.Dedup.chunkDedup]] first-occurrence rule,
-    * which the streamed form reproduces exactly when batches arrive in
-    * doc-id order). Survivor reassembly is the SHARED
-    * [[graft.operators.Dedup.chunkReassembly]] body. Output subdir
-    * first, index subdir second, marker last: a crash between the two
-    * writes leaves the batch unmarked and the replay's pre-clean
-    * removes both.
+    * the STORED index as of the previous batch (any prior doc — history
+    * or an earlier batch) or earlier within its own batch (smaller
+    * `(doc_id, chunk_id)` — the batch [[graft.operators.Dedup.chunkDedup]]
+    * first-occurrence rule, which the streamed form reproduces exactly
+    * when batches arrive in doc-id order). Survivor reassembly is the
+    * SHARED [[graft.operators.Dedup.chunkReassembly]] body. Output
+    * generation first, index generation second — the index generation
+    * commits the batch, and a replay rewrites both.
     *
     * 100 TB shape: the probe is a hash equi-join of the SMALL batch's
     * chunks against the stored index — the corpus is never re-chunked;
@@ -2903,18 +2322,12 @@ object EventStream {
       indexDir: String, batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.Dedup
     val chunksDir = s"$indexDir/chunks"
-    if (!plainMarkerApplied(spark, chunksDir, batchId)) {
-      val (outTree, idxTree) =
-        (ensureLiveTree(spark, outDir), ensureLiveTree(spark, chunksDir))
-      // crashed-attempt pre-clean — the minhashIngestDedup reasoning: a
-      // partial b$batchId index subdir would count this batch's own
-      // leftovers as prior art
-      Seq(s"$outTree/b$batchId", s"$idxTree/b$batchId")
-        .foreach(d => StateFs.deleteRecursively(spark, d))
+    if (appendFoldPending(spark, batchId, outDir, chunksDir)) {
       val batchChunks = Dedup.chunksOf(batch)
         .withColumn("h", md5(col("chunk_text"))).persist()
       try {
-        val storedHashes = chunkIndexRead(spark, indexDir)
+        val storedHashes = appendRead(spark, chunksDir, chunkIndexSchema,
+            Some(batchId - 1))
           .select(col("h")).distinct()
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("h")).orderBy(col("doc_id"), col("chunk_id"))
@@ -2922,12 +2335,9 @@ object EventStream {
           .withColumn("rn", row_number().over(w))
           .join(storedHashes.withColumn("seen", lit(1)), Seq("h"), "left")
           .withColumn("removed", col("rn") > 1 || col("seen").isNotNull)
-        Dedup.chunkReassembly(flagged)
-          .write.mode("overwrite").parquet(s"$outTree/b$batchId")
-        batchChunks.select(col("h"), col("doc_id"), col("chunk_id"))
-          .write.mode("overwrite").parquet(s"$idxTree/b$batchId")
-        Seq(outTree, idxTree).foreach(t => writeTreeManifest(spark, t))
-        commitPlainMarker(spark, chunksDir, batchId)
+        writeAppend(spark, outDir, batchId, Dedup.chunkReassembly(flagged))
+        writeAppend(spark, chunksDir, batchId,
+          batchChunks.select(col("h"), col("doc_id"), col("chunk_id")))
       } finally {
         batchChunks.unpersist()
         ()
@@ -2955,17 +2365,9 @@ object EventStream {
     maintenanceWriter(docsStream, checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         chunkIngestFoldBatch(spark, outDir, indexDir, batch.toDF(), batchId)
-        autoCompactAfter.foreach { k =>
-          compactIfCrowded(spark, s"$indexDir/chunks", chunkIndexSchema,
-            s"$indexDir/chunks", k, requireSeed = true)
-          compactIfCrowded(spark, outDir, chunkOutSchema,
-            s"$indexDir/chunks", k, requireSeed = false)
-          ()
-        }
-        expireKeepSnapshots.foreach { k =>
-          Seq(s"$indexDir/chunks", outDir)
-            .foreach(d => expireSnapshots(spark, d, keepLast = k))
-        }
+        maintainAppendTables(spark, s"$indexDir/chunks", autoCompactAfter,
+          expireKeepSnapshots)(s"$indexDir/chunks" -> chunkIndexSchema,
+          outDir -> chunkOutSchema)
       }
       .start()
   }
@@ -2977,9 +2379,9 @@ object EventStream {
 
   /** The STORED WINNOWING FINGERPRINT INDEX (r19 verdict #1 — the one
     * dedup grain that was still session-only): every selected
-    * fingerprint OCCURRENCE (`h`, `doc_id`, `p`) as a per-batch-subdir
-    * tree table, the [[chunkIndexRead]] protocol at the fingerprint
-    * grain. Per-occurrence grain is the erasure-sound one, exactly the
+    * fingerprint OCCURRENCE (`h`, `doc_id`, `p`) as an append table,
+    * the [[chunkIndexRead]] protocol at the fingerprint grain.
+    * Per-occurrence grain is the erasure-sound one, exactly the
     * chunk index's argument: a fingerprint hash still carried by a
     * surviving document keeps that document's rows (and keeps matching
     * future ingests) while a hash only the forgotten document carried
@@ -2989,45 +2391,33 @@ object EventStream {
     * the moment it is stored (erasure-certificate tier 15).
     */
   def winnowIndexRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/winnow", winnowIndexSchema)
+    appendRead(spark, s"$indexDir/winnow", winnowIndexSchema)
 
   /** Seed the winnowing fingerprint index from `historyDocs` unless
     * commit evidence exists — the [[chunkIndexSeed]] shape. An EMPTY
     * history is legitimate (a crawl starting cold).
     */
   def winnowIndexSeed(spark: SparkSession, indexDir: String,
-      historyDocs: DataFrame): Unit = {
-    val winnowDir = s"$indexDir/winnow"
-    if (!StateFs.exists(spark, s"${ensureLiveTree(spark, winnowDir)}/seed/_SUCCESS")) {
+      historyDocs: DataFrame): Unit =
+    seedAppendTables(spark, s"$indexDir/winnow" ->
       graft.operators.Dedup.winnowFingerprintsOf(historyDocs)
-        .select(col("h"), col("doc_id"), col("p"))
-        .write.mode("overwrite").parquet(s"${ensureLiveTree(spark, winnowDir)}/seed")
-      writeTreeManifest(spark, ensureLiveTree(spark, winnowDir))
-    }
-  }
+        .select(col("h"), col("doc_id"), col("p")))
 
   /** One winnowing-ingestion micro-batch — fingerprint ONLY the batch's
     * own documents (the same codegen [[graft.plans.WinnowFingerprints]]
     * pass the batch lineage runs — the fold must select exactly like
     * the batch query or the maintained index drifts from the rebuild)
-    * and fold them in as a committed subdir: crashed-attempt pre-clean,
-    * manifest BEFORE marker (a marker-applied batch is always
-    * manifest-visible), marker last. 100 TB shape: a nightly crawl pays
-    * one batch-scale narrow selection pass; the corpus is never
-    * re-fingerprinted.
+    * and fold them in as one append generation. 100 TB shape: a nightly
+    * crawl pays one batch-scale narrow selection pass; the corpus is
+    * never re-fingerprinted.
     */
   def winnowIngestFoldBatch(spark: SparkSession, indexDir: String,
       batch: DataFrame, batchId: Long): Unit = {
     val winnowDir = s"$indexDir/winnow"
-    if (!plainMarkerApplied(spark, winnowDir, batchId)) {
-      val tree = ensureLiveTree(spark, winnowDir)
-      StateFs.deleteRecursively(spark, s"$tree/b$batchId")
-      graft.operators.Dedup.winnowFingerprintsOf(batch)
-        .select(col("h"), col("doc_id"), col("p"))
-        .write.mode("overwrite").parquet(s"$tree/b$batchId")
-      writeTreeManifest(spark, tree)
-      commitPlainMarker(spark, winnowDir, batchId)
-    }
+    if (appendFoldPending(spark, batchId, winnowDir))
+      writeAppend(spark, winnowDir, batchId,
+        graft.operators.Dedup.winnowFingerprintsOf(batch)
+          .select(col("h"), col("doc_id"), col("p")))
   }
 
   /** INGESTION-TIME OVERLAP PROBE of the stored fingerprint index: the
@@ -3059,15 +2449,16 @@ object EventStream {
   }
 
   /** RIGHT-TO-BE-FORGOTTEN over the winnowing fingerprint index —
-    * erasure-as-compaction, the [[forgetDocsFromChunkIndex]] shape at
+    * erasure-as-rewrite, the [[forgetDocsFromChunkIndex]] shape at
     * the fingerprint grain (per-occurrence rows make the anti-join
     * exactly the filter-rebuild).
     */
   def forgetDocsFromWinnowIndex(spark: SparkSession, indexDir: String,
       docs: DataFrame): Unit =
     withForgetList(docs, "doc_id") { ids =>
-      eraseKeysFromTable(spark, s"$indexDir/winnow", winnowIndexSchema,
-        s"$indexDir/winnow", ids, "doc_id")
+      val winnowDir = s"$indexDir/winnow"
+      eraseKeysFromTable(spark, winnowDir, winnowIndexSchema, winnowDir,
+        ids, "doc_id")
     }
 
   /** STREAMING WINNOWING-INDEX MAINTENANCE via `foreachBatch` — the
@@ -3103,64 +2494,52 @@ object EventStream {
     * index.
     */
   def posIndexRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/pos", posIndexSchema)
+    appendRead(spark, s"$indexDir/pos", posIndexSchema)
 
-  /** Time-travel read of the positions index ([[batchDirsReadAsOf]]). */
+  /** Time-travel read of the positions index ([[appendRead]] as of a batch). */
   def posIndexReadAsOf(spark: SparkSession, indexDir: String,
       asOfBatch: Long): DataFrame =
-    batchDirsReadAsOf(spark, s"$indexDir/pos", posIndexSchema, asOfBatch)
+    appendRead(spark, s"$indexDir/pos", posIndexSchema, Some(asOfBatch))
 
   /** Seed the positions index from `historyDocs` unless commit evidence
     * exists — the [[tfIndexSeed]] shape on the positions grain.
     */
   def posIndexSeed(spark: SparkSession, indexDir: String,
-      historyDocs: DataFrame): Unit = {
-    val posDir = s"$indexDir/pos"
-    if (!StateFs.exists(spark, s"${ensureLiveTree(spark, posDir)}/seed/_SUCCESS")) {
-      graft.operators.TextAnalysis.termPositionsOf(historyDocs)
-        .write.mode("overwrite").parquet(s"${ensureLiveTree(spark, posDir)}/seed")
-      writeTreeManifest(spark, ensureLiveTree(spark, posDir))
-    }
-  }
+      historyDocs: DataFrame): Unit =
+    seedAppendTables(spark,
+      s"$indexDir/pos" -> graft.operators.TextAnalysis.termPositionsOf(historyDocs))
 
-  /** One positions-index micro-batch — marker-gated idempotent-overwrite
-    * subdir, the [[tfIndexFoldBatch]] shape. Markers live under the POS
-    * TABLE's own dir (`<indexDir>/pos/_batches`), NOT the shared
-    * `indexDir` root: a search tier stores this table beside the
-    * frequency index, and an unqualified shared marker would make
-    * whichever fold ran first silently swallow the other's batch (the
-    * review-caught composition trap). `_batches` never collides with
-    * the tree layout (`t\\d+` names only).
+  /** One positions-index micro-batch — one append generation, the
+    * [[tfIndexFoldBatch]] shape. The replay evidence is the POS table's
+    * own generation, never a record shared with the frequency index
+    * beside it under `indexDir`: a shared record would make whichever
+    * fold ran first silently swallow the other's batch.
     */
   def posIndexFoldBatch(spark: SparkSession, indexDir: String,
       batch: DataFrame, batchId: Long): Unit = {
     val posDir = s"$indexDir/pos"
-    if (!plainMarkerApplied(spark, posDir, batchId)) {
-      graft.operators.TextAnalysis.termPositionsOf(batch)
-        .write.mode("overwrite")
-        .parquet(s"${ensureLiveTree(spark, posDir)}/b$batchId")
-      writeTreeManifest(spark, ensureLiveTree(spark, posDir))
-      commitPlainMarker(spark, posDir, batchId)
-    }
+    if (appendFoldPending(spark, batchId, posDir))
+      writeAppend(spark, posDir, batchId,
+        graft.operators.TextAnalysis.termPositionsOf(batch))
   }
 
-  /** Compact the positions index (see [[compactBatchDirs]]; markers
-    * live under the pos table itself — see [[posIndexFoldBatch]]).
-    */
-  def compactPosIndex(spark: SparkSession, indexDir: String): Unit =
-    compactBatchDirs(spark, s"$indexDir/pos", posIndexSchema, s"$indexDir/pos",
-      requireSeed = true)
+  /** Compact the positions index (see [[rewriteAppendTable]]). */
+  def compactPosIndex(spark: SparkSession, indexDir: String): Unit = {
+    val posDir = s"$indexDir/pos"
+    rewriteAppendTable(spark, posDir, posIndexSchema, posDir,
+      requireSeed = true)()
+  }
 
   /** RIGHT-TO-BE-FORGOTTEN over the positions index — token positions
     * reconstruct the document verbatim (stronger than shingles), so the
     * erasure story must reach this tier the moment it exists; same
-    * erasure-as-compaction shape as [[forgetDocsFromTfIndex]].
+    * erasure-as-rewrite shape as [[forgetDocsFromTfIndex]].
     */
   def forgetDocsFromPosIndex(spark: SparkSession, indexDir: String,
       docs: DataFrame): Unit =
     withForgetList(docs, "doc_id") { ids =>
-      eraseKeysFromTable(spark, s"$indexDir/pos", posIndexSchema,
-        s"$indexDir/pos", ids, "doc_id")
+      val posDir = s"$indexDir/pos"
+      eraseKeysFromTable(spark, posDir, posIndexSchema, posDir, ids, "doc_id")
     }
 
   private val annCellsSchema = StructType(Seq(
@@ -3179,12 +2558,10 @@ object EventStream {
     * tables hold PER-ITEM DERIVED DATA (an embedding is personal data
     * under GDPR exactly as the text that produced it is), so a deletion
     * request must reach them, not only the raw vectors. Every row of
-    * the forgotten `vec_id`s leaves both tables by erasure-as-compaction
-    * ([[forgetDocsFromTfIndex]]'s shape): read the committed tree,
-    * anti-join the delete list, publish as a new tree through
-    * [[compactBatchDirs]]' snapshot-pointer protocol with the
-    * superseded tree vacuumed immediately (it holds the forgotten
-    * rows).
+    * the forgotten `vec_id`s leaves both tables by erasure-as-rewrite
+    * ([[forgetDocsFromTfIndex]]'s shape): read the serving generations,
+    * anti-join the delete list, commit a new rewrite and expire every
+    * older generation immediately (they hold the forgotten rows).
     *
     * CELLS are erased FIRST — the mirror of the maintenance stream's
     * codes-before-cells write order, and for the same serving reason:
@@ -3207,9 +2584,10 @@ object EventStream {
   def forgetVectorsFromAnnIndex(spark: SparkSession, indexDir: String,
       vecIds: DataFrame): Unit =
     withForgetList(vecIds, "vec_id") { ids =>
-      eraseKeysFromTable(spark, s"$indexDir/cells", annCellsSchema, indexDir,
+      val cellsDir = s"$indexDir/cells"
+      eraseKeysFromTable(spark, cellsDir, annCellsSchema, cellsDir,
         ids, "vec_id")
-      eraseKeysFromTable(spark, s"$indexDir/codes", annCodesSchema, indexDir,
+      eraseKeysFromTable(spark, s"$indexDir/codes", annCodesSchema, cellsDir,
         ids, "vec_id")
     }
 
@@ -3220,8 +2598,7 @@ object EventStream {
     * served verified-pairs table (or the pair itself keeps publishing
     * the asset's near-dup relationships). Pairs are erased FIRST — they
     * are the externally SERVED surface, the bands only feed future
-    * probes — each through the snapshot-pointer publish with immediate
-    * vacuum of the superseded tree. A pair is dropped when EITHER
+    * probes — each by an erasing rewrite. A pair is dropped when EITHER
     * endpoint is forgotten. Idempotent; quiesced-stream contract; the
     * registered `phash_forget_media` gate proves erasure ≡
     * filter-rebuild through the pair-serving plan.
@@ -3229,9 +2606,10 @@ object EventStream {
   def forgetMediaFromPhashIndex(spark: SparkSession, indexDir: String,
       pairsOutDir: String, mediaIds: DataFrame): Unit =
     withForgetList(mediaIds, "media_id") { ids =>
-      erasePairEndpoints(spark, pairsOutDir, phashPairsSchema, indexDir,
+      val bandsDir = s"$indexDir/bands"
+      erasePairEndpoints(spark, pairsOutDir, phashPairsSchema, bandsDir,
         ids, "media_a", "media_b")
-      eraseKeysFromTable(spark, s"$indexDir/bands", phashBandsSchema, indexDir,
+      eraseKeysFromTable(spark, bandsDir, phashBandsSchema, bandsDir,
         ids, "media_id")
     }
 
@@ -3239,10 +2617,10 @@ object EventStream {
     * read side of [[annIndexMaintenanceStream]].
     */
   def annIndexCellsRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/cells", annCellsSchema)
+    appendRead(spark, s"$indexDir/cells", annCellsSchema)
 
   def annIndexCodesRead(spark: SparkSession, indexDir: String): DataFrame =
-    batchDirsRead(spark, s"$indexDir/codes", annCodesSchema)
+    appendRead(spark, s"$indexDir/codes", annCodesSchema)
 
   /** STREAMING ANN INDEX MAINTENANCE via `foreachBatch` — the streaming
     * form of the `ivfpq_maintained_recall_at_5` gate, completing the
@@ -3253,11 +2631,19 @@ object EventStream {
     * caller's history-only training run — and each micro-batch of
     * quantized vectors (`vec_id`, `v`, `n2`) assigns to its nearest
     * frozen centroid and PQ-encodes with the frozen codebooks, APPENDING
-    * both to the parquet index tables (seed + per-batch idempotent
-    * overwrite subdirs under batch markers — the
-    * [[minhashIngestDedup]] commit shape; an append-only index needs no
-    * partial rewrite). A restarted stream resumes against the existing
-    * tables.
+    * both to the index tables (one append generation per table per
+    * batch — the [[minhashIngestDedup]] commit shape; an append-only
+    * index needs no partial rewrite). A restarted stream resumes against
+    * the existing tables.
+    *
+    * CODES BEFORE CELLS, in the seed and in every batch, and the cells
+    * generation commits: a crash between the two writes re-runs both.
+    * The order is load-bearing for what a torn state SERVES in the
+    * crash-to-replay window: candidates come from the cells table and
+    * are ranked by their codes, so codes-without-cells rows are
+    * invisible dead weight, while cells-without-codes would propose
+    * candidates that cannot be ranked — the served top-k would silently
+    * diverge until the replay.
     *
     * 100 TB posture: the nightly crawl pays only its own batch's N·C
     * assignment and N·m·k encoding — the stored corpus is never
@@ -3273,37 +2659,14 @@ object EventStream {
     val spark = vectorsStream.sparkSession
     val cellsDir = s"$indexDir/cells"
     val codesDir = s"$indexDir/codes"
-    // CODES BEFORE CELLS, guard on the LAST write's commit evidence: a
-    // crash between the two writes must re-seed BOTH (overwrite —
-    // idempotent). The order is load-bearing for what a torn state
-    // SERVES in the crash-to-replay window: candidates come from the
-    // cells table and are ranked by their codes, so codes-without-cells
-    // rows are invisible dead weight, while cells-without-codes would
-    // propose candidates that cannot be ranked — the served top-k
-    // would silently diverge until the replay.
-    if (!StateFs.exists(spark, s"${ensureLiveTree(spark, cellsDir)}/seed/_SUCCESS")) {
-      historyCodes.write.mode("overwrite")
-        .parquet(s"${ensureLiveTree(spark, codesDir)}/seed")
-      historyCells.write.mode("overwrite")
-        .parquet(s"${ensureLiveTree(spark, cellsDir)}/seed")
-      Seq(codesDir, cellsDir).foreach(d =>
-        writeTreeManifest(spark, ensureLiveTree(spark, d)))
-    }
+    seedAppendTables(spark, codesDir -> historyCodes, cellsDir -> historyCells)
     maintenanceWriter(vectorsStream, checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!plainMarkerApplied(spark, indexDir, batchId)) {
+        if (appendFoldPending(spark, batchId, codesDir, cellsDir)) {
           val b = batch.toDF().persist()
           try {
-            // codes before cells — see the seed-order note above
-            Similarity.pqEncodeWith(b, cb)
-              .write.mode("overwrite")
-              .parquet(s"${ensureLiveTree(spark, codesDir)}/b$batchId")
-            Similarity.assignCellsTo(b, cents)
-              .write.mode("overwrite")
-              .parquet(s"${ensureLiveTree(spark, cellsDir)}/b$batchId")
-            Seq(codesDir, cellsDir).foreach(d =>
-              writeTreeManifest(spark, ensureLiveTree(spark, d)))
-            commitPlainMarker(spark, indexDir, batchId)
+            writeAppend(spark, codesDir, batchId, Similarity.pqEncodeWith(b, cb))
+            writeAppend(spark, cellsDir, batchId, Similarity.assignCellsTo(b, cents))
           } finally {
             b.unpersist()
             ()

@@ -4,25 +4,24 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-`FileSystem` spellings of the streaming state-machinery file
-  * operations — batch markers, seed guards, generation listings,
-  * retention, compaction swaps. Every path resolves through
+  * operations — generation listings, commit probes, rewrite claims,
+  * retention markers, manifests. Every path resolves through
   * `Path.getFileSystem(hadoopConf)`, so the SAME code serves `file:`
   * paths in the sandbox and `hdfs:` / object-store URIs in a deployment;
   * the `java.io.File` forms these replace could never leave a local
   * disk, which made the 100 TB durability story a caveat instead of a
   * property. Object-store posture: every CONTROL operation the state
-  * machinery commits through is a single-object create (batch markers,
-  * horizon markers, tree `_published` markers) — atomic on local,
+  * machinery commits through is a single-object create (a generation's
+  * `_SUCCESS`, a rewrite claim, a retention marker) — atomic on local,
   * HDFS, and S3-like stores alike. `rename` (atomic on local/HDFS,
-  * copy-based on S3-likes) appears nowhere on a commit path anymore:
-  * the index compaction/erasure swap publishes a NEW tree and flips
-  * readers to it with one marker create
-  * (`EventStream.compactBatchDirs`), the table-format snapshot-pointer
-  * discipline.
+  * copy-based on S3-likes) appears nowhere on a commit path: a
+  * compaction or erasure writes a NEW generation beside the ones it
+  * reads and commits it with one create (`EventStream` documents the
+  * log), the table-format snapshot-per-commit discipline.
   */
 private[graft] object StateFs {
 
-  /** FS round-trip counters — the manifest tier's measured claim
+  /** FS round-trip counters — the manifest's measured claim
     * (fewer metadata probes per read) is assertable instead of argued:
     * every `list`/`exists`/`readFileOpt` bumps its counter, and the
     * spec brackets a read in both serving modes. Monotone and global;
@@ -34,8 +33,8 @@ private[graft] object StateFs {
   private[graft] val readCalls = new java.util.concurrent.atomic.AtomicLong
 
   // the SHARED driver Hadoop conf, read-only here — `newHadoopConf()`
-  // would CLONE the full SparkConf+Hadoop conf on every marker probe,
-  // and committedSubdirs multiplies that by one exists() per subdir;
+  // would CLONE the full SparkConf+Hadoop conf on every commit probe,
+  // and a generation listing multiplies that by one exists() per dir;
   // the shared instance also keys Hadoop's FileSystem cache, so repeat
   // calls reuse one client per scheme
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
@@ -48,10 +47,10 @@ private[graft] object StateFs {
   }
 
   /** Create an empty marker file, parents included — idempotent (a
-    * replayed commit overwrites the zero-byte marker with itself).
-    * For IDEMPOTENT batch markers only: a marker whose second create is
-    * evidence of a concurrent writer (tree `_published` publishes, tree
-    * claims) must go through [[touchExclusive]] instead.
+    * re-run overwrites the zero-byte marker with itself). For
+    * IDEMPOTENT markers only (retention horizons): a marker whose second
+    * create is evidence of a concurrent writer (a rewrite claim) must go
+    * through [[touchExclusive]] instead.
     */
   def touch(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
@@ -62,11 +61,11 @@ private[graft] object StateFs {
 
   /** CREATE-ONLY marker create — fails with a named error when the file
     * already exists instead of silently overwriting it. This is the
-    * commit primitive of the snapshot-pointer protocol: two racing
-    * writers that both compute the same next tree number must not BOTH
-    * "successfully" publish (last-writer-wins would silently discard
-    * one writer's fold — an erasure, possibly), so the publish and the
-    * claim that serializes builds are exclusive creates.
+    * claim primitive of the log's rewrites: two racing writers that both
+    * compute the same next rewrite sequence must not BOTH "successfully"
+    * commit (last-writer-wins would silently discard one writer's
+    * rewrite — an erasure, possibly), so the claim is an exclusive
+    * create.
     *
     * FILESYSTEM REQUIREMENT: exclusivity is only as strong as the
     * store's create-no-overwrite. Local posix and HDFS give it
@@ -75,9 +74,9 @@ private[graft] object StateFs {
     * two racing writers can BOTH "succeed" — unless conditional create
     * is enabled (`fs.s3a.create.conditional` / HTTP `If-None-Match: *`,
     * S3A ≥ 3.4.1 against stores supporting conditional put). Deploying
-    * the snapshot-pointer protocol on an object store without that
-    * capability silently voids claim/publish exclusivity; enable
-    * conditional create or front the table with HDFS.
+    * the log on an object store without that capability silently
+    * voids claim exclusivity; enable conditional create or front the
+    * table with HDFS.
     */
   def touchExclusive(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
@@ -88,13 +87,13 @@ private[graft] object StateFs {
       case e: java.io.IOException =>
         throw new IllegalStateException(
           s"create-only marker $path could not be created " +
-            "(a concurrent writer claimed or published it first)", e)
+            "(a concurrent writer created it first)", e)
     }
   }
 
-  /** Delete a single file; a missing path is a no-op (stale-claim
-    * cleanup — recursive delete of a FILE would succeed too, but the
-    * intent here is never a directory).
+  /** Delete a single file; a missing path is a no-op (a failed writer's
+    * claim, a superseded marker or manifest — recursive delete of a FILE
+    * would succeed too, but the intent here is never a directory).
     */
   def deleteFile(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)

@@ -322,7 +322,7 @@ class DedupSpec extends SparkSpec {
     // replay no-op: re-folding a committed batch id must not duplicate
     // index rows (marker-gated — the second JVM / crash-recovery path)
     val indexDir =
-      s"${operators.Layout.tmpPath("graft-winnowstream", sf)}/index"
+      s"${operators.Layout.tmpPath("graft-winnowlog", sf)}/index"
     val before = EventStream.winnowIndexRead(spark, indexDir).count()
     EventStream.winnowIngestFoldBatch(spark, indexDir,
       Tables.documents(spark, sf).limit(10), 0L)

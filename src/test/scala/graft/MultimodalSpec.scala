@@ -195,7 +195,7 @@ class MultimodalSpec extends SparkSpec {
     // index (the ingest stream's candidate/verify plan) — it must pair
     // only with SURVIVORS: the forgotten original, whose hash it matches
     // at Hamming 0, must be gone from the bands (no ghost neighbor)
-    val indexDir = s"${operators.Layout.tmpPath("graft-phforget", sf)}/index"
+    val indexDir = s"${operators.Layout.tmpPath("graft-phforgetlog", sf)}/index"
     val stored = EventStream.phashBandsRead(spark, indexDir)
     assert(stored.filter(rule(col("media_id"))).count() == 0,
       "forgotten assets still present in the stored band index")

@@ -881,14 +881,14 @@ class ScalePostureSpec extends SparkSpec {
       docs.filter(col("doc_id") > q2), 1L)
     val asof0 = streaming.EventStream.chunkIndexReadAsOf(spark, indexDir, 0L)
     assert(asof0.inputFiles.nonEmpty &&
-      asof0.inputFiles.forall(f => !f.contains("/b1/")),
+      asof0.inputFiles.forall(f => !f.contains("/a1/")),
       "as-of batch 0 scanned batch 1's files")
     assert(asof0.inputFiles.exists(_.contains("/seed/")) &&
-      asof0.inputFiles.exists(_.contains("/b0/")),
-      "as-of batch 0 must scan the seed and b0")
+      asof0.inputFiles.exists(_.contains("/a0/")),
+      "as-of batch 0 must scan the seed and a0")
     val chg = streaming.EventStream.chunkIndexChanges(spark, indexDir, 0L, 1L)
-    assert(chg.inputFiles.nonEmpty && chg.inputFiles.forall(_.contains("/b1/")),
-      "changes(0,1] must scan b1's files and nothing else — " +
+    assert(chg.inputFiles.nonEmpty && chg.inputFiles.forall(_.contains("/a1/")),
+      "changes(0,1] must scan a1's files and nothing else — " +
         s"got ${chg.inputFiles.mkString(", ")}")
   }
 
@@ -899,7 +899,7 @@ class ScalePostureSpec extends SparkSpec {
     // yesterday question
     import graft.operators.{Layout, TextAnalysis}
     TextAnalysis.bm25StoredAsOf(spark, sf).collect()
-    val indexDir = Layout.tmpPath("graft-tfstore", sf)
+    val indexDir = Layout.tmpPath("graft-tflog", sf)
     val tf = streaming.EventStream.tfIndexReadAsOf(spark, indexDir, -1L)
     assert(tf.inputFiles.nonEmpty &&
       tf.inputFiles.forall(_.contains("/seed/")),

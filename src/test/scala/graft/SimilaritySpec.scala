@@ -464,7 +464,7 @@ class SimilaritySpec extends SparkSpec {
       assert(r.getLong(1) == 5L && r.getLong(2) <= 5L)
       assert(r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0)
     }
-    val indexDir = operators.Layout.tmpPath("graft-annforget", sf)
+    val indexDir = operators.Layout.tmpPath("graft-annforgetlog", sf)
     val cells = EventStream.annIndexCellsRead(spark, indexDir)
     val codes = EventStream.annIndexCodesRead(spark, indexDir)
     // no forgotten row survives in EITHER stored table

@@ -25,19 +25,30 @@ class StreamingSpec extends SparkSpec {
       p.toFile.setLastModified(System.currentTimeMillis() - ageSec * 1000))
   }
 
-  /** The live (published) tree of a per-batch-subdir table — where
-    * planted crash states and listing assertions must aim under the
-    * snapshot-pointer layout.
+  /** A table's generation dir on the log — where planted crash states
+    * and listing assertions aim.
     */
-  private def liveTree(dir: String): String =
-    EventStream.ensureLiveTree(spark, dir)
+  private def gen(dir: String, g: String): String = s"$dir/state/$g"
 
-  /** Data subdir names of the live tree (control files filtered: the
-    * `_published` marker plus Hadoop `.crc` sidecars).
-    */
-  private def treeDirs(dir: String): Seq[String] =
-    new java.io.File(liveTree(dir)).list()
-      .filter(n => !n.startsWith(".") && !n.startsWith("_")).sorted.toSeq
+  /** Committed generation dirs of a table (`_SUCCESS` present). */
+  private def committedGens(dir: String): Seq[String] =
+    Option(new java.io.File(s"$dir/state").list()).toSeq.flatten
+      .filter(g => new java.io.File(s"${gen(dir, g)}/_SUCCESS").exists()).sorted
+
+  /** The generation dirs a read scans (its data files' parent dirs). */
+  private def servedGens(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
+      .distinct.sorted.toSeq
+
+  /** Drop a table's manifests, so reads are served from the listing. */
+  private def dropManifests(dir: String): Unit =
+    java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/state"))
+      .filter(_.getFileName.toString.startsWith("_vmanifest_"))
+      .forEach(java.nio.file.Files.delete(_))
+
+  /** Drop a generation's `_SUCCESS` — the torn-commit shape. */
+  private def uncommit(dir: String): Unit =
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/_SUCCESS"))
 
   test("streaming hourly counts equal the batch events_hourly result") {
     // file stream sources require a directory — stage the fixture file
@@ -237,11 +248,11 @@ class StreamingSpec extends SparkSpec {
 
   test("ingest-dedup replay cleans a crashed attempt's partial subdirs before probing") {
     import graft.operators.Dedup
-    // simulate the crash window: a prior attempt at batch 0 wrote its
-    // shingle/band subdirs (and half its pairs) but died before the
-    // marker — the replay must NOT read those leftovers as stored
-    // history, or every batch shingle row would be duplicated in the
-    // verify join and pairs would double
+    // simulate the crash window: a prior attempt at batch 0 committed
+    // its shingle generation and wrote its band files but died before
+    // the bands generation (the batch's commit) landed — the replay must
+    // NOT read those leftovers as stored history, or every batch shingle
+    // row would be duplicated in the verify join and pairs would double
     val dir = java.nio.file.Files.createTempDirectory("graft-stream11")
     val docs = Tables.documents(spark, sf)
     val increment = docs.filter(col("doc_id") % 10 === 9)
@@ -251,13 +262,12 @@ class StreamingSpec extends SparkSpec {
     val out = outBase.resolve("pairs").toString
     val idx = outBase.resolve("index").toString
     // plant the crashed attempt's leftovers (full copies — the worst
-    // case) inside the live trees the replay will resolve
+    // case) as the batch's generations on the log; the stream's own
+    // seeding writes the seeds beside them
     val incSh = Dedup.shingleDocs(increment)
-    incSh.write.parquet(s"${liveTree(s"$idx/shingles")}/b0")
-    Dedup.bandIndex(incSh).write.parquet(s"${liveTree(s"$idx/bands")}/b0")
-    // seed dirs must also exist for the planted state to be read at all;
-    // the stream's own seeding would write them — let it (no _SUCCESS
-    // planted, so seeding runs normally and overwrites nothing of ours)
+    incSh.write.parquet(gen(s"$idx/shingles", "a0"))
+    Dedup.bandIndex(incSh).write.parquet(gen(s"$idx/bands", "a0"))
+    uncommit(gen(s"$idx/bands", "a0"))
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir.toString)
     val query = streaming.EventStream.minhashIngestDedup(stream, history, out, idx)
@@ -300,11 +310,11 @@ class StreamingSpec extends SparkSpec {
     run()
     val afterFirst = streaming.EventStream.ingestPairsRead(spark, out).count()
     // COMPACT between the runs: the consolidated index must serve run 2
-    // exactly as the subdir layout would, and the small-file subdirs
-    // collapse to the one compacted dir
+    // exactly as the per-batch generations would, and the read collapses
+    // to the one rewrite
     streaming.EventStream.compactIngestIndex(spark, idx)
-    val shDirs = treeDirs(s"$idx/shingles")
-    assert(shDirs == Seq("seed"), s"shingles: ${shDirs.mkString(",")}")
+    val shDirs = servedGens(streaming.EventStream.ingestShinglesRead(spark, idx))
+    assert(shDirs == Seq("r0_0"), s"shingles: ${shDirs.mkString(",")}")
     docs.filter(col("doc_id") % 20 === 19)
       .coalesce(1).write.mode("append").parquet(dir.toString)
     run()
@@ -440,52 +450,6 @@ class StreamingSpec extends SparkSpec {
       b: org.apache.spark.sql.DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  test("marker vacuum below the checkpoint horizon keeps restarts exactly-once") {
-    import graft.operators.TextAnalysis
-    val docs = Tables.documents(spark, sf)
-    val isBatch = col("doc_id") % 10 === 9
-    val stageDir = java.nio.file.Files.createTempDirectory("graft-mvac")
-    stageFile(docs.filter(isBatch && col("doc_id") % 20 === 9), stageDir, "b1", 60)
-    stageFile(docs.filter(isBatch && col("doc_id") % 20 =!= 9), stageDir, "b2", 30)
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-mvacindex").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-mvacckpt").toString
-    def run(): Unit = {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$stageDir/*")
-      val query = streaming.EventStream.tfIndexMaintenanceStream(
-        stream, docs.filter(!isBatch), indexDir, checkpointDir = Some(ckpt))
-      try query.processAllAvailable() finally query.stop()
-    }
-    run() // batches 0 and 1, both checkpointed and marked
-    // numeric marker files only — the vacuum also leaves its `_horizon`
-    // record in `_batches`
-    def markers() = new java.io.File(s"$indexDir/_batches").list()
-      .filter(_.matches("\\d+")).sorted.toSeq
-    assert(markers() == Seq("0", "1"))
-    // both batches are committed to the durable checkpoint → horizon 2
-    assert(streaming.EventStream.vacuumPlainMarkers(spark, indexDir, 2L) == Seq(0L, 1L))
-    assert(markers().isEmpty)
-    def indexSnapshot(): Map[String, Long] = {
-      val base = java.nio.file.Paths.get(s"$indexDir/tf")
-      val out = scala.collection.mutable.Map.empty[String, Long]
-      java.nio.file.Files.walk(base).forEach { p =>
-        if (p.toFile.isFile && p.toString.endsWith(".parquet"))
-          out(base.relativize(p).toString) = java.nio.file.Files.size(p)
-      }
-      out.toMap
-    }
-    val before = indexSnapshot()
-    // a restarted stream over the same checkpoint re-delivers NOTHING —
-    // the vacuumed evidence was dead weight, the index stays unchanged
-    run()
-    assert(indexSnapshot() == before,
-      "restart after marker vacuum re-folded checkpointed batches")
-    val cols = Seq("doc_id", "term", "tf").map(col)
-    val want = TextAnalysis.termFreqsOf(docs).select(cols: _*)
-    assert(sameRows(streaming.EventStream.tfIndexRead(spark, indexDir)
-      .select(cols: _*), want) && !want.isEmpty)
-  }
-
   test("manifest-backed tf-index reads: manifest-served frames equal" +
       " listing-served with strictly fewer FS probes; torn or stale" +
       " manifests fall back, never serve wrong rows") {
@@ -497,16 +461,16 @@ class StreamingSpec extends SparkSpec {
       EventStream.tfIndexFoldBatch(spark, indexDir,
         docs.filter(col("doc_id") % 10 === res), id.toLong)
     }
-    val tree = liveTree(s"$indexDir/tf")
+    val tree = s"$indexDir/tf/state"
     def manifestFiles() = new java.io.File(tree).list()
-      .filter(_.startsWith("_manifest_")).sorted.toSeq
+      .filter(_.startsWith("_vmanifest_")).sorted.toSeq
     // exactly one manifest (folds supersede + prune), well-formed,
-    // covering every committed subdir
+    // covering every committed generation (the seed by its batch −1)
     assert(manifestFiles().size == 1, s"manifests: ${manifestFiles()}")
     val body = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$tree/${manifestFiles().head}"))
     assert(body.linesIterator.toSeq.last == "#end")
-    Seq("seed", "b0", "b1", "b2").foreach(d =>
+    Seq("-1", "a0", "a1", "a2").foreach(d =>
       assert(body.linesIterator.exists(_.startsWith(s"$d ")), s"manifest misses $d"))
     def probes[A](f: => A): (A, Long) = {
       def total = StateFs.listCalls.get + StateFs.existsCalls.get +
@@ -523,8 +487,8 @@ class StreamingSpec extends SparkSpec {
     val (mRows, mProbes) = probes(rows())
     val (mAsof, mAsofProbes) = probes(asofRows())
     // strip the manifest → the authoritative listing serves: identical
-    // frames, strictly more metadata round-trips (one exists per subdir
-    // and control entry vs one manifest read)
+    // frames, strictly more metadata round-trips (one exists per
+    // generation vs one manifest read)
     manifestFiles().foreach(m => java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$tree/$m")))
     val (lRows, lProbes) = probes(rows())
@@ -538,25 +502,27 @@ class StreamingSpec extends SparkSpec {
     // a TORN manifest (no terminator — the crash-mid-write shape) is
     // skipped; with no older manifest the listing serves, same rows
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$tree/_manifest_99"), "seed 1\nb0 1")
+      java.nio.file.Paths.get(s"$tree/_vmanifest_99"), "horizon -1\n-1 -1\na0 -1")
     assert(rows() == lRows, "torn manifest changed the served frame")
-    // a manifest listing a VANISHED subdir (crashed replay window) makes
-    // the manifest path throw at construction — the read falls back to
-    // the listing, never serving against the phantom
+    // a manifest listing a VANISHED generation (crashed replay window)
+    // makes the manifest path throw at construction — the read falls back
+    // to the listing, never serving against the phantom
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$tree/_manifest_100"),
-      "seed 1\nb0 1\nb1 1\nb2 1\nb7 1\n#end")
-    assert(rows() == lRows, "phantom-subdir manifest changed the served frame")
-    // compaction propagates the manifest (the table maintains one):
-    // clean up the planted manifests first, restore a real one
-    Seq("_manifest_99", "_manifest_100").foreach(m =>
+      java.nio.file.Paths.get(s"$tree/_vmanifest_100"),
+      s"horizon ${Long.MinValue}\n-1 -1\na0 -1\na1 -1\na2 -1\na7 -1\n#end")
+    assert(rows() == lRows, "phantom-generation manifest changed the served frame")
+    // a compaction commit rewrites the manifest: clean up the planted
+    // ones first, restore a real one
+    Seq("_vmanifest_99", "_vmanifest_100").foreach(m =>
       java.nio.file.Files.delete(java.nio.file.Paths.get(s"$tree/$m")))
-    EventStream.writeTreeManifest(spark, tree)
+    EventStream.writeVersionedManifest(spark, s"$indexDir/tf")
     assert(EventStream.compactTfIndexIfCrowded(spark, indexDir, 2))
-    val newTree = liveTree(s"$indexDir/tf")
-    assert(newTree != tree, "compaction did not advance the tree")
-    assert(new java.io.File(newTree).list().exists(_.startsWith("_manifest_")),
-      "compaction dropped the manifest of a manifest-maintaining table")
+    assert(committedGens(s"$indexDir/tf").contains("r0_2"),
+      "compaction did not commit its rewrite")
+    val after = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      s"$tree/${manifestFiles().last}"))
+    assert(after.linesIterator.exists(_.startsWith("r0_2 ")),
+      "compaction left the manifest without its rewrite")
     assert(rows() == lRows, "post-compaction manifest read diverged")
   }
 
@@ -812,12 +778,12 @@ class StreamingSpec extends SparkSpec {
     val indexDir = java.nio.file.Files
       .createTempDirectory("graft-vacuumed").toString
     EventStream.tfIndexSeed(spark, indexDir, docs)
-    val tree = liveTree(s"$indexDir/tf")
+    val tree = s"$indexDir/tf/state"
     assert(EventStream.tfIndexRead(spark, indexDir).count() > 0)
-    assert(new java.io.File(tree).list().exists(_.startsWith("_manifest_")),
-      "fixture tree carries no manifest — the scenario needs one")
-    // vacuum the data subdirs out from under the manifest (keep the
-    // manifest + the _published pointer — the concurrent-expiry state)
+    assert(new java.io.File(tree).list().exists(_.startsWith("_vmanifest_")),
+      "fixture table carries no manifest — the scenario needs one")
+    // vacuum the generation dirs out from under the manifest (keep the
+    // manifest — the concurrent-expiry state)
     new java.io.File(tree).listFiles()
       .filter(f => f.isDirectory)
       .foreach { d =>
@@ -1156,12 +1122,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("readers never see a half-published tree; the one-marker publish flips them atomically") {
-    // the snapshot-pointer protocol's core contract (the r15-verdict #2
-    // ask): a compaction/erasure crash leaves at worst a fully-written
-    // but UNPUBLISHED tree, which no reader resolves; the single
-    // `_published` create is the whole commit, and a racing reader sees
-    // either the old snapshot or the new one — never an empty table,
-    // never a mixture
+    // the log's core commit contract (the r15-verdict #2 ask): a
+    // compaction/erasure crash leaves at worst a fully-written but
+    // UNCOMMITTED rewrite, which no reader resolves; its `_SUCCESS` is
+    // the whole commit, and a racing reader sees either the old snapshot
+    // or the new one — never an empty table, never a mixture
     val dir = java.nio.file.Files.createTempDirectory("graft-pubcrash")
     val docs = Tables.documents(spark, sf)
     docs.filter(col("doc_id") % 10 === 9)
@@ -1176,42 +1141,52 @@ class StreamingSpec extends SparkSpec {
     try query.processAllAvailable() finally query.stop()
     streaming.EventStream.compactIngestIndex(spark, idx)
     val sh = s"$idx/shingles"
-    def shingleRows() = spark.read
-      .option("recursiveFileLookup", "true").parquet(liveTree(sh))
+    assert(committedGens(sh).contains("r0_0"), committedGens(sh).mkString(","))
+    // one more batch (fresh ids) for the next compaction to fold
+    streaming.EventStream.minhashIngestFoldBatch(spark, out, idx,
+      history.orderBy("doc_id").limit(5)
+        .withColumn("doc_id", col("doc_id") + 100000L), 1L)
+    def shingleRows() = streaming.EventStream.ingestShinglesRead(spark, idx)
       .select(col("doc_id"), explode(col("sh")).alias("s"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val before = shingleRows()
     assert(before.nonEmpty)
-    // the crash state: a replacement tree fully WRITTEN AND COMMITTED
-    // (its seed has _SUCCESS) with clearly different rows, but the
-    // publish marker never landed
-    spark.read.parquet(s"${liveTree(sh)}/seed").limit(1)
-      .write.parquet(s"$sh/t9/seed")
+    // the crash state: the NEXT rewrite fully WRITTEN with clearly
+    // different rows, but its commit never landed (a cleanly failed
+    // writer released its claim)
+    spark.read.parquet(gen(sh, "r0_0")).limit(1).write.parquet(gen(sh, "r1_1"))
+    uncommit(gen(sh, "r1_1"))
     assert(shingleRows() == before,
-      "a reader resolved an unpublished (crashed) tree")
-    // the next compaction entry vacuums the crashed build and proceeds
+      "a reader resolved an uncommitted (crashed) rewrite")
+    // the next compaction overwrites the crashed build and proceeds
     streaming.EventStream.compactIngestIndex(spark, idx)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$sh/t9")),
-      "compaction entry left the crashed unpublished build")
+    assert(committedGens(sh).contains("r1_1"),
+      "compaction did not replace the crashed build")
     assert(shingleRows() == before, "compaction changed the table's rows")
-    // and the publish IS the atomic flip: plant a one-row tree again,
-    // touch its marker, and readers resolve it immediately
-    val tiny = spark.read.parquet(s"${liveTree(sh)}/seed").limit(1)
-    tiny.write.parquet(s"$sh/t9/seed")
+    // and the commit IS the atomic flip: a one-row rewrite, written
+    // uncommitted, is resolved the moment its _SUCCESS lands (listing-
+    // served: the manifest is a cache the next commit rewrites)
+    val tiny = spark.read.parquet(gen(sh, "r1_1")).limit(1)
+    tiny.write.parquet(gen(sh, "r9_1"))
+    uncommit(gen(sh, "r9_1"))
     val tinyRows = tiny
       .select(col("doc_id"), explode(col("sh")).alias("s"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$sh/t9/_published"))
+    assert(shingleRows() == before, "an uncommitted rewrite leaked into reads")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"${gen(sh, "r9_1")}/_SUCCESS"))
+    dropManifests(sh)
     assert(shingleRows() == tinyRows,
-      "the publish marker did not flip readers to the new tree")
+      "the commit did not flip readers to the new rewrite")
   }
 
   test("phash ingest-dedup replay cleans a crashed attempt's committed leftovers") {
     import graft.operators.Multimodal
     // the binary twin of the text gate's planted-leftover case: a prior
-    // attempt at batch 0 COMMITTED its band subdir (full copy — worst
-    // case) but died before the marker; the replay must pre-clean it or
-    // every batch band row doubles in the probe and pairs duplicate
+    // attempt at batch 0 COMMITTED a pairs generation and wrote its band
+    // files (full copy — worst case) but died before the bands
+    // generation, the batch's commit, landed; the replay must not read
+    // them or every batch band row doubles in the probe and pairs
+    // duplicate
     val docs = Tables.documents(spark, sf)
     def media(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id").alias("media_id"),
@@ -1223,10 +1198,14 @@ class StreamingSpec extends SparkSpec {
     val outBase = java.nio.file.Files.createTempDirectory("graft-phleft-out")
     val out = outBase.resolve("pairs").toString
     val idx = outBase.resolve("index").toString
-    // the committed leftover (Spark write → _SUCCESS present, so the
-    // read-gating alone cannot hide it — the pre-clean must)
-    Multimodal.phashBandsOf(Multimodal.phashSigsOf(increment))
-      .write.parquet(s"${liveTree(s"$idx/bands")}/b0")
+    // the leftovers: committed duplicate pairs (the replay must
+    // overwrite them) and the batch's band files (the probe reads as of
+    // the previous batch, so they are never history)
+    val leftBands = Multimodal.phashBandsOf(Multimodal.phashSigsOf(increment))
+    Multimodal.phashVerifiedPairs(leftBands, leftBands.unionAll(leftBands))
+      .write.parquet(gen(out, "a0"))
+    leftBands.write.parquet(gen(s"$idx/bands", "a0"))
+    uncommit(gen(s"$idx/bands", "a0"))
     val stream = spark.readStream.schema(increment.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir.toString)
     val query = streaming.EventStream.phashIngestDedup(stream, history, out, idx)
@@ -1242,7 +1221,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("index reads serve only COMMITTED per-batch subdirs") {
-    // a torn subdir write (files landed, job commit's _SUCCESS did not)
+    // a torn generation write (files landed, job commit's _SUCCESS did not)
     // must be invisible to readers until the replay overwrites it
     val dir = java.nio.file.Files.createTempDirectory("graft-torn-read")
     val docs = Tables.documents(spark, sf)
@@ -1258,26 +1237,27 @@ class StreamingSpec extends SparkSpec {
     try query.processAllAvailable() finally query.stop()
     val committed = streaming.EventStream.ingestPairsRead(spark, out).count()
     assert(committed > 0)
-    // plant the torn subdir: a full copy of b0's files WITHOUT _SUCCESS
-    val b0 = java.nio.file.Paths.get(s"${liveTree(out)}/b0")
-    val torn = java.nio.file.Paths.get(s"${liveTree(out)}/b99")
+    // plant the torn generation: a full copy of a0's files WITHOUT _SUCCESS
+    val b0 = java.nio.file.Paths.get(gen(out, "a0"))
+    val torn = java.nio.file.Paths.get(gen(out, "a99"))
     java.nio.file.Files.createDirectories(torn)
     java.nio.file.Files.list(b0)
       .filter(p => !p.getFileName.toString.startsWith("_"))
       .forEach(p => java.nio.file.Files.copy(p, torn.resolve(p.getFileName.toString)))
+    dropManifests(out)
     assert(streaming.EventStream.ingestPairsRead(spark, out).count() == committed,
-      "a torn (uncommitted) subdir was served to readers")
+      "a torn (uncommitted) generation was served to readers")
   }
 
-  test("compaction folds only MARKED batches; a committed-but-unmarked subdir is left for replay") {
+  test("compaction refuses a batch its fold has not committed; after the" +
+      " replay it folds the batch once") {
     import graft.operators.Dedup
-    // the review-caught window: a fold's subdir write COMMITTED
-    // (_SUCCESS present) but the batch marker never landed. Folding it
-    // into the seed would hide it from the replay's pre-clean — the
-    // batch's rows would be served as history beside the replay's
-    // rewrite, doubling every involved pair permanently. Compaction
-    // must fold marked batches only and DROP the unmarked subdir (the
-    // checkpointed replay regenerates it).
+    // the review-caught window: a fold's shingle generation COMMITTED
+    // but its bands generation — the batch's commit — never landed.
+    // Folding it into a rewrite would serve the batch's rows as history
+    // beside the replay's own append, doubling every involved pair
+    // permanently. The rewrite must refuse loudly; the replay completes
+    // the batch, and compaction then folds it exactly once.
     val dir = java.nio.file.Files.createTempDirectory("graft-unmk")
     val docs = Tables.documents(spark, sf)
     docs.filter(col("doc_id") % 20 === 9)
@@ -1290,60 +1270,37 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(dir.toString)
     val query = streaming.EventStream.minhashIngestDedup(stream, history, out, idx)
     try query.processAllAvailable() finally query.stop()
-    def shingleRows() = spark.read
-      .option("recursiveFileLookup", "true").parquet(liveTree(s"$idx/shingles"))
+    def shingleRows() = streaming.EventStream.ingestShinglesRead(spark, idx)
       .select(col("doc_id"), explode(col("sh")).alias("s"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val marked = shingleRows()
-    // the crashed fold's committed-but-unmarked leftovers (batch 1 never
-    // got its marker): full shingle+band copies, Spark-committed
+    // the crashed fold of batch 1: its shingle generation committed
     val b1docs = docs.filter(col("doc_id") % 20 === 19)
-    val b1sh = Dedup.shingleDocs(b1docs)
-    b1sh.write.parquet(s"${liveTree(s"$idx/shingles")}/b1")
-    Dedup.bandIndex(b1sh).write.parquet(s"${liveTree(s"$idx/bands")}/b1")
+    Dedup.shingleDocs(b1docs).write.parquet(gen(s"$idx/shingles", "a1"))
+    val gensBefore = committedGens(s"$idx/shingles")
+    val e = intercept[IllegalArgumentException] {
+      streaming.EventStream.compactIngestIndex(spark, idx)
+    }
+    assert(e.getMessage.contains("a1") && e.getMessage.contains("replay"),
+      s"the refusal must name the pending batch: ${e.getMessage}")
+    assert(committedGens(s"$idx/shingles") == gensBefore,
+      "a refused compaction wrote a rewrite")
+    // the replay of batch 1 completes it, and compaction folds it once
+    streaming.EventStream.minhashIngestFoldBatch(spark, out, idx, b1docs, 1L)
+    val served = shingleRows()
     streaming.EventStream.compactIngestIndex(spark, idx)
-    val dirs = treeDirs(s"$idx/shingles")
-    assert(dirs == Seq("seed"), s"shingles: ${dirs.mkString(",")}")
-    assert(shingleRows() == marked,
-      "compaction folded an unmarked batch's rows into the seed")
-  }
-
-  test("marker vacuum then compaction loses nothing: the recorded horizon marks batches applied") {
-    import graft.operators.Dedup
-    // the composition the second review pass caught: after a valid
-    // marker vacuum (batches checkpoint-committed), compaction must NOT
-    // treat the now-markerless batch subdirs as crashed writes and drop
-    // them — the recorded horizon is the surviving evidence
-    val dir = java.nio.file.Files.createTempDirectory("graft-vaccomp")
-    val docs = Tables.documents(spark, sf)
-    docs.filter(col("doc_id") % 10 === 9)
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    val history = docs.filter(col("doc_id") % 10 =!= 9)
-    val outBase = java.nio.file.Files.createTempDirectory("graft-vaccomp-out")
-    val out = outBase.resolve("pairs").toString
-    val idx = outBase.resolve("index").toString
-    val ckpt = outBase.resolve("ckpt").toString
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val query = streaming.EventStream.minhashIngestDedup(
-      stream, history, out, idx, checkpointDir = Some(ckpt))
-    try query.processAllAvailable() finally query.stop()
-    def shingleRows() = spark.read
-      .option("recursiveFileLookup", "true").parquet(liveTree(s"$idx/shingles"))
+    assert(servedGens(streaming.EventStream.ingestShinglesRead(spark, idx)) ==
+      Seq("r0_1"))
+    assert(shingleRows() == served, "compaction changed the table's rows")
+    assert(served == Dedup.shingleDocs(history.unionByName(docs.filter(
+        col("doc_id") % 10 === 9)))
       .select(col("doc_id"), explode(col("sh")).alias("s"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val before = shingleRows()
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet,
+      "the replayed batch is not served exactly once")
+    // the pairs OUTPUT table compacts the same way (its first rewrite)
     val pairsBefore = streaming.EventStream.ingestPairsRead(spark, out)
       .collect().map(_.toSeq).toSet
-    // batch 0 is checkpoint-committed → horizon 1 is valid; vacuum it
-    assert(streaming.EventStream.vacuumPlainMarkers(spark, idx, 1L) == Seq(0L))
-    streaming.EventStream.compactIngestIndex(spark, idx)
-    assert(shingleRows() == before,
-      "compaction dropped a vacuumed (applied) batch's index rows")
-    // and the pairs OUTPUT table compacts the same way (first seed here)
     streaming.EventStream.compactIngestPairs(spark, out, idx)
-    val pairDirs = treeDirs(out)
-    assert(pairDirs == Seq("seed"), s"pairs: ${pairDirs.mkString(",")}")
+    assert(servedGens(streaming.EventStream.ingestPairsRead(spark, out)) == Seq("r0_1"))
     assert(streaming.EventStream.ingestPairsRead(spark, out)
       .collect().map(_.toSeq).toSet == pairsBefore)
   }
@@ -1525,7 +1482,7 @@ class StreamingSpec extends SparkSpec {
     assert(got == want && want.nonEmpty,
       "streamed fingerprint index diverged from the batch selection")
     val count = streaming.EventStream.winnowIndexRead(spark, indexDir).count()
-    // restart: both batches replay as marker-gated no-ops
+    // restart: both batches replay as commit-gated no-ops
     run()
     assert(streaming.EventStream.winnowIndexRead(spark, indexDir).count()
       == count, "restarted winnow ingest stream grew the index")
@@ -1556,13 +1513,13 @@ class StreamingSpec extends SparkSpec {
     val want = q("bm25_top_docs").collect().map(_.toSeq).toSeq
     assert(serve() == want && want.nonEmpty,
       "maintained-index BM25 diverged from the batch retrieval query")
-    // compaction consolidates the subdirs without changing what serves
+    // compaction consolidates the generations without changing what serves
     streaming.EventStream.compactTfIndex(spark, indexDir)
-    val dirs = treeDirs(s"$indexDir/tf")
-    assert(dirs == Seq("seed"), s"tf dirs: ${dirs.mkString(",")}")
+    val dirs = servedGens(streaming.EventStream.tfIndexRead(spark, indexDir))
+    assert(dirs == Seq("r0_1"), s"tf dirs: ${dirs.mkString(",")}")
     assert(serve() == want, "compaction changed the served BM25 top-k")
     // ERASURE THROUGH SERVING: forget a doc slice from the index
-    // (quiesced, all markers landed) — the served BM25 must equal the
+    // (quiesced, every fold committed) — the served BM25 must equal the
     // batch query over the SURVIVING documents, and no forgotten row may
     // remain in the token cache
     val isForgotten = col("doc_id") % 10 === 3
@@ -1598,40 +1555,38 @@ class StreamingSpec extends SparkSpec {
       stream, docs.filter(!isBatch), indexDir,
       checkpointDir = Some(outBase.resolve("ckpt").toString))
     try q1.processAllAvailable() finally q1.stop()
-    // the live tree is seed + b0 + b1 — erase directly on the
-    // MULTI-SUBDIR layout (the marker-gated foldable path under a
-    // transform)
-    val preDirs = treeDirs(s"$indexDir/tf")
+    // the table serves seed + a0 + a1 — erase directly on the
+    // MULTI-GENERATION layout (the rewrite's fold under a transform)
+    val preDirs = servedGens(streaming.EventStream.tfIndexRead(spark, indexDir))
     assert(preDirs.length > 1, s"fixture should be uncompacted: ${preDirs.mkString(",")}")
     val isForgotten = col("doc_id") % 10 === 9
     streaming.EventStream.forgetDocsFromTfIndex(spark, indexDir,
       docs.filter(isForgotten).select(col("doc_id")))
     val tf1 = streaming.EventStream.tfIndexRead(spark, indexDir)
     assert(tf1.filter(col("doc_id") % 10 === 9).count() == 0,
-      "multi-subdir erasure left forgotten rows")
+      "multi-generation erasure left forgotten rows")
     val survivors = docs.filter(!isForgotten)
     assert(tf1.collect().map(_.toSeq).toSet ==
       TextAnalysis.termFreqsOf(survivors).collect().map(_.toSeq).toSet,
-      "erased multi-subdir tree must equal the surviving-docs tokenization")
-    // erasure must VACUUM the superseded tree — the forgotten rows'
-    // directory is the very thing the deletion request targets, so the
-    // grace-snapshot discipline of plain compaction does not apply
+      "erased multi-generation table must equal the surviving-docs tokenization")
+    // erasure must EXPIRE every older generation — the forgotten rows'
+    // directories are the very thing the deletion request targets, so
+    // the grace-snapshot discipline of plain compaction does not apply
     val tfDir = s"$indexDir/tf"
-    val treesAfter = new java.io.File(tfDir).list().filter(_.startsWith("t")).sorted
-    assert(treesAfter.length == 1,
-      s"erasure left the superseded (forgotten-rows) tree: ${treesAfter.mkString(",")}")
-    // a crashed unpublished build parked beside the live tree (the new
-    // protocol's only crash residue) must not stop a later erasure, and
-    // the erasure must STILL erase — a recovery path that skipped the
-    // caller's transform would be a silent non-erasure with no error to
-    // trigger the regulatory re-run
-    spark.read.parquet(s"${liveTree(tfDir)}/seed")
-      .write.parquet(s"$tfDir/t90/seed")
+    assert(committedGens(tfDir) == Seq("r0_1"),
+      s"erasure left older (forgotten-rows) generations: ${committedGens(tfDir).mkString(",")}")
+    // a crashed uncommitted build parked beside it (the log's only crash
+    // residue; a cleanly failed writer released its claim) must not stop
+    // a later erasure, and the erasure must STILL erase — a recovery path
+    // that skipped the caller's transform would be a silent non-erasure
+    // with no error to trigger the regulatory re-run
+    spark.read.parquet(gen(tfDir, "r0_1")).write.parquet(gen(tfDir, "r1_1"))
+    uncommit(gen(tfDir, "r1_1"))
     val forgetMore = col("doc_id") % 10 === 4
     streaming.EventStream.forgetDocsFromTfIndex(spark, indexDir,
       docs.filter(forgetMore).select(col("doc_id")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tfDir/t90")),
-      "erasure entry left the crashed unpublished build (holding forgotten rows)")
+    assert(committedGens(tfDir) == Seq("r1_1"),
+      "erasure left the crashed build or an older generation (holding forgotten rows)")
     val tf2 = streaming.EventStream.tfIndexRead(spark, indexDir)
     assert(tf2.filter(col("doc_id") % 10 === 4).count() == 0,
       "erasure beside a crashed build erased nothing")
@@ -1641,8 +1596,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** Seed a small tf index (history seed + two streamed batches) and
-    * return (indexDir, tfDir) — the fixture the writer-claim interleave
-    * tests race compaction/erasure writers over.
+    * return (indexDir, tfDir) — the fixture the rewrite-claim and
+    * retention tests race compaction/erasure writers over.
     */
   private def claimFixture(tag: String): (String, String) = {
     val docs = Tables.documents(spark, sf)
@@ -1841,20 +1796,21 @@ class StreamingSpec extends SparkSpec {
       "asOf(from) ∪ changes(from,to] must equal asOf(to)")
     assert(idxChanges(1L, 99L).isEmpty,
       "an empty change window must read empty, not error")
-    // compaction folds b0+b1 into the new seed and records the horizon
+    // compaction folds a0+a1 into a rewrite that records the batch it
+    // covers through in its name
+    val chunksDir = s"$indexDir/chunks"
     streaming.EventStream.compactChunkIndex(spark, indexDir)
-    val tree = streaming.EventStream.ensureLiveTree(spark, s"$indexDir/chunks")
-    assert(streaming.EventStream.seedThroughOf(spark, tree) == 1L,
-      "compaction must record _seed_through_1 in the published tree")
+    assert(committedGens(chunksDir).contains("r0_1"),
+      s"compaction must commit r0_1: ${committedGens(chunksDir).mkString(",")}")
     assert(idxAsOf(1L) == live,
       "as-of at the compaction horizon must survive compaction")
-    // below the live horizon the read resolves the RETAINED GRACE
-    // snapshot (plain compaction leaves the superseded tree published)
-    // — the expire-later window, during which older as-ofs still serve
+    // below it the read resolves the RETAINED GRACE snapshot (plain
+    // compaction keeps the seed and the appends it folded) — the
+    // expire-later window, during which older as-ofs still serve
     assert(idxAsOf(0L) == rebuildThrough(col("doc_id") <= q2),
-      "as-of below the live horizon must serve from the grace snapshot")
+      "as-of below the rewrite must serve from the grace snapshot")
     assert(idxChanges(0L, 1L) == rebuildThrough(col("doc_id") > q2),
-      "changes below the live horizon must read from the grace snapshot")
+      "changes below the rewrite must read from the grace snapshot")
     // post-compaction fold: as-of the new batch = live, horizon intact
     streaming.EventStream.chunkIngestFoldBatch(spark, outDir, indexDir,
       docs.filter(col("doc_id") <= q1), 2L)
@@ -1864,23 +1820,23 @@ class StreamingSpec extends SparkSpec {
       "post-compaction fold must extend as-of without moving the horizon")
     assert(idxChanges(1L, 2L) == rebuildThrough(col("doc_id") <= q1),
       "changes(horizon, new-batch] must serve the post-compaction fold")
-    // the cross-tree stitch: (0, 2] spans the grace tree's b1 AND the
-    // live tree's b2
+    // a window spanning the compaction: (0, 2] reads the grace append
+    // a1 AND the post-compaction append a2
     assert(idxChanges(0L, 2L) ==
       rebuildThrough(col("doc_id") > q2 || col("doc_id") <= q1),
-      "changes spanning the compaction must stitch across trees")
+      "changes spanning the compaction must read both appends")
     // redelivery of batch 2 is a no-op at every as-of point
     streaming.EventStream.chunkIngestFoldBatch(spark, outDir, indexDir,
       docs.filter(col("doc_id") <= q1), 2L)
     assert(idxAsOf(2L) == live2, "redelivered batch changed an as-of read")
-    // a second compaction carries the horizon monotonically (max of
-    // prior horizon and the batches it folds — here b2, so 2) and its
-    // ENTRY VACUUM expires the oldest grace snapshot: as-of 0 is now
-    // past every retained horizon and fails loudly
+    // a second compaction advances monotonically (its rewrite covers
+    // a2, so through 2), and retention at the first rewrite's batch
+    // expires the oldest grace snapshot: as-of 0 is now below the
+    // retention horizon and fails loudly
     streaming.EventStream.compactChunkIndex(spark, indexDir)
-    val tree2 = streaming.EventStream.ensureLiveTree(spark, s"$indexDir/chunks")
-    assert(streaming.EventStream.seedThroughOf(spark, tree2) == 2L,
-      "second compaction must advance the recorded horizon to 2")
+    assert(committedGens(chunksDir).contains("r1_2"),
+      s"second compaction must commit r1_2: ${committedGens(chunksDir).mkString(",")}")
+    streaming.EventStream.expireVersionedGenerations(spark, chunksDir, 1L)
     assert(idxAsOf(2L) == live2,
       "as-of at the new horizon must survive the second compaction")
     assert(idxAsOf(1L) == live,
@@ -2056,10 +2012,9 @@ class StreamingSpec extends SparkSpec {
       stream, docsDf.filter(lit(false)), pairsDir, indexDir, clusterDir,
       checkpointDir = Some(ckpt), autoCompactAfter = Some(2))
     try q1.processAllAvailable() finally q1.stop()
-    // the policy fired mid-stream: the live members tree is a compacted
-    // snapshot (its horizon covers the threshold-crossing batch)...
-    val tree = streaming.EventStream.ensureLiveTree(spark, s"$clusterDir/members")
-    assert(streaming.EventStream.seedThroughOf(spark, tree) >= 2L,
+    // the policy fired mid-stream: the members table holds a rewrite
+    // covering the threshold-crossing batch...
+    assert(committedGens(s"$clusterDir/members").exists(_.matches("r\\d+_[2-9]")),
       "auto-compaction never fired on the cluster state")
     // ...and serving is transparent: the post-compaction batch's merge
     // (100 -> 50) still resolves on top of the compacted baseline
@@ -2090,21 +2045,23 @@ class StreamingSpec extends SparkSpec {
       try q1.processAllAvailable() finally q1.stop()
       indexDir
     }
-    // threshold 2 with exactly 2 batch subdirs: 2 > 2 is false — the
+    def served(idx: String) = servedGens(streaming.EventStream.tfIndexRead(spark, idx))
+    // threshold 2 with exactly 2 batch appends: 2 > 2 is false — the
     // policy must NOT fire AT the threshold, only past it
     val atIdx = run("autocompact-at", 2)
-    assert(treeDirs(s"$atIdx/tf") == Seq("b0", "b1", "seed"),
+    assert(served(atIdx) == Seq("a0", "a1", "seed"),
       "policy fired at (not past) the threshold")
-    // threshold 1: after b0 the count is 1 (no fire), after b1 it is 2 —
-    // the fold path compacts to one seed
+    // threshold 1: after a0 the count is 1 (no fire), after a1 it is 2 —
+    // the fold path compacts to one rewrite
     val pastIdx = run("autocompact-past", 1)
-    assert(treeDirs(s"$pastIdx/tf") == Seq("seed"),
-      s"policy did not fire past the threshold: ${treeDirs(s"$pastIdx/tf")}")
-    // marker evidence outlives the auto-compaction (horizon discipline):
-    // a redelivered pre-compaction batch must still no-op
-    val markers = new java.io.File(s"$pastIdx/_batches").list()
-      .filter(!_.startsWith(".")).sorted.toSeq
-    assert(markers == Seq("0", "1"), s"markers: ${markers.mkString(",")}")
+    assert(served(pastIdx) == Seq("r0_1"),
+      s"policy did not fire past the threshold: ${served(pastIdx)}")
+    // the replay evidence outlives the auto-compaction: the rewrite
+    // covers both batches, so a redelivered pre-compaction batch no-ops
+    val before = committedGens(s"$pastIdx/tf")
+    streaming.EventStream.tfIndexFoldBatch(spark, pastIdx, docs.filter(isBatch), 0L)
+    assert(committedGens(s"$pastIdx/tf") == before,
+      "a redelivered compacted batch was folded again")
     // both policies serve the identical full tokenization
     val want = TextAnalysis.termFreqsOf(docs).collect().map(_.toSeq).toSet
     for (idx <- Seq(atIdx, pastIdx))
@@ -2113,65 +2070,41 @@ class StreamingSpec extends SparkSpec {
         s"auto-compacted index under $idx serves wrong rows")
   }
 
-  test("concurrent compaction writers serialize on the tree claim:" +
-      " loser errors, winner publishes, loser re-runs byte-exact") {
-    val (indexDir, tfDir) = claimFixture("tfclaim")
-    def served() = streaming.EventStream.tfIndexRead(spark, indexDir)
-      .collect().map(_.toSeq).toSet
-    val before = served()
-    val preDirs = treeDirs(tfDir)
-    assert(preDirs.length > 1, s"fixture should be uncompacted: $preDirs")
-    // writer A reserves the next tree (the first step of its build)...
-    val aClaim = streaming.EventStream.acquireTreeClaim(spark, tfDir)
-    // ...and writer B's whole compaction must fail loudly AT THE CLAIM —
-    // before vacuuming, building, or publishing anything
-    val e = intercept[IllegalStateException] {
-      streaming.EventStream.compactTfIndex(spark, indexDir)
-    }
-    assert(e.getMessage.contains("_claim_") &&
-      e.getMessage.contains("breakTreeClaims"),
-      s"loser's error must name the claim and the recovery API: ${e.getMessage}")
-    // the loser touched nothing: same subdirs, same served rows
-    assert(treeDirs(tfDir) == preDirs, "losing writer modified the live tree")
-    assert(served() == before, "losing writer changed what serves")
-    // a second claim attempt by anyone else keeps failing while A holds it
-    intercept[IllegalStateException] {
-      streaming.EventStream.acquireTreeClaim(spark, tfDir)
-    }
-    // winner A finishes its build and releases; its publish advances the
-    // live tree (compaction path under A's... A releases and compacts —
-    // the claim machinery is what compactTfIndex runs internally)
-    streaming.EventStream.releaseTreeClaim(spark, tfDir, aClaim)
-    streaming.EventStream.compactTfIndex(spark, indexDir)
-    assert(treeDirs(tfDir) == Seq("seed"), "winner's compaction did not fold")
-    assert(served() == before, "winner's compaction changed served rows")
-    // the loser re-runs against the winner's published tree — byte-exact
-    // rows, and the claim it acquires is a fresh number (no residue)
-    streaming.EventStream.compactTfIndex(spark, indexDir)
-    assert(served() == before, "loser's re-run changed served rows")
-    val claims = new java.io.File(tfDir).list().filter(_.startsWith("_claim"))
-    assert(claims.isEmpty, s"claims leaked: ${claims.mkString(",")}")
-  }
-
   test("compactor-vs-erasure interleave: the erasure loses loudly while" +
       " a claim is held, erases nothing, then re-runs to completion") {
     val docs = Tables.documents(spark, sf)
     val (indexDir, tfDir) = claimFixture("tfclaim2")
+    def served() = streaming.EventStream.tfIndexRead(spark, indexDir)
+      .collect().map(_.toSeq).toSet
+    val before = served()
+    val gensBefore = committedGens(tfDir)
     val victim = docs.filter(col("doc_id") % 10 === 3).select(col("doc_id"))
-    val held = streaming.EventStream.acquireTreeClaim(spark, tfDir)
-    // the erasure entry must fail at the claim — an erasure that half-ran
-    // under a racing compactor could be silently undone by the
-    // compactor's fold of the pre-erasure tree
-    intercept[IllegalStateException] {
+    // writer A claimed the next rewrite (sequence 0 over the seed) and is
+    // building it — or crashed hard while doing so
+    val claim = java.nio.file.Paths.get(s"$tfDir/state/_rewrite_0")
+    java.nio.file.Files.createFile(claim)
+    // the erasure and a second compaction must both fail at the claim —
+    // an erasure that half-ran under a racing compactor could be
+    // silently undone by the compactor's fold of the pre-erasure state
+    val e = intercept[IllegalStateException] {
       streaming.EventStream.forgetDocsFromTfIndex(spark, indexDir, victim)
     }
-    val tf = streaming.EventStream.tfIndexRead(spark, indexDir)
-    assert(tf.filter(col("doc_id") % 10 === 3).count() > 0,
-      "losing erasure must leave the table untouched (it will re-run)")
-    // the compactor (claim holder) completes; the erasure re-runs —
+    assert(e.getMessage.contains("_rewrite_0") && e.getMessage.contains("delete"),
+      s"the loser's error must name the claim and its recovery: ${e.getMessage}")
+    intercept[IllegalStateException] {
+      streaming.EventStream.compactTfIndex(spark, indexDir)
+    }
+    // the losers touched nothing: same generations, same served rows,
+    // and the holder's claim is still in place
+    assert(committedGens(tfDir) == gensBefore, "a losing writer committed")
+    assert(served() == before, "a losing writer changed what serves")
+    assert(java.nio.file.Files.exists(claim), "a loser released the holder's claim")
+    // the holder finishes (its claim stays with its commit) — or, after
+    // a crash, the operator deletes the claim — and the losers re-run:
     // regulation-mandated retries run until success
-    streaming.EventStream.releaseTreeClaim(spark, tfDir, held)
+    java.nio.file.Files.delete(claim)
     streaming.EventStream.compactTfIndex(spark, indexDir)
+    assert(served() == before, "compaction changed served rows")
     streaming.EventStream.forgetDocsFromTfIndex(spark, indexDir, victim)
     val after = streaming.EventStream.tfIndexRead(spark, indexDir)
     assert(after.filter(col("doc_id") % 10 === 3).count() == 0,
@@ -2180,28 +2113,12 @@ class StreamingSpec extends SparkSpec {
       graft.operators.TextAnalysis.termFreqsOf(
         docs.filter(col("doc_id") % 10 =!= 3)).collect().map(_.toSeq).toSet,
       "post-erasure table must equal the surviving-docs tokenization")
-  }
-
-  test("a crashed writer's claim blocks until breakTreeClaims; recovery" +
-      " then compacts normally") {
-    val (indexDir, tfDir) = claimFixture("tfclaim3")
-    def served() = streaming.EventStream.tfIndexRead(spark, indexDir)
-      .collect().map(_.toSeq).toSet
-    val before = served()
-    // the crashed writer left its claim AND a half-built unpublished tree
-    streaming.EventStream.acquireTreeClaim(spark, tfDir)
-    spark.read.parquet(s"${liveTree(tfDir)}/seed")
-      .write.parquet(s"$tfDir/t1/seed")
-    intercept[IllegalStateException] {
-      streaming.EventStream.compactTfIndex(spark, indexDir)
-    }
-    // claims never auto-expire (a paused writer is indistinguishable from
-    // a dead one) — the operator verifies the writer is dead and breaks
-    streaming.EventStream.breakTreeClaims(spark, tfDir)
-    streaming.EventStream.compactTfIndex(spark, indexDir)
-    assert(treeDirs(tfDir) == Seq("seed"), "recovery compaction did not fold")
-    assert(served() == before,
-      "recovery compaction changed served rows (crashed build leaked in?)")
+    // each committed rewrite keeps its claim, so a writer that listed
+    // before a rewrite committed can never claim its sequence again
+    val claims = new java.io.File(s"$tfDir/state").list()
+      .filter(_.startsWith("_rewrite_")).sorted.toSeq
+    assert(claims == Seq("_rewrite_0", "_rewrite_1"), s"claims: $claims")
+    assert(committedGens(tfDir) == Seq("r1_1"), committedGens(tfDir).mkString(","))
   }
 
   test("withWatermark hourly aggregate: append mode finalizes windows the" +
@@ -2257,79 +2174,43 @@ class StreamingSpec extends SparkSpec {
       "streamed finalized windows diverge from the batch spelling")
   }
 
-  test("claim TOCTOU guard: a publish landing between the live listing" +
-      " and the claim create fails loudly, releases, and vacuums nothing") {
-    val (indexDir, tfDir) = claimFixture("tfclaim4")
-    def served() = streaming.EventStream.tfIndexRead(spark, indexDir)
-      .collect().map(_.toSeq).toSet
-    val before = served()
-    // the loser listed live = t0 ... then the winner's whole compaction
-    // (build + publish t1 + claim release) lands inside the window
-    streaming.EventStream.compactTfIndex(spark, indexDir)
-    // ...so the loser's claim create SUCCEEDS on _claim_1, but t1 is
-    // already live: proceeding would let its entry vacuum delete the
-    // winner's just-published tree. The post-claim re-validation must
-    // fail loudly instead.
-    val e = intercept[IllegalStateException] {
-      streaming.EventStream.acquireTreeClaimAt(spark, tfDir, believedLive = 0)
-    }
-    assert(e.getMessage.contains("raced a concurrent publish"),
-      s"guard must name the race: ${e.getMessage}")
-    // the claim was released on the way out — no residue blocks retries
-    val claims = new java.io.File(tfDir).list().filter(_.startsWith("_claim"))
-    assert(claims.isEmpty, s"raced claim leaked: ${claims.mkString(",")}")
-    // the winner's published tree is untouched and still serves
-    assert(treeDirs(tfDir) == Seq("seed"),
-      "raced loser modified the winner's published tree")
-    assert(served() == before, "raced loser changed what serves")
-    // the loser's honest re-run (fresh listing) proceeds normally
-    val n = streaming.EventStream.acquireTreeClaim(spark, tfDir)
-    streaming.EventStream.releaseTreeClaim(spark, tfDir, n)
-  }
-
-  test("expireSnapshots: retained grace snapshots still time-travel," +
-      " expired as-of reads fail loudly, the live tree never expires") {
+  test("append-table retention: retained grace snapshots still" +
+      " time-travel, expired as-of reads fail loudly, the newest rewrite" +
+      " never expires") {
     val (indexDir, tfDir) = claimFixture("tfexpire")
     def served() = streaming.EventStream.tfIndexRead(spark, indexDir)
       .collect().map(_.toSeq).toSet
     val before = served()
     val asOf0Rows = streaming.EventStream.tfIndexReadAsOf(spark, indexDir, 0L)
       .collect().map(_.toSeq).toSet
-    // compaction publishes t1 and leaves t0 as the grace snapshot
+    // compaction commits r0_1 and keeps the seed and appends as the
+    // grace snapshot
     streaming.EventStream.compactTfIndex(spark, indexDir)
-    // while retained, the grace snapshot still serves as-of reads
     assert(streaming.EventStream.tfIndexReadAsOf(spark, indexDir, 0L)
       .collect().map(_.toSeq).toSet == asOf0Rows,
       "grace snapshot stopped serving as-of reads before expiry")
-    // keepLast covering every snapshot expires nothing
-    assert(streaming.EventStream.expireSnapshots(spark, tfDir, keepLast = 2) == 0)
-    // an unpublished tree (an in-flight/crashed build) is NOT retention's
-    // to touch — it belongs to the claim protocol
-    val husk = new java.io.File(s"$tfDir/t7/seed")
+    // an uncommitted build (an in-flight or crashed rewrite) is NOT
+    // retention's to touch
+    val husk = new java.io.File(gen(tfDir, "r5_1"))
     husk.mkdirs()
-    assert(streaming.EventStream.expireSnapshots(spark, tfDir, keepLast = 1) == 1,
-      "exactly the grace snapshot should expire")
-    assert(husk.exists(), "expiry deleted an unpublished in-flight build")
-    // (the unpublished husk is invisible to every resolver — leave it;
-    // a real writer's entry vacuum would remove it)
-    // the live tree survives and serves unchanged
+    // expiry at the rewrite's batch drops exactly the grace snapshot
+    val dropped = streaming.EventStream.expireVersionedGenerations(spark, tfDir, 1L)
+    assert(dropped.map(d => new java.io.File(d).getName).sorted == Seq("a0", "a1", "seed"),
+      s"exactly the grace snapshot should expire: $dropped")
+    assert(husk.exists(), "expiry deleted an uncommitted in-flight build")
     assert(served() == before, "expiry changed what the live read serves")
-    // the expired snapshot's as-of window now fails LOUDLY (the existing
-    // batchDirsReadAsOf message), never a silently-partial view
+    // the expired window's as-of read fails LOUDLY, never a
+    // silently-partial view
     val e = intercept[IllegalArgumentException] {
       streaming.EventStream.tfIndexReadAsOf(spark, indexDir, 0L).collect()
     }
-    assert(e.getMessage.contains("predates every retained snapshot"),
+    assert(e.getMessage.contains("retained snapshot"),
       s"expired as-of must fail with the retention message: ${e.getMessage}")
-    // as-of at/after the live horizon still serves
     assert(streaming.EventStream.tfIndexReadAsOf(spark, indexDir, 1L)
       .collect().map(_.toSeq).toSet == before)
-    // keepLast = 0 (expiring the live tree) is refused loudly
-    intercept[IllegalArgumentException] {
-      streaming.EventStream.expireSnapshots(spark, tfDir, keepLast = 0)
-    }
-    // idempotent: nothing left to expire
-    assert(streaming.EventStream.expireSnapshots(spark, tfDir, keepLast = 1) == 0)
+    // a horizon past every batch still keeps the newest rewrite serving
+    assert(streaming.EventStream.expireVersionedGenerations(spark, tfDir, 99L).isEmpty)
+    assert(served() == before, "expiry past the newest batch dropped the newest rewrite")
   }
 
   test("maintenance-stream retention hook: expireKeepSnapshots beside" +
@@ -2349,12 +2230,9 @@ class StreamingSpec extends SparkSpec {
       autoCompactAfter = Some(1), expireKeepSnapshots = Some(1))
     try q1.processAllAvailable() finally q1.stop()
     // every auto-compaction's grace snapshot was expired by the hook:
-    // exactly one published tree remains
-    val published = new java.io.File(s"$indexDir/tf").list()
-      .filter(_.matches("t\\d+"))
-      .filter(n => new java.io.File(s"$indexDir/tf/$n/_published").exists())
-    assert(published.length == 1,
-      s"retention hook left ${published.mkString(",")} published")
+    // exactly one committed generation — the rewrite — remains
+    val left = committedGens(s"$indexDir/tf")
+    assert(left == Seq("r0_1"), s"retention hook left ${left.mkString(",")}")
     // and the table still serves the full tokenize-once truth
     assert(streaming.EventStream.tfIndexRead(spark, indexDir)
       .collect().map(_.toSeq).toSet ==
@@ -2370,18 +2248,18 @@ class StreamingSpec extends SparkSpec {
     val batch = Similarity.maintainedBatch(spark, sf)
     val indexDir = java.nio.file.Files.createTempDirectory("graft-anntorn").toString
     // seed the index directly (the stream's own seed shape)
-    Similarity.pqEncodeWith(history, cb)
-      .write.parquet(s"${liveTree(s"$indexDir/codes")}/seed")
-    Similarity.assignCellsTo(history, cents)
-      .write.parquet(s"${liveTree(s"$indexDir/cells")}/seed")
+    streaming.EventStream.seedAppendTables(spark,
+      s"$indexDir/codes" -> Similarity.pqEncodeWith(history, cb),
+      s"$indexDir/cells" -> Similarity.assignCellsTo(history, cents))
     val served0 = Similarity.ivfpqServeTop5(spark, sf,
       streaming.EventStream.annIndexCellsRead(spark, indexDir),
       streaming.EventStream.annIndexCodesRead(spark, indexDir), cb)
       .collect().map(_.toSeq).toSet
-    // the torn state the write ORDER guarantees: codes/b99 committed,
-    // cells/b99 never written (crash between the two writes)
-    Similarity.pqEncodeWith(batch, cb)
-      .write.parquet(s"${liveTree(s"$indexDir/codes")}/b99")
+    // the torn state the write ORDER guarantees: codes a99 committed,
+    // cells a99 never written (crash between the two writes); listing-
+    // served, so the committed codes generation IS read
+    Similarity.pqEncodeWith(batch, cb).write.parquet(gen(s"$indexDir/codes", "a99"))
+    dropManifests(s"$indexDir/codes")
     val served1 = Similarity.ivfpqServeTop5(spark, sf,
       streaming.EventStream.annIndexCellsRead(spark, indexDir),
       streaming.EventStream.annIndexCodesRead(spark, indexDir), cb)
@@ -2392,15 +2270,15 @@ class StreamingSpec extends SparkSpec {
 
   test("compacting a half-seeded index fails loudly instead of publishing an empty seed") {
     val idx = java.nio.file.Files.createTempDirectory("graft-halfseed").toString
-    // the crash state: seed dir exists in the live tree, no _SUCCESS
+    // the crash state: the seed generation dir exists, no _SUCCESS
     // (write died mid-job)
-    val seed = java.nio.file.Paths.get(s"${liveTree(s"$idx/shingles")}/seed")
+    val seed = java.nio.file.Paths.get(gen(s"$idx/shingles", "seed"))
     java.nio.file.Files.createDirectories(seed)
     java.nio.file.Files.write(seed.resolve("part-00000"), Array[Byte](1, 2, 3))
     val e = intercept[IllegalArgumentException] {
       streaming.EventStream.compactIngestIndex(spark, idx)
     }
-    assert(e.getMessage.contains("without commit evidence"), s"wrong failure: $e")
+    assert(e.getMessage.contains("no committed seed"), s"wrong failure: $e")
     // the uncommitted data was not destroyed
     assert(java.nio.file.Files.exists(seed.resolve("part-00000")))
   }
@@ -2411,14 +2289,14 @@ class StreamingSpec extends SparkSpec {
     // into an empty committed seed the seed guard then trusts forever —
     // the seedless layout is legitimate only for OUTPUT (pairs) tables
     val idx = java.nio.file.Files.createTempDirectory("graft-noseed").toString
-    // a published tree with one committed batch subdir but NO seed
+    // one committed batch append but NO seed
     Tables.documents(spark, sf).limit(1).select(
         col("doc_id"), array(col("text")).alias("sh"))
-      .write.parquet(s"${liveTree(s"$idx/shingles")}/b0")
+      .write.parquet(gen(s"$idx/shingles", "a0"))
     val e = intercept[IllegalArgumentException] {
       streaming.EventStream.compactIngestIndex(spark, idx)
     }
-    assert(e.getMessage.contains("no seed at all"), s"wrong failure: $e")
+    assert(e.getMessage.contains("no committed seed"), s"wrong failure: $e")
   }
 
   test("foreachBatch phash ingest-dedup equals the batch pair set across restarted runs") {
@@ -2451,10 +2329,10 @@ class StreamingSpec extends SparkSpec {
     assert(streaming.EventStream.phashPairsRead(spark, out).count() > 0,
       "run 1 emitted no pairs — fixture drift?")
     // compact between the runs: run 2 must probe the consolidated index
-    // exactly as it would the subdir layout
+    // exactly as it would the per-batch generations
     streaming.EventStream.compactPhashIndex(spark, idx)
-    val bandDirs = treeDirs(s"$idx/bands")
-    assert(bandDirs == Seq("seed"), s"bands: ${bandDirs.mkString(",")}")
+    val bandDirs = servedGens(streaming.EventStream.phashBandsRead(spark, idx))
+    assert(bandDirs == Seq("r0_0"), s"bands: ${bandDirs.mkString(",")}")
     media(docs.filter(col("doc_id") % 20 === 19))
       .coalesce(1).write.mode("append").parquet(dir.toString)
     run()
@@ -2515,11 +2393,11 @@ class StreamingSpec extends SparkSpec {
     val want = Similarity.ivfpqMaintainedTop5(spark, sf)
     assert(served.count() == want.count() && want.count() > 0)
     assert(served.exceptAll(want).count() == 0)
-    // compaction collapses the per-batch subdirs and changes NOTHING
-    // the index serves
+    // compaction collapses the per-batch generations and changes
+    // NOTHING the index serves
     streaming.EventStream.compactAnnIndex(spark, indexDir)
-    val cellDirs = treeDirs(s"$indexDir/cells")
-    assert(cellDirs == Seq("seed"), s"cells: ${cellDirs.mkString(",")}")
+    val cellDirs = servedGens(streaming.EventStream.annIndexCellsRead(spark, indexDir))
+    assert(cellDirs == Seq("r0_1"), s"cells: ${cellDirs.mkString(",")}")
     val cells2 = streaming.EventStream.annIndexCellsRead(spark, indexDir)
     val codes2 = streaming.EventStream.annIndexCodesRead(spark, indexDir)
     assert(cells2.exceptAll(wantCells).count() == 0)
@@ -2569,15 +2447,14 @@ class StreamingSpec extends SparkSpec {
     assert(pairs1.length < pairs0.length, "erasure deleted no pairs")
     assert(!pairs1.exists(p => p._1 == victim || p._2 == victim),
       "a pair naming the forgotten document survived erasure")
-    // erasure vacuums the superseded (forgotten-rows) trees immediately
-    for (t <- Seq(s"$idx/shingles", s"$idx/bands", out)) {
-      val trees = new java.io.File(t).list().filter(_.startsWith("t")).sorted
-      assert(trees.length == 1, s"$t kept the superseded tree: ${trees.mkString(",")}")
-    }
+    // erasure expires the older (forgotten-rows) generations immediately
+    for (t <- Seq(s"$idx/shingles", s"$idx/bands", out))
+      assert(committedGens(t) == Seq("r0_0"),
+        s"$t kept an older generation: ${committedGens(t).mkString(",")}")
     // ghost probe THROUGH THE STREAM: run 2 ingests the victim's exact
     // text under a fresh id — it must not pair with the victim's ghost
     // (its bands/shingles are gone), and the stream keeps operating
-    // against the republished trees
+    // against the rewritten tables
     docs.filter(col("doc_id") === victim)
       .select(lit(1000001L).alias("doc_id"), col("text"), col("lang"),
         col("source"), col("n_chars"))
@@ -2594,9 +2471,7 @@ class StreamingSpec extends SparkSpec {
       .unionByName(docs.filter(col("doc_id") === victim)
         .select(lit(1000001L).alias("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars")))
-    val gotSh = spark.read
-      .option("recursiveFileLookup", "true")
-      .parquet(liveTree(s"$idx/shingles"))
+    val gotSh = streaming.EventStream.ingestShinglesRead(spark, idx)
       .select(col("doc_id"), explode(col("sh")).alias("s"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val wantSh = Dedup.shingleDocs(wantDocs)
@@ -2622,14 +2497,13 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(serve() == q("phrase_top_docs").collect().map(_.toSeq).toSeq,
       "stored-positions serving diverged from the session phrase query")
-    // PLAIN compaction keeps the superseded tree as a grace snapshot —
-    // an in-flight reader that resolved before the publish can still
-    // materialize against it (the expire-snapshots-later discipline);
-    // erasure below must NOT
+    // PLAIN compaction keeps the generations it folded as a grace
+    // snapshot — an in-flight reader that resolved before the commit can
+    // still materialize against them (the expire-snapshots-later
+    // discipline); erasure below must NOT
     streaming.EventStream.compactPosIndex(spark, indexDir)
-    val afterCompact = new java.io.File(s"$indexDir/pos").list()
-      .filter(_.startsWith("t")).sorted
-    assert(afterCompact.length == 2,
+    val afterCompact = committedGens(s"$indexDir/pos")
+    assert(afterCompact == Seq("a0", "r0_0", "seed"),
       s"plain compaction did not keep the grace snapshot: ${afterCompact.mkString(",")}")
     assert(serve() == q("phrase_top_docs").collect().map(_.toSeq).toSeq)
     // erasure: forgotten docs leave the stored positions (verbatim
@@ -2641,10 +2515,9 @@ class StreamingSpec extends SparkSpec {
     val tp = streaming.EventStream.posIndexRead(spark, indexDir)
     assert(tp.filter(col("doc_id") % 10 === 3).count() == 0,
       "forgotten docs still present in the stored positions index")
-    val afterErase = new java.io.File(s"$indexDir/pos").list()
-      .filter(_.startsWith("t")).sorted
-    assert(afterErase.length == 1,
-      s"erasure left the superseded (forgotten-rows) tree: ${afterErase.mkString(",")}")
+    val afterErase = committedGens(s"$indexDir/pos")
+    assert(afterErase == Seq("r1_0"),
+      s"erasure left older (forgotten-rows) generations: ${afterErase.mkString(",")}")
     val want = TextAnalysis.phraseTopDocsOf(docs.filter(!isForgotten), phrases)
       .collect().map(_.toSeq).toSeq
     assert(serve() == want && want.nonEmpty,
@@ -2657,7 +2530,7 @@ class StreamingSpec extends SparkSpec {
     // the forgetKeys-composition discipline carried to the embeddings
     // tier: erasure between two stream runs must wipe the victims from
     // the stored index AND leave the stream fully operational — run 2's
-    // batch folds into the erased (republished) trees and serves
+    // batch folds into the erased (rewritten) tables and serves
     val cents = Similarity.maintainedCentroids(spark, sf)
     val cb = Similarity.maintainedCodebooks(spark, sf)
     val history = Similarity.maintainedHistory(spark, sf)
@@ -2681,7 +2554,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(vecDir.toString)
     run()
     // victims: two history vectors plus one vector run 1 already folded
-    // (erasure must reach the per-batch subdirs, not only the seed)
+    // (erasure must reach the per-batch appends, not only the seed)
     val hv = history.filter(col("vec_id") >= 10).select(col("vec_id"))
       .orderBy("vec_id").limit(2).collect().map(_.getLong(0)).toSeq
     val bv = batch.filter(col("vec_id") % 20 === 9 && col("vec_id") >= 10)
