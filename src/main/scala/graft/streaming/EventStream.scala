@@ -1048,6 +1048,9 @@ object EventStream {
   /** Append-table rewrites: log sequence `v`, covering batches through `t`. */
   private val rewriteGenName = "r(\\d+)_(-?\\d+)".r
 
+  /** A rewrite writer's claim on log sequence `v` ([[rewriteAppendTable]]). */
+  private val rewriteClaimName = "_rewrite_(\\d+)".r
+
   /** The batch a generation covers through; the seed precedes every
     * batch (−1).
     */
@@ -1603,8 +1606,9 @@ object EventStream {
     * can tear between create and write; monotone), so an as-of read
     * below it fails loudly ([[versionedServingGens]]) instead of
     * resolving a silently-partial view; reads at or above the horizon
-    * are untouched by construction. Returns the deleted bucket partition
-    * and whole-table generation dirs.
+    * are untouched by construction. Rewrite claims below the oldest
+    * retained base go with it. Returns the deleted bucket partition and
+    * whole-table generation dirs.
     */
   def expireVersionedGenerations(spark: SparkSession, stateDir: String,
       keepAsOfFrom: Long): Seq[String] = {
@@ -1613,7 +1617,8 @@ object EventStream {
     val horizon = math.max(keepAsOfFrom, prior)
     if (horizon > prior)
       StateFs.touch(spark, s"$base/_expired_through_$horizon")
-    StateFs.list(spark, base).foreach {
+    val names = StateFs.list(spark, base)
+    names.foreach {
       case expiredThroughName(v) if v.toLong < horizon =>
         StateFs.deleteFile(spark, s"$base/_expired_through_$v")
       case _ => ()
@@ -1630,6 +1635,16 @@ object EventStream {
         StateFs.deleteRecursively(spark, dir)
         dir
       }
+    // a rewrite claim below the oldest retained base guards nothing: a
+    // writer that could still claim it reads an expired base and fails
+    val oldestBase = inventory.map(_._1)
+      .filter(g => isBaseGen(g) && !dropped.contains(versionedGenPath(stateDir, g)))
+      .map(genOrder(_)._1).reduceOption(_ min _).getOrElse(Long.MinValue)
+    names.foreach {
+      case c @ rewriteClaimName(v) if v.toLong < oldestBase =>
+        StateFs.deleteFile(spark, s"$base/$c")
+      case _ => ()
+    }
     dropFoldHusks(spark, stateDir)
     // the manifest reflects the post-expiry inventory + horizon (crash
     // before this line: the stale manifest lists expired paths — reads
@@ -1734,12 +1749,15 @@ object EventStream {
     * rewrite `r{v}_{t}`: `v` is the next sequence of the table's log,
     * `t` the newest batch it covers. Readers resolve the rewrite plus the
     * appends above `t`, so rows are identical before and after a plain
-    * compaction (spec'd). The older generations stay readable as of
-    * their batches — the grace snapshots a table format keeps until
-    * retention expires them — except under `erase`, where the rewrite
-    * expires every generation below itself at once: they hold the
-    * forgotten rows. A compaction with no append above the newest
-    * rewrite has nothing to fold and writes nothing.
+    * compaction (spec'd). Before it writes, the rewrite expires every
+    * generation older than its base ([[expireVersionedGenerations]] at
+    * the batch the base covers): the base and the appends it folds stay
+    * readable as of their batches as the ONE grace snapshot, so a table
+    * holds at most the live snapshot plus one grace snapshot however
+    * often it is compacted. Under `erase` the rewrite then expires
+    * every generation below itself as well: they hold the forgotten
+    * rows. A compaction with no append above the newest rewrite has
+    * nothing to fold and writes nothing.
     *
     * Safety:
     *  - a batch the stream will replay is never folded: when the table
@@ -1748,14 +1766,17 @@ object EventStream {
     *    stream replay the batch, then re-run;
     *  - two rewrite writers never both commit: each first creates the
     *    sequence it claims, `_rewrite_{v}`, create-only, and a committed
-    *    rewrite keeps it. The loser fails loudly before writing and the
-    *    winner's table is intact. Because `v` is the base's sequence plus
-    *    one, a writer whose base went stale finds `v` taken and fails the
-    *    same way — there is no window between listing and claiming. A
-    *    cleanly failed writer releases its claim; one that crashed hard
-    *    leaves it, and later rewrites fail naming it until an operator
-    *    who has checked no writer is running deletes it (lease recovery
-    *    is an operator decision: a paused writer looks like a dead one);
+    *    rewrite keeps it while the rewrite is retained. The loser fails
+    *    loudly before writing and the winner's table is intact. Because
+    *    `v` is the base's sequence plus one, a writer whose base went
+    *    stale finds `v` taken and fails the same way — there is no
+    *    window between listing and claiming; a writer whose base was
+    *    expired meanwhile may claim a released sequence but fails reading
+    *    the expired base. A cleanly failed writer releases its claim;
+    *    one that crashed hard leaves it, and later rewrites fail naming
+    *    it until an operator who has checked no writer is running
+    *    deletes it (lease recovery is an operator decision: a paused
+    *    writer looks like a dead one);
     *  - with `requireSeed` (the index tables, whose streams seed
     *    history) a table without a committed seed fails loudly:
     *    compacting it would commit an empty baseline and the seed guard
@@ -1792,6 +1813,10 @@ object EventStream {
             "for it and re-run; if no writer is running it crashed — delete " +
             "the claim and re-run", e)
       }
+      // entry expiry: the current base and the appends above it stay as
+      // the one grace snapshot, everything older goes
+      base.filter(_ != "seed")
+        .foreach(b => expireVersionedGenerations(spark, dir, genId(b)))
       try transform(spark.read.schema(schema)
           .parquet(serving.map(versionedGenPath(dir, _)): _*))
         .write.mode("overwrite").parquet(versionedGenPath(dir, s"r${v}_$through"))

@@ -1830,13 +1830,14 @@ class StreamingSpec extends SparkSpec {
       docs.filter(col("doc_id") <= q1), 2L)
     assert(idxAsOf(2L) == live2, "redelivered batch changed an as-of read")
     // a second compaction advances monotonically (its rewrite covers
-    // a2, so through 2), and retention at the first rewrite's batch
-    // expires the oldest grace snapshot: as-of 0 is now below the
-    // retention horizon and fails loudly
+    // a2, so through 2), and its entry expiry drops the oldest grace
+    // snapshot: as-of 0 is now below the retention horizon and fails
+    // loudly, and the table holds the live snapshot plus one grace
+    // snapshot
     streaming.EventStream.compactChunkIndex(spark, indexDir)
-    assert(committedGens(chunksDir).contains("r1_2"),
-      s"second compaction must commit r1_2: ${committedGens(chunksDir).mkString(",")}")
-    streaming.EventStream.expireVersionedGenerations(spark, chunksDir, 1L)
+    assert(committedGens(chunksDir) == Seq("a2", "r0_1", "r1_2"),
+      s"second compaction must commit r1_2 over one grace snapshot: " +
+        committedGens(chunksDir).mkString(","))
     assert(idxAsOf(2L) == live2,
       "as-of at the new horizon must survive the second compaction")
     assert(idxAsOf(1L) == live,
@@ -2113,11 +2114,12 @@ class StreamingSpec extends SparkSpec {
       graft.operators.TextAnalysis.termFreqsOf(
         docs.filter(col("doc_id") % 10 =!= 3)).collect().map(_.toSeq).toSet,
       "post-erasure table must equal the surviving-docs tokenization")
-    // each committed rewrite keeps its claim, so a writer that listed
-    // before a rewrite committed can never claim its sequence again
+    // a retained rewrite keeps its claim, so a writer that listed before
+    // it committed can never claim its sequence again; the erasure
+    // expired r0_1, and its claim went with it
     val claims = new java.io.File(s"$tfDir/state").list()
       .filter(_.startsWith("_rewrite_")).sorted.toSeq
-    assert(claims == Seq("_rewrite_0", "_rewrite_1"), s"claims: $claims")
+    assert(claims == Seq("_rewrite_1"), s"claims: $claims")
     assert(committedGens(tfDir) == Seq("r1_1"), committedGens(tfDir).mkString(","))
   }
 
