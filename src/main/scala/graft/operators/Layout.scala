@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.ZOrder
+import graft.io.Writes
 
 /** Data-LAYOUT queries: the write-side lever the scan-side machinery
   * assumes. `ZOrder.cluster` itself lives in functions/ZOrder.scala and
@@ -79,8 +80,8 @@ object Layout {
           datediff(to_date(col("o_orderdate")),
             lit("1970-01-01").cast("date")).cast("long").alias("o_day"))
       val dir = layoutDir(sfDir)
-      ZOrder.cluster(base, col("o_custkey"), col("o_day"), ZFiles)
-        .write.mode("overwrite").parquet(dir)
+      Writes.of(ZOrder.cluster(base, col("o_custkey"), col("o_day"), ZFiles))
+        .mode("overwrite").parquet(dir)
       prunedRead(spark, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
           col("o_totalprice"))
@@ -149,7 +150,7 @@ object Layout {
       suffix: String = ""): Unit = {
     def write(df: DataFrame, t: String, key: String): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS ${bucketTable(sfDir, t)}")
-      df.write.mode("overwrite")
+      Writes.of(df).mode("overwrite")
         .bucketBy(Buckets, key)
         .sortBy(key)
         .option("path", bucketDir(sfDir, t))
@@ -223,7 +224,7 @@ object Layout {
       cut: String = StarSchema.TotalsCutover, suffix: String = ""): Unit = {
     def write(df: DataFrame, t: String): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS ${bucketTable(sfDir, t)}")
-      df.write.mode("overwrite")
+      Writes.of(df).mode("overwrite")
         .bucketBy(Buckets, "product_key")
         .sortBy("product_key")
         .option("path", bucketDir(sfDir, t))

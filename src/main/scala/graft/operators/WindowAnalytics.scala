@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic
+import graft.io.Writes
 
 /** Windowed analytics and exact distribution statistics beyond the basic
   * rank window (SURVEY.md §2c "window functions: none in reference").
@@ -364,10 +365,10 @@ object WindowAnalytics {
   def scd2SnapshotPrunedScan(spark: SparkSession, sfDir: String): DataFrame =
     graft.CacheLifecycle.memoizedDurable(s"windowanalytics.scd2Pruned:$sfDir") {
       val dir = scd2LayoutDir(sfDir)
-      dimCustomerScd2(spark, sfDir)
-        .withColumn("valid_until_year",
-          coalesce(year(col("valid_until")), lit(9999)))
-        .write.mode("overwrite").partitionBy("valid_until_year").parquet(dir)
+      Writes.of(dimCustomerScd2(spark, sfDir)
+          .withColumn("valid_until_year",
+            coalesce(year(col("valid_until")), lit(9999))))
+        .mode("overwrite").partitionBy("valid_until_year").parquet(dir)
       prunedSnapshotRead(spark, dir)
         .select(col("customer_sk"), col("customer_key"), col("customer_name"),
           col("mkt_segment"), col("nation"), col("priority"), col("version"),

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.io.Writes
+
 /** Sink abstraction isolating storage specifics from query logic — the
   * rebuild of the reference's two write paths:
   *  - Parquet overwrite (`db_to_parquet.py:166`) → [[ParquetSink]]
@@ -39,7 +41,7 @@ final case class ParquetSink(
     partitionByCols: Seq[String] = Nil,
     maxRecordsPerFile: Option[Long] = None) extends Sink {
   def write(df: DataFrame): Unit = {
-    var w = df.write.mode(mode)
+    var w = Writes.of(df).mode(mode)
     if (partitionByCols.nonEmpty) w = w.partitionBy(partitionByCols: _*)
     maxRecordsPerFile.foreach(n => w = w.option("maxRecordsPerFile", n.toString))
     w.parquet(path)
@@ -50,13 +52,13 @@ final case class ParquetSink(
 final case class CsvSink(path: String, mode: SaveMode = SaveMode.Overwrite)
   extends Sink {
   def write(df: DataFrame): Unit =
-    df.write.mode(mode).option("header", "true").csv(path)
+    Writes.of(df).mode(mode).option("header", "true").csv(path)
 }
 
 /** JSON-lines sink. */
 final case class JsonSink(path: String, mode: SaveMode = SaveMode.Overwrite)
   extends Sink {
-  def write(df: DataFrame): Unit = df.write.mode(mode).json(path)
+  def write(df: DataFrame): Unit = Writes.of(df).mode(mode).json(path)
 }
 
 /** ORC sink — the second columnar format the Spark distribution carries
@@ -64,7 +66,7 @@ final case class JsonSink(path: String, mode: SaveMode = SaveMode.Overwrite)
   */
 final case class OrcSink(path: String, mode: SaveMode = SaveMode.Overwrite)
   extends Sink {
-  def write(df: DataFrame): Unit = df.write.mode(mode).orc(path)
+  def write(df: DataFrame): Unit = Writes.of(df).mode(mode).orc(path)
 }
 
 /** Bucketed managed-table sink: pre-shuffles data into `buckets` files
@@ -82,7 +84,7 @@ final case class BucketedTableSink(
     sortCols: Seq[String] = Nil,
     mode: SaveMode = SaveMode.Overwrite) extends Sink {
   def write(df: DataFrame): Unit = {
-    var w = df.write.mode(mode)
+    var w = Writes.of(df).mode(mode)
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
     if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
     w.saveAsTable(table)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigge
 import org.apache.spark.sql.types._
 
 import graft.functions.Deterministic
+import graft.io.Writes
 
 /** Structured Streaming forms of the event pipelines. Batch twins live in
   * `graft.operators.Events` — Spark shares the `window()` semantics
@@ -1084,9 +1085,17 @@ object EventStream {
     * read as an empty or unseeded table.
     */
   private def versionedCommittedGens(spark: SparkSession,
-      stateDir: String): Seq[String] = {
+      stateDir: String): Seq[String] =
+    committedGensOf(spark, stateDir,
+      StateFs.list(spark, versionedStatePath(stateDir)))
+
+  /** [[versionedCommittedGens]] over an existing listing `names` of the
+    * table's `state/` dir.
+    */
+  private def committedGensOf(spark: SparkSession, stateDir: String,
+      names: Seq[String]): Seq[String] = {
     val base = versionedStatePath(stateDir)
-    val gens = StateFs.list(spark, base)
+    val gens = names
       .filter { case "seed" | versionedGenName(_, _) | rewriteGenName(_, _) => true
                 case _ => false }
       .filter(g => StateFs.exists(spark, s"$base/$g/_SUCCESS"))
@@ -1132,8 +1141,10 @@ object EventStream {
     */
   private[graft] def versionedExpiredThrough(spark: SparkSession,
       stateDir: String): Long =
-    StateFs.list(spark, versionedStatePath(stateDir))
-      .collect { case expiredThroughName(v) => v.toLong }
+    expiredThroughOf(StateFs.list(spark, versionedStatePath(stateDir)))
+
+  private def expiredThroughOf(names: Seq[String]): Long =
+    names.collect { case expiredThroughName(v) => v.toLong }
       .reduceOption(_ max _).getOrElse(Long.MinValue)
 
   /** THE serving rule of the log, over a (generation → buckets)
@@ -1229,16 +1240,17 @@ object EventStream {
 
   private[graft] def writeVersionedManifest(spark: SparkSession,
       stateDir: String): Unit = {
+    // ONE listing of `state/` yields the generations, the next manifest
+    // sequence and the horizon
     val base = versionedStatePath(stateDir)
-    val entries = versionedCommittedGens(spark, stateDir).map { g =>
+    val names = StateFs.list(spark, base)
+    val entries = committedGensOf(spark, stateDir, names).map { g =>
       s"${manifestToken(g)} ${genBuckets(spark, stateDir, g).mkString(",")}"
     }
-    val names = StateFs.list(spark, base)
     val seq = names.collect { case vManifestName(n) => n.toLong }
       .reduceOption(_ max _).getOrElse(0L) + 1
     StateFs.writeFile(spark, s"$base/_vmanifest_$seq",
-      (s"horizon ${versionedExpiredThrough(spark, stateDir)}" +:
-        entries :+ "#end").mkString("\n"))
+      (s"horizon ${expiredThroughOf(names)}" +: entries :+ "#end").mkString("\n"))
     names.collect { case m @ vManifestName(n) if n.toLong < seq => m }
       .foreach(m => StateFs.deleteFile(spark, s"$base/$m"))
   }
@@ -1346,9 +1358,9 @@ object EventStream {
       stateDir: String): Unit = {
     val seedPath = versionedGenPath(stateDir, "seed")
     if (!StateFs.exists(initial.sparkSession, s"$seedPath/_SUCCESS")) {
-      initial.withColumn("bucket", stateBucketOf(col(keyCol)))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(seedPath)
+      Writes.of(initial.withColumn("bucket", stateBucketOf(col(keyCol)))
+          .repartition(col("bucket")))
+        .mode("overwrite").partitionBy("bucket").parquet(seedPath)
       writeVersionedManifest(initial.sparkSession, stateDir)
     }
   }
@@ -1386,10 +1398,10 @@ object EventStream {
     val current = versionedStateRead(spark, stateDir, schema, Some(genId(gen) - 1))
       .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
       .drop("bucket")
-    merge(current)
-      .withColumn("bucket", stateBucketOf(col(keyCol)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
+    Writes.of(merge(current)
+        .withColumn("bucket", stateBucketOf(col(keyCol)))
+        .repartition(col("bucket")))
+      .mode("overwrite").partitionBy("bucket")
       .parquet(versionedGenPath(stateDir, gen))
     writeVersionedManifest(spark, stateDir)
   }
@@ -1721,7 +1733,7 @@ object EventStream {
   /** Write batch `batchId`'s rows as the table's append generation. */
   private def writeAppend(spark: SparkSession, dir: String, batchId: Long,
       rows: DataFrame): Unit = {
-    rows.write.mode("overwrite").parquet(versionedGenPath(dir, s"a$batchId"))
+    Writes.of(rows).mode("overwrite").parquet(versionedGenPath(dir, s"a$batchId"))
     writeVersionedManifest(spark, dir)
   }
 
@@ -1736,7 +1748,7 @@ object EventStream {
       tables: (String, DataFrame)*): Unit =
     if (!versionedCommittedGens(spark, tables.last._1).exists(isBaseGen))
       tables.foreach { case (dir, rows) =>
-        rows.write.mode("overwrite").parquet(versionedGenPath(dir, "seed"))
+        Writes.of(rows).mode("overwrite").parquet(versionedGenPath(dir, "seed"))
         writeVersionedManifest(spark, dir)
       }
 
@@ -1817,9 +1829,9 @@ object EventStream {
       // the one grace snapshot, everything older goes
       base.filter(_ != "seed")
         .foreach(b => expireVersionedGenerations(spark, dir, genId(b)))
-      try transform(spark.read.schema(schema)
-          .parquet(serving.map(versionedGenPath(dir, _)): _*))
-        .write.mode("overwrite").parquet(versionedGenPath(dir, s"r${v}_$through"))
+      try Writes.of(transform(spark.read.schema(schema)
+          .parquet(serving.map(versionedGenPath(dir, _)): _*)))
+        .mode("overwrite").parquet(versionedGenPath(dir, s"r${v}_$through"))
       catch {
         case e: Throwable => StateFs.deleteFile(spark, claim); throw e
       }

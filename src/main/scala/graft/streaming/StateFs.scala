@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-`FileSystem` spellings of the streaming state-machinery file
@@ -36,9 +36,16 @@ private[graft] object StateFs {
   // would CLONE the full SparkConf+Hadoop conf on every commit probe,
   // and a generation listing multiplies that by one exists() per dir;
   // the shared instance also keys Hadoop's FileSystem cache, so repeat
-  // calls reuse one client per scheme
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // calls reuse one client per scheme. A local path goes to the program's
+  // one local file system (`graft.io.Writes`), which creates markers and
+  // manifests without starting a `chmod` process per file and directory.
+  private def fsOf(spark: SparkSession, p: Path): FileSystem = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    p.getFileSystem(conf) match {
+      case _: LocalFileSystem => graft.io.Writes.localFs(conf)
+      case fs => fs
+    }
+  }
 
   def exists(spark: SparkSession, path: String): Boolean = {
     existsCalls.incrementAndGet()

@@ -457,10 +457,16 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val indexDir = java.nio.file.Files.createTempDirectory("graft-manifest").toString
     EventStream.tfIndexSeed(spark, indexDir, docs.filter(col("doc_id") % 10 < 7))
-    Seq(7L, 8L, 9L).zipWithIndex.foreach { case (res, id) =>
+    val foldListings = Seq(7L, 8L, 9L).zipWithIndex.map { case (res, id) =>
+      val before = StateFs.listCalls.get
       EventStream.tfIndexFoldBatch(spark, indexDir,
         docs.filter(col("doc_id") % 10 === res), id.toLong)
+      StateFs.listCalls.get - before
     }
+    // one fold lists `state/` for its replay gate and once more for its
+    // manifest (generations, next sequence and horizon from one listing),
+    // plus the seed generation's dir for its buckets
+    assert(foldListings == Seq(3L, 3L, 3L), s"listings per fold: $foldListings")
     val tree = s"$indexDir/tf/state"
     def manifestFiles() = new java.io.File(tree).list()
       .filter(_.startsWith("_vmanifest_")).sorted.toSeq

@@ -3,7 +3,7 @@
 
 Usage (from the repository root):
   python3 tools/ab_perfbench.py <base-ref> <change-ref> --workload <name>
-      [--seeds 11-20] [--root DIR] [--out FILE]
+      [--seeds 11-20] [--root DIR] [--out FILE] [--jfr]
 
 Each ref is exported with `git archive` into its own directory under
 --root (default: the system temp directory), removed at the end; `.`
@@ -19,8 +19,16 @@ tenths of the pairs won, and the medians further apart than the base's
 interquartile range. Last, one `--trace 1` run per side (first seed) and
 the exact counters (counts, bytes, write amplification) that differ
 between them. Each side runs its own checkout's perfbench.
+
+With --jfr, each side's traced run also records a Java Flight Recording
+(through JAVA_TOOL_OPTIONS, so perfbench is unchanged) into --root, and the
+report gives each side's `jdk.ProcessStart` count from `jfr summary`, how
+many of those processes named the run's work directory (the per-file
+`chmod` of Hadoop's local file system without libhadoop names it), and the
+count per command.
 """
 import argparse
+import collections
 import json
 import os
 import shutil
@@ -64,16 +72,37 @@ def build(checkout):
     subprocess.run([sys.executable, "-c", code], cwd=checkout, check=True)
 
 
-def bench(checkout, workload, seed, seconds, trace):
+def bench(checkout, workload, seed, seconds, trace, jfr=None):
+    env = dict(os.environ)
+    if jfr:
+        env["JAVA_TOOL_OPTIONS"] = " ".join(filter(None, [
+            env.get("JAVA_TOOL_OPTIONS"), f"-XX:StartFlightRecording=filename={jfr}"]))
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
-        cwd=checkout, capture_output=True, text=True)
+        cwd=checkout, capture_output=True, text=True, env=env)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
         sys.stderr.write(proc.stderr[-4000:])
         raise SystemExit(f"run failed in {checkout} (seed {seed}, exit {proc.returncode})")
     return json.loads(lines[-1])
+
+
+def process_starts(jfr, work_dir):
+    """`jdk.ProcessStart` in recording `jfr`: the `jfr summary` count, the
+    number whose command line names `work_dir`, and the count per command."""
+    summary = subprocess.run(["jfr", "summary", jfr], check=True,
+                             capture_output=True, text=True).stdout
+    total = next((int(line.split()[1]) for line in summary.splitlines()
+                  if line.split()[:1] == ["jdk.ProcessStart"]), 0)
+    printed = subprocess.run(["jfr", "print", "--json", "--events", "jdk.ProcessStart", jfr],
+                             check=True, capture_output=True, text=True).stdout
+    commands = [e["values"]["command"]
+                for e in json.loads(printed)["recording"]["events"]]
+    per_command = collections.Counter(
+        os.path.basename(c.split()[0]) if c.split() else "?" for c in commands)
+    return {"total": total, "naming_work_dir": sum(work_dir in c for c in commands),
+            "per_command": dict(sorted(per_command.items()))}
 
 
 def seeds_of(text):
@@ -97,7 +126,7 @@ def quartiles(xs):
     return tuple(statistics.quantiles(xs, n=4, method="inclusive"))
 
 
-def compare(sides, workload, seeds, seconds, spec, names):
+def compare(sides, workload, seeds, seconds, spec, names, jfr_dir=None):
     """The interleaved pairs, the end-to-end report and the traced
     counter diff; returns the JSON summary."""
     runs = {"base": [], "change": []}
@@ -135,7 +164,9 @@ def compare(sides, workload, seeds, seconds, spec, names):
                                     "pairs": len(b), "gain_rule_holds": holds}
 
     units = {m["name"]: m["unit"] for m in spec["per_layer"]}
-    traced = {label: bench(sides[label], workload, seeds[0], seconds, 1)
+    jfrs = {label: os.path.join(jfr_dir, f"{os.path.basename(sides[label])}.jfr")
+            for label in sides} if jfr_dir else {}
+    traced = {label: bench(sides[label], workload, seeds[0], seconds, 1, jfrs.get(label))
               for label in ("base", "change")}
     print(f"\n{workload} exact counters, one --trace 1 run per side (seed {seeds[0]}); "
           "differing only:")
@@ -153,6 +184,16 @@ def compare(sides, workload, seeds, seconds, spec, names):
     print("  trace.counter_repeat_share: " + ", ".join(
         f"{label} {num(t['metrics']['trace.counter_repeat_share']['value'])}"
         for label, t in traced.items()))
+    if jfrs:
+        starts = {label: process_starts(
+            path, os.path.realpath(os.path.join(sides[label], ".bench_build", "work")))
+            for label, path in jfrs.items()}
+        print("  jdk.ProcessStart (JFR, traced run): " + ", ".join(
+            f"{label} {s['total']} ({s['naming_work_dir']} naming the work dir; "
+            + " ".join(f"{k}={v}" for k, v in s["per_command"].items()) + ")"
+            for label, s in starts.items()))
+        print("  recordings: " + ", ".join(jfrs.values()))
+        summary["process_starts"] = starts
     print(flush=True)
     summary["traced"] = {label: {"correct": t["correct"], "metrics": t["metrics"]}
                          for label, t in traced.items()}
@@ -169,6 +210,8 @@ def main():
     ap.add_argument("--seeds", default="11-20")
     ap.add_argument("--root", default=tempfile.gettempdir())
     ap.add_argument("--out", help="write every run and the summary as JSON here")
+    ap.add_argument("--jfr", action="store_true",
+                    help="record the traced runs with JFR and report process starts")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
@@ -186,7 +229,8 @@ def main():
         build(sides[label])
 
     try:
-        summary = dict(compare(sides, args.workload, seeds, spec["run_seconds"], spec, names),
+        summary = dict(compare(sides, args.workload, seeds, spec["run_seconds"], spec, names,
+                               args.root if args.jfr else None),
                        base=args.base, change=args.change, workload=args.workload)
     finally:
         for path in sides.values():
